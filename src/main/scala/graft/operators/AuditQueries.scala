@@ -3,7 +3,7 @@ package graft.operators
 import graft.{Q, Tables}
 import graft.functions.TSql._
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** Data-quality auditing and statistics-build operators — the engine-side
@@ -7562,53 +7562,87 @@ object AuditQueries {
     * factors cancel), and F compares it with the remaining additive
     * residual.
     *
-    * Plan: one orders pass → 60-cell rollup → metadata marginal
-    * joins → 1-row fold.
+    * Plan: one orders pass → 60-cell rollup → row/column totals by
+    * windows keyed on mo and on g → ONE global aggregate of exact
+    * moments ([[tukeyFold]]) → 1-row projection. No checkpoint, no
+    * broadcast join.
     */
   val q470TukeyNonadditivity: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     val cells = Tables.orders(s, dir)
       .groupBy(expr("month(o_orderdate)").cast("long").as("mo"),
         expr("CAST(substring(o_orderpriority, 1, 1) AS BIGINT)").as("g"))
       .agg(expr("SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))" +
         " div (100 * COUNT(*))").as("y"))
-      .localCheckpoint()
-    val dims = cells.agg(countDistinct(col("mo")).cast(dec).as("r"),
-      countDistinct(col("g")).cast(dec).as("c"),
-      sum(col("y")).cast(dec).as("gt"))
-    val rows = cells.groupBy(col("mo")).agg(sum(col("y")).as("ri"))
-    val cols = cells.groupBy(col("g")).agg(sum(col("y")).as("cj"))
-    val joined = cells.join(broadcast(rows), Seq("mo"))
-      .join(broadcast(cols), Seq("g"))
-      .crossJoin(broadcast(dims))
-    val folded = joined.agg(
-      first(col("r")).as("r"), first(col("c")).as("c"),
-      first(col("gt")).as("gt"),
-      sum((col("r") * col("ri") - col("gt")) *
-        (col("c") * col("cj") - col("gt")) * col("y")).as("p"),
-      sum((col("r") * col("c") * col("y") - col("r") * col("ri") -
-        col("c") * col("cj") + col("gt")) *
-        (col("r") * col("c") * col("y") - col("r") * col("ri") -
-          col("c") * col("cj") + col("gt"))).as("e2"))
-    val qa = joined.select(col("mo"), col("r"), col("ri"), col("gt"))
-      .distinct()
-      .agg(sum((col("r") * col("ri") - col("gt")) *
-        (col("r") * col("ri") - col("gt"))).as("qa"))
-    val qb = joined.select(col("g"), col("c"), col("cj"), col("gt"))
-      .distinct()
-      .agg(sum((col("c") * col("cj") - col("gt")) *
-        (col("c") * col("cj") - col("gt"))).as("qb"))
     def d(c: String) = col(c).cast("double")
     val ssNa = d("p") * d("p") / (d("qa") * d("qb"))
     val ssRes = d("e2") / (d("r") * d("r") * d("c") * d("c"))
     val dfRes = (d("r") - 1.0) * (d("c") - 1.0) - 1.0
     val fStat = ssNa / ((ssRes - ssNa) / dfRes)
-    folded.crossJoin(broadcast(qa)).crossJoin(broadcast(qb))
+    tukeyFold(cells)
       .select(col("r").cast("long").as("n_months"),
         col("c").cast("long").as("n_priorities"),
         ssNa.as("ss_nonadditivity_d"), fStat.as("f_d"),
         when(fStat > 4.07, lit("multiplicative_interaction"))
           .otherwise(lit("additive")).as("verdict_5pct"))
+  }
+
+  /** Tukey's fold of a (mo, g, y) cells frame (non-NULL integers, one row
+    * per present cell; the grid may be ragged) into one row of exact
+    * DECIMAL(38,0) statistics: r and c (distinct months and groups), gt =
+    * Σy, and with row totals Rᵢ and column totals Cⱼ
+    *
+    *   p  = Σ_cells (r·Rᵢ − gt)(c·Cⱼ − gt)·y
+    *   e2 = Σ_cells (r·c·y − r·Rᵢ − c·Cⱼ + gt)²
+    *   qa = Σ_months (r·Rᵢ − gt)²        qb = Σ_groups (c·Cⱼ − gt)²
+    *
+    * The marginals are batched: Rᵢ and Cⱼ ride windows keyed on mo and on
+    * g, r and c are sums of first-row indicators over the same windows,
+    * and ONE global aggregate collects the moments (k = #cells, Σy, Σy²,
+    * ΣRy, ΣCy, ΣRCy, ΣR², ΣC², ΣRC, ΣR, ΣC) from which the four sums
+    * expand algebraically:
+    *
+    *   p  = rc·ΣRCy − r·gt·ΣRy − c·gt·ΣCy + gt³
+    *   e2 = r²c²·Σy² + r²·ΣR² + c²·ΣC² + k·gt² − 2r²c·ΣRy − 2rc²·ΣCy
+    *        + 2rc·gt² + 2rc·ΣRC − 2r·gt·ΣR − 2c·gt·ΣC
+    *   qa = r²·ΣRy − r·gt²   (ΣRy = Σ_months Rᵢ², Σ_months Rᵢ = gt)
+    *   qb = c²·ΣCy − c·gt²
+    *
+    * Integer arithmetic is exact, so the expanded sums equal the per-cell
+    * definitions bit for bit (PropertySpec checks them in BigInt).
+    */
+  private[graft] def tukeyFold(cells: DataFrame): DataFrame = {
+    def dec(c: Column): Column = c.cast("decimal(38,0)")
+    def m(c: String): Column = dec(col(c))
+    val byMo = Window.partitionBy(col("mo")).orderBy(col("g"))
+    val byG = Window.partitionBy(col("g")).orderBy(col("mo"))
+    def total(w: WindowSpec) = sum(col("y")).over(
+      w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+    def first(w: WindowSpec) =
+      when(row_number().over(w) === 1, 1L).otherwise(0L)
+    val moments = cells
+      .select(col("mo"), col("g"), col("y"),
+        total(byMo).as("ri"), first(byMo).as("first_mo"))
+      .select(col("y"), col("ri"), col("first_mo"),
+        total(byG).as("cj"), first(byG).as("first_g"))
+      .agg(dec(sum(col("first_mo"))).as("r"),
+        dec(sum(col("first_g"))).as("c"), dec(count(lit(1))).as("k"),
+        sum(m("y")).as("gt"), sum(m("y") * m("y")).as("syy"),
+        sum(m("ri") * m("y")).as("sry"), sum(m("cj") * m("y")).as("scy"),
+        sum(m("ri") * m("cj") * m("y")).as("srcy"),
+        sum(m("ri") * m("ri")).as("srr"), sum(m("cj") * m("cj")).as("scc"),
+        sum(m("ri") * m("cj")).as("src"),
+        sum(m("ri")).as("sr"), sum(m("cj")).as("sc"))
+    val (r, c, gt, two) = (col("r"), col("c"), col("gt"), dec(lit(2)))
+    moments.select(r, c, gt,
+      (r * c * col("srcy") - r * gt * col("sry") - c * gt * col("scy") +
+        gt * gt * gt).as("p"),
+      (r * r * c * c * col("syy") + r * r * col("srr") + c * c * col("scc") +
+        col("k") * gt * gt - two * r * r * c * col("sry") -
+        two * r * c * c * col("scy") + two * r * c * gt * gt +
+        two * r * c * col("src") - two * r * gt * col("sr") -
+        two * c * gt * col("sc")).as("e2"),
+      (r * r * col("sry") - r * gt * gt).as("qa"),
+      (c * c * col("scy") - c * gt * gt).as("qb"))
   }
 
   val q470Sql: String = {

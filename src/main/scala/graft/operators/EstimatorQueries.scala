@@ -251,27 +251,64 @@ object EstimatorQueries {
     * trap (fewer distinct values than distributions guarantees idle
     * distributions), and the verdict a CTAS policy would act on — the
     * monitoring toolkit's vw_tables_with_skew turned prescriptive.
+    *
+    * Plan: one scan per table, its candidates stacked by an explode →
+    * three keyed aggregations ([[distributionStats]]) → 6-row sort. No
+    * broadcast, no per-candidate branch.
     */
   val q548DistributionAdvisor: Q = (s, dir) => {
-    DistCols.map { case (label, loader, c) =>
-      val hashed = loader(s, dir).select(
-        (Text.portableHash(concat(lit("d|"), col(c).cast("string")))
-          % Distributions).as("d"),
-        col(c).as("v"))
-      val perD = hashed.groupBy(col("d")).agg(count(lit(1)).as("rows"))
-      val ndv = hashed.agg(countDistinct(col("v")).as("ndv"))
-      perD.agg(count(lit(1)).as("distributions_hit"),
-        sum(col("rows")).as("n"), max(col("rows")).as("max_rows"))
-        .crossJoin(broadcast(ndv))
-        .select(lit(label).as("candidate"), col("n"), col("ndv"),
-          col("distributions_hit"), col("max_rows"),
-          expr(s"max_rows * $Distributions * 1000000 div n").as("skew_e6"))
-        .withColumn("verdict", expr(
-          s"""CASE WHEN ndv < $Distributions * 10 THEN 'low_ndv'
-             | WHEN max_rows * $Distributions * 1000000 div n > 2000000
-             | THEN 'skewed' ELSE 'good' END"""
-            .stripMargin.replace("\n", " ")))
-    }.reduce(_.unionAll(_)).orderBy(col("candidate"))
+    val tables = DistCols.map(_._1.split('.').head).distinct.map { t =>
+      val cands = DistCols.filter(_._1.startsWith(t + "."))
+      (cands.head._2(s, dir), cands.map { case (label, _, c) => (label, c) })
+    }
+    distributionStats(tables)
+      .select(col("candidate"), col("n"), col("ndv"),
+        col("distributions_hit"), col("max_rows"),
+        expr(s"max_rows * $Distributions * 1000000 div n").as("skew_e6"))
+      .withColumn("verdict", expr(
+        s"""CASE WHEN ndv < $Distributions * 10 THEN 'low_ndv'
+           | WHEN max_rows * $Distributions * 1000000 div n > 2000000
+           | THEN 'skewed' ELSE 'good' END"""
+          .stripMargin.replace("\n", " ")))
+      .orderBy(col("candidate"))
+  }
+
+  /** Per-candidate distribution statistics (candidate, n, ndv,
+    * distributions_hit, max_rows) over `tables`, each a frame with its
+    * (candidate label, column) pairs — the batch of aggregates the advisor
+    * needs, in one pass per table:
+    *
+    *   1. stack: every row explodes into one (candidate, v) row per
+    *      candidate column, v = the value as a string (the hash input);
+    *   2. (candidate, v) → cnt: the exact value histogram;
+    *   3. (candidate, d) → rows, nvals with d the portable hash of v mod
+    *      60 — hashed once per DISTINCT value, not once per row;
+    *   4. candidate → n = Σ rows, distributions_hit = #d, max_rows =
+    *      max rows, ndv = Σ nvals: d is a function of v, so the distinct
+    *      values of a candidate partition across its distributions.
+    *
+    * A NULL value hashes to a NULL distribution: it counts in n and in
+    * distributions_hit (its own group) and not in ndv (`count(v)`), as
+    * the per-candidate `groupBy(d)` + `countDistinct(v)` it replaces did.
+    * A candidate of an empty table has no row.
+    */
+  private[operators] def distributionStats(
+      tables: Seq[(DataFrame, Seq[(String, String)])]): DataFrame = {
+    val stacked = tables.map { case (df, cands) =>
+      df.select(explode(array(cands.map { case (label, c) =>
+          struct(lit(label).as("candidate"), col(c).cast("string").as("v"))
+        }: _*)).as("e"))
+        .select(col("e.candidate"), col("e.v"))
+    }.reduce(_.unionAll(_))
+    stacked.groupBy(col("candidate"), col("v"))
+      .agg(count(lit(1)).as("cnt"))
+      .groupBy(col("candidate"),
+        (Text.portableHash(concat(lit("d|"), col("v"))) % Distributions)
+          .as("d"))
+      .agg(sum(col("cnt")).as("rows"), count(col("v")).as("nvals"))
+      .groupBy(col("candidate"))
+      .agg(sum(col("rows")).as("n"), sum(col("nvals")).as("ndv"),
+        count(lit(1)).as("distributions_hit"), max(col("rows")).as("max_rows"))
   }
 
   val q548Sql: String = {

@@ -139,8 +139,11 @@ object Graph {
     * point direction and stays in integers). Scores are ≤ 10¹² by
     * construction (a node's raw sum never exceeds the total).
     *
-    * Per round: two edge-keyed join+sum shuffles plus two broadcast scalar
-    * folds — the Pregel half-step pair. Raw sums and the normalization
+    * Plan: per round two edge-keyed join+sum shuffles, each checkpointed
+    * with its L1 total observed in the same job — the Pregel half-step
+    * pair. Round 1's authority half-step needs no join: every starting hub
+    * score is the same 10¹², so a_raw = 10¹² · in-degree is one
+    * groupBy(auth) over the edges. Raw sums and the normalization
     * products run in DECIMAL(38,0): Σ over 10¹² edges of 10¹²-scaled
     * scores passes int64 long before the graph is interesting.
     *
@@ -171,20 +174,38 @@ object Graph {
         out: String): DataFrame = {
       val obs = org.apache.spark.sql.Observation()
       val ck = raw.observe(obs, sum(col(rawCol)).as("tot")).localCheckpoint()
-      val tot = Option(obs.get("tot")).map(_.toString).getOrElse("NULL")
+      val tot = Option(obs.get("tot")).map(scale0Literal).getOrElse("NULL")
       ck.select(col(key),
         expr(fdiv(s"$rawCol * 1000000000000",
           s"CAST($tot AS DECIMAL(38,0))")).cast("long").as(out))
     }
-    for (_ <- 1 to iters) {
-      val araw = e.join(hubs, "hub").groupBy(col("auth"))
-        .agg(sum(col("h").cast(dec)).as("a_raw"))
+    for (i <- 1 to iters) {
+      // round 1: Σ over a node's hubs of the same 10¹² start score is
+      // 10¹² · in-degree — the hub set and its join drop out (an edge with
+      // a NULL hub never matched a hub row, so it is left out here too)
+      val araw = (if (i == 1) e.filter(col("hub").isNotNull)
+          .groupBy(col("auth"))
+          .agg(sum(lit(1000000000000L).cast(dec)).as("a_raw"))
+        else e.join(hubs, "hub").groupBy(col("auth"))
+          .agg(sum(col("h").cast(dec)).as("a_raw")))
       auths = normalized(araw, "auth", "a_raw", "a")
       val hraw = e.join(auths, "auth").groupBy(col("hub"))
         .agg(sum(col("a").cast(dec)).as("h_raw"))
       hubs = normalized(hraw, "hub", "h_raw", "h")
     }
     (hubs, auths)
+  }
+
+  /** The SQL literal of an observed DECIMAL(38,0) total: its plain digits.
+    * Anything else — a fractional scale, a double — would splice a
+    * fractional or scientific-notation literal into the fixed-point
+    * division and silently change its result, so it fails instead.
+    */
+  private[operators] def scale0Literal(v: Any): String = v match {
+    case d: java.math.BigDecimal if d.scale == 0 => d.toBigInteger.toString
+    case other => throw new IllegalArgumentException(
+      s"expected a scale-0 java.math.BigDecimal total, got $other" +
+        s" (${other.getClass.getName})")
   }
 
   /** k-core of an undirected graph by fixed-round simultaneous peeling:

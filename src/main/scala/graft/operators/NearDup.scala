@@ -29,6 +29,14 @@ object NearDup {
   /** Resolve pairs (a, b) — undirected, any orientation — into
     * (id, cluster_rep). Only ids appearing in pairs are returned (singletons
     * are trivially their own cluster).
+    *
+    * Plan: both orientations, deduplicated and checkpointed → round 1 as
+    * ONE aggregation, rep = least(src, min(dst)) per src (every node's
+    * starting label is itself, so this is exactly the first propagation
+    * round, with no separate identity-label init or join) → one join+agg
+    * round per further hop. `maxIters` counts label rounds INCLUDING that
+    * folded first round: a labelling that still changes in round
+    * `maxIters` raises.
     */
   def clusters(pairs: DataFrame, maxIters: Int = 16): DataFrame = {
     // both orientations IN PLACE (Pairs.bothOrientations): the old
@@ -39,15 +47,21 @@ object NearDup {
         "src", "dst")
       .distinct()
       .localCheckpoint()
-    var labels = directed.select(col("src").as("id")).distinct()
-      .withColumn("rep", col("id"))
+    // round 1 folded into the label init: each id's neighbour minimum
+    // against its own id; the changed count rides the checkpoint job
+    val obs1 = org.apache.spark.sql.Observation()
+    var labels = directed.groupBy(col("src"))
+      .agg(least(col("src"), min(col("dst"))).as("rep"))
+      .withColumnRenamed("src", "id")
+      .observe(obs1, sum((col("rep") =!= col("id")).cast("long"))
+        .as("changed"))
       .localCheckpoint()
     // the eagerly-checkpointed frame backing the current labels: superseded
     // generations are unpersisted each round (a localCheckpoint truncates
     // lineage, so the latest backing must stay cached for the result)
     var backing = labels
-    var iters = 0
-    var converged = false
+    var iters = 1
+    var converged = Option(obs1.get("changed")).forall(_ == 0L)
     while (!converged && iters < maxIters) {
       val nbrMin = directed
         .join(labels.withColumnRenamed("id", "dst"), "dst")

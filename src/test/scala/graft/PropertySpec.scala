@@ -352,4 +352,44 @@ class PropertySpec extends SparkSpec {
         df.withColumn("o", lead(col("w"), 1).over(asc)), "leadOver")
     }
   }
+
+  test("Tukey moment fold equals the per-cell definitions on any grid") {
+    // q470's fold expands P, e2, Q_a and Q_b from global moments; on
+    // full, ragged (missing cells) and 1×k grids of integers the expansion
+    // must equal the direct per-cell sums, computed here in BigInt
+    def direct(cells: Seq[(Long, Long, Long)]): Seq[BigInt] = {
+      val ri = cells.groupBy(_._1).view.mapValues(_.map(x => BigInt(x._3)).sum).toMap
+      val cj = cells.groupBy(_._2).view.mapValues(_.map(x => BigInt(x._3)).sum).toMap
+      val (r, c) = (BigInt(ri.size), BigInt(cj.size))
+      val gt = cells.map(x => BigInt(x._3)).sum
+      val p = cells.map { case (m, g, y) => (r * ri(m) - gt) * (c * cj(g) - gt) * y }.sum
+      val e2 = cells.map { case (m, g, y) =>
+        val t = r * c * y - r * ri(m) - c * cj(g) + gt; t * t }.sum
+      val qa = ri.values.map(v => (r * v - gt) * (r * v - gt)).sum
+      val qb = cj.values.map(v => (c * v - gt) * (c * v - gt)).sum
+      Seq(r, c, gt, p, e2, qa, qb)
+    }
+    def folded(cells: Seq[(Long, Long, Long)]): Seq[BigInt] = {
+      val row = operators.AuditQueries.tukeyFold(
+        cells.toDF("mo", "g", "y").repartition(3)).collect().head
+      Seq("r", "c", "gt", "p", "e2", "qa", "qb").map(k =>
+        BigInt(row.getAs[java.math.BigDecimal](k).toBigIntegerExact))
+    }
+    val genGrid = for {
+      r <- Gen.choose(1, 6)
+      c <- Gen.choose(1, 5)
+      keep <- Gen.oneOf(1.0, 0.6)
+      draws <- Gen.listOfN(r * c,
+        Gen.zip(Gen.prob(keep), Gen.choose(-1000L, 300000L)))
+    } yield (for {
+      ((kept, y), k) <- draws.zipWithIndex if kept
+    } yield ((k / c) * 3L + 1L, (k % c).toLong + 1L, y))
+    val oneByK = (1L to 5L).map(g => (7L, g, 1000L * g + 17L))
+    val ragged = Seq((1L, 1L, 5L), (1L, 2L, 9L), (2L, 2L, -4L), (3L, 3L, 11L))
+    (Seq(oneByK, ragged) ++ Iterator.iterate(org.scalacheck.rng.Seed(470L))(_.next)
+      .map(sd => genGrid.apply(Gen.Parameters.default, sd))
+      .collect { case Some(g) if g.nonEmpty => g }.take(12)).foreach { cells =>
+      assert(folded(cells) === direct(cells), cells)
+    }
+  }
 }

@@ -366,4 +366,38 @@ class EstimatorAuditSpec extends SparkSpec {
       assert(row.getAs[String]("verdict") == expected)
     }
   }
+
+  test("q548: the stacked single-pass advisor equals the per-candidate plan") {
+    import org.apache.spark.sql.functions._
+    // a long candidate with NULLs, a timestamp candidate, and a second table
+    val a = spark.range(0, 240).select(
+      when(col("id") % 7 === 0, lit(null).cast("long"))
+        .otherwise(col("id") % 37).as("k"),
+      (lit(1700000000L) + (col("id") % 53) * 3600L).cast("timestamp").as("ts"))
+    val b = spark.range(0, 150).select((col("id") * col("id") % 101).as("x"))
+    val cands = Seq((a, Seq("a.k" -> "k", "a.ts" -> "ts")), (b, Seq("b.x" -> "x")))
+    // the formulation the stacked plan replaced: per candidate, a groupBy
+    // on the bucket plus a countDistinct, crossed
+    val perCandidate = cands.flatMap { case (df, cs) => cs.map { case (label, c) =>
+      val hashed = df.select((graft.functions.Text.portableHash(
+        concat(lit("d|"), col(c).cast("string"))) % 60L).as("d"), col(c).as("v"))
+      hashed.groupBy(col("d")).agg(count(lit(1)).as("rows"))
+        .agg(count(lit(1)).as("distributions_hit"), sum(col("rows")).as("n"),
+          max(col("rows")).as("max_rows"))
+        .crossJoin(hashed.agg(countDistinct(col("v")).as("ndv")))
+        .select(lit(label).as("candidate"), col("n"), col("ndv"),
+          col("distributions_hit"), col("max_rows"))
+    } }.reduce(_.unionAll(_))
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.select("candidate", "n", "ndv", "distributions_hit", "max_rows")
+        .collect().map(_.toSeq).sortBy(_.head.toString).toSeq
+    val got = sorted(EstimatorQueries.distributionStats(cands))
+    assert(got === sorted(perCandidate))
+    val byLabel = got.map(r => r.head -> r).toMap
+    // NULL keys count in n and as their own distribution, never in ndv
+    assert(byLabel("a.k")(1) === 240L)
+    assert(byLabel("a.k")(2) === 37L)
+    assert(byLabel("a.ts")(2) === 53L)
+    assert(byLabel("b.x")(1) === 150L)
+  }
 }

@@ -340,4 +340,14 @@ class GraphSpec extends SparkSpec {
     assert(ds.forall(_ > 0L))
     assert(ds.sliding(2).forall(p => p.length < 2 || p(0) <= p(1)))
   }
+
+  test("an observed HITS total splices as plain digits or fails loudly") {
+    assert(Graph.scale0Literal(new java.math.BigDecimal("123456789012345678901234")) ===
+      "123456789012345678901234")
+    // a fractional scale or a double would change the fixed-point division
+    intercept[IllegalArgumentException] {
+      Graph.scale0Literal(new java.math.BigDecimal("12.50"))
+    }
+    intercept[IllegalArgumentException](Graph.scale0Literal(1.0e12))
+  }
 }

@@ -760,4 +760,61 @@ class PlansSpec extends SparkSpec {
     assert(bcast.contains("BroadcastHashJoin"),
       s"gate-on branch must broadcast:\n$bcast")
   }
+
+  // Batched-aggregate shapes: each batch of aggregates over one input
+  // shares a pass. The exchange counts pin the plans of the final action.
+
+  private def exchanges(p: String): Int =
+    p.linesIterator.count(_.contains("Exchange "))
+
+  test("q548: one scan per table, stacked candidates, no broadcast") {
+    val p = plan("q548_distribution_advisor")
+    assert("FileScan parquet".r.findAllIn(p).size === 2,
+      s"orders and lineitem must be read once each:\n$p")
+    assert(!p.contains("BroadcastExchange"), p)
+    assert("Generate explode".r.findAllIn(p).size === 2, p)
+    // (candidate, v), (candidate, d), candidate, and the 6-row sort
+    assert(exchanges(p) === 4, p)
+  }
+
+  test("q470: keyed windows and one moment fold, no checkpoint, no broadcast") {
+    val p = plan("q470_tukey_nonadditivity")
+    assert(!p.contains("ExistingRDD"), p)
+    assert(!p.contains("BroadcastExchange"), p)
+    assert(p.contains("Window"), p)
+    assert(!p.contains("Join"), p)
+    // the 60-cell rollup, the mo and g windows, the global fold
+    assert(exchanges(p) === 4, p)
+  }
+
+  test("q274 / hitsInt: round 1 plans no join; final plan exchanges pinned") {
+    import org.apache.spark.sql.execution.QueryExecution
+    val ckPlans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "localCheckpoint") ckPlans.add(qe.executedPlan.toString): Unit
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      import spark.implicits._
+      Graph.hitsInt(Seq((1L, 10L), (1L, 11L), (2L, 10L)).toDF("hub", "auth"), 1)
+      org.apache.spark.graft.ListenerBridge.waitUntilEmpty(
+        spark.sparkContext, 10000L)
+    } finally spark.listenerManager.unregister(listener)
+    // the edge checkpoint, then round 1's authority and hub half-steps
+    val cks = ckPlans.toArray.map(_.toString)
+    assert(cks.length === 3, cks.mkString("\n\n"))
+    assert(!cks(1).contains("Join"), s"round-1 authorities need no join:\n${cks(1)}")
+    assert(cks(2).contains("Join"), cks(2))
+    // the final action only reads the two checkpointed score frames
+    assert(exchanges(plan("q274_hits")) === 0, plan("q274_hits"))
+  }
+
+  test("q68: clusters' final plan reads the checkpointed labels only") {
+    val p = plan("q68_dedup_clusters")
+    assert(p.contains("ExistingRDD"), p)
+    assert(!p.toLowerCase.contains("parquet"), p)
+    assert(exchanges(p) === 0, p)
+  }
 }
