@@ -1,7 +1,13 @@
 package graft.operators
 
-import graft.{SparkSpec, SparkEntry, Tables}
+import graft.{SparkSpec, SparkEntry, Tables, Tuning}
+import graft.plans.PlanFingerprint
+import java.nio.file.{Files, Paths}
+import org.apache.spark.graft.ListenerBridge
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import scala.jdk.CollectionConverters._
 
 /** Cross-checks of the operator inventory at sf0.001: every query runs,
   * flagship invariants hold, and a few results are re-derived through an
@@ -15,13 +21,52 @@ class QueriesSpec extends SparkSpec {
   }
 
   test("every declared query runs and every oracle key exists in queries") {
-    SparkEntry.oracleSql.keys.foreach { k =>
+    // Each query runs to the noop sink as Bench does (count() would let
+    // Catalyst prune columns), and its plans must match the committed
+    // manifest: per query, the md5 of its oracle SQL and the sorted
+    // multiset of analyzed-plan fingerprints of EVERY plan it executes,
+    // build-time checkpoint/observe/collect jobs included. A refactor
+    // that claims "no plan changed" is proven by this file staying put.
+    // After a deliberate plan change, copy the observed manifest this
+    // test writes under target/ over plans/manifest_sf0.001.tsv.
+    val oracles = SparkEntry.oracleSql
+    oracles.keys.foreach { k =>
       assert(SparkEntry.queries.contains(k), s"oracle without query: $k")
     }
-    SparkEntry.queries.foreach { case (name, q) =>
-      val n = q(spark, sfDir).count()
-      assert(n >= 0, s"$name failed")
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(PlanFingerprint.md5(
+          PlanFingerprint.canonicalText(qe.analyzed.toString))): Unit
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
+    spark.listenerManager.register(listener)
+    val observed = try SparkEntry.queries.toSeq.sortBy(_._1).map {
+      case (name, q) =>
+        Tuning.reset(spark)
+        q(spark, sfDir).write.format("noop").mode("overwrite").save()
+        assert(ListenerBridge.waitUntilEmpty(spark.sparkContext, 60000L),
+          s"$name: listener bus did not drain")
+        val fps = Iterator.continually(plans.poll()).takeWhile(_ != null)
+          .toSeq.sorted
+        val oracle = oracles.get(name).map(PlanFingerprint.md5).getOrElse("-")
+        name -> s"$name\t$oracle\t${fps.mkString(",")}"
+    } finally spark.listenerManager.unregister(listener)
+    val file = "manifest_sf0.001.tsv"
+    val committed = Paths.get("plans", file)
+    val expected =
+      if (!Files.exists(committed)) Map.empty[String, String]
+      else Files.readAllLines(committed).asScala
+        .map(l => l.takeWhile(_ != '\t') -> l).toMap
+    val drifted = (observed.map(_._1) ++ expected.keys).distinct.sorted
+      .filter(n => observed.toMap.get(n) != expected.get(n))
+    if (drifted.nonEmpty) {
+      Files.createDirectories(Paths.get("target"))
+      Files.write(Paths.get("target", file), observed.map(_._2).asJava)
+    }
+    assert(drifted.isEmpty, s"${drifted.size} queries drifted from " +
+      s"$committed (observed manifest: target/$file): " +
+      drifted.take(40).mkString(", "))
   }
 
   test("production-hash fingerprint twins run with identical shapes") {

@@ -1,6 +1,7 @@
 package graft.plans
 
 import graft.SparkSpec
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Plan fingerprints (stability + drift sensitivity) and result-set
@@ -12,8 +13,29 @@ class ResultCacheSpec extends SparkSpec {
     .groupBy(col("l_returnflag"))
     .agg(sum(expr("cast(round(l_quantity*100) as bigint)")).as("s"))
 
+  // DataFrame-API lambdas and Observation() carry per-build counters
+  // (x_N, a UUID name) that must not leak into the identity
+  private def qLambda = graft.Tables.lineitem(spark, sfDir)
+    .select(transform(array(col("l_quantity")), x => x * 2).as("t"))
+  private def qObserved = q1.observe(
+    org.apache.spark.sql.Observation(), count(lit(1)).as("n"))
+
   test("fingerprint is stable across plannings of the same query") {
     assert(PlanFingerprint.fingerprint(q1) === PlanFingerprint.fingerprint(q1))
+    assert(PlanFingerprint.fingerprint(qLambda) ===
+      PlanFingerprint.fingerprint(qLambda))
+    assert(PlanFingerprint.fingerprint(qObserved) ===
+      PlanFingerprint.fingerprint(qObserved))
+  }
+
+  test("nested lambdas that bind different variables never collide") {
+    // both levels are named x_N by the DataFrame API: renumbering keeps
+    // `x_0 -> x_1 -> x_0` apart from `x_0 -> x_1 -> x_1`
+    def nested(pick: (Column, Column) => Column) =
+      spark.range(3).select(array(col("id")).as("a"))
+        .select(transform(col("a"), x => transform(col("a"), y => pick(x, y))))
+    assert(PlanFingerprint.fingerprint(nested((x, _) => x)) !==
+      PlanFingerprint.fingerprint(nested((_, y) => y)))
   }
 
   test("different source directories never share a fingerprint") {
