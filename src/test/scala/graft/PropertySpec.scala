@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{TSql, Text}
+import graft.functions.{Exact, TSql, Text}
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 
@@ -159,6 +159,62 @@ class PropertySpec extends SparkSpec {
       Gen.choose(1L, 999999L)), n = 40) { case (num, den) =>
       val got = evalOne(expr(s"CAST($num div $den AS BIGINT)"))
       assert(got === (BigInt(num) / BigInt(den)).toLong, s"$num div $den")
+    }
+    // ... and so does every Spark-side spelling in functions/Exact: one
+    // query per helper over generated (num, den) cases, each checked
+    // against BigInt truncation. DECIMAL(38,0) helpers take numerators
+    // past the Long range; the Signed ones take negative denominators.
+    def cases(num: Gen[BigInt], den: Gen[Long]): Seq[(BigInt, BigInt)] = {
+      val out = Seq.newBuilder[(BigInt, BigInt)]
+      forAll(Gen.zip(num, den), n = 24) { case (a, b) => out += a -> BigInt(b) }
+      out.result() ++ Seq(BigInt(0) -> BigInt(7), BigInt(-14) -> BigInt(7),
+        BigInt(-13) -> BigInt(7), BigInt(13) -> BigInt(7))
+    }
+    def big(lo: Long): Gen[BigInt] = // |n| < 10^25, past the Long range
+      Gen.zip(Gen.choose(lo, 9999999999999L), Gen.choose(0L, 999999999999L))
+        .map { case (hi, l) => BigInt(hi) * BigInt(1000000000000L) + l }
+    val signedBig = big(-9999999999999L)
+    val longs = Gen.choose(-1000000000000000000L, 1000000000000000000L)
+      .map(BigInt(_))
+    val pos = Gen.choose(1L, 999999L)
+    val anySign = Gen.oneOf(pos, pos.map(-_))
+    def asDec(n: BigInt) = s"CAST('$n' AS DECIMAL(38,0))"
+    def asLong(n: BigInt) = s"CAST($n AS BIGINT)"
+    def check(name: String, f: (String, String) => String,
+        cs: Seq[(BigInt, BigInt)], numSql: BigInt => String,
+        expect: (BigInt, BigInt) => BigInt = _ / _): Unit = {
+      val row = Seq(1).toDF("x").select(cs.map { case (n, d) =>
+        expr(f(numSql(n), d.toString)) }: _*).head()
+      cs.zipWithIndex.foreach { case ((n, d), i) =>
+        val got = row.get(i) match {
+          case b: java.math.BigDecimal => BigInt(b.toBigIntegerExact)
+          case v: Long => BigInt(v)
+          case v: Int => BigInt(v)
+        }
+        assert(got === expect(n, d), s"$name($n, $d)")
+      }
+    }
+    import Exact._
+    def nonNeg(cs: Seq[(BigInt, BigInt)]) = cs.filter(_._1 >= 0)
+    check("fdiv", fdiv, nonNeg(cases(big(0L), pos)), asDec)
+    check("fdivBigint", fdivBigint, nonNeg(cases(longs.map(_.abs), pos)), asDec)
+    check("sdiv", sdiv, cases(signedBig, pos), asDec)
+    check("sdivBigint", sdivBigint, cases(longs, pos), asDec)
+    check("sdivSigned", sdivSigned, cases(signedBig, anySign), asDec)
+    check("sdivCases", sdivCases, cases(signedBig, pos), asDec)
+    check("sdivSignedDiv", sdivSignedDiv, cases(longs, anySign), asDec)
+    Seq[(String, (String, String) => String)]("sdivDiv" -> sdivDiv,
+      "sdivDivCases" -> sdivDivCases, "sdivDivCasesCast" -> sdivDivCasesCast,
+      "sdivDivCasesPos" -> sdivDivCasesPos,
+      "sdivDivCasesAbs" -> sdivDivCasesAbs).foreach { case (name, f) =>
+      check(name, f, cases(longs, pos), asLong)
+    }
+    check("sdivE6", sdivE6,
+      cases(Gen.choose(-1000000000000L, 1000000000000L).map(BigInt(_)), pos),
+      asLong, (n, d) => n * 1000000 / d)
+    cases(longs, pos).foreach { case (n, d) =>
+      assert(sdivLong(n.toLong, d.toLong) === (n / d).toLong, s"sdivLong($n, $d)")
+      assert(sdivLong(n, d) === (n / d).toLong, s"sdivLong(BigInt $n, $d)")
     }
   }
 
