@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{Q, Tables}
 import graft.functions.TSql
+import graft.functions.Exact._
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
@@ -642,8 +643,6 @@ object FunctionQueries {
     // (measured 3.75 -> 1.60 s at a 64k coalescing floor); inert at scale
     graft.Tuning.cpuDenseShuffles(s)
     import graft.functions.{Pairs, Text}
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val c = Tables.customer(s, dir).select(col("c_custkey"),
       substring(col("c_name"), 1, 16).as("blk"),
       col("c_nationkey").cast("long").as("nat"),
