@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Exact._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -151,9 +152,6 @@ object Graph {
     * authority-then-hub rounds.
     */
   def hitsInt(edges: DataFrame, iters: Int = 2): (DataFrame, DataFrame) = {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val e = edges.toDF("hub", "auth").localCheckpoint()
     var hubs = e.select(col("hub")).distinct()
       .withColumn("h", lit(1000000000000L))
