@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
+import graft.functions.Exact._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -752,7 +753,6 @@ object GraphQueries {
     val e = copurchaseEdges(s, dir).localCheckpoint()
     val deg = e.select(col("part_a").as("n")).union(e.select(col("part_b").as("n")))
       .groupBy(col("n")).agg(count(lit(1)).as("deg"))
-    val dec = "decimal(38,0)"
     val directed = e
       .join(deg.select(col("n").as("part_a"), col("deg").as("da")), "part_a")
       .join(deg.select(col("n").as("part_b"), col("deg").as("db")), "part_b")
@@ -1389,11 +1389,6 @@ object GraphQueries {
     * the edge list's own.
     */
   val q341Modularity: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val brands = Tables.part(s, dir)
       .select(col("p_partkey"), col("p_brand"))
     val e = copurchaseEdges(s, dir)
@@ -1415,7 +1410,7 @@ object GraphQueries {
       .select(col("c").as("brand"),
         col("mc").cast("long").as("m_in"),
         col("dc").cast("long").as("d_sum"),
-        expr(sdiv("(4 * m * mc - dc * dc) * 1000000000000", "4 * m * m"))
+        expr(sdivBigint("(4 * m * mc - dc * dc) * 1000000000000", "4 * m * m"))
           .as("contrib_e12"))
       .orderBy(col("brand"))
   }
@@ -1465,9 +1460,6 @@ object GraphQueries {
     * rows).
     */
   val q394RichClub: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val edges = copurchaseEdges(s, dir)
       .select(col("part_a"), col("part_b")).localCheckpoint()
     val deg = edges.select(col("part_a").as("p"))
@@ -1546,8 +1538,6 @@ object GraphQueries {
     * keyed joins; TakeOrdered(20) tail. No cartesians, no global sort.
     */
   val q415Betweenness: Q = (s, dir) => {
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS BIGINT)"
     // both orientations IN PLACE (Pairs.bothOrientations): the union-of-
     // flipped-projections idiom re-ran the whole co-purchase pipeline once
     // per branch inside this checkpoint job (r9)
@@ -1595,7 +1585,7 @@ object GraphQueries {
         .join(und, col("part") === col("src"))
         .join(w, col("seed") === col("wseed") && col("dst") === col("wpart"))
         .select(col("seed"), col("part"),
-          expr(fdiv("sigma * (1000000 + wdelta)", "wsigma")).as("term"))
+          expr(fdivBigint("sigma * (1000000 + wdelta)", "wsigma")).as("term"))
         .groupBy(col("seed"), col("part"))
         .agg(sum(col("term")).as("delta"))
         .localCheckpoint()
