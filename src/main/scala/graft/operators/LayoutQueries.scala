@@ -3,6 +3,7 @@ package graft.operators
 import graft.{Q, Tables}
 import graft.functions.TSql._
 import graft.functions.Text
+import graft.functions.Exact._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -462,15 +463,6 @@ object LayoutQueries {
 
   // ------------------- q541: historical VaR / CVaR on daily revenue moves
 
-  /** Sign-safe floor division: both engines floor |num| then re-apply the
-    * sign, so negative sums divide identically (Spark `div` truncates
-    * toward zero, DuckDB `//` floors — the repo's standard sdiv device).
-    */
-  private def sdiv(num: String, den: String): String =
-    s"""CASE WHEN $num >= 0 THEN $num div ($den)
-       | ELSE -(abs($num) div ($den)) END"""
-      .stripMargin.replace("\n", " ")
-
   /** q541: historical value-at-risk and expected shortfall of day-over-day
     * revenue changes — the risk readout a warehouse's finance mart serves.
     * The empirical method exactly: for confidence α, the tail is the m =
@@ -504,7 +496,7 @@ object LayoutQueries {
       .groupBy(col("alpha"))
       .agg(max(col("n")).as("n_days"), max(col("m")).as("m"),
         max(col("delta")).as("var_c"), sum(col("delta")).as("sum_tail"))
-      .withColumn("cvar_c", expr(sdiv("sum_tail", "m")))
+      .withColumn("cvar_c", expr(sdivDivCasesAbs("sum_tail", "m")))
       .drop("sum_tail")
       .orderBy(col("alpha"))
   }
@@ -1040,11 +1032,9 @@ object LayoutQueries {
     // term is ~2e35 and the denominator product ~2e29, both inside 38
     // digits with >100× headroom; sign is factored so truncation is
     // symmetric. Oracle mirrors the identical staging over HUGEINT.
-    def fdiv8(a: String) =
-      s"CAST((($a) - ($a) % 100000000) / 100000000 AS DECIMAL(38,0))"
-    val vkR = fdiv8("n * skk - sk * sk")
-    val vdR = fdiv8("n * sdd - sd * sd")
-    val nmR = fdiv8("abs(n * skd - sk * sd)")
+    val vkR = fdiv("n * skk - sk * sk", "100000000")
+    val vdR = fdiv("n * sdd - sd * sd", "100000000")
+    val nmR = fdiv("abs(n * skd - sk * sd)", "100000000")
     val mo = base.agg(count(lit(1)).cast("decimal(38,0)").as("n"),
       sum(col("ok")).cast("decimal(38,0)").as("sk"),
       sum(col("d")).cast("decimal(38,0)").as("sd"),
