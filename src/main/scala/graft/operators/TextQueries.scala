@@ -2,6 +2,8 @@ package graft.operators
 
 import graft.{Q, Tables}
 import graft.functions.{Pairs, Text}
+import graft.functions.Exact._
+import graft.functions.Text.{log2e6DuckSql => duckL2, log2e6SparkSql => l2}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -1627,7 +1629,6 @@ object TextQueries {
     * corpus), then metadata-sized joins.
     */
   val q273CohensKappa: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     val cm = q58LangId(s, dir).localCheckpoint() // (lang, predicted, n)
     val rowS = cm.groupBy(col("lang")).agg(sum(col("n")).as("row_n"))
     val colS = cm.groupBy(col("predicted")).agg(sum(col("n")).as("col_n"))
@@ -1861,8 +1862,6 @@ object TextQueries {
     * corpus scalar rides a broadcast cross join.
     */
   val q278SourceEntropy: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def l2(x: String) = Text.log2e6SparkSql(x)
     val sw = Tables.documents(s, dir)
       .select(col("source"), explode(Text.tokens(col("text"))).as("w"))
       .groupBy(col("source"), col("w")).agg(count(lit(1)).as("c_sw"))
@@ -1899,7 +1898,6 @@ object TextQueries {
   }
 
   val q278Sql: String = {
-    def l2(x: String) = Text.log2e6DuckSql(x)
     s"""WITH sw AS (
        |  SELECT source, w, COUNT(*) AS c_sw
        |  FROM (SELECT source, UNNEST(STRING_SPLIT(text, ' ')) AS w
@@ -1910,10 +1908,10 @@ object TextQueries {
        |corpus AS (SELECT CAST(SUM(c_w) AS BIGINT) AS z_all FROM w_tot),
        |terms AS (
        |  SELECT source, c_sw,
-       |    ${l2("c_sw")} AS l2_csw,
-       |    CAST(c_sw AS HUGEINT) * ${l2("c_sw")} AS term_h,
+       |    ${duckL2("c_sw")} AS l2_csw,
+       |    CAST(c_sw AS HUGEINT) * ${duckL2("c_sw")} AS term_h,
        |    CAST(c_sw AS HUGEINT) *
-       |      (${l2("c_sw")} + ${l2("z_all")} - ${l2("c_w")}) AS term_kl
+       |      (${duckL2("c_sw")} + ${duckL2("z_all")} - ${duckL2("c_w")}) AS term_kl
        |  FROM sw JOIN w_tot USING (w) CROSS JOIN corpus),
        |per_source AS (
        |  SELECT source, CAST(SUM(c_sw) AS BIGINT) AS z_s,
@@ -1922,8 +1920,8 @@ object TextQueries {
        |  FROM terms GROUP BY source),
        |fin AS (
        |  SELECT source, z_s, v_types, h_num,
-       |    ${l2("z_s")} AS l2_zs,
-       |    kl_num0 - CAST(z_s AS HUGEINT) * ${l2("z_s")} AS kl_num
+       |    ${duckL2("z_s")} AS l2_zs,
+       |    kl_num0 - CAST(z_s AS HUGEINT) * ${duckL2("z_s")} AS kl_num
        |  FROM per_source)
        |SELECT source, CAST(z_s AS BIGINT) AS z_tokens, v_types,
        |  CAST(l2_zs - h_num // z_s AS BIGINT) AS entropy_e6,
@@ -1953,8 +1951,6 @@ object TextQueries {
     * a TakeOrdered, never a global sort.
     */
   val q279FeatureMi: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def l2(x: String) = Text.log2e6SparkSql(x)
     val wl = Tables.documents(s, dir)
       .select(col("lang"), explode(Text.tokens(col("text"))).as("w"))
       .groupBy(col("w"), col("lang")).agg(count(lit(1)).as("n_wl"))
@@ -1980,7 +1976,6 @@ object TextQueries {
   }
 
   val q279Sql: String = {
-    def l2(x: String) = Text.log2e6DuckSql(x)
     s"""WITH wl AS (
        |  SELECT w, lang, COUNT(*) AS n_wl
        |  FROM (SELECT lang, UNNEST(STRING_SPLIT(text, ' ')) AS w
@@ -1994,7 +1989,7 @@ object TextQueries {
        |terms AS (
        |  SELECT w, n_w, n_all,
        |    CAST(n_wl AS HUGEINT) *
-       |      (${l2("n_wl")} + ${l2("n_all")} - ${l2("n_w")} - ${l2("n_l")})
+       |      (${duckL2("n_wl")} + ${duckL2("n_all")} - ${duckL2("n_w")} - ${duckL2("n_l")})
        |      AS term
        |  FROM wl JOIN w_tot USING (w) JOIN l_tot USING (lang)
        |  CROSS JOIN n_tot),
@@ -2042,8 +2037,6 @@ object TextQueries {
     * heads + one merge), never a global sort.
     */
   val q293Bm25: Q = (s, dir) => {
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     // the tokenized frame feeds BOTH the length projection and the tf
     // rollup — checkpoint so the corpus tokenizes once (the index-build seam)
     val d = Tables.documents(s, dir)
@@ -2120,9 +2113,6 @@ object TextQueries {
     * construction), one pair-key join for m, a 1-row fold.
     */
   val q320CaptureRecapture: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     // each detector's pair set is consumed by its count AND the overlap
     // join — checkpoint so neither LSH pipeline runs twice; the two
     // detectors are independent, so materialize them concurrently (r8)
@@ -2177,8 +2167,6 @@ object TextQueries {
     * integers. The full-outer pair join IS the pairing.
     */
   val q322McNemar: Q = (s, dir) => {
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val a = q55MinhashLsh(s, dir).select(col("doc_a"), col("doc_b"))
       .withColumn("in_a", lit(1L))
     val b = q56Simhash(s, dir).select(col("doc_a"), col("doc_b"))
@@ -2235,8 +2223,6 @@ object TextQueries {
     * frequencies rollup (≤ max-freq rows) → 1-row fold.
     */
   val q323Chao1: Q = (s, dir) => {
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val tf = Tables.documents(s, dir)
       .select(explode(Text.tokens(col("text"))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
@@ -2296,9 +2282,6 @@ object TextQueries {
     * and the error fold are metadata-sized joins on broadcast marginals.
     */
   val q328Raking: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val cells = Tables.documents(s, dir)
       .groupBy(col("source"), col("lang")).agg(count(lit(1)).as("n"))
     val scal = cells.agg(sum(col("n")).cast(dec).as("n_all"),
@@ -2386,9 +2369,6 @@ object TextQueries {
     * set broadcasts; per-term folds touch only present (doc, term) rows.
     */
   val q367TermDispersion: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val tf = Tables.documents(s, dir)
       .select(col("doc_id"), explode(Text.tokens(col("text"))).as("term"))
       .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
@@ -2475,13 +2455,6 @@ object TextQueries {
     * z-grid and the 190-pair fold are metadata-sized.
     */
   val q395BurrowsDelta: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val tf = Tables.documents(s, dir)
       .select(col("source"), explode(Text.tokens(col("text"))).as("term"))
       .groupBy(col("source"), col("term")).agg(count(lit(1)).as("cnt"))
@@ -2573,9 +2546,6 @@ object TextQueries {
     * frequency spectrum (metadata); a per-source fold.
     */
   val q392YulesK: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val tf = Tables.documents(s, dir)
       .select(col("source"), explode(Text.tokens(col("text"))).as("term"))
       .groupBy(col("source"), col("term")).agg(count(lit(1)).as("r"))
@@ -2628,9 +2598,6 @@ object TextQueries {
     * rollup (metadata-sized); a 6-row spine join finishes.
     */
   val q389GoodTuring: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     // bigram species — every unigram in this corpus repeats, so the
     // unigram n_1..n_5 table is empty; bigrams are also the LM use case
     val tf = Tables.documents(s, dir)
@@ -2709,12 +2676,6 @@ object TextQueries {
     * SOURCE count, a catalog constant, not by data volume) → pair fold.
     */
   val q397JensenShannon: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def l2(x: String) = Text.log2e6SparkSql(x)
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val sw = Tables.documents(s, dir)
       .select(col("source"), explode(Text.tokens(col("text"))).as("w"))
       .groupBy(col("source"), col("w")).agg(count(lit(1)).as("c"))
@@ -2740,7 +2701,7 @@ object TextQueries {
         sum(col("ca")).as("sa"), sum(col("cb")).as("sb"),
         sum(col("term_p")).as("tp"), sum(col("term_q")).as("tq"))
     per.select(col("src_a"), col("src_b"), col("shared_types"),
-      expr(sdiv(
+      expr(sdivBigint(
         """(tp + (za - sa) * CAST(1000000 AS DECIMAL(38,0))) * zb +
           | (tq + (zb - sb) * CAST(1000000 AS DECIMAL(38,0))) * za"""
           .stripMargin.replace("\n", " "),
@@ -2749,7 +2710,6 @@ object TextQueries {
   }
 
   val q397Sql: String = {
-    def l2(x: String) = Text.log2e6DuckSql(x)
     s"""WITH sw AS (
        |  SELECT source, w, CAST(COUNT(*) AS BIGINT) AS c
        |  FROM (SELECT source, UNNEST(STRING_SPLIT(text, ' ')) AS w
@@ -2768,9 +2728,9 @@ object TextQueries {
        |    COUNT(*) AS shared_types,
        |    CAST(SUM(ca) AS HUGEINT) AS sa, CAST(SUM(cb) AS HUGEINT) AS sb,
        |    SUM(CAST(ca AS HUGEINT) *
-       |      (${l2("2 * ca * zb")} - ${l2("ca * zb + cb * za")})) AS tp,
+       |      (${duckL2("2 * ca * zb")} - ${duckL2("ca * zb + cb * za")})) AS tp,
        |    SUM(CAST(cb AS HUGEINT) *
-       |      (${l2("2 * cb * za")} - ${l2("ca * zb + cb * za")})) AS tq
+       |      (${duckL2("2 * cb * za")} - ${duckL2("ca * zb + cb * za")})) AS tq
        |  FROM pairs GROUP BY src_a, src_b)
        |SELECT src_a, src_b, shared_types,
        |  CAST(CASE WHEN (tp + (za - sa) * CAST(1000000 AS HUGEINT)) * zb +
@@ -2877,11 +2837,6 @@ object TextQueries {
     * count) → two metadata folds.
     */
   val q401Krippendorff: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val langs = Seq("en", "fr", "es", "de", "zh")
     val toks = Text.tokens(col("text"))
     def occHits(l: String): org.apache.spark.sql.Column =
@@ -2930,7 +2885,7 @@ object TextQueries {
       .select(col("n_units").cast("long").as("n_units"),
         col("n2").cast("long").as("n2_coincidence"),
         col("d_o2").cast("long").as("d_o_x2"),
-        (lit(1000000L) - expr(sdiv("d_o2 * (n2 - 2) * 1000000",
+        (lit(1000000L) - expr(sdivBigint("d_o2 * (n2 - 2) * 1000000",
           "n2 * n2 - s2"))).as("alpha_e6"))
   }
 
@@ -3015,11 +2970,6 @@ object TextQueries {
     * total (no per-item scan) → a 1-row moment fold.
     */
   val q402Cronbach: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val toks = Text.tokens(col("text"))
     val items = Tables.documents(s, dir).select(
       col("n_chars").cast("long").as("i1"),
@@ -3035,7 +2985,7 @@ object TextQueries {
       sum(col("t")).as("st"), sum(col("t").cast(dec) * col("t")).as("qt"))
     m.select(col("n").cast("long").as("n_docs"),
       lit(4L).as("k_items"),
-      (lit(1333333L) - expr(sdiv(
+      (lit(1333333L) - expr(sdivBigint(
         """((n * q1 - s1 * s1) + (n * q2 - s2 * s2) + (n * q3 - s3 * s3)
           | + (n * q4 - s4 * s4)) * 1333333""".stripMargin.replace("\n", " "),
         "n * qt - st * st"))).as("alpha_e6"))
@@ -3098,8 +3048,6 @@ object TextQueries {
     */
   val q424Rake: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS BIGINT)"
     val stops = Text.stopwords("en")
     val toks = Tables.documents(s, dir)
       .select(col("doc_id"), posexplode(Text.tokens(col("text")))
@@ -3123,7 +3071,7 @@ object TextQueries {
         Seq("doc_id", "pid"))
     val wordStats = phraseWords.groupBy(col("w"))
       .agg(count(lit(1)).as("freq"), sum(col("len")).as("deg"))
-      .withColumn("wscore_e6", expr(fdiv("deg * 1000000", "freq")))
+      .withColumn("wscore_e6", expr(fdivBigint("deg * 1000000", "freq")))
     val phraseScores = phraseWords.join(wordStats, Seq("w"))
       .groupBy(col("doc_id"), col("pid"))
       .agg(sum(col("wscore_e6")).as("score_e6"))
