@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{Q, Tables}
 import graft.functions.{Pairs, Vectors}
+import graft.functions.Exact._
 import org.apache.spark.sql.functions._
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
@@ -83,7 +84,6 @@ object SimilarityQueries {
     * the global per-dim rollup and the join back are metadata-sized.
     */
   val q177ClassSeparability: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     val qv = Tables.embeddings(s, dir)
       .select(col("label"), posexplode(col("embedding")).as(Seq("d", "x")))
       .select(col("label"), col("d"),
@@ -96,12 +96,9 @@ object SimilarityQueries {
       .localCheckpoint()
     val gd = ld.groupBy(col("d"))
       .agg(sum(col("s")).as("gs"), sum(col("n")).as("gn"))
-    def sdiv(num: String, den: String) = expr(
-      s"""CASE WHEN $num < 0 THEN -CAST(((-($num)) div ($den)) AS BIGINT)
-         |     ELSE CAST((($num) div ($den)) AS BIGINT) END""".stripMargin)
     val cent = ld.join(gd, "d")
-      .withColumn("c_ld", sdiv("s", "n"))
-      .withColumn("c_gd", sdiv("gs", "gn"))
+      .withColumn("c_ld", expr(sdivDivCases("s", "n")))
+      .withColumn("c_gd", expr(sdivDivCases("gs", "gn")))
       .withColumn("diff", col("c_ld") - col("c_gd"))
       .withColumn("term",
         col("ss") - (lit(2L) * col("c_ld")).cast(dec) * col("s").cast(dec) +
@@ -999,7 +996,6 @@ object SimilarityQueries {
     * both SSE evaluations.
     */
   val q282LloydStep: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     val qv = Tables.embeddings(s, dir)
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("d", "x")))
       .select(col("vec_id"), col("d"),
@@ -1022,11 +1018,8 @@ object SimilarityQueries {
       .groupBy(col("cid"), col("d"))
       .agg(count(lit(1)).as("n"), sum(col("q")).as("s"),
         sum((col("q") * col("q")).cast(dec)).as("ss"))
-    def sdiv(num: String, den: String) =
-      s"""CASE WHEN $num < 0 THEN -CAST(((-($num)) div ($den)) AS BIGINT)
-         |     ELSE CAST((($num) div ($den)) AS BIGINT) END""".stripMargin
     roll.join(broadcast(cent0), Seq("cid", "d"))
-      .withColumn("c1", expr(sdiv("s", "n")))
+      .withColumn("c1", expr(sdivDivCases("s", "n")))
       .withColumn("sse0", col("ss") -
         (lit(2L) * col("c0")).cast(dec) * col("s").cast(dec) +
         col("n").cast(dec) * col("c0").cast(dec) * col("c0").cast(dec))
@@ -1109,9 +1102,6 @@ object SimilarityQueries {
     * the report is a |k|-row rollup.
     */
   val q303Silhouette: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val qv = Tables.embeddings(s, dir)
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("d", "x")))
       .select(col("vec_id"), col("d"),
@@ -1203,8 +1193,6 @@ object SimilarityQueries {
     * textbook two-round distributed DBSCAN.
     */
   val q299DbscanCensus: Q = (s, dir) => {
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val pts = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label"),
         round(element_at(col("embedding"), 1).cast("double") * 10000, 0)
@@ -1331,12 +1319,6 @@ object SimilarityQueries {
     * (k·|labels| rows) → three marginal folds → a 1-row finish.
     */
   val q324AdjustedRand: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def sdiv(n: String, d: String) =
-      s"""(CASE WHEN (($n) < 0) != (($d) < 0) THEN -1 ELSE 1 END *
-         | (ABS(CAST(($n) AS DECIMAL(38,0)))
-         |  div ABS(CAST(($d) AS DECIMAL(38,0)))))"""
-        .stripMargin.replace("\n", " ")
     val qv = Tables.embeddings(s, dir)
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("d", "x")))
       .select(col("vec_id"), col("d"),
@@ -1378,19 +1360,15 @@ object SimilarityQueries {
         expr("CAST((n * (n - 1)) div 2 AS DECIMAL(38,0))"))
       .select(col("n").cast("long").as("n_vecs"),
         col("k_clusters"), col("n_labels"),
-        (lit(1000000L) + expr(sdiv(
+        (lit(1000000L) + expr(sdivSignedDiv(
           "(2 * s_ij - s_a - s_b) * 1000000", "c_pairs"))).cast("long")
           .as("rand_e6"),
-        expr(sdiv("2 * (c_pairs * s_ij - s_a * s_b) * 1000000",
+        expr(sdivSignedDiv("2 * (c_pairs * s_ij - s_a * s_b) * 1000000",
           "c_pairs * (s_a + s_b) - 2 * s_a * s_b")).cast("long")
           .as("ari_e6"))
   }
 
   val q324Sql: String = {
-    def sdiv(n: String, d: String) =
-      s"""((CASE WHEN (($n) < 0) != (($d) < 0) THEN -1 ELSE 1 END) *
-         | (ABS(CAST(($n) AS HUGEINT)) // ABS(CAST(($d) AS HUGEINT))))"""
-        .stripMargin.replace("\n", " ")
     s"""WITH qv AS (
        |  SELECT vec_id, GENERATE_SUBSCRIPTS(embedding, 1) AS d,
        |    CAST(ROUND(UNNEST(CAST(embedding AS DOUBLE[])) * 10000) AS BIGINT)
@@ -1435,9 +1413,9 @@ object SimilarityQueries {
        |SELECT CAST(n AS BIGINT) AS n_vecs,
        |  CAST(k_clusters AS BIGINT) AS k_clusters,
        |  CAST(n_labels AS BIGINT) AS n_labels,
-       |  CAST(1000000 + ${sdiv("(2 * s_ij - s_a - s_b) * 1000000", "c_pairs")}
+       |  CAST(1000000 + ${duckSdivSigned("(2 * s_ij - s_a - s_b) * 1000000", "c_pairs")}
        |    AS BIGINT) AS rand_e6,
-       |  CAST(${sdiv("2 * (c_pairs * s_ij - s_a * s_b) * 1000000",
+       |  CAST(${duckSdivSigned("2 * (c_pairs * s_ij - s_a * s_b) * 1000000",
           "c_pairs * (s_a + s_b) - 2 * s_a * s_b")} AS BIGINT) AS ari_e6
        |FROM fin""".stripMargin
   }
@@ -1465,14 +1443,6 @@ object SimilarityQueries {
     * explode joined on the cell key (the q299 discipline) → 1-row fold.
     */
   val q326MoransI: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def sdiv(n: String, d: String) =
-      s"""(CASE WHEN (($n) < 0) != (($d) < 0) THEN -1 ELSE 1 END *
-         | (ABS(CAST(($n) AS DECIMAL(38,0)))
-         |  div ABS(CAST(($d) AS DECIMAL(38,0)))))"""
-        .stripMargin.replace("\n", " ")
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val cells = Tables.embeddings(s, dir)
       .select(
         expr(s"(CAST(ROUND(CAST(element_at(embedding, 1) AS DOUBLE) * 10000)" +
@@ -1514,7 +1484,7 @@ object SimilarityQueries {
         // a constant lattice (s_xx = 0) has no spatial structure to
         // measure — NULL, not a division error
         when(col("s_xx") > 0,
-          expr(sdiv("n * s_cross * 1000000", "w_pairs * s_xx"))).cast("long")
+          expr(sdivSignedDiv("n * s_cross * 1000000", "w_pairs * s_xx"))).cast("long")
           .as("morans_i_e6"),
         (-expr(fdiv("1000000", "n - 1"))).cast("long").as("expected_i_e6"))
   }
@@ -1580,9 +1550,6 @@ object SimilarityQueries {
     * panel is a 64-row fold.
     */
   val q365Isotropy: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val pd = Tables.embeddings(s, dir)
       .select(posexplode(col("embedding")).as(Seq("d", "x")))
       .select(col("d"),
@@ -1661,7 +1628,6 @@ object SimilarityQueries {
     * fold. One shuffle.
     */
   val q366BalanceSmd: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     val hv = graft.functions.Text.portableHash(col("vec_id").cast("string"))
     val ad = Tables.embeddings(s, dir)
       .select(when(hv % 2 === 0, 1L).otherwise(0L).as("a"),
@@ -1701,10 +1667,9 @@ object SimilarityQueries {
   }
 
   val q366Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val va = s"(${d("na * ssa - sa * sa")} / ${d("na * na")})"
-    val vb = s"(${d("nb * ssb - sb * sb")} / ${d("nb * nb")})"
-    val smd = s"((${d("sa")} / ${d("na")} - ${d("sb")} / ${d("nb")}) / " +
+    val va = s"(${dbl("na * ssa - sa * sa")} / ${dbl("na * na")})"
+    val vb = s"(${dbl("nb * ssb - sb * sb")} / ${dbl("nb * nb")})"
+    val smd = s"((${dbl("sa")} / ${dbl("na")} - ${dbl("sb")} / ${dbl("nb")}) / " +
       s"sqrt(($va + $vb) / 2.0))"
     s"""WITH qv AS (
       |  SELECT CASE WHEN CAST(concat('0x',
@@ -1773,8 +1738,6 @@ object SimilarityQueries {
     */
   val q411Lof: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS BIGINT)"
     val pts = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label"),
         round(element_at(col("embedding"), 1).cast("double") * 10000, 0)
@@ -1819,7 +1782,7 @@ object SimilarityQueries {
       .groupBy(col("vec_id")).agg(sum(col("reach")).as("sreach"))
       .join(kd.select(col("vec_id")), Seq("vec_id"))
       .select(col("vec_id"),
-        expr(fdiv(s"$LofK * 10000000000", "GREATEST(sreach, 1)"))
+        expr(fdivBigint(s"$LofK * 10000000000", "GREATEST(sreach, 1)"))
           .as("lrd_e8"))
       .localCheckpoint()
     val lof = ranked
@@ -1829,7 +1792,7 @@ object SimilarityQueries {
       .agg(sum(coalesce(col("lrdq"), lit(LofHorizonLrd))).as("slrdq"))
       .join(lrd, Seq("vec_id"))
       .select(col("vec_id"),
-        expr(fdiv("slrdq * 1000000", s"$LofK * lrd_e8")).as("lof_e6"),
+        expr(fdivBigint("slrdq * 1000000", s"$LofK * lrd_e8")).as("lof_e6"),
         col("lrd_e8"))
     lof.orderBy(col("lof_e6").desc, col("vec_id")).limit(20)
       .join(pts.select(col("vec_id"), col("label")), Seq("vec_id"))
@@ -1915,11 +1878,6 @@ object SimilarityQueries {
     */
   val q425Hubness: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val pts = Tables.embeddings(s, dir)
       .select(col("vec_id"),
         round(element_at(col("embedding"), 1).cast("double") * 10000, 0)
@@ -1978,9 +1936,8 @@ object SimilarityQueries {
   }
 
   val q425Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val m2 = s"(${d("s2")} / ${d("n")})"
-    val m3 = s"(${d("s3")} / ${d("n")})"
+    val m2 = s"(${dbl("s2")} / ${dbl("n")})"
+    val m3 = s"(${dbl("s3")} / ${dbl("n")})"
     s"""WITH pts AS (
        |  SELECT vec_id,
        |    CAST(ROUND(CAST(embedding[1] AS DOUBLE) * 10000) AS BIGINT) AS x,
