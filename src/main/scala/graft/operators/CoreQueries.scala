@@ -3,6 +3,8 @@ package graft.operators
 import graft.{Q, Tables}
 import graft.functions.TSql._
 import graft.functions.Text
+import graft.functions.Exact._
+import graft.functions.Text.{log2e6DuckSql => duckL2, log2e6SparkSql => l2}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
@@ -1143,7 +1145,6 @@ object CoreQueries {
     * rollup never funnels through one sort task.
     */
   val q208AbcXyz: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     val l = Tables.lineitem(s, dir)
     val rev = l.groupBy(col("l_partkey"))
       .agg(sum(cents(col("l_extendedprice"))).as("revenue_c"))
@@ -1333,7 +1334,6 @@ object CoreQueries {
     * corpus scalar.
     */
   val q206ReturnOutliers: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     val li = Tables.lineitem(s, dir)
       .select(col("l_suppkey"),
         (col("l_returnflag") === "R").cast("long").as("ret"))
@@ -1393,7 +1393,6 @@ object CoreQueries {
     val l = Tables.lineitem(s, dir)
     val x = cents(col("l_quantity"))
     val y = cents(col("l_extendedprice"))
-    val dec = "decimal(38,0)"
     // sums accumulate IN decimal (a long sum would wrap silently first at
     // large scale); n² runs in decimal for the same reason
     val g = l.groupBy(col("l_returnflag"))
@@ -2579,7 +2578,6 @@ object CoreQueries {
     * not fact rows.
     */
   val q160Gini: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     val rev = Tables.orders(s, dir)
       .join(broadcast(Tables.customer(s, dir)),
         col("o_custkey") === col("c_custkey"))
@@ -2592,11 +2590,10 @@ object CoreQueries {
       .agg(count(lit(1)).cast(dec).as("n"),
         sum(col("rev_c").cast(dec)).as("s0"),
         sum(col("i").cast(dec) * col("rev_c").cast(dec)).as("s1"))
-    def d(c: org.apache.spark.sql.Column) = c.cast("double")
     g.select(col("c_nationkey"), col("n").cast("long").as("n_customers"),
       col("s0").cast("long").as("revenue_c"),
-      ((lit(2.0) * d(col("s1")) - d(col("n") + lit(1)) * d(col("s0"))) /
-        (d(col("n")) * d(col("s0")))).as("gini"))
+      ((lit(2.0) * double(col("s1")) - double(col("n") + lit(1)) * double(col("s0"))) /
+        (double(col("n")) * double(col("s0")))).as("gini"))
   }
 
   val q160Sql: String =
@@ -2806,7 +2803,6 @@ object CoreQueries {
     * |parts|-sized moment rollup.
     */
   val q172SupplierHhi: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     val rev = Tables.lineitem(s, dir)
       .groupBy(col("l_partkey"), col("l_suppkey"))
       .agg(sum(cents(col("l_extendedprice"))).as("r_c"))
@@ -2854,7 +2850,6 @@ object CoreQueries {
     * in DECIMAL(38,0).
     */
   val q175PriceVolumeMix: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     val li = Tables.lineitem(s, dir)
       .filter(col("l_shipdate") >= lit("1995-03-01").cast("timestamp") &&
         col("l_shipdate") < lit("1995-05-01").cast("timestamp"))
@@ -2867,11 +2862,6 @@ object CoreQueries {
         sum(when(col("p1"), col("r_c")).otherwise(0L)).as("r1"),
         sum(when(!col("p1"), col("q_c")).otherwise(0L)).as("q2"),
         sum(when(!col("p1"), col("r_c")).otherwise(0L)).as("r2"))
-    // sign-factored truncating division (non-negative operands only; the
-    // two engines disagree on negative integer division — q167 note)
-    def sdiv(num: String, den: String) = expr(
-      s"""CASE WHEN $num < 0 THEN -CAST(((-($num)) div ($den)) AS BIGINT)
-         |     ELSE CAST((($num) div ($den)) AS BIGINT) END""".stripMargin)
     val eff = byPart
       .withColumn("delta_c", col("r2") - col("r1"))
       .withColumn("pn",
@@ -2879,9 +2869,9 @@ object CoreQueries {
           col("q2").cast(dec) * col("r1").cast(dec))
       .withColumn("vn", col("r1").cast(dec) * (col("q2") - col("q1")).cast(dec))
       .withColumn("price_eff_c",
-        when(col("q1") > 0L && col("q2") > 0L, sdiv("pn", "q2")).otherwise(0L))
+        when(col("q1") > 0L && col("q2") > 0L, expr(sdivDivCases("pn", "q2"))).otherwise(0L))
       .withColumn("volume_eff_c",
-        when(col("q1") > 0L && col("q2") > 0L, sdiv("vn", "q1"))
+        when(col("q1") > 0L && col("q2") > 0L, expr(sdivDivCases("vn", "q1")))
           .otherwise(col("delta_c")))
       .withColumn("joint_c",
         col("delta_c") - col("price_eff_c") - col("volume_eff_c"))
@@ -3052,7 +3042,6 @@ object CoreQueries {
     * tail would need the customer dimension and is a different question).
     */
   val q179DispersionIndex: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     val perCust = Tables.orders(s, dir)
       .groupBy(col("o_custkey")).agg(count(lit(1)).as("x"))
     perCust.join(broadcast(Tables.customer(s, dir)
@@ -3216,7 +3205,6 @@ object CoreQueries {
     val x1 = cents(col("l_quantity"))
     val x2 = cents(col("l_discount"))
     val y = cents(col("l_extendedprice"))
-    val dec = "decimal(38,0)"
     val g = l.groupBy(col("l_returnflag"))
       .agg(count(lit(1)).cast(dec).as("n"),
         sum(x1.cast(dec)).as("sx1"), sum(x2.cast(dec)).as("sx2"),
@@ -3233,13 +3221,12 @@ object CoreQueries {
       (col("n") * col("sx2x2") - col("sx2") * col("sx2")).as("a22"),
       (col("n") * col("sx1y") - col("sx1") * col("sy")).as("b1"),
       (col("n") * col("sx2y") - col("sx2") * col("sy")).as("b2"))
-    def d(c: String) = col(c).cast("double")
-    val det = d("a11") * d("a22") - d("a12") * d("a12")
-    val beta1 = (d("b1") * d("a22") - d("b2") * d("a12")) / det
-    val beta2 = (d("a11") * d("b2") - d("a12") * d("b1")) / det
+    val det = double("a11") * double("a22") - double("a12") * double("a12")
+    val beta1 = (double("b1") * double("a22") - double("b2") * double("a12")) / det
+    val beta2 = (double("a11") * double("b2") - double("a12") * double("b1")) / det
     m.select(col("l_returnflag"), col("n").cast("long").as("n_rows"),
       beta1.as("beta_qty"), beta2.as("beta_disc"),
-      ((d("sy") - beta1 * d("sx1") - beta2 * d("sx2")) / d("n"))
+      ((double("sy") - beta1 * double("sx1") - beta2 * double("sx2")) / double("n"))
         .as("beta_intercept"))
   }
 
@@ -4352,7 +4339,6 @@ object CoreQueries {
     * self-join on the part key, |years| output rows.
     */
   val q269PriceIndex: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     val py = Tables.lineitem(s, dir)
       .groupBy(col("l_partkey"), year(col("l_shipdate")).as("yr"))
       .agg(expr("""CAST(SUM(CAST(ROUND(l_extendedprice*100) AS BIGINT))
@@ -4426,7 +4412,6 @@ object CoreQueries {
     * the observed-day series).
     */
   val q270Acf: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     val d = Tables.lineitem(s, dir)
       .groupBy(expr("unix_timestamp(l_shipdate) DIV 86400").as("day"))
       .agg(sum(cents(col("l_extendedprice"))).as("rev"))
@@ -4506,7 +4491,6 @@ object CoreQueries {
     * observed counts — fan-out is |groups|·|segments|, never corpus rows.
     */
   val q275TCloseness: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     val rowsQ = Tables.customer(s, dir)
       .select(col("c_nationkey"),
         expr("(CAST(ROUND(c_acctbal*100) AS BIGINT) + 100000) div 100000")
@@ -4597,12 +4581,6 @@ object CoreQueries {
     * one term pass over |suppliers| rows.
     */
   val q281TheilDecomposition: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def l2(x: String) = graft.functions.Text.log2e6SparkSql(x)
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % $den) / $den AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val li = Tables.lineitem(s, dir)
       .select(col("l_suppkey"), cents(col("l_extendedprice")).as("c"))
     val sup = Tables.supplier(s, dir)
@@ -4637,15 +4615,12 @@ object CoreQueries {
         sum(col("t_tot")).as("tot_num"), sum(col("t_win")).as("win_num"))
       .crossJoin(broadcast(natTerms))
       .select(col("n_suppliers"), col("k_nations"),
-        expr(sdiv("tot_num", "x_all")).as("t_total_e6"),
-        expr(sdiv("btw_num", "x_all")).as("t_between_e6"),
-        expr(sdiv("win_num", "x_all")).as("t_within_e6"))
+        expr(sdivBigint("tot_num", "x_all")).as("t_total_e6"),
+        expr(sdivBigint("btw_num", "x_all")).as("t_between_e6"),
+        expr(sdivBigint("win_num", "x_all")).as("t_within_e6"))
   }
 
   val q281Sql: String = {
-    def l2(x: String) = graft.functions.Text.log2e6DuckSql(x)
-    def sdiv(num: String, den: String) =
-      s"CAST((CASE WHEN $num >= 0 THEN 1 ELSE -1 END) * (ABS($num) // $den) AS BIGINT)"
     s"""WITH rev AS (
        |  SELECT l_suppkey AS supp, s_nationkey AS nat,
        |    CAST(SUM(CAST(ROUND(l_extendedprice*100) AS BIGINT)) AS BIGINT)
@@ -4662,14 +4637,14 @@ object CoreQueries {
        |terms AS (
        |  SELECT x_all,
        |    CAST(x AS HUGEINT) *
-       |      (${l2("x")} + ${l2("n_all")} - ${l2("x_all")}) AS t_tot,
+       |      (${duckL2("x")} + ${duckL2("n_all")} - ${duckL2("x_all")}) AS t_tot,
        |    CAST(x AS HUGEINT) *
-       |      (${l2("x")} + ${l2("n_g")} - ${l2("x_g")}) AS t_win
+       |      (${duckL2("x")} + ${duckL2("n_g")} - ${duckL2("x_g")}) AS t_win
        |  FROM rev JOIN by_nat USING (nat) CROSS JOIN scal),
        |nat_terms AS (
        |  SELECT MAX(k_nations) AS k_nations,
        |    SUM(CAST(x_g AS HUGEINT) *
-       |      (${l2("x_g")} + ${l2("n_all")} - ${l2("x_all")} - ${l2("n_g")}))
+       |      (${duckL2("x_g")} + ${duckL2("n_all")} - ${duckL2("x_all")} - ${duckL2("n_g")}))
        |      AS btw_num
        |  FROM by_nat CROSS JOIN scal),
        |agg AS (
@@ -4678,9 +4653,9 @@ object CoreQueries {
        |  FROM terms)
        |SELECT CAST(n_suppliers AS BIGINT) AS n_suppliers,
        |  CAST(k_nations AS BIGINT) AS k_nations,
-       |  ${sdiv("tot_num", "x_all")} AS t_total_e6,
-       |  ${sdiv("btw_num", "x_all")} AS t_between_e6,
-       |  ${sdiv("win_num", "x_all")} AS t_within_e6
+       |  ${duckSdivBigint("tot_num", "x_all")} AS t_total_e6,
+       |  ${duckSdivBigint("btw_num", "x_all")} AS t_between_e6,
+       |  ${duckSdivBigint("win_num", "x_all")} AS t_within_e6
        |FROM agg CROSS JOIN nat_terms""".stripMargin
   }
 
@@ -4695,8 +4670,6 @@ object CoreQueries {
     * modal share floors once at e6.
     */
   val q305GroupedMode: Q = (s, dir) => {
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val joined = Tables.orders(s, dir)
       .join(Tables.customer(s, dir),
         col("o_custkey") === col("c_custkey"))
@@ -4776,11 +4749,6 @@ object CoreQueries {
     * frame → a pure expression chain (no further shuffle at all).
     */
   val q321Pacf: Q = (s, dir) => {
-    def sdiv(n: String, d: String) =
-      s"""(CASE WHEN (($n) < 0) != (($d) < 0) THEN -1 ELSE 1 END *
-         | (ABS(CAST(($n) AS DECIMAL(38,0)))
-         |  div ABS(CAST(($d) AS DECIMAL(38,0)))))"""
-        .stripMargin.replace("\n", " ")
     // the ACF frame feeds the pivot AND the final join — checkpoint so
     // q270's corpus co-moment pass runs once
     val acf = q270Acf(s, dir).select(col("lag"), col("acf_e6"))
@@ -4788,7 +4756,7 @@ object CoreQueries {
     val base = acf.groupBy().pivot("lag", 1 to PacfMaxLag)
       .agg(first(col("acf_e6")))
       .select((1 to PacfMaxLag).map(k => col(k.toString).as(s"r$k")): _*)
-    val chained = dlSteps(PacfMaxLag, sdiv).foldLeft(base) {
+    val chained = dlSteps(PacfMaxLag, sdivSignedDiv).foldLeft(base) {
       case (df, (name, e)) => df.withColumn(name, expr(e))
     }
     val stacked = chained.select(explode(array(
@@ -4801,11 +4769,7 @@ object CoreQueries {
   }
 
   val q321Sql: String = {
-    def sdiv(n: String, d: String) =
-      s"""((CASE WHEN (($n) < 0) != (($d) < 0) THEN -1 ELSE 1 END) *
-         | (ABS(CAST(($n) AS HUGEINT)) // ABS(CAST(($d) AS HUGEINT))))"""
-        .stripMargin.replace("\n", " ")
-    val steps = dlSteps(PacfMaxLag, sdiv)
+    val steps = dlSteps(PacfMaxLag, duckSdivSigned)
     val chain = steps.zipWithIndex.map { case ((name, e), i) =>
       s"s$i AS (SELECT *, $e AS $name FROM ${if (i == 0) "base" else s"s${i - 1}"})"
     }.mkString(",\n")
@@ -5168,9 +5132,6 @@ object CoreQueries {
     */
   val q508BinAdvisor: Q = (s, dir) => {
     import graft.functions.Text
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val o = Tables.orders(s, dir).select(cents(col("o_totalprice")).as("c"))
     val byV = o.groupBy(col("c")).agg(count(lit(1)).as("cnt"))
       .localCheckpoint()
@@ -5212,7 +5173,6 @@ object CoreQueries {
 
   val q508Sql: String = {
     import graft.functions.Text
-    def l2(x: String) = Text.log2e6DuckSql(x)
     def e2(y: String) = Text.exp2e6DuckSql(y)
     s"""WITH o AS (
       |  SELECT CAST(ROUND(o_totalprice*100) AS BIGINT) AS c FROM orders),
@@ -5238,7 +5198,7 @@ object CoreQueries {
       |  WHERE below + cnt >= (3 * CAST(n AS BIGINT) + 3) // 4),
       |staged AS (
       |  SELECT CAST(n AS BIGINT) AS n, mn, mx, p75 - p25 AS iqr,
-      |    ${e2(s"CAST((${l2("CAST(n AS BIGINT)")}) // 3 AS BIGINT)")}
+      |    ${e2(s"CAST((${duckL2("CAST(n AS BIGINT)")}) // 3 AS BIGINT)")}
       |      AS cbrt_n,
       |    CAST(FLOOR(SQRT(CAST(CAST(
       |      (n * sxx - sx * sx) // (n * n) AS VARCHAR) AS DOUBLE)))
@@ -5257,8 +5217,8 @@ object CoreQueries {
       |    ELSE (mx - mn + w_fd - 1) // w_fd END AS bins_fd,
       |  CASE WHEN w_scott = 0 THEN NULL
       |    ELSE (mx - mn + w_scott - 1) // w_scott END AS bins_scott,
-      |  1 + CAST((${l2("n")}) // 1000000
-      |    + CASE WHEN (${l2("n")}) % 1000000 > 0 THEN 1 ELSE 0 END
+      |  1 + CAST((${duckL2("n")}) // 1000000
+      |    + CASE WHEN (${duckL2("n")}) % 1000000 > 0 THEN 1 ELSE 0 END
       |    AS BIGINT) AS bins_sturges
       |FROM widths""".stripMargin
   }
