@@ -6,6 +6,8 @@ import org.apache.spark.sql.expressions.Window
 
 import graft.{Q, Tables}
 import graft.functions.{Pii, Text}
+import graft.functions.Exact._
+import graft.functions.Text.{log2e6DuckSql => duckL2, log2e6SparkSql => l2}
 
 /** Training-data curation operators: the corpus-hygiene passes a large-scale
   * LLM data pipeline runs between raw ingest and tokenization — repetition
@@ -919,7 +921,6 @@ object CurationQueries {
     * it.
     */
   val q164Auc: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     // single documents scan: q99ScoreCol inlined, no doc_id self-join (r9)
     val scored = Tables.documents(s, dir)
       .select(q99ScoreCol.as("score"),
@@ -1803,9 +1804,6 @@ object CurationQueries {
     * corpus pass.
     */
   val q430BrierDecomposition: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val bins = q226Calibration(s, dir)
       .select(col("n_docs"), col("n_events"), col("mean_phat_e6"))
     val tot = bins.agg(sum(col("n_docs")).cast(dec).as("nn"),
@@ -1891,8 +1889,6 @@ object CurationQueries {
     * corpus-scale; the finish is a 1-row fold.
     */
   val q331LoglossHl: Q = (s, dir) => {
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val bins = q226Calibration(s, dir)
       .select(col("bin"), col("n_docs"), col("n_events"),
         least(greatest(col("mean_phat_e6"), lit(1L)), lit(999999L))
@@ -1967,8 +1963,6 @@ object CurationQueries {
     * 10 rows → 55 intervals → ≤ 220 (i,k,j) triples, all broadcast joins.
     */
   val q336Isotonic: Q = (s, dir) => {
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val rateE12 =
       fdiv("CAST(n_events AS DECIMAL(38,0)) * 1000000000000", "n_docs")
     // the 10-bin rollup feeds the i/j/k sides and the final report —
@@ -2058,13 +2052,6 @@ object CurationQueries {
     * Plan: one documents pass with codegen token counts → a 1-row fold.
     */
   val q343FleissKappa: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val t = Text.tokens(col("text"))
     val nTok = size(t)
     val nChars = length(col("text"))
@@ -2088,7 +2075,7 @@ object CurationQueries {
         col("s").cast("long").as("s_low"),
         expr(fdiv("a * 1000000", "6 * nn")).cast("long").as("p_bar_e6"),
         expr(fdiv("b * 1000000", "9 * nn * nn")).cast("long").as("p_e_e6"),
-        expr(sdiv(s"(3 * nn * ${fdiv("a", "2")} - b) * 1000000",
+        expr(sdivBigint(s"(3 * nn * ${fdiv("a", "2")} - b) * 1000000",
           "9 * nn * nn - b")).as("kappa_e6"))
   }
 
@@ -2140,12 +2127,6 @@ object CurationQueries {
     * the two margins broadcast onto the cells); a 1-row fold ends it.
     */
   val q348GTest: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def l2(x: String) = Text.log2e6SparkSql(x)
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val d = Tables.documents(s, dir).select(col("lang"), col("source"))
     val cells = d.groupBy(col("lang"), col("source"))
       .agg(count(lit(1)).as("o"))
@@ -2168,11 +2149,10 @@ object CurationQueries {
       .select(col("n_cells").cast("long").as("n_cells"),
         col("df").cast("long").as("df"),
         col("gbits").cast("long").as("g_bits_e6"),
-        expr(sdiv("gbits * 1386294", "1000000")).as("g_e6"))
+        expr(sdivBigint("gbits * 1386294", "1000000")).as("g_e6"))
   }
 
   val q348Sql: String = {
-    def l2(x: String) = Text.log2e6DuckSql(x)
     s"""WITH d AS (SELECT lang, source FROM documents),
        |cells AS (SELECT lang, source, CAST(COUNT(*) AS BIGINT) AS o
        |  FROM d GROUP BY lang, source),
@@ -2183,7 +2163,7 @@ object CurationQueries {
        |n AS (SELECT CAST(COUNT(*) AS BIGINT) AS nn FROM d),
        |terms AS (
        |  SELECT CAST(o AS HUGEINT) *
-       |    (${l2("o")} + ${l2("nn")} - ${l2("rl")} - ${l2("cl")}) AS t
+       |    (${duckL2("o")} + ${duckL2("nn")} - ${duckL2("rl")} - ${duckL2("cl")}) AS t
        |  FROM cells JOIN rws USING (lang) JOIN cls USING (source)
        |  CROSS JOIN n),
        |folded AS (
@@ -2217,7 +2197,6 @@ object CurationQueries {
     * 1-row fold. Nothing after the scan is corpus-scale.
     */
   val q385Spiegelhalter: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     // single documents scan: q99ScoreCol inlined, no doc_id self-join (r9)
     val scored = Tables.documents(s, dir)
       .select((col("n_chars") >= 300).cast("long").as("resp"),
@@ -2235,7 +2214,6 @@ object CurationQueries {
   }
 
   val q385Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
     s"""WITH $q99ScoreCtes,
        |pd AS (
        |  SELECT CASE WHEN d.n_chars >= 300 THEN 1 ELSE 0 END AS resp,
@@ -2249,7 +2227,7 @@ object CurationQueries {
        |      * p * (1000000 - p)) AS den_e24
        |  FROM pd)
        |SELECT n AS n_docs,
-       |  ${d("num_e12")} / sqrt(${d("den_e24")}) AS z_d
+       |  ${dbl("num_e12")} / sqrt(${dbl("den_e24")}) AS z_d
        |FROM folded""".stripMargin
   }
 
@@ -2267,12 +2245,6 @@ object CurationQueries {
     * Plan: rides q226's single corpus pass; the fit is 10-row metadata.
     */
   val q386CoxCalibration: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def l2(x: String) = Text.log2e6SparkSql(x)
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     def logit(p: String) =
       s"""CAST(CASE WHEN (${l2(p)} - ${l2(s"1000000 - ($p)")}) >= 0 THEN 1
          | ELSE -1 END * CAST((abs((${l2(p)} - ${l2(s"1000000 - ($p)")})
@@ -2288,21 +2260,17 @@ object CurationQueries {
       sum(col("x")).as("sx"), sum(col("y")).as("sy"),
       sum(col("x") * col("x")).as("sxx"), sum(col("x") * col("y")).as("sxy"))
     sums.select(col("n").cast("long").as("n_bins"),
-      expr(sdiv("(n * sxy - sx * sy) * 1000000", "n * sxx - sx * sx"))
+      expr(sdivBigint("(n * sxy - sx * sy) * 1000000", "n * sxx - sx * sx"))
         .as("slope_e6"),
       // x/y already carry e6, so the intercept ratio is e6 without a
       // further scale factor (the slope ratio is dimensionless and needs it)
-      expr(sdiv("sy * sxx - sx * sxy", "n * sxx - sx * sx"))
+      expr(sdivBigint("sy * sxx - sx * sxy", "n * sxx - sx * sx"))
         .as("intercept_ln_e6"))
   }
 
   val q386Sql: String = {
-    def l2(x: String) = Text.log2e6DuckSql(x)
-    def sd(num: String, den: String) =
-      s"""CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | (ABS($num) // ($den))""".stripMargin.replace("\n", " ")
     def logit(p: String) =
-      s"(${sd(s"(${l2(p)} - ${l2(s"1000000 - ($p)")}) * 693147", "1000000")})"
+      s"(${duckSdiv(s"(${duckL2(p)} - ${duckL2(s"1000000 - ($p)")}) * 693147", "1000000")})"
     s"""WITH bins AS ($q226Sql),
        |pts AS (
        |  SELECT ${logit("GREATEST(LEAST(mean_phat_e6, 999999), 1)")} AS x,
@@ -2313,9 +2281,9 @@ object CurationQueries {
        |    SUM(x * x) AS sxx, SUM(x * y) AS sxy
        |  FROM pts)
        |SELECT CAST(n AS BIGINT) AS n_bins,
-       |  CAST(${sd("(n * sxy - sx * sy) * 1000000", "n * sxx - sx * sx")}
+       |  CAST(${duckSdiv("(n * sxy - sx * sy) * 1000000", "n * sxx - sx * sx")}
        |    AS BIGINT) AS slope_e6,
-       |  CAST(${sd("sy * sxx - sx * sxy", "n * sxx - sx * sx")}
+       |  CAST(${duckSdiv("sy * sxx - sx * sxy", "n * sxx - sx * sx")}
        |    AS BIGINT) AS intercept_ln_e6
        |FROM sums""".stripMargin
   }
@@ -2340,9 +2308,6 @@ object CurationQueries {
     * (checkpointed) → 4-α plan-time spine × metadata windows.
     */
   val q498MixtureWeights: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val toks = Tables.documents(s, dir)
       .select(col("source"), Text.tokenCount(col("text")).as("tk"))
       .groupBy(col("source")).agg(sum(col("tk")).as("t_s"))
@@ -2384,7 +2349,6 @@ object CurationQueries {
 
   val q498Sql: String = {
     val rungs = MixAlphaPm.map(a => s"($a)").mkString(", ")
-    def l2(x: String) = Text.log2e6DuckSql(x)
     def e2(y: String) = Text.exp2e6DuckSql(y)
     s"""WITH toks AS (
       |  SELECT source,
@@ -2393,16 +2357,16 @@ object CurationQueries {
       |alphas(alpha_pm) AS (VALUES $rungs),
       |weighted AS (
       |  SELECT CAST(alpha_pm AS BIGINT) AS alpha_pm, source, t_s,
-      |    ${e2(s"CAST(alpha_pm * (${l2("t_s")}) // 1000 AS BIGINT)")}
+      |    ${e2(s"CAST(alpha_pm * (${duckL2("t_s")}) // 1000 AS BIGINT)")}
       |      AS w
       |  FROM alphas CROSS JOIN toks),
       |tot AS (
       |  SELECT alpha_pm, SUM(w) AS wt,
-      |    SUM(CAST(w AS HUGEINT) * (${l2("w")})) AS swl
+      |    SUM(CAST(w AS HUGEINT) * (${duckL2("w")})) AS swl
       |  FROM weighted GROUP BY alpha_pm),
       |hh AS (
       |  SELECT alpha_pm, wt,
-      |    CAST((${l2("wt")}) - swl // wt AS BIGINT) AS h_e6
+      |    CAST((${duckL2("wt")}) - swl // wt AS BIGINT) AS h_e6
       |  FROM tot),
       |eff AS (
       |  SELECT alpha_pm, wt, ${e2("h_e6")} AS eff_sources FROM hh),
@@ -2448,9 +2412,6 @@ object CurationQueries {
     * shuffle carries counts, never text.
     */
   val q499CharEntropy: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     Tables.documents(s, dir)
       .select(col("doc_id"), explode(split(col("text"), "")).as("ch"))
       .groupBy(col("doc_id"), col("ch")).agg(count(lit(1)).as("c"))
@@ -2466,7 +2427,6 @@ object CurationQueries {
   }
 
   val q499Sql: String = {
-    def l2(x: String) = Text.log2e6DuckSql(x)
     s"""WITH chars AS (
       |  SELECT doc_id, UNNEST(STRING_SPLIT(text, '')) AS ch
       |  FROM documents),
@@ -2475,11 +2435,11 @@ object CurationQueries {
       |  FROM chars GROUP BY 1, 2),
       |docs AS (
       |  SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n,
-      |    SUM(CAST(c AS HUGEINT) * (${l2("c")})) AS sl
+      |    SUM(CAST(c AS HUGEINT) * (${duckL2("c")})) AS sl
       |  FROM cc GROUP BY doc_id)
       |SELECT doc_id, n AS n_chars,
-      |  CAST((${l2("n")}) - sl // n AS BIGINT) AS entropy_e6,
-      |  CAST(CASE WHEN (${l2("n")}) - sl // n < $CharEntropySuspectE6
+      |  CAST((${duckL2("n")}) - sl // n AS BIGINT) AS entropy_e6,
+      |  CAST(CASE WHEN (${duckL2("n")}) - sl // n < $CharEntropySuspectE6
       |    THEN 1 ELSE 0 END AS BIGINT) AS is_suspect
       |FROM docs""".stripMargin
   }
@@ -2636,10 +2596,6 @@ object CurationQueries {
     * Scale: one customer-dimension pass, nation-bounded rollup.
     */
   val q559RandomizedResponse: Q = (s, dir) => {
-    def sdivQ(num: String, den: String) =
-      s"""CASE WHEN $num >= 0 THEN ($num) div ($den)
-         | ELSE -((-($num)) div ($den)) END"""
-        .stripMargin.replace("\n", " ")
     Tables.customer(s, dir)
       .select(col("c_nationkey").cast("long").as("nk"),
         (col("c_mktsegment") === "BUILDING").cast("long").as("t"),
@@ -2654,7 +2610,7 @@ object CurationQueries {
       .select(col("nk").as("nation"), col("n"), col("true_cnt"),
         col("reported_cnt"),
         expr("true_cnt * 1000000 div n").as("true_e6"),
-        expr(sdivQ("(4 * reported_cnt - n) * 1000000", "2 * n"))
+        expr(sdivDivCasesPos("(4 * reported_cnt - n) * 1000000", "2 * n"))
           .as("est_e6"))
       .withColumn("err_e6", col("est_e6") - col("true_e6"))
       .withColumn("epsilon_e6", lit(1098612L)) // ln 3, plan-time literal
@@ -3145,11 +3101,6 @@ object CurationQueries {
     * broadcast scalars.
     */
   val q585DomainReweight: Q = (s, dir) => {
-    def sdivE6(num: String, den: String) =
-      s"""CASE WHEN $num >= 0
-         |  THEN CAST(CAST($num AS DECIMAL(38,0)) * 1000000 DIV $den AS BIGINT)
-         |  ELSE -CAST(CAST(-($num) AS DECIMAL(38,0)) * 1000000 DIV $den AS BIGINT)
-         |END""".stripMargin
     // single documents scan: q99ScoreCol inlined, no doc_id self-join (r9)
     val scored = Tables.documents(s, dir)
       .select(col("source"), q99ScoreCol.as("score"),
@@ -3500,11 +3451,6 @@ object CurationQueries {
     * everything else is nonnegative integer arithmetic.
     */
   val q595LengthBias: Q = (s, dir) => {
-    def sdivE6(num: String, den: String) =
-      s"""CASE WHEN $num >= 0
-         |  THEN CAST(CAST($num AS DECIMAL(38,0)) * 1000000 DIV $den AS BIGINT)
-         |  ELSE -CAST(CAST(-($num) AS DECIMAL(38,0)) * 1000000 DIV $den AS BIGINT)
-         |END""".stripMargin
     // single documents scan: q99ScoreCol inlined, no doc_id self-join (r9)
     val scored = Tables.documents(s, dir)
       .select(q99ScoreCol.as("score"),
@@ -3566,11 +3512,6 @@ object CurationQueries {
     */
   val q597QualityEpochs: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    def sdivE6(num: String, den: String) =
-      s"""CASE WHEN $num >= 0
-         |  THEN CAST(CAST($num AS DECIMAL(38,0)) * 1000000 DIV $den AS BIGINT)
-         |  ELSE -CAST(CAST(-($num) AS DECIMAL(38,0)) * 1000000 DIV $den AS BIGINT)
-         |END""".stripMargin
     // single documents scan: q99ScoreCol inlined, no doc_id self-join (r9)
     val bySrc = Tables.documents(s, dir)
       .select(col("source"), q99ScoreCol.as("score"),
@@ -3657,11 +3598,6 @@ object CurationQueries {
     * DECIMAL-staged mean; one corpus pass; 10-row report.
     */
   val q598QualityDrift: Q = (s, dir) => {
-    def sdivE6(num: String, den: String) =
-      s"""CASE WHEN $num >= 0
-         |  THEN CAST(CAST($num AS DECIMAL(38,0)) * 1000000 DIV $den AS BIGINT)
-         |  ELSE -CAST(CAST(-($num) AS DECIMAL(38,0)) * 1000000 DIV $den AS BIGINT)
-         |END""".stripMargin
     val d = Tables.documents(s, dir)
     val width = d.agg(expr("CAST(max(doc_id) AS BIGINT) div 10 + 1").as("w"))
     // single documents scan: q99ScoreCol inlined, no doc_id self-join (r9)
