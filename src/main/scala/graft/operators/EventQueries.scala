@@ -3,6 +3,8 @@ package graft.operators
 import graft.{Q, Tables}
 import graft.functions.TSql._
 import graft.functions.Text
+import graft.functions.Exact._
+import graft.functions.Text.{log2e6DuckSql => duckL2, log2e6SparkSql => l2}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -641,7 +643,6 @@ object EventQueries {
     */
   val q120AnomalousDays: Q = (s, dir) => {
     val e = Tables.events(s, dir)
-    val dec = "decimal(38,0)"
     val daily = e.groupBy(col("event_type"),
         expr("unix_timestamp(ts) DIV 86400").as("day"))
       .agg(sum(cents(col("value"))).as("total_c"))
@@ -699,7 +700,6 @@ object EventQueries {
     */
   val q121Seasonality: Q = (s, dir) => {
     val e = Tables.events(s, dir).filter(col("event_type") === "purchase")
-    val dec = "decimal(38,0)"
     val daily = e.groupBy(expr("unix_timestamp(ts) DIV 86400").as("day"))
       .agg(sum(cents(col("value"))).as("total_c"))
     // weekday sums accumulate IN decimal (long sums wrap silently first at
@@ -755,7 +755,6 @@ object EventQueries {
     */
   val q124CusumShift: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val dec = "decimal(38,0)"
     val e = Tables.events(s, dir).filter(col("event_type") === "purchase")
     val daily = e.groupBy(expr("unix_timestamp(ts) DIV 86400").as("day"))
       .agg(sum(cents(col("value"))).as("total_c"))
@@ -1077,7 +1076,6 @@ object EventQueries {
     */
   val q130SeasonalBacktest: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val dec = "decimal(38,0)"
     val e = Tables.events(s, dir).filter(col("event_type") === "purchase")
     val daily = e.groupBy(expr("unix_timestamp(ts) DIV 86400").as("day"))
       .agg(sum(cents(col("value"))).as("total_c"))
@@ -1141,7 +1139,6 @@ object EventQueries {
     */
   val q182ForecastScorecard: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val dec = "decimal(38,0)"
     val daily = Tables.events(s, dir).filter(col("event_type") === "purchase")
       .groupBy(expr("unix_timestamp(ts) DIV 86400").as("day"))
       .agg(sum(cents(col("value"))).as("total_c"))
@@ -1890,7 +1887,6 @@ object EventQueries {
     * the fraction of metric variance CUPED removes.
     */
   val q203Cuped: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     val e = Tables.events(s, dir)
       .select(col("user_id"), col("event_type"), col("value"),
         expr("unix_timestamp(ts) DIV 86400").as("day"))
@@ -2530,7 +2526,6 @@ object EventQueries {
     */
   val q161DriftTv: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val dec = "decimal(38,0)"
     val tagged = Tables.events(s, dir)
       .select(col("event_type"),
         when(((expr("unix_timestamp(ts) DIV 86400") + 4) % 7) < 5, 1L)
@@ -2748,7 +2743,6 @@ object EventQueries {
     */
   val q167SeasonalDecomp: Q = (s, dir) => {
     val W = org.apache.spark.sql.expressions.Window
-    val dec = "decimal(38,0)"
     val daily = Tables.events(s, dir).filter(col("event_type") === "purchase")
       .groupBy(expr("unix_timestamp(ts) DIV 86400").as("day"))
       .agg(sum(cents(col("value"))).as("v_c"))
@@ -2768,18 +2762,16 @@ object EventQueries {
     val seasonal = t.groupBy(col("dow"))
       .agg(sum(col("detr7").cast(dec)).as("s_sum"),
         count(col("detr7")).as("s_n"))
-    // truncating division with non-negative operands only (see Scaladoc)
-    def sdiv(num: String, den: String): org.apache.spark.sql.Column = expr(
-      s"""CAST(CASE WHEN $num < 0 THEN -((-($num)) div ($den))
-         |     ELSE ($num) div ($den) END AS BIGINT)""".stripMargin)
     t.join(broadcast(seasonal), "dow")
       .withColumn("t7e", col("t7").cast(dec) * lit(1000000L))
       .withColumn("de", col("detr7").cast(dec) * lit(1000000L))
       .withColumn("se", col("s_sum") * lit(1000000L))
       .withColumn("sden", (lit(7L) * col("s_n")).cast(dec))
-      .withColumn("trend_e6", sdiv("t7e", "7"))
-      .withColumn("seasonal_e6", when(col("s_n") > 0L, sdiv("se", "sden")))
-      .withColumn("remainder_e6", sdiv("de", "7") - col("seasonal_e6"))
+      .withColumn("trend_e6", expr(sdivDivCasesCast("t7e", "7")))
+      .withColumn("seasonal_e6", when(col("s_n") > 0L,
+        expr(sdivDivCasesCast("se", "sden"))))
+      .withColumn("remainder_e6",
+        expr(sdivDivCasesCast("de", "7")) - col("seasonal_e6"))
       .select(col("day"), col("dow"), col("v_c"), col("trend_e6"),
         col("seasonal_e6"), col("remainder_e6"))
   }
@@ -2843,7 +2835,6 @@ object EventQueries {
     * over ~8·|days| rows, never events.
     */
   val q168LeadLag: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     val daily = Tables.events(s, dir)
       .filter(col("event_type").isin("click", "purchase"))
       .groupBy(expr("unix_timestamp(ts) DIV 86400").as("day"))
@@ -4075,9 +4066,6 @@ object EventQueries {
     * re-shuffle after the user rollup.
     */
   val q292LogRank: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val e = Tables.events(s, dir)
       .select(col("user_id"), col("event_type"),
         expr("unix_millis(ts) div 86400000").as("day"))
@@ -4217,7 +4205,6 @@ object EventQueries {
     * shuffles.
     */
   val q291RatioMetric: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     val e = Tables.events(s, dir)
     val perUser = e.groupBy(col("user_id"))
       .agg(sum(when(col("event_type") === "purchase", cents(col("value")))
@@ -4407,8 +4394,6 @@ object EventQueries {
     * both report grains fold from the same term column.
     */
   val q280EntropyRate: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def l2(x: String) = graft.functions.Text.log2e6SparkSql(x)
     val e = Tables.events(s, dir)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
@@ -4442,7 +4427,6 @@ object EventQueries {
   }
 
   val q280Sql: String = {
-    def l2(x: String) = graft.functions.Text.log2e6DuckSql(x)
     s"""WITH seq AS (
        |  SELECT event_type AS cur,
        |    LEAD(event_type) OVER (
@@ -4456,7 +4440,7 @@ object EventQueries {
        |  FROM trans GROUP BY cur),
        |terms AS (
        |  SELECT cur, n_ct, n_c,
-       |    CAST(n_ct AS HUGEINT) * (${l2("n_c")} - ${l2("n_ct")}) AS term
+       |    CAST(n_ct AS HUGEINT) * (${duckL2("n_c")} - ${duckL2("n_ct")}) AS term
        |  FROM trans JOIN totals USING (cur)),
        |per_state AS (
        |  SELECT cur AS state, MAX(n_c) AS n_trans,
@@ -4497,9 +4481,6 @@ object EventQueries {
     * Corpus rows are touched exactly once.
     */
   val q296ForecastEval: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val e = Tables.events(s, dir)
       .select(expr("unix_millis(ts) div 86400000").as("day"))
     // metadata rollup consumed by bounds AND the spine join — checkpoint
@@ -4607,9 +4588,6 @@ object EventQueries {
     * near-unique-rollup migration as q164 (r7 verdict item 6).
     */
   val q297PrCurve: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val e = Tables.events(s, dir)
     // label = q127's conversion (purchase total ≥ ConvThresholdC) — chosen
     // there so both classes are non-empty at every SF; bare "ever
@@ -4701,9 +4679,6 @@ object EventQueries {
     * conditional rollup. No window, no join beyond the scalar.
     */
   val q298DiffInDiff: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val e = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(col("user_id"), cents(col("value")).as("v"),
@@ -4790,7 +4765,6 @@ object EventQueries {
     * second pass, no join back.
     */
   val q300Cuped: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     val e = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(col("user_id"), cents(col("value")).as("v"),
@@ -4886,8 +4860,6 @@ object EventQueries {
     * rollup.
     */
   val q301NelsonAalen: Q = (s, dir) => {
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val e = Tables.events(s, dir)
       .select(col("user_id"), col("event_type"),
         expr("unix_millis(ts) div 86400000").as("day"))
@@ -4975,8 +4947,6 @@ object EventQueries {
     * Exact integers; confidence floors once at e6.
     */
   val q302SeqPatterns: Q = (s, dir) => {
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val firsts = Tables.events(s, dir)
       .select(col("user_id"), col("event_type"),
         expr("unix_millis(ts)").as("ms"))
@@ -5047,9 +5017,6 @@ object EventQueries {
     * rollup (≤ range/width rows) → 1-row fold. No join at all.
     */
   val q304CemAtt: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val perUser = Tables.events(s, dir)
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_ev"),
@@ -5137,11 +5104,6 @@ object EventQueries {
     * day-of-week rollup all run over metadata-sized frames.
     */
   val q306SeasonalDecomp: Q = (s, dir) => {
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
-    def sdiv(num: String, den: String) =
-      s"""CASE WHEN $num < 0 THEN -(${fdiv(s"-($num)", den)})
-         |     ELSE ${fdiv(num, den)} END""".stripMargin.replace("\n", " ")
     val e = Tables.events(s, dir)
       .select(expr("unix_millis(ts) div 86400000").as("day"))
     // metadata rollup consumed by bounds AND the spine join — checkpoint
@@ -5165,7 +5127,7 @@ object EventQueries {
       .localCheckpoint() // consumed by the seasonal rollup AND the join
     val seasonal = trended.groupBy(col("dow"))
       .agg(sum(col("detr_e6")).as("sd"), count(lit(1)).as("nd"))
-      .select(col("dow"), expr(sdiv("sd", "nd")).as("seasonal_e6"))
+      .select(col("dow"), expr(sdivCases("sd", "nd")).as("seasonal_e6"))
     trended.join(broadcast(seasonal), Seq("dow"))
       .select(col("day"), col("a"),
         col("trend_e6").cast("long").as("trend_e6"),
@@ -5231,9 +5193,6 @@ object EventQueries {
     * the cell frame.
     */
   val q308IpsOffPolicy: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val W = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("ms"), col("event_id"))
     val logged = Tables.events(s, dir)
@@ -5352,9 +5311,6 @@ object EventQueries {
     * identical control-chart row from either source.
     */
   def xmrFromDays(byDay: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val W = org.apache.spark.sql.expressions.Window.orderBy(col("day"))
     val mr = byDay.withColumn("prev", lag(col("x"), 1).over(W))
       .withColumn("mrng", abs(col("x") - col("prev")))
@@ -5563,9 +5519,6 @@ object EventQueries {
     * scalar. No iteration driver-side, no collect.
     */
   val q318AlsStep: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val r = Tables.events(s, dir)
       .groupBy(col("user_id"), col("event_type"))
       .agg(count(lit(1)).as("r"))
@@ -5648,9 +5601,6 @@ object EventQueries {
     * map-side-combinable aggregate over the spine.
     */
   val q319Periodogram: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     def trigCase(p: Int, fn: Double => Double): String =
       (0 until p).map(k =>
         s"WHEN ${k}L THEN ${Math.round(fn(2 * Math.PI * k / p) * 1e6)}L")
@@ -5746,9 +5696,6 @@ object EventQueries {
     * pass binning via 9 integer comparisons, a 10-row rollup.
     */
   val q325Psi: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val e = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(cents(col("value")).as("v"),
@@ -5878,9 +5825,6 @@ object EventQueries {
     * broadcast cutpoint rows → a 25-cell rollup.
     */
   val q329Mobility: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val e = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(col("user_id"), cents(col("value")).as("v"),
@@ -6019,9 +5963,6 @@ object EventQueries {
     * rollup and the selection all run on metadata frames.
     */
   val q330Conformal: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val e = Tables.events(s, dir)
       .select(expr("unix_millis(ts) div 86400000").as("day"))
     val byDay = e.groupBy(col("day")).agg(count(lit(1)).as("a"))
@@ -6244,14 +6185,6 @@ object EventQueries {
     * rollups; everything downstream is metadata joined on broadcast.
     */
   val q334DoublyRobust: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
-    def sdiv(n: String, d: String) =
-      s"""(CASE WHEN (($n) < 0) != (($d) < 0) THEN -1 ELSE 1 END *
-         | (ABS(CAST(($n) AS DECIMAL(38,0)))
-         |  div ABS(CAST(($d) AS DECIMAL(38,0)))))"""
-        .stripMargin.replace("\n", " ")
     val W = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("ms"), col("event_id"))
     val logged = Tables.events(s, dir)
@@ -6302,7 +6235,7 @@ object EventQueries {
     val corr = joined.filter(col("a") === col("pi_a"))
       .select(col("x"),
         expr(fdiv("r_ax * n_x * 1000000", "n_ax")).as("ips_e6"),
-        expr(sdiv("(r_ax * 1000000 - CAST(n_ax AS DECIMAL(38,0)) * rhat_e6)" +
+        expr(sdivSignedDiv("(r_ax * 1000000 - CAST(n_ax AS DECIMAL(38,0)) * rhat_e6)" +
           " * n_x", "n_ax")).as("corr_e6"))
     val totals = cells.agg(sum(col("n_ax")).cast(dec).as("n_all"))
     dmTerm.join(corr, Seq("x"))
@@ -6312,7 +6245,7 @@ object EventQueries {
       .select(col("n_all").cast("long").as("n_eval"),
         expr(fdiv("dm_sum", "n_all")).cast("long").as("v_dm_e6"),
         expr(fdiv("ips_sum", "n_all")).cast("long").as("v_ips_e6"),
-        expr(sdiv("dm_sum + corr_sum", "n_all")).cast("long").as("v_dr_e6"))
+        expr(sdivSignedDiv("dm_sum + corr_sum", "n_all")).cast("long").as("v_dr_e6"))
   }
 
   val q334Sql: String =
@@ -6392,7 +6325,6 @@ object EventQueries {
     * Plan: one event pass → user rollup → a 1-row conditional fold.
     */
   val q335EffectSize: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     val hv = graft.functions.Text.portableHash(col("user_id").cast("string"))
     val pu = Tables.events(s, dir)
       .groupBy(col("user_id"))
@@ -6477,9 +6409,6 @@ object EventQueries {
     * broadcast scalars finishes.
     */
   val q337SignedRank: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val e = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(col("user_id"), cents(col("value")).as("v"),
@@ -6582,9 +6511,6 @@ object EventQueries {
     * rollup → a 1-row fold. One shuffle total.
     */
   val q339CochranQ: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     def flag(t: String) =
       max(when(col("event_type") === t, 1L).otherwise(0L))
     val f = Tables.events(s, dir)
@@ -6659,9 +6585,6 @@ object EventQueries {
     * |days|-sized metadata with broadcast scalars.
     */
   val q340JackknifeRatio: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val bd = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(expr("unix_millis(ts) div 86400000").as("day"),
@@ -6744,9 +6667,6 @@ object EventQueries {
     */
   val q342CIndex: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val u = Tables.events(s, dir)
       .select(col("user_id"), expr("unix_millis(ts) div 86400000").as("day"),
         col("event_type"))
@@ -6854,9 +6774,6 @@ object EventQueries {
     */
   val q379ChatterjeeXi: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val byDay = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(expr("unix_millis(ts) div 86400000").as("day"),
@@ -6920,11 +6837,6 @@ object EventQueries {
     */
   val q387YuleWalker: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val byDay = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(expr("unix_millis(ts) div 86400000").as("day"),
@@ -6957,16 +6869,13 @@ object EventQueries {
   }
 
   val q387Sql: String = {
-    def sd(num: String, den: String) =
-      s"""CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | (ABS($num) // ($den))""".stripMargin.replace("\n", " ")
     s"""WITH bd AS (
       |  SELECT CAST(epoch_ms(ts) AS BIGINT) // 86400000 AS day,
       |    CAST(SUM(CAST(ROUND(value*100) AS BIGINT)) AS HUGEINT) AS x
       |  FROM events WHERE event_type = 'purchase' GROUP BY 1),
       |tot AS (SELECT SUM(x) AS sx, CAST(COUNT(*) AS HUGEINT) AS n FROM bd),
       |devs AS (
-      |  SELECT day, n, ${sd("x * n - sx", "n")} AS d0
+      |  SELECT day, n, ${duckSdiv("x * n - sx", "n")} AS d0
       |  FROM bd CROSS JOIN tot),
       |lagged AS (
       |  SELECT day, n, d0,
@@ -6979,14 +6888,14 @@ object EventQueries {
       |    SUM(CASE WHEN d2 IS NOT NULL THEN d0 * d2 ELSE 0 END) AS s2
       |  FROM lagged),
       |gs AS (
-      |  SELECT n, ${sd("s0", "n")} AS g0, ${sd("s1", "n")} AS g1,
-      |    ${sd("s2", "n")} AS g2
+      |  SELECT n, ${duckSdiv("s0", "n")} AS g0, ${duckSdiv("s1", "n")} AS g1,
+      |    ${duckSdiv("s2", "n")} AS g2
       |  FROM sums),
       |fit AS (
       |  SELECT CAST(n AS BIGINT) AS n_days,
-      |    CAST(${sd("(g1 * g0 - g1 * g2) * 1000000", "g0 * g0 - g1 * g1")}
+      |    CAST(${duckSdiv("(g1 * g0 - g1 * g2) * 1000000", "g0 * g0 - g1 * g1")}
       |      AS BIGINT) AS phi1_e6,
-      |    CAST(${sd("(g2 * g0 - g1 * g1) * 1000000", "g0 * g0 - g1 * g1")}
+      |    CAST(${duckSdiv("(g2 * g0 - g1 * g1) * 1000000", "g0 * g0 - g1 * g1")}
       |      AS BIGINT) AS phi2_e6
       |  FROM gs)
       |SELECT n_days, phi1_e6, phi2_e6,
@@ -7017,13 +6926,6 @@ object EventQueries {
     */
   val q380LjungBox: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val byDay = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(expr("unix_millis(ts) div 86400000").as("day"),
@@ -7055,9 +6957,6 @@ object EventQueries {
   }
 
   val q380Sql: String = {
-    def sd(num: String, den: String) =
-      s"""CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | (ABS($num) // ($den))""".stripMargin.replace("\n", " ")
     val lagCols = (1 to LbLags)
       .map(l => s"LAG(d0, $l) OVER (ORDER BY day) AS d$l")
       .mkString(",\n      |    ")
@@ -7074,7 +6973,7 @@ object EventQueries {
       |  FROM events WHERE event_type = 'purchase' GROUP BY 1),
       |tot AS (SELECT SUM(x) AS sx, CAST(COUNT(*) AS HUGEINT) AS n FROM bd),
       |devs AS (
-      |  SELECT day, n, ${sd("x * n - sx", "n")} AS d0
+      |  SELECT day, n, ${duckSdiv("x * n - sx", "n")} AS d0
       |  FROM bd CROSS JOIN tot),
       |lagged AS (
       |  SELECT day, n, d0,
@@ -7110,11 +7009,6 @@ object EventQueries {
     * are 8 broadcast rows; the matrix is ≤ 25 metadata cells.
     */
   val q378WeightedKappa: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val e = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(col("user_id"), cents(col("value")).as("v"),
@@ -7155,7 +7049,7 @@ object EventQueries {
     swo.crossJoin(broadcast(swrc))
       .select(col("n").cast("long").as("n_users"),
         col("swo").cast("long").as("sum_w_obs"),
-        expr(sdiv("(swrc - n * swo) * 1000000", "swrc")).as("kappa_e6"))
+        expr(sdivBigint("(swrc - n * swo) * 1000000", "swrc")).as("kappa_e6"))
   }
 
   val q378Sql: String =
@@ -7385,9 +7279,6 @@ object EventQueries {
     * Plan: one event pass → user rollup → a 1-row fold.
     */
   val q369IccDeff: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val byU = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(col("user_id"), cents(col("value")).as("c"))
@@ -7418,12 +7309,11 @@ object EventQueries {
   }
 
   val q369Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val msb = s"(${d("ssb")} / ${d("g - 1")})"
-    val msw = s"(${d("ssw")} / ${d("nn - g")})"
-    val k0 = s"((${d("nn")} - ${d("n2")} / ${d("nn")}) / ${d("g - 1")})"
+    val msb = s"(${dbl("ssb")} / ${dbl("g - 1")})"
+    val msw = s"(${dbl("ssw")} / ${dbl("nn - g")})"
+    val k0 = s"((${dbl("nn")} - ${dbl("n2")} / ${dbl("nn")}) / ${dbl("g - 1")})"
     val icc = s"(($msb - $msw) / ($msb + ($k0 - 1.0) * $msw))"
-    val deff = s"(1.0 + (${d("nn")} / ${d("g")} - 1.0) * $icc)"
+    val deff = s"(1.0 + (${dbl("nn")} / ${dbl("g")} - 1.0) * $icc)"
     s"""WITH by_u AS (
       |  SELECT user_id, CAST(COUNT(*) AS HUGEINT) AS n,
       |    CAST(SUM(CAST(ROUND(value*100) AS BIGINT)) AS HUGEINT) AS s,
@@ -7441,7 +7331,7 @@ object EventQueries {
       |  FROM folded)
       |SELECT CAST(nn AS BIGINT) AS n_obs, CAST(g AS BIGINT) AS n_users,
       |  $icc AS icc_d, $deff AS deff_d,
-      |  ${d("nn")} / $deff AS ess_d
+      |  ${dbl("nn")} / $deff AS ess_d
       |FROM co""".stripMargin
   }
 
@@ -7457,9 +7347,6 @@ object EventQueries {
     * Plan: one event pass → user pre/post rollup → a 1-row fold.
     */
   val q370SignTest: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val e = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(col("user_id"), cents(col("value")).as("v"),
@@ -7512,11 +7399,6 @@ object EventQueries {
     * Plan: one event pass → day rollup (checkpointed); two 1-row folds.
     */
   val q361BreuschPagan: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val byDay = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(expr("unix_millis(ts) div 86400000").as("day"),
@@ -7551,8 +7433,7 @@ object EventQueries {
   }
 
   val q361Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    def c(ab: String, a: String, b: String) = d(s"n * $ab - $a * $b")
+    def c(ab: String, a: String, b: String) = dbl(s"n * $ab - $a * $b")
     val r2 = s"((${c("sxz", "sx", "sz")} * ${c("sxz", "sx", "sz")}) / " +
       s"(${c("sxx", "sx", "sx")} * ${c("szz", "sz", "sz")}))"
     s"""WITH bd AS (
@@ -7581,7 +7462,7 @@ object EventQueries {
       |    SUM(rc * rc * rc * rc) AS szz, SUM(x * rc * rc) AS sxz
       |  FROM r)
       |SELECT CAST(n AS BIGINT) AS n_days, $r2 AS r2_aux,
-      |  ${d("n")} * $r2 AS bp_lm
+      |  ${dbl("n")} * $r2 AS bp_lm
       |FROM aux""".stripMargin
   }
 
@@ -7600,11 +7481,6 @@ object EventQueries {
     * Plan: one event pass → day rollup (checkpointed); two 1-row folds.
     */
   val q362JarqueBera: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val byDay = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(expr("unix_millis(ts) div 86400000").as("day"),
@@ -7631,10 +7507,9 @@ object EventQueries {
   }
 
   val q362Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val m2 = s"(${d("s2")} / ${d("n")})"
-    val m3 = s"(${d("s3")} / ${d("n")})"
-    val m4 = s"(${d("s4")} / ${d("n")})"
+    val m2 = s"(${dbl("s2")} / ${dbl("n")})"
+    val m3 = s"(${dbl("s3")} / ${dbl("n")})"
+    val m4 = s"(${dbl("s4")} / ${dbl("n")})"
     val skew = s"($m3 / ($m2 * sqrt($m2)))"
     val exk = s"($m4 / ($m2 * $m2) - 3.0)"
     s"""WITH bd AS (
@@ -7651,7 +7526,7 @@ object EventQueries {
       |    SUM(d * d * d) AS s3, SUM(d * d * d * d) AS s4
       |  FROM devs)
       |SELECT CAST(n AS BIGINT) AS n_days, $skew AS skew_d, $exk AS exkurt_d,
-      |  ${d("n")} / 6.0 * ($skew * $skew + $exk * $exk / 4.0) AS jb_d
+      |  ${dbl("n")} / 6.0 * ($skew * $skew + $exk * $exk / 4.0) AS jb_d
       |FROM moms""".stripMargin
   }
 
@@ -7669,11 +7544,6 @@ object EventQueries {
     */
   val q363ArchLm: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val w = Window.orderBy(col("day"))
     val diffs = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
@@ -7704,8 +7574,7 @@ object EventQueries {
   }
 
   val q363Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    def c(ab: String, a: String, b: String) = d(s"n * $ab - $a * $b")
+    def c(ab: String, a: String, b: String) = dbl(s"n * $ab - $a * $b")
     val r2 = s"((${c("sxy", "sx", "sy")} * ${c("sxy", "sx", "sy")}) / " +
       s"(${c("sxx", "sx", "sx")} * ${c("syy", "sy", "sy")}))"
     s"""WITH bd AS (
@@ -7733,7 +7602,7 @@ object EventQueries {
       |    SUM(z * zp) AS sxy
       |  FROM zs)
       |SELECT CAST(n AS BIGINT) AS n_pairs, $r2 AS r2_aux,
-      |  ${d("n")} * $r2 AS arch_lm
+      |  ${dbl("n")} * $r2 AS arch_lm
       |FROM sums""".stripMargin
   }
 
@@ -7753,7 +7622,6 @@ object EventQueries {
     */
   val q364VarianceRatio: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val dec = "decimal(38,0)"
     val w = Window.orderBy(col("day"))
     val diffs = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
@@ -7788,9 +7656,8 @@ object EventQueries {
   }
 
   val q364Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
     def varSel(src: String, c: String) =
-      s"""(SELECT ${d(s"n * ss - s * s")} / ${d("n * (n - 1)")} AS v,
+      s"""(SELECT ${dbl(s"n * ss - s * s")} / ${dbl("n * (n - 1)")} AS v,
          | CAST(n AS BIGINT) AS n FROM (
          | SELECT CAST(COUNT(*) AS HUGEINT) AS n, SUM($c) AS s,
          |   SUM($c * $c) AS ss FROM $src))""".stripMargin.replace("\n", " ")
@@ -7943,11 +7810,6 @@ object EventQueries {
     */
   val q358NeweyWest: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val byDay = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(expr("unix_millis(ts) div 86400000").as("day"),
@@ -7981,9 +7843,6 @@ object EventQueries {
   val q358Sql: String = {
     val nwNum = "6 * g0 + 2 * (" +
       (1 to NwLags).map(l => s"${6 - l} * g$l").mkString(" + ") + ")"
-    def sd(num: String, den: String) =
-      s"""CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | (ABS($num) // ($den))""".stripMargin.replace("\n", " ")
     val lagCols = (1 to NwLags)
       .map(l => s"LAG(d0, $l) OVER (ORDER BY day) AS d$l").mkString(",\n      |    ")
     val gCols = (1 to NwLags)
@@ -7995,7 +7854,7 @@ object EventQueries {
       |  FROM events WHERE event_type = 'purchase' GROUP BY 1),
       |tot AS (SELECT SUM(x) AS sx, CAST(COUNT(*) AS HUGEINT) AS n FROM bd),
       |devs AS (
-      |  SELECT day, n, ${sd("x * n - sx", "n")} AS d0
+      |  SELECT day, n, ${duckSdiv("x * n - sx", "n")} AS d0
       |  FROM bd CROSS JOIN tot),
       |lagged AS (
       |  SELECT day, n, d0,
@@ -8006,9 +7865,9 @@ object EventQueries {
       |    $gCols
       |  FROM lagged)
       |SELECT CAST(n AS BIGINT) AS n_days,
-      |  CAST(${sd("g0", "n")} AS BIGINT) AS gamma0_c2,
-      |  CAST(${sd(nwNum, "6 * n")} AS BIGINT) AS nw_c2,
-      |  CAST(${sd(s"(${sd(nwNum, "6 * n")}) * 1000000", sd("g0", "n"))}
+      |  CAST(${duckSdiv("g0", "n")} AS BIGINT) AS gamma0_c2,
+      |  CAST(${duckSdiv(nwNum, "6 * n")} AS BIGINT) AS nw_c2,
+      |  CAST(${duckSdiv(s"(${duckSdiv(nwNum, "6 * n")}) * 1000000", duckSdiv("g0", "n"))}
       |    AS BIGINT) AS vif_e6
       |FROM gs""".stripMargin
   }
@@ -8032,9 +7891,6 @@ object EventQueries {
     */
   val q359BowkerSymmetry: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val trans = Tables.events(s, dir)
       .select(col("user_id"), col("ts"), col("event_id"),
@@ -8117,14 +7973,6 @@ object EventQueries {
     * off the first-half value rollup; the test fold is 1-row.
     */
   val q360KupiecPof: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def l2(x: String) = graft.functions.Text.log2e6SparkSql(x)
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val l2pE6 = math.round(KupiecLog2P * 1e6)
     val l2qE6 = math.round(KupiecLog2Q * 1e6)
     val byDay = Tables.events(s, dir)
@@ -8160,11 +8008,10 @@ object EventQueries {
         col("thr").cast("long").as("floor_c"),
         expr(fdiv("n * 1000000", KupiecP.toString)).cast("long")
           .as("expected_breach_e6"),
-        expr(sdiv("bits_e6 * 1386294", "1000000")).as("lr_e6"))
+        expr(sdivBigint("bits_e6 * 1386294", "1000000")).as("lr_e6"))
   }
 
   val q360Sql: String = {
-    def l2(x: String) = graft.functions.Text.log2e6DuckSql(x)
     val l2pE6 = math.round(KupiecLog2P * 1e6)
     val l2qE6 = math.round(KupiecLog2Q * 1e6)
     s"""WITH bd AS (
@@ -8191,8 +8038,8 @@ object EventQueries {
       |    CASE
       |      WHEN xx = 0 THEN -(n * $l2qE6)
       |      WHEN xx = n THEN -(n * $l2pE6)
-      |      ELSE xx * (${l2("CAST(xx AS BIGINT)")} - ${l2("CAST(n AS BIGINT)")} - $l2pE6)
-      |        + (n - xx) * (${l2("CAST((n - xx) AS BIGINT)")} - ${l2("CAST(n AS BIGINT)")} - $l2qE6)
+      |      ELSE xx * (${duckL2("CAST(xx AS BIGINT)")} - ${duckL2("CAST(n AS BIGINT)")} - $l2pE6)
+      |        + (n - xx) * (${duckL2("CAST((n - xx) AS BIGINT)")} - ${duckL2("CAST(n AS BIGINT)")} - $l2qE6)
       |      END AS bits_e6
       |  FROM test)
       |SELECT CAST(n AS BIGINT) AS n_test, CAST(xx AS BIGINT) AS n_breach,
@@ -8219,9 +8066,6 @@ object EventQueries {
     */
   val q353Drawdown: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val byDay = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(expr("unix_millis(ts) div 86400000").as("day"),
@@ -8255,7 +8099,6 @@ object EventQueries {
   }
 
   val q353Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
     s"""WITH bd AS (
       |  SELECT CAST(epoch_ms(ts) AS BIGINT) // 86400000 AS day,
       |    SUM(CAST(ROUND(value*100) AS BIGINT)) AS x
@@ -8281,11 +8124,11 @@ object EventQueries {
       |  CAST(max_x AS BIGINT) AS max_day_c,
       |  CAST(max_dd AS BIGINT) AS max_dd_c,
       |  CAST(max_dd * 1000000 // max_x AS BIGINT) AS dd_share_e6,
-      |  ${d("sd1")} / ${d("nd")} AS mean_diff_c,
-      |  sqrt(${d("nd * sd2 - sd1 * sd1")} / ${d("nd * (nd - 1)")})
+      |  ${dbl("sd1")} / ${dbl("nd")} AS mean_diff_c,
+      |  sqrt(${dbl("nd * sd2 - sd1 * sd1")} / ${dbl("nd * (nd - 1)")})
       |    AS sd_diff_c,
-      |  (${d("sd1")} / ${d("nd")}) /
-      |    sqrt(${d("nd * sd2 - sd1 * sd1")} / ${d("nd * (nd - 1)")})
+      |  (${dbl("sd1")} / ${dbl("nd")}) /
+      |    sqrt(${dbl("nd * sd2 - sd1 * sd1")} / ${dbl("nd * (nd - 1)")})
       |    AS sharpe_d
       |FROM folded""".stripMargin
   }
@@ -8316,13 +8159,6 @@ object EventQueries {
     */
   val q355PageHinkley: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val byDay = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(expr("unix_millis(ts) div 86400000").as("day"),
@@ -8487,9 +8323,6 @@ object EventQueries {
     */
   val q349RunsTest: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val byDay = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(expr("unix_millis(ts) div 86400000").as("day"),
@@ -8572,13 +8405,6 @@ object EventQueries {
     * fold. One shuffle.
     */
   val q350OddsRatio: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val hv = graft.functions.Text.portableHash(col("user_id").cast("string"))
     val pu = Tables.events(s, dir)
       .groupBy(col("user_id"), expr("unix_millis(ts) div 86400000").as("day"))
@@ -8601,7 +8427,7 @@ object EventQueries {
         expr(fdiv("a * d * 1000000", "b * c")).cast("long").as("or_e6"),
         expr(fdiv("a * (c + d) * 1000000", "c * (a + b)")).cast("long")
           .as("rr_e6"),
-        expr(sdiv("(a * (c + d) - c * (a + b)) * 1000000",
+        expr(sdivBigint("(a * (c + d) - c * (a + b)) * 1000000",
           "(a + b) * (c + d)")).as("rd_e6"),
         sqrt(lit(1.0) / col("a").cast("double") +
           lit(1.0) / col("b").cast("double") +
@@ -8669,9 +8495,6 @@ object EventQueries {
     * 3-row stratum fold → 1-row finish.
     */
   val q351MantelHaenszel: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val hv = graft.functions.Text.portableHash(col("user_id").cast("string"))
     val ud = Tables.events(s, dir)
       .groupBy(col("user_id"), expr("unix_millis(ts) div 86400000").as("day"))
@@ -8777,7 +8600,6 @@ object EventQueries {
     * Plan: one event pass → day maxima (metadata-sized) → a 1-row fold.
     */
   val q345GumbelMaxima: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     val bm = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(expr("unix_millis(ts) div 86400000").as("day"),
@@ -8797,9 +8619,8 @@ object EventQueries {
   }
 
   val q345Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val mean = s"${d("sx")} / ${d("n")}"
-    val sd = s"sqrt(${d("n * sxx - sx * sx")} / ${d("n * (n - 1)")})"
+    val mean = s"${dbl("sx")} / ${dbl("n")}"
+    val sd = s"sqrt(${dbl("n * sxx - sx * sx")} / ${dbl("n * (n - 1)")})"
     val beta = s"($sd) * $GumbelBetaK"
     val mu = s"($mean) - $GumbelGamma * ($beta)"
     s"""WITH bm AS (
@@ -8839,13 +8660,6 @@ object EventQueries {
     */
   val q344DurbinWatson: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val byDay = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(expr("unix_millis(ts) div 86400000").as("day"),
@@ -8944,14 +8758,6 @@ object EventQueries {
     */
   val q399Hurst: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val dec = "decimal(38,0)"
-    def l2(x: String) = graft.functions.Text.log2e6SparkSql(x)
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val byDay = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(expr("unix_millis(ts) div 86400000").as("day"),
@@ -8991,7 +8797,7 @@ object EventQueries {
     val slope = pts.agg(count(lit(1)).cast(dec).as("n"),
       sum(col("lx")).as("sx"), sum(col("ly")).as("sy"),
       sum(col("lx") * col("lx")).as("sxx"), sum(col("lx") * col("ly")).as("sxy"))
-      .select(expr(sdiv("(n * sxy - sx * sy) * 1000000",
+      .select(expr(sdivBigint("(n * sxy - sx * sy) * 1000000",
         "n * sxx - sx * sx")).as("hurst_e6"))
     val piv = perSize.agg(
       sum(when(col("m") === 5L, col("avg_rs_e6"))).as("rs5_e6"),
@@ -9007,7 +8813,6 @@ object EventQueries {
   }
 
   val q399Sql: String = {
-    def l2(x: String) = graft.functions.Text.log2e6DuckSql(x)
     s"""WITH bd AS (
       |  SELECT CAST(epoch_ms(ts) AS BIGINT) // 86400000 AS day,
       |    SUM(CAST(ROUND(value*100) AS BIGINT)) // 100 AS x
@@ -9038,8 +8843,8 @@ object EventQueries {
       |  SELECT m, CAST(SUM(rs_e6) // COUNT(*) AS BIGINT) AS avg_rs_e6
       |  FROM blocks GROUP BY m),
       |pts AS (
-      |  SELECT CAST(${l2("m")} AS HUGEINT) AS lx,
-      |    CAST(${l2("avg_rs_e6")} AS HUGEINT) AS ly
+      |  SELECT CAST(${duckL2("m")} AS HUGEINT) AS lx,
+      |    CAST(${duckL2("avg_rs_e6")} AS HUGEINT) AS ly
       |  FROM per_size),
       |slope AS (
       |  SELECT CAST(CASE WHEN COUNT(*) * SUM(lx * ly) - SUM(lx) * SUM(ly)
@@ -9180,13 +8985,6 @@ object EventQueries {
     */
   val q405Granger: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val byDay = Tables.events(s, dir)
       .select(expr("unix_millis(ts) div 86400000").as("day"),
         col("event_type"), cents(col("value")).as("v"))
@@ -9228,7 +9026,7 @@ object EventQueries {
       col("rr_e6").cast("long").as("rss_restricted_e6"),
       col("ru_e6").cast("long").as("rss_unrestricted_e6"),
       expr("CASE WHEN ru_e6 IS NULL OR ru_e6 = 0 THEN NULL ELSE " +
-        sdiv("(rr_e6 - ru_e6) * (n - 3) * 1000000", "ru_e6") + " END")
+        sdivBigint("(rr_e6 - ru_e6) * (n - 3) * 1000000", "ru_e6") + " END")
         .as("f_granger_e6"))
   }
 
@@ -9496,11 +9294,6 @@ object EventQueries {
     * 7-row fold.
     */
   val q410Ccf: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val byDay = Tables.events(s, dir)
       .select(expr("unix_millis(ts) div 86400000").as("day"),
         col("event_type"), cents(col("value")).as("v"))
@@ -9523,7 +9316,7 @@ object EventQueries {
         sum(col("x").cast(dec) * col("y")).as("qxy"))
     mo.select(col("lag").cast("long").as("lag"),
       col("n").cast("long").as("n_pairs"),
-      expr(sdiv("(n * qxy - sx * sy) * 1000000",
+      expr(sdivBigint("(n * qxy - sx * sy) * 1000000",
         """CAST(FLOOR(SQRT(CAST((n * qxx - sx * sx) * (n * qyy - sy * sy)
           | AS DOUBLE))) AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")))
         .as("rho_e6"))
@@ -9818,8 +9611,6 @@ object EventQueries {
     */
   val q417Erlang: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS BIGINT)"
     val wU = Window.partitionBy(col("user_id"))
       .orderBy(col("ts"), col("event_id"))
     val sess = Tables.events(s, dir)
@@ -9837,13 +9628,13 @@ object EventQueries {
       sum(col("en") - col("st")).as("dur_ms"),
       (max(col("en")) - min(col("st"))).as("horizon_ms"))
       .select(col("n_sessions"),
-        expr(fdiv("dur_ms * 1000000", "horizon_ms")).as("a_e6"))
+        expr(fdivBigint("dur_ms * 1000000", "horizon_ms")).as("a_e6"))
       .withColumn("b_0", lit(1000000L))
     for (c <- 1 to ErlangMaxC) {
       load = load
-        .withColumn(s"ab_$c", expr(fdiv(s"a_e6 * b_${c - 1}", "1000000")))
+        .withColumn(s"ab_$c", expr(fdivBigint(s"a_e6 * b_${c - 1}", "1000000")))
         .withColumn(s"b_$c",
-          expr(fdiv(s"ab_$c * 1000000", s"$c * 1000000 + ab_$c")))
+          expr(fdivBigint(s"ab_$c * 1000000", s"$c * 1000000 + ab_$c")))
     }
     val bArm = (1 to ErlangMaxC).foldRight(lit(-1L)) { (c, els) =>
       when(col("c") === c.toLong, col(s"b_$c")).otherwise(els)
@@ -9851,11 +9642,11 @@ object EventQueries {
     load.crossJoin(broadcast(
       s.range(1L, ErlangMaxC + 1L).select(col("id").as("c"))))
       .withColumn("b_e6", bArm)
-      .withColumn("rho_e6", expr(fdiv("a_e6", "c")))
+      .withColumn("rho_e6", expr(fdivBigint("a_e6", "c")))
       .withColumn("wait_prob_e6",
         when(col("rho_e6") >= 1000000L, lit(-1L))
-          .otherwise(expr(fdiv("b_e6 * 1000000",
-            s"GREATEST(1000000 - ${fdiv("rho_e6 * (1000000 - b_e6)", "1000000")}, 1)"))))
+          .otherwise(expr(fdivBigint("b_e6 * 1000000",
+            s"GREATEST(1000000 - ${fdivBigint("rho_e6 * (1000000 - b_e6)", "1000000")}, 1)"))))
       .select(col("c"), col("n_sessions"), col("a_e6"), col("b_e6"),
         col("wait_prob_e6"))
       .orderBy(col("c"))
@@ -9927,9 +9718,6 @@ object EventQueries {
     * rollup keyed by (b, arm) → metadata fold.
     */
   val q419PermutationTest: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val pu = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .groupBy(col("user_id")).agg(sum(cents(col("value"))).as("y"))
@@ -10026,13 +9814,6 @@ object EventQueries {
     */
   val q420Periodogram: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
-    def sdivB(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val byDay = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(expr("unix_millis(ts) div 86400000").as("day"),
@@ -10059,8 +9840,8 @@ object EventQueries {
           sum((col("n") * col("x") - col("sx")) * col("s6")).as("sproj"))
         .select(lit(p.toLong).as("period"),
           col("n").cast("long").as("n_days"),
-          expr(sdivB("cproj", "n * 1000000")).as("c_units"),
-          expr(sdivB("sproj", "n * 1000000")).as("s_units"),
+          expr(sdivBigint("cproj", "n * 1000000")).as("c_units"),
+          expr(sdivBigint("sproj", "n * 1000000")).as("s_units"),
           // R² share of SS at this harmonic: 2(C²+S²)/(n·SS), with
           // cproj = n·10⁶·C and n·SS = n·Σx²−(Σx)²
           expr(fdiv(
@@ -10233,8 +10014,6 @@ object EventQueries {
     */
   val q426Lindley: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS BIGINT)"
     val wS = Window.partitionBy(col("shard"))
       .orderBy(col("ms"), col("event_id"))
     val jobs = Tables.events(s, dir)
@@ -10259,9 +10038,9 @@ object EventQueries {
         sum(col("w")).as("sw"), max(col("w")).as("max_wait_ms"),
         sum(when(col("w") > 0L, 1L).otherwise(0L)).as("n_delayed"))
       .select(col("shard"), col("n_jobs"),
-        expr(fdiv("ssvc * 1000000", "GREATEST(horizon_ms, 1)"))
+        expr(fdivBigint("ssvc * 1000000", "GREATEST(horizon_ms, 1)"))
           .as("util_e6"),
-        expr(fdiv("sw", "n_jobs")).as("mean_wait_ms"),
+        expr(fdivBigint("sw", "n_jobs")).as("mean_wait_ms"),
         col("max_wait_ms"), col("n_delayed"))
       .orderBy(col("shard"))
   }
@@ -10315,11 +10094,6 @@ object EventQueries {
     * Plan: one event pass → day rollup → 1-row co-moment fold.
     */
   val q428Mediation: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val byDay = Tables.events(s, dir)
       .select(expr("unix_millis(ts) div 86400000").as("day"),
         col("event_type"), cents(col("value")).as("v"))
@@ -10359,25 +10133,24 @@ object EventQueries {
     val vB = dd("n") * rssY / (dd("n") - 3) * dd("dx") / dd("d2")
     val sobel = aD * bD / sqrt(bD * bD * vA + aD * aD * vB)
     cm.select(col("n").cast("long").as("n_days"),
-      expr(sdiv("cxm * 1000000", "dx")).as("a_e6"),
-      expr(sdiv("(cmy * dx - cxy * cxm) * 1000000", "d2")).as("b_e6"),
-      expr(sdiv("(cxy * dm - cmy * cxm) * 1000000", "d2")).as("cprime_e6"),
-      expr(sdiv("cxy * 1000000", "dx")).as("c_total_e6"),
-      (expr(sdiv("cxy * 1000000", "dx")) -
-        expr(sdiv("(cxy * dm - cmy * cxm) * 1000000", "d2")) -
-        expr(sdiv("cxm * (cmy * dx - cxy * cxm) * 1000000", "dx * d2")))
+      expr(sdivBigint("cxm * 1000000", "dx")).as("a_e6"),
+      expr(sdivBigint("(cmy * dx - cxy * cxm) * 1000000", "d2")).as("b_e6"),
+      expr(sdivBigint("(cxy * dm - cmy * cxm) * 1000000", "d2")).as("cprime_e6"),
+      expr(sdivBigint("cxy * 1000000", "dx")).as("c_total_e6"),
+      (expr(sdivBigint("cxy * 1000000", "dx")) -
+        expr(sdivBigint("(cxy * dm - cmy * cxm) * 1000000", "d2")) -
+        expr(sdivBigint("cxm * (cmy * dx - cxy * cxm) * 1000000", "dx * d2")))
         .as("decomposition_gap_e6"),
       sobel.as("sobel_z_d"))
   }
 
   val q428Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val aD = s"(${d("cxm")} / ${d("dx")})"
-    val bD = s"((${d("cmy")} * ${d("dx")} - ${d("cxy")} * ${d("cxm")}) / ${d("d2")})"
-    val rssA = s"((${d("dm")} * ${d("dx")} - ${d("cxm")} * ${d("cxm")}) / (${d("n")} * ${d("dx")}))"
-    val rssY = s"((${d("dy")} * ${d("d2")} - ${d("cxy")} * (${d("cxy")} * ${d("dm")} - ${d("cmy")} * ${d("cxm")}) - ${d("cmy")} * (${d("cmy")} * ${d("dx")} - ${d("cxy")} * ${d("cxm")})) / (${d("n")} * ${d("d2")}))"
-    val vA = s"(${d("n")} * $rssA / ((${d("n")} - 2) * ${d("dx")}))"
-    val vB = s"(${d("n")} * $rssY / (${d("n")} - 3) * ${d("dx")} / ${d("d2")})"
+    val aD = s"(${dbl("cxm")} / ${dbl("dx")})"
+    val bD = s"((${dbl("cmy")} * ${dbl("dx")} - ${dbl("cxy")} * ${dbl("cxm")}) / ${dbl("d2")})"
+    val rssA = s"((${dbl("dm")} * ${dbl("dx")} - ${dbl("cxm")} * ${dbl("cxm")}) / (${dbl("n")} * ${dbl("dx")}))"
+    val rssY = s"((${dbl("dy")} * ${dbl("d2")} - ${dbl("cxy")} * (${dbl("cxy")} * ${dbl("dm")} - ${dbl("cmy")} * ${dbl("cxm")}) - ${dbl("cmy")} * (${dbl("cmy")} * ${dbl("dx")} - ${dbl("cxy")} * ${dbl("cxm")})) / (${dbl("n")} * ${dbl("d2")}))"
+    val vA = s"(${dbl("n")} * $rssA / ((${dbl("n")} - 2) * ${dbl("dx")}))"
+    val vB = s"(${dbl("n")} * $rssY / (${dbl("n")} - 3) * ${dbl("dx")} / ${dbl("d2")})"
     val sobel = s"($aD * $bD / sqrt($bD * $bD * $vA + $aD * $aD * $vB))"
     s"""WITH bd AS (
       |  SELECT CAST(epoch_ms(ts) AS BIGINT) // 86400000 AS day,
@@ -10449,9 +10222,6 @@ object EventQueries {
     */
   val q431Kpss: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val byDay = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(expr("unix_millis(ts) div 86400000").as("day"),
@@ -10547,11 +10317,6 @@ object EventQueries {
     */
   val q432EngleGranger: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val byDay = Tables.events(s, dir)
       .select(expr("unix_millis(ts) div 86400000").as("day"),
         col("event_type"), cents(col("value")).as("v"))
@@ -10600,10 +10365,9 @@ object EventQueries {
   }
 
   val q432Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val tStat = s"((${d("num")} / ${d("den")}) / " +
-      s"sqrt((${d("sdd")} - ${d("num")} * ${d("num")} / ${d("den")}) / " +
-      s"((${d("n")} - 1.0 - 1.0) * ${d("den")})))"
+    val tStat = s"((${dbl("num")} / ${dbl("den")}) / " +
+      s"sqrt((${dbl("sdd")} - ${dbl("num")} * ${dbl("num")} / ${dbl("den")}) / " +
+      s"((${dbl("n")} - 1.0 - 1.0) * ${dbl("den")})))"
     s"""WITH bd AS (
       |  SELECT CAST(epoch_ms(ts) AS BIGINT) // 86400000 AS day,
       |    CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
@@ -11101,7 +10865,6 @@ object EventQueries {
     * the fit is a 1-row fold. Calendar-bounded — metadata at any scale.
     */
   val q576NegBinomial: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     val bd = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .groupBy(expr("unix_millis(ts) DIV 86400000").as("day"))
