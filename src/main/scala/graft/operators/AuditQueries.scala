@@ -2,6 +2,8 @@ package graft.operators
 
 import graft.{Q, Tables}
 import graft.functions.TSql._
+import graft.functions.Exact._
+import graft.functions.Text.{log2e6DuckSql => duckL2, log2e6SparkSql => l2}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
@@ -196,7 +198,6 @@ object AuditQueries {
     * e6 division), so the audit itself passes the exact gate.
     */
   val q193JoinCardAudit: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     val o = Tables.orders(s, dir).select(col("o_orderkey").as("k"))
     val l = Tables.lineitem(s, dir).select(col("l_orderkey").as("k"))
     def hist(df: DataFrame) = df
@@ -258,7 +259,6 @@ object AuditQueries {
     * (a float sum over a result that small is presentation, not engine).
     */
   val q153ChiSquare: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     val cells = Tables.orders(s, dir)
       .groupBy(col("o_orderpriority"), col("o_orderstatus"))
       .agg(count(lit(1)).as("n_obs"))
@@ -324,7 +324,6 @@ object AuditQueries {
     * DISTINCT values, not rows.
     */
   val q157KsTest: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     val o = Tables.orders(s, dir)
       .filter(col("o_orderpriority").isin("1-URGENT", "5-LOW"))
       .select(cents(col("o_totalprice")).as("v_c"),
@@ -993,13 +992,8 @@ object AuditQueries {
     * Brown–Forsythe test (same algebra over absolute deviations).
     */
   private def oneWayPanel(o: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
-    // Spark's DIV yields BIGINT, so quotients beyond 2^63 (these SS terms
-    // reach ~10^24) silently corrupt; exact floor-division for positive
-    // decimals is (a − a % b)/b — the division is of an exact multiple, so
-    // its result is integral and representation-exact
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
+    // SS terms reach ~10^24, past BIGINT (where DIV silently corrupts):
+    // fdiv divides in DECIMAL(38,0)
     val grp = o.groupBy(col("g")).agg(count(lit(1)).as("n_g"),
       sum(col("c").cast(dec)).as("s_g"),
       sum(col("c").cast(dec) * col("c")).as("q_g"))
@@ -1274,9 +1268,6 @@ object AuditQueries {
     * is scalar algebra.
     */
   val q283WelchTest: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val l = Tables.lineitem(s, dir)
       .filter(col("l_returnflag").isin("R", "N"))
       .select(col("l_returnflag").as("g"), cents(col("l_extendedprice")).as("c"))
@@ -1374,7 +1365,6 @@ object AuditQueries {
     * the fact + one co-moment fold.
     */
   val q271Spearman: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     val rows = Tables.lineitem(s, dir).select(col("l_returnflag").as("g"),
       cents(col("l_quantity")).as("xc"), cents(col("l_extendedprice")).as("yc"))
 
@@ -1485,9 +1475,6 @@ object AuditQueries {
     * broadcast cross join.
     */
   val q272KruskalWallis: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val o = Tables.orders(s, dir).select(col("o_orderpriority").as("g"),
       cents(col("o_totalprice")).as("c"))
     val gc = o.groupBy(col("g"), col("c")).agg(count(lit(1)).as("n_gc"))
@@ -1598,7 +1585,6 @@ object AuditQueries {
     * libm at runtime.
     */
   val q294PowerlawFit: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     import graft.functions.Text
     val tf = Tables.documents(s, dir)
       .select(explode(Text.tokens(col("text"))).as("word"))
@@ -1686,9 +1672,6 @@ object AuditQueries {
     * 2-row pivot with broadcast scalars.
     */
   val q295MannWhitney: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val o = Tables.orders(s, dir)
       .filter(col("o_orderpriority").isin(MwArmA, MwArmB))
       .select(col("o_orderpriority").as("g"), cents(col("o_totalprice")).as("c"))
@@ -1790,9 +1773,6 @@ object AuditQueries {
     * window is |days| rows — the corpus never re-shuffles).
     */
   val q307Pettitt: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val byDay = Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(expr("unix_millis(ts) div 86400000").as("day"),
@@ -1883,7 +1863,6 @@ object AuditQueries {
     * rollup; everything after runs on ≤ 500 rows.
     */
   val q327KendallTau: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     val li = Tables.lineitem(s, dir)
       .select(expr("CAST(ROUND(l_quantity) AS BIGINT)").as("x"),
         cents(col("l_extendedprice")).as("p"))
@@ -2093,9 +2072,6 @@ object AuditQueries {
     * with a broadcast year count finishes.
     */
   val q338Friedman: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val cell = Tables.orders(s, dir)
       .select(year(col("o_orderdate")).as("yr"),
         col("o_orderpriority").as("g"), cents(col("o_totalprice")).as("v"))
@@ -2185,7 +2161,6 @@ object AuditQueries {
     * 1-row finish.
     */
   val q346PartialCorr: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     val li = Tables.lineitem(s, dir)
       .select(cents(col("l_extendedprice")).cast(dec).as("x"),
         expr("CAST(ROUND(l_quantity) AS BIGINT)").cast(dec).as("y"),
@@ -2207,8 +2182,7 @@ object AuditQueries {
   }
 
   val q346Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    def c(ab: String, a: String, b: String) = d(s"n * $ab - $a * $b")
+    def c(ab: String, a: String, b: String) = dbl(s"n * $ab - $a * $b")
     val rxy = s"(${c("sxy", "sx", "sy")} / sqrt(${c("sxx", "sx", "sx")} * ${c("syy", "sy", "sy")}))"
     val rxz = s"(${c("sxz", "sx", "sz")} / sqrt(${c("sxx", "sx", "sx")} * ${c("szz", "sz", "sz")}))"
     val ryz = s"(${c("syz", "sy", "sz")} / sqrt(${c("syy", "sy", "sy")} * ${c("szz", "sz", "sz")}))"
@@ -2252,9 +2226,6 @@ object AuditQueries {
     * rollup; a 5-row fold with broadcast scalars ends it.
     */
   val q347MoodMedian: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val o = Tables.orders(s, dir)
       .select(col("o_orderpriority").as("g"), cents(col("o_totalprice")).as("c"))
     val byV = o.groupBy(col("c")).agg(count(lit(1)).as("cnt"))
@@ -2325,14 +2296,6 @@ object AuditQueries {
     * Plan: one fact pass → part rollup → a 1-row fold.
     */
   val q391TaylorsLaw: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def l2(x: String) = graft.functions.Text.log2e6SparkSql(x)
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val pp = Tables.lineitem(s, dir)
       .select(col("l_partkey"), expr("CAST(ROUND(l_quantity) AS BIGINT)")
         .as("q"))
@@ -2356,15 +2319,13 @@ object AuditQueries {
     val r2 = (c("sxy", "sx", "sy") * c("sxy", "sx", "sy")) /
       (c("sxx", "sx", "sx") * c("syy", "sy", "sy"))
     sums.select(col("n").cast("long").as("n_parts"),
-      expr(sdiv("(n * sxy - sx * sy) * 1000000", "n * sxx - sx * sx"))
+      expr(sdivBigint("(n * sxy - sx * sy) * 1000000", "n * sxx - sx * sx"))
         .as("taylor_b_e6"),
       r2.as("r2_d"))
   }
 
   val q391Sql: String = {
-    def l2(x: String) = graft.functions.Text.log2e6DuckSql(x)
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    def c(ab: String, a: String, b: String) = d(s"n * $ab - $a * $b")
+    def c(ab: String, a: String, b: String) = dbl(s"n * $ab - $a * $b")
     val r2 = s"((${c("sxy", "sx", "sy")} * ${c("sxy", "sx", "sy")}) / " +
       s"(${c("sxx", "sx", "sx")} * ${c("syy", "sy", "sy")}))"
     s"""WITH pp0 AS (
@@ -2379,8 +2340,8 @@ object AuditQueries {
       |      AS v_e6
       |  FROM pp0 WHERE n >= 2),
       |pts AS (
-      |  SELECT CAST(${l2("m_e6")} AS HUGEINT) AS x,
-      |    CAST(${l2("v_e6")} AS HUGEINT) AS y
+      |  SELECT CAST(${duckL2("m_e6")} AS HUGEINT) AS x,
+      |    CAST(${duckL2("v_e6")} AS HUGEINT) AS y
       |  FROM mv WHERE v_e6 >= 1),
       |sums AS (
       |  SELECT CAST(COUNT(*) AS HUGEINT) AS n, SUM(x) AS sx, SUM(y) AS sy,
@@ -2416,11 +2377,6 @@ object AuditQueries {
     * both grid sides) → broadcast self-grid → 1-row fold. One shuffle.
     */
   val q396HoeffdingsD: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val bm = Tables.orders(s, dir)
       .select(expr("year(o_orderdate) * 100 + month(o_orderdate)").as("mon"),
         cents(col("o_totalprice")).as("c"))
@@ -2451,7 +2407,7 @@ object AuditQueries {
       sum((col("r2") - 4L).cast(dec) * (col("s2") - 4L) *
         (col("q4") - 4L)).as("cc"))
       .select(col("n").cast("long").as("n_months"),
-        expr(sdiv("((n - 2) * (n - 3) * a + b - 2 * (n - 2) * cc) * 30000000",
+        expr(sdivBigint("((n - 2) * (n - 3) * a + b - 2 * (n - 2) * cc) * 30000000",
           "16 * n * (n - 1) * (n - 2) * (n - 3) * (n - 4)"))
           .as("hoeffding_d_e6"))
   }
@@ -2512,13 +2468,6 @@ object AuditQueries {
     * sort materialization.
     */
   val q403Mahalanobis: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     // parallelizedBy before the checkpoint: the single-row-group scan is one
     // split, and both passes (moment fold + the DECIMAL scoring pass) would
     // otherwise run on one core (guide §2.5 unsplittable input; measured
@@ -2610,11 +2559,6 @@ object AuditQueries {
     * scoring pass folding max deviation per class. Two scans, no sort.
     */
   val q404Grubbs: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val o = Tables.orders(s, dir)
       .select(col("o_orderpriority").as("g"), cents(col("o_totalprice")).as("c"))
     val m = o.groupBy(col("g"))
@@ -2626,7 +2570,7 @@ object AuditQueries {
         first(col("q")).as("q"),
         max(abs(col("n") * col("c") - col("s"))).as("maxdev"))
       .select(col("g").as("priority"), col("n").cast("long").as("n_orders"),
-        expr(sdiv("maxdev * maxdev * (n - 1) * 1000000",
+        expr(sdivBigint("maxdev * maxdev * (n - 1) * 1000000",
           "n * (n * q - s * s)")).as("g2_e6"))
       .withColumn("is_outlier",
         when(col("g2_e6") > GrubbsG2E6, 1L).otherwise(0L))
@@ -2760,9 +2704,6 @@ object AuditQueries {
     * below-counts → cell-term fold. Shuffles only on value cells.
     */
   val q409AndersonDarling: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val o = Tables.orders(s, dir)
       .filter(col("o_orderpriority").isin(MwArmA, MwArmB))
       .select(col("o_orderpriority").as("g"), cents(col("o_totalprice")).as("c"))
@@ -2862,9 +2803,6 @@ object AuditQueries {
     * period rollup (metadata) → matched-brand fold. One shuffle.
     */
   val q413PriceIndices: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val li = Tables.lineitem(s, dir)
       .select(col("l_partkey"),
         expr("year(l_shipdate) * 12 + month(l_shipdate)").as("m"),
@@ -2956,9 +2894,6 @@ object AuditQueries {
     * TakeOrdered(k+1) fold (broadcast) → one streaming excess pass.
     */
   val q414HillTail: Q = (s, dir) => {
-    def l2(x: String) = graft.functions.Text.log2e6SparkSql(x)
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS BIGINT)"
     val cust = Tables.orders(s, dir)
       .groupBy(col("o_custkey"))
       .agg(sum(cents(col("o_totalprice"))).as("rev"))
@@ -2970,15 +2905,15 @@ object AuditQueries {
       .select((expr(s"CAST(${l2("rev")} AS BIGINT)") -
         expr(s"CAST(${l2("u")} AS BIGINT)")).as("dl2"))
       .agg(sum(col("dl2")).as("sdl2"))
-      .select(expr(fdiv("sdl2", HillK.toString)).as("h_l2_e6"))
-      .withColumn("h_ln_e6", expr(fdiv("h_l2_e6 * 693147", "1000000")))
+      .select(expr(fdivBigint("sdl2", HillK.toString)).as("h_l2_e6"))
+      .withColumn("h_ln_e6", expr(fdivBigint("h_l2_e6 * 693147", "1000000")))
       .withColumn("alpha_e6",
-        expr(fdiv("1000000000000", "GREATEST(h_ln_e6, 1)")))
+        expr(fdivBigint("1000000000000", "GREATEST(h_ln_e6, 1)")))
     val excess = cust.crossJoin(broadcast(thr))
       .filter(col("rev") > col("u"))
       .agg(count(lit(1)).as("n_exceed"), sum(col("rev") - col("u")).as("se"))
       .select(col("n_exceed"),
-        expr(fdiv("se", "GREATEST(n_exceed, 1)")).as("mean_excess_cents"))
+        expr(fdivBigint("se", "GREATEST(n_exceed, 1)")).as("mean_excess_cents"))
     thr.crossJoin(broadcast(hill)).crossJoin(broadcast(excess))
       .select(lit(HillK).as("k"), col("u").as("threshold_cents"),
         col("n_exceed"), col("mean_excess_cents"), col("h_l2_e6"),
@@ -2986,7 +2921,6 @@ object AuditQueries {
   }
 
   val q414Sql: String = {
-    def l2(x: String) = graft.functions.Text.log2e6DuckSql(x)
     s"""WITH cust AS (
       |  SELECT o_custkey,
       |    CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
@@ -2997,7 +2931,7 @@ object AuditQueries {
       |  LIMIT ${HillK + 1}),
       |thr AS (SELECT MIN(rev) AS u FROM top),
       |hill0 AS (
-      |  SELECT CAST(SUM(${l2("rev")} - ${l2("u")}) AS BIGINT) // $HillK
+      |  SELECT CAST(SUM(${duckL2("rev")} - ${duckL2("u")}) AS BIGINT) // $HillK
       |    AS h_l2_e6
       |  FROM top CROSS JOIN thr),
       |hill AS (
@@ -3046,12 +2980,6 @@ object AuditQueries {
     */
   val q418ChainLadder: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val cells = Tables.lineitem(s, dir)
       .join(Tables.orders(s, dir).select(col("o_orderkey"),
         year(col("o_orderdate")).as("oy")),
@@ -3104,7 +3032,7 @@ object AuditQueries {
         col("latest_c").cast("long").as("latest_cum_cents"),
         col("ult").cast("long").as("projected_ult_cents"),
         col("actual_ult").cast("long").as("actual_ult_cents"),
-        expr(sdiv("(ult - actual_ult) * 1000000", "actual_ult"))
+        expr(sdivBigint("(ult - actual_ult) * 1000000", "actual_ult"))
           .as("err_e6"))
       .orderBy(col("order_year"))
   }
@@ -3190,9 +3118,6 @@ object AuditQueries {
     * fold broadcast back → scoring pass → TakeOrdered(5).
     */
   val q422Influence: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val bm = Tables.orders(s, dir)
       .select(expr("year(o_orderdate) * 12 + month(o_orderdate)").as("m"),
         cents(col("o_totalprice")).as("c"))
@@ -3280,13 +3205,6 @@ object AuditQueries {
     */
   val q423Segmented: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val bm = Tables.orders(s, dir)
       .select(expr("year(o_orderdate) * 12 + month(o_orderdate)").as("m"),
         cents(col("o_totalprice")).as("c"))
@@ -3336,11 +3254,11 @@ object AuditQueries {
       "nn * tty - tt * ty")).cast(dec).as("sse1"))
     best.crossJoin(broadcast(single))
       .select(col("m").as("break_month"), col("k").cast("long").as("n_left"),
-        expr(sdiv("cl * 1000000", "bl")).as("slope_left_e6"),
-        expr(sdiv("cr * 1000000", "br")).as("slope_right_e6"),
+        expr(sdivBigint("cl * 1000000", "bl")).as("slope_left_e6"),
+        expr(sdivBigint("cr * 1000000", "br")).as("slope_right_e6"),
         col("sse1").cast("long").as("sse_single_e6"),
         col("sse2").cast("long").as("sse_segmented_e6"),
-        expr(sdiv("(sse1 - sse2) * 1000000", "sse1")).as("reduction_e6"))
+        expr(sdivBigint("(sse1 - sse2) * 1000000", "sse1")).as("reduction_e6"))
   }
 
   val q423Sql: String =
@@ -3421,8 +3339,6 @@ object AuditQueries {
     * selection (broadcast) → one counting pass. Two shuffles.
     */
   val q427TailDependence: Q = (s, dir) => {
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS BIGINT)"
     val li = Tables.lineitem(s, dir)
       .select(expr("CAST(ROUND(l_quantity) AS BIGINT)").as("x"),
         cents(col("l_extendedprice")).as("y"))
@@ -3457,9 +3373,9 @@ object AuditQueries {
           .otherwise(0L)).as("n_joint_l"))
       .select(col("lvl").as("level_pm"), col("thr_x").as("x_threshold"),
         col("thr_y").as("y_threshold_cents"),
-        expr(fdiv("n_joint_u * 1000 * 1000000", "(1000 - lvl) * n"))
+        expr(fdivBigint("n_joint_u * 1000 * 1000000", "(1000 - lvl) * n"))
           .as("lambda_upper_e6"),
-        expr(fdiv("n_joint_l * 1000 * 1000000", "lvl * n"))
+        expr(fdivBigint("n_joint_l * 1000 * 1000000", "lvl * n"))
           .as("lambda_lower_e6"))
       .orderBy(col("level_pm"))
   }
@@ -3525,13 +3441,6 @@ object AuditQueries {
     * per-nation fold (metadata) → 1-row estimator fold. One shuffle.
     */
   val q429FixedEffects: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val cells = Tables.orders(s, dir)
       .join(broadcast(Tables.customer(s, dir)
         .select(col("c_custkey"), col("c_nationkey"))),
@@ -3660,11 +3569,6 @@ object AuditQueries {
     * totals and the output all ride it) → metadata folds.
     */
   val q433ShiftShare: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val cells = Tables.lineitem(s, dir)
       .select(col("l_orderkey"), col("l_partkey"),
         cents(col("l_extendedprice")).as("r"))
@@ -3862,7 +3766,6 @@ object AuditQueries {
     * broadcast spine fold. Everything after the rollups is metadata.
     */
   val q435MantelTest: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     val d1 = brayCurtisPairs(s, dir).select(col("na"), col("nb"),
       col("bc_e6"))
     val aov = Tables.orders(s, dir)
@@ -3915,16 +3818,15 @@ object AuditQueries {
       sum(col("x")).cast(dec).as("sx"), sum(col("y")).cast(dec).as("sy"),
       sum(col("x").cast(dec) * col("x")).as("qxx"),
       sum(col("y").cast(dec) * col("y")).as("qyy"))
-    def d(c: String) = col(c).cast("double")
     stats.filter(col("b") > 0L).crossJoin(broadcast(obs))
       .agg(count(lit(1)).as("n_perm"),
         sum(when(col("s") >= col("s_obs"), 1L).otherwise(0L)).as("n_ge"),
         first(col("s_obs")).as("s_obs"))
       .crossJoin(broadcast(mo))
       .select(col("p").cast("long").as("n_pairs"),
-        ((d("p") * d("s_obs") - d("sx") * d("sy")) /
-          (sqrt(d("p") * d("qxx") - d("sx") * d("sx")) *
-            sqrt(d("p") * d("qyy") - d("sy") * d("sy"))))
+        ((double("p") * double("s_obs") - double("sx") * double("sy")) /
+          (sqrt(double("p") * double("qxx") - double("sx") * double("sx")) *
+            sqrt(double("p") * double("qyy") - double("sy") * double("sy"))))
           .as("mantel_r_d"),
         col("n_perm"), col("n_ge"),
         expr("CAST((1 + n_ge) * 1000000 div (1 + n_perm) AS BIGINT)")
@@ -3932,7 +3834,6 @@ object AuditQueries {
   }
 
   val q435Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
     s"""WITH $BrayCurtisCtes,
       |aov AS (
       |  SELECT c.c_nationkey AS nat,
@@ -3983,9 +3884,9 @@ object AuditQueries {
       |    ANY_VALUE(s_obs) AS s_obs
       |  FROM stats CROSS JOIN obs WHERE b > 0)
       |SELECT CAST(p AS BIGINT) AS n_pairs,
-      |  (${d("p")} * ${d("s_obs")} - ${d("sx")} * ${d("sy")}) /
-      |    (sqrt(${d("p")} * ${d("qxx")} - ${d("sx")} * ${d("sx")}) *
-      |     sqrt(${d("p")} * ${d("qyy")} - ${d("sy")} * ${d("sy")}))
+      |  (${dbl("p")} * ${dbl("s_obs")} - ${dbl("sx")} * ${dbl("sy")}) /
+      |    (sqrt(${dbl("p")} * ${dbl("qxx")} - ${dbl("sx")} * ${dbl("sx")}) *
+      |     sqrt(${dbl("p")} * ${dbl("qyy")} - ${dbl("sy")} * ${dbl("sy")}))
       |    AS mantel_r_d,
       |  n_perm, n_ge,
       |  CAST((1 + n_ge) * 1000000 // (1 + n_perm) AS BIGINT) AS p_e6
@@ -4009,11 +3910,6 @@ object AuditQueries {
     * rollup; the pair fold is metadata.
     */
   val q436OrdinalAssoc: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val ord = Tables.orders(s, dir)
       .select(expr("CAST(substring(o_orderpriority, 1, 1) AS BIGINT)")
         .as("x"), cents(col("o_totalprice")).as("c"))
@@ -4288,11 +4184,6 @@ object AuditQueries {
     * folds off one checkpointed rollup. One shuffle.
     */
   val q438ChowTest: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val cells = Tables.orders(s, dir)
       .groupBy(expr("year(o_orderdate) * 12 + month(o_orderdate)").as("m"))
       .agg(expr("SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) div 100")
@@ -4318,12 +4209,11 @@ object AuditQueries {
     val fp = fold(pts, "p")
     val f1 = fold(pts.filter(col("pre") === 1L), "1")
     val f2 = fold(pts.filter(col("pre") === 0L), "2")
-    def d(c: String) = col(c).cast("double")
     def rss(tag: String) =
-      (d(s"dy_$tag") * d(s"dx_$tag") - d(s"c_$tag") * d(s"c_$tag")) /
-        (d(s"n_$tag") * d(s"dx_$tag"))
+      (double(s"dy_$tag") * double(s"dx_$tag") - double(s"c_$tag") * double(s"c_$tag")) /
+        (double(s"n_$tag") * double(s"dx_$tag"))
     val fStat = ((rss("p") - rss("1") - rss("2")) / 2.0) /
-      ((rss("1") + rss("2")) / (d("n_p") - 4.0))
+      ((rss("1") + rss("2")) / (double("n_p") - 4.0))
     fp.crossJoin(broadcast(f1)).crossJoin(broadcast(f2))
       .select(col("n_p").cast("long").as("n_months"),
         col("n_1").cast("long").as("n_pre"),
@@ -4338,12 +4228,11 @@ object AuditQueries {
   }
 
   val q438Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
     def rss(tag: String) =
-      s"((${d(s"dy_$tag")} * ${d(s"dx_$tag")} - ${d(s"c_$tag")} * " +
-        s"${d(s"c_$tag")}) / (${d(s"n_$tag")} * ${d(s"dx_$tag")}))"
+      s"((${dbl(s"dy_$tag")} * ${dbl(s"dx_$tag")} - ${dbl(s"c_$tag")} * " +
+        s"${dbl(s"c_$tag")}) / (${dbl(s"n_$tag")} * ${dbl(s"dx_$tag")}))"
     val fStat = s"(((${rss("p")} - ${rss("1")} - ${rss("2")}) / 2.0) / " +
-      s"((${rss("1")} + ${rss("2")}) / (${d("n_p")} - 4.0)))"
+      s"((${rss("1")} + ${rss("2")}) / (${dbl("n_p")} - 4.0)))"
     def foldSql(tag: String, where: String) =
       s"""f$tag AS (
          |  SELECT CAST(COUNT(*) AS HUGEINT) AS n_$tag,
@@ -4596,7 +4485,6 @@ object AuditQueries {
     * everything after is metadata.
     */
   val q441Jonckheere: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     val ord = Tables.orders(s, dir)
       .select(expr("CAST(substring(o_orderpriority, 1, 1) AS BIGINT)")
         .as("g"), cents(col("o_totalprice")).as("c"))
@@ -4639,13 +4527,12 @@ object AuditQueries {
         sum(col("tb").cast(dec) * (col("tb") - 1) * (col("tb") - 2))
           .as("tB"),
         sum(col("tb").cast(dec) * (col("tb") - 1)).as("tC"))
-    def d(c: String) = col(c).cast("double")
-    val aTerm = (d("nn") * (d("nn") - 1.0) * (d("nn") * 2.0 + 5.0) -
-      d("gA") - d("tA")) / 72.0
-    val bTerm = d("gB") * d("tB") /
-      (d("nn") * 36.0 * (d("nn") - 1.0) * (d("nn") - 2.0))
-    val cTerm = d("gC") * d("tC") / (d("nn") * 8.0 * (d("nn") - 1.0))
-    val z = (d("jt2") / 2.0 - (d("nn") * d("nn") - d("sn2")) / 4.0) /
+    val aTerm = (double("nn") * (double("nn") - 1.0) * (double("nn") * 2.0 + 5.0) -
+      double("gA") - double("tA")) / 72.0
+    val bTerm = double("gB") * double("tB") /
+      (double("nn") * 36.0 * (double("nn") - 1.0) * (double("nn") - 2.0))
+    val cTerm = double("gC") * double("tC") / (double("nn") * 8.0 * (double("nn") - 1.0))
+    val z = (double("jt2") / 2.0 - (double("nn") * double("nn") - double("sn2")) / 4.0) /
       sqrt(aTerm + bTerm + cTerm)
     jt.crossJoin(broadcast(gm)).crossJoin(broadcast(tm))
       .select(col("nn").cast("long").as("n_orders"),
@@ -4659,15 +4546,14 @@ object AuditQueries {
 
   val q441Sql: String = {
     val binExpr = (1 to 9).map(i => s"CAST(c > c$i AS INT)").mkString(" + ")
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val aTerm = s"((${d("nn")} * (${d("nn")} - 1.0) * (2.0 * ${d("nn")}" +
-      s" + 5.0) - ${d("gA")} - ${d("tA")}) / 72.0)"
-    val bTerm = s"(${d("gB")} * ${d("tB")} / (36.0 * ${d("nn")} *" +
-      s" (${d("nn")} - 1.0) * (${d("nn")} - 2.0)))"
+    val aTerm = s"((${dbl("nn")} * (${dbl("nn")} - 1.0) * (2.0 * ${dbl("nn")}" +
+      s" + 5.0) - ${dbl("gA")} - ${dbl("tA")}) / 72.0)"
+    val bTerm = s"(${dbl("gB")} * ${dbl("tB")} / (36.0 * ${dbl("nn")} *" +
+      s" (${dbl("nn")} - 1.0) * (${dbl("nn")} - 2.0)))"
     val cTerm =
-      s"(${d("gC")} * ${d("tC")} / (8.0 * ${d("nn")} * (${d("nn")} - 1.0)))"
-    val z = s"((${d("jt2")} / 2.0 - (${d("nn")} * ${d("nn")} -" +
-      s" ${d("sn2")}) / 4.0) / sqrt($aTerm + $bTerm + $cTerm))"
+      s"(${dbl("gC")} * ${dbl("tC")} / (8.0 * ${dbl("nn")} * (${dbl("nn")} - 1.0)))"
+    val z = s"((${dbl("jt2")} / 2.0 - (${dbl("nn")} * ${dbl("nn")} -" +
+      s" ${dbl("sn2")}) / 4.0) / sqrt($aTerm + $bTerm + $cTerm))"
     s"""WITH ord AS (
       |  SELECT CAST(substring(o_orderpriority, 1, 1) AS BIGINT) AS g,
       |    CAST(ROUND(o_totalprice * 100) AS BIGINT) AS c
@@ -4738,9 +4624,6 @@ object AuditQueries {
     * 25-row-per-month rank windows (bounded partitions) → 1-row fold.
     */
   val q442KendallW: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val mb = Tables.lineitem(s, dir)
       .select(col("l_orderkey"), col("l_partkey"),
         cents(col("l_extendedprice")).as("r"))
@@ -4813,13 +4696,6 @@ object AuditQueries {
     * Plan: one lineitem pass → ≤ 100-cell rollup → metadata fold.
     */
   val q443CliffsDelta: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val li = Tables.lineitem(s, dir)
       .filter(col("l_returnflag").isin("R", "N"))
       .select((col("l_returnflag") === "R").cast("long").as("a"),
@@ -4905,11 +4781,6 @@ object AuditQueries {
     * 1-row fold.
     */
   val q448LinCcc: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val cells = Tables.lineitem(s, dir)
       .select(col("l_orderkey"), col("l_partkey"),
         cents(col("l_extendedprice")).as("r"))
@@ -4933,17 +4804,15 @@ object AuditQueries {
         (col("n") * col("qyy") - col("sy") * col("sy")).as("dy"),
         (col("n") * col("qxy") - col("sx") * col("sy")).as("cxy"),
         ((col("sx") - col("sy")) * (col("sx") - col("sy"))).as("loc2"))
-    def d(c: String) = col(c).cast("double")
     mo.select(col("n").cast("long").as("n_brands"),
       expr(sdiv("2 * cxy * 1000000", "dx + dy + loc2")).cast("long")
         .as("ccc_e6"),
-      (d("cxy") / (sqrt(d("dx")) * sqrt(d("dy")))).as("pearson_r_d"),
+      (double("cxy") / (sqrt(double("dx")) * sqrt(double("dy")))).as("pearson_r_d"),
       expr(sdiv("(sx - sy) * 1000000", "sy")).cast("long")
         .as("level_shift_e6"))
   }
 
   val q448Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
     s"""WITH cells AS (
       |  SELECT p.p_brand AS brand,
       |    CAST(SUM(CASE WHEN o.o_orderdate < DATE '$ShiftShareBreak'
@@ -4972,7 +4841,7 @@ object AuditQueries {
       |  CAST(CASE WHEN cxy >= 0 THEN 1 ELSE -1 END *
       |    (ABS(2 * cxy * 1000000) // (dx + dy + loc2)) AS BIGINT)
       |    AS ccc_e6,
-      |  (${d("cxy")} / (sqrt(${d("dx")}) * sqrt(${d("dy")})))
+      |  (${dbl("cxy")} / (sqrt(${dbl("dx")}) * sqrt(${dbl("dy")})))
       |    AS pearson_r_d,
       |  CAST(CASE WHEN sx - sy >= 0 THEN 1 ELSE -1 END *
       |    (ABS((sx - sy) * 1000000) // sy) AS BIGINT) AS level_shift_e6
@@ -4995,7 +4864,6 @@ object AuditQueries {
     * Plan: one lineitem pass → 100-cell rollup → metadata fold.
     */
   val q444Cucconi: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     val li = Tables.lineitem(s, dir)
       .filter(col("l_returnflag").isin("R", "N"))
       .select((col("l_returnflag") === "R").cast("long").as("a"),
@@ -5023,14 +4891,13 @@ object AuditQueries {
         sum(col("n").cast(dec) *
           ((col("nn") + 1) * 2 - col("dr")) *
           ((col("nn") + 1) * 2 - col("dr"))).as("v4"))
-    def d(c: String) = col(c).cast("double")
-    val e = d("n2") * (d("nn") + 1.0) * (d("nn") * 2.0 + 1.0) / 6.0
-    val vr = d("m1") * d("n2") * (d("nn") + 1.0) * (d("nn") * 2.0 + 1.0) *
-      (d("nn") * 8.0 + 11.0) / 180.0
-    val uT = (d("u4") / 4.0 - e) / sqrt(vr)
-    val vT = (d("v4") / 4.0 - e) / sqrt(vr)
-    val rho = (d("nn") * d("nn") - 4.0) * 2.0 /
-      ((d("nn") * 2.0 + 1.0) * (d("nn") * 8.0 + 11.0)) - 1.0
+    val e = double("n2") * (double("nn") + 1.0) * (double("nn") * 2.0 + 1.0) / 6.0
+    val vr = double("m1") * double("n2") * (double("nn") + 1.0) * (double("nn") * 2.0 + 1.0) *
+      (double("nn") * 8.0 + 11.0) / 180.0
+    val uT = (double("u4") / 4.0 - e) / sqrt(vr)
+    val vT = (double("v4") / 4.0 - e) / sqrt(vr)
+    val rho = (double("nn") * double("nn") - 4.0) * 2.0 /
+      ((double("nn") * 2.0 + 1.0) * (double("nn") * 8.0 + 11.0)) - 1.0
     val cStat = (uT * uT + vT * vT - rho * uT * vT * 2.0) /
       ((lit(1.0) - rho * rho) * 2.0)
     folds.select(col("m1").cast("long").as("n_regular"),
@@ -5043,15 +4910,14 @@ object AuditQueries {
   }
 
   val q444Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val e = s"(${d("n2")} * (${d("nn")} + 1.0) * (${d("nn")} * 2.0 + 1.0)" +
+    val e = s"(${dbl("n2")} * (${dbl("nn")} + 1.0) * (${dbl("nn")} * 2.0 + 1.0)" +
       " / 6.0)"
-    val vr = s"(${d("m1")} * ${d("n2")} * (${d("nn")} + 1.0) *" +
-      s" (${d("nn")} * 2.0 + 1.0) * (${d("nn")} * 8.0 + 11.0) / 180.0)"
-    val uT = s"((${d("u4")} / 4.0 - $e) / sqrt($vr))"
-    val vT = s"((${d("v4")} / 4.0 - $e) / sqrt($vr))"
-    val rho = s"((${d("nn")} * ${d("nn")} - 4.0) * 2.0 /" +
-      s" ((${d("nn")} * 2.0 + 1.0) * (${d("nn")} * 8.0 + 11.0)) - 1.0)"
+    val vr = s"(${dbl("m1")} * ${dbl("n2")} * (${dbl("nn")} + 1.0) *" +
+      s" (${dbl("nn")} * 2.0 + 1.0) * (${dbl("nn")} * 8.0 + 11.0) / 180.0)"
+    val uT = s"((${dbl("u4")} / 4.0 - $e) / sqrt($vr))"
+    val vT = s"((${dbl("v4")} / 4.0 - $e) / sqrt($vr))"
+    val rho = s"((${dbl("nn")} * ${dbl("nn")} - 4.0) * 2.0 /" +
+      s" ((${dbl("nn")} * 2.0 + 1.0) * (${dbl("nn")} * 8.0 + 11.0)) - 1.0)"
     val cS = s"(($uT * $uT + $vT * $vT - $rho * $uT * $vT * 2.0)" +
       s" / ((1.0 - $rho * $rho) * 2.0))"
     s"""WITH li AS (
@@ -5107,11 +4973,6 @@ object AuditQueries {
     * windows over ≤ |months| metadata rows.
     */
   val q445CochraneOrcutt: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val cells = Tables.orders(s, dir)
       .groupBy(expr("year(o_orderdate) * 12 + month(o_orderdate)").as("m"))
       .agg(expr("SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) div 100")
@@ -5228,11 +5089,6 @@ object AuditQueries {
     * broadcast customer dim → two group folds. Two shuffles.
     */
   val q446OaxacaBlinder: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val sized = Tables.lineitem(s, dir)
       .groupBy(col("l_orderkey")).agg(count(lit(1)).as("x"))
       .join(Tables.orders(s, dir).select(col("o_orderkey"),
@@ -5524,13 +5380,6 @@ object AuditQueries {
     * → two group folds. Everything after is metadata.
     */
   val q450WaldIv: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN ($num) * CASE WHEN $den >= 0 THEN 1 ELSE -1 END
-         | >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % abs($den)) / abs($den)
-         |   AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val sized = Tables.lineitem(s, dir)
       .groupBy(col("l_orderkey")).agg(count(lit(1)).as("x"))
       .join(Tables.orders(s, dir).select(col("o_orderkey"),
@@ -5554,19 +5403,18 @@ object AuditQueries {
       .select(col("n"),
         (col("n") * col("qxx") - col("sx") * col("sx")).as("dx"),
         (col("n") * col("qxy") - col("sx") * col("sy")).as("cxy"))
-    def d(c: String) = col(c).cast("double")
     // first-stage F: pooled-variance two-sample t² for x on z
-    val ssw = (d("qxx1") - d("sx1") * d("sx1") / d("n1")) +
-      (d("qxx0") - d("sx0") * d("sx0") / d("n0"))
-    val gap = d("sx1") / d("n1") - d("sx0") / d("n0")
+    val ssw = (double("qxx1") - double("sx1") * double("sx1") / double("n1")) +
+      (double("qxx0") - double("sx0") * double("sx0") / double("n0"))
+    val gap = double("sx1") / double("n1") - double("sx0") / double("n0")
     val fStat = gap * gap /
-      ((ssw / (d("n1") + d("n0") - 2.0)) * (lit(1.0) / d("n1") +
-        lit(1.0) / d("n0")))
+      ((ssw / (double("n1") + double("n0") - 2.0)) * (lit(1.0) / double("n1") +
+        lit(1.0) / double("n0")))
     a.crossJoin(broadcast(b)).crossJoin(broadcast(all))
       .select(col("n1").cast("long").as("n_urgent"),
         col("n0").cast("long").as("n_regular"),
-        expr(sdiv("cxy * 1000000", "dx")).cast("long").as("beta_ols_e6"),
-        expr(sdiv("(sy1 * n0 - sy0 * n1) * 1000000",
+        expr(sdivSigned("cxy * 1000000", "dx")).cast("long").as("beta_ols_e6"),
+        expr(sdivSigned("(sy1 * n0 - sy0 * n1) * 1000000",
           "sx1 * n0 - sx0 * n1")).cast("long").as("beta_iv_e6"),
         fStat.as("first_stage_f_d"),
         when(fStat > 10.0, lit("instrument_strong"))
@@ -5574,12 +5422,11 @@ object AuditQueries {
   }
 
   val q450Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val ssw = s"((${d("qxx1")} - ${d("sx1")} * ${d("sx1")} / ${d("n1")})" +
-      s" + (${d("qxx0")} - ${d("sx0")} * ${d("sx0")} / ${d("n0")}))"
-    val gap = s"(${d("sx1")} / ${d("n1")} - ${d("sx0")} / ${d("n0")})"
-    val f = s"($gap * $gap / (($ssw / (${d("n1")} + ${d("n0")} - 2.0))" +
-      s" * (1.0 / ${d("n1")} + 1.0 / ${d("n0")})))"
+    val ssw = s"((${dbl("qxx1")} - ${dbl("sx1")} * ${dbl("sx1")} / ${dbl("n1")})" +
+      s" + (${dbl("qxx0")} - ${dbl("sx0")} * ${dbl("sx0")} / ${dbl("n0")}))"
+    val gap = s"(${dbl("sx1")} / ${dbl("n1")} - ${dbl("sx0")} / ${dbl("n0")})"
+    val f = s"($gap * $gap / (($ssw / (${dbl("n1")} + ${dbl("n0")} - 2.0))" +
+      s" * (1.0 / ${dbl("n1")} + 1.0 / ${dbl("n0")})))"
     s"""WITH sized AS (
       |  SELECT l.x, CAST(ROUND(o.o_totalprice * 100) AS BIGINT) AS y,
       |    CASE WHEN CAST(substring(o.o_orderpriority, 1, 1) AS INT) <= 2
@@ -5636,11 +5483,6 @@ object AuditQueries {
     * shuffle) → two windowed folds. Metadata after.
     */
   val q451RegressionDiscontinuity: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val ord = Tables.lineitem(s, dir)
       .groupBy(col("l_orderkey")).agg(count(lit(1)).as("yv"))
       .join(Tables.orders(s, dir).select(col("o_orderkey"),
@@ -5852,19 +5694,17 @@ object AuditQueries {
       .orderBy(col("m")).collect()
     val ys = months.map(_.getAs[Long]("y"))
     val t = ys.length
-    def sdivL(num: Long, den: Long): Long =
-      (if (num >= 0) 1L else -1L) * (math.abs(num) / den)
     var l = ys.take(12).sum / 12L
-    var b = sdivL(ys.slice(12, 24).sum / 12L - l, 12L)
+    var b = sdivLong(ys.slice(12, 24).sum / 12L - l, 12L)
     val sArr = Array.tabulate(12)(i => ys(i) - l)
     (13 to t).foreach { tt =>
       val idx = (tt - 1) % 12
       val y = ys(tt - 1)
-      val lNew = sdivL(HwAlphaE6 * (y - sArr(idx)) +
+      val lNew = sdivLong(HwAlphaE6 * (y - sArr(idx)) +
         (1000000L - HwAlphaE6) * (l + b), 1000000L)
-      val bNew = sdivL(HwBetaE6 * (lNew - l) +
+      val bNew = sdivLong(HwBetaE6 * (lNew - l) +
         (1000000L - HwBetaE6) * b, 1000000L)
-      sArr(idx) = sdivL(HwGammaE6 * (y - lNew) +
+      sArr(idx) = sdivLong(HwGammaE6 * (y - lNew) +
         (1000000L - HwGammaE6) * sArr(idx), 1000000L)
       l = lNew; b = bNew
     }
@@ -5876,9 +5716,7 @@ object AuditQueries {
 
   val q453Sql: String = {
     val a = HwAlphaE6; val bb = HwBetaE6; val g = HwGammaE6
-    def sd(num: String) =
-      s"CASE WHEN ($num) >= 0 THEN 1 ELSE -1 END * (ABS($num) // 1000000)"
-    val lNew = sd(s"$a * (s.y - w.sv[(s.t - 1) % 12 + 1])" +
+    val lNew = duckSdivE6(s"$a * (s.y - w.sv[(s.t - 1) % 12 + 1])" +
       s" + ${1000000L - a} * (w.l + w.b)")
     s"""WITH RECURSIVE months AS (
       |  SELECT year(o_orderdate) * 12 + month(o_orderdate) AS m,
@@ -5900,11 +5738,11 @@ object AuditQueries {
       |walk AS (
       |  SELECT 12 AS t, l0 AS l, b0 AS b, s0 AS sv FROM init
       |  UNION ALL
-      |  SELECT s.t, $lNew, ${sd(s"$bb * (($lNew) - w.l)" +
+      |  SELECT s.t, $lNew, ${duckSdivE6(s"$bb * (($lNew) - w.l)" +
           s" + ${1000000L - bb} * w.b")},
       |    list_transform(range(1, 13), i ->
       |      CASE WHEN i = (s.t - 1) % 12 + 1
-      |        THEN ${sd(s"$g * (s.y - ($lNew))" +
+      |        THEN ${duckSdivE6(s"$g * (s.y - ($lNew))" +
                s" + ${1000000L - g} * w.sv[(s.t - 1) % 12 + 1]")}
       |        ELSE w.sv[i] END)
       |  FROM walk w
@@ -5933,7 +5771,6 @@ object AuditQueries {
     * orders pass, ≤ 50-cell rollup) → 10-row pair panel.
     */
   val q454DunnTest: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     val ord = Tables.orders(s, dir)
       .select(expr("CAST(substring(o_orderpriority, 1, 1) AS BIGINT)")
         .as("g"), cents(col("o_totalprice")).as("c"))
@@ -5971,11 +5808,10 @@ object AuditQueries {
       col("r2").as("ra"))
     val b2 = gsum.select(col("g").as("gb"), col("ng").as("nb"),
       col("r2").as("rb"))
-    def d(c: String) = col(c).cast("double")
-    val meanGap = (d("ra") / (d("na") * 2.0)) - (d("rb") / (d("nb") * 2.0))
-    val varTerm = (d("nn") * (d("nn") + 1.0) / 12.0 -
-      d("t3t") / ((d("nn") - 1.0) * 12.0)) *
-      (lit(1.0) / d("na") + lit(1.0) / d("nb"))
+    val meanGap = (double("ra") / (double("na") * 2.0)) - (double("rb") / (double("nb") * 2.0))
+    val varTerm = (double("nn") * (double("nn") + 1.0) / 12.0 -
+      double("t3t") / ((double("nn") - 1.0) * 12.0)) *
+      (lit(1.0) / double("na") + lit(1.0) / double("nb"))
     val z = meanGap / sqrt(varTerm)
     a.join(b2, col("ga") < col("gb")).crossJoin(broadcast(ties))
       .select(col("ga").as("priority_a"), col("gb").as("priority_b"),
@@ -5988,12 +5824,11 @@ object AuditQueries {
 
   val q454Sql: String = {
     val binExpr = (1 to 9).map(i => s"CAST(c > c$i AS INT)").mkString(" + ")
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val meanGap = s"(${d("ra")} / (${d("na")} * 2.0)" +
-      s" - ${d("rb")} / (${d("nb")} * 2.0))"
-    val varTerm = s"((${d("nn")} * (${d("nn")} + 1.0) / 12.0" +
-      s" - ${d("t3t")} / ((${d("nn")} - 1.0) * 12.0))" +
-      s" * (1.0 / ${d("na")} + 1.0 / ${d("nb")}))"
+    val meanGap = s"(${dbl("ra")} / (${dbl("na")} * 2.0)" +
+      s" - ${dbl("rb")} / (${dbl("nb")} * 2.0))"
+    val varTerm = s"((${dbl("nn")} * (${dbl("nn")} + 1.0) / 12.0" +
+      s" - ${dbl("t3t")} / ((${dbl("nn")} - 1.0) * 12.0))" +
+      s" * (1.0 / ${dbl("na")} + 1.0 / ${dbl("nb")}))"
     val z = s"($meanGap / sqrt($varTerm))"
     s"""WITH ord AS (
       |  SELECT CAST(substring(o_orderpriority, 1, 1) AS BIGINT) AS g,
@@ -6061,11 +5896,6 @@ object AuditQueries {
     * (checkpointed; the limit fold and the census both ride it).
     */
   val q456BlandAltman: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val cells = Tables.lineitem(s, dir)
       .select(col("l_orderkey"), col("l_partkey"),
         cents(col("l_extendedprice")).as("r"))
@@ -6100,10 +5930,9 @@ object AuditQueries {
   }
 
   val q456Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val sdD = s"sqrt((${d("qdd")} - ${d("sd_sum")} * ${d("sd_sum")}" +
-      s" / ${d("n")}) / (${d("n")} - 1.0))"
-    val biasD = s"(${d("sd_sum")} / ${d("n")})"
+    val sdD = s"sqrt((${dbl("qdd")} - ${dbl("sd_sum")} * ${dbl("sd_sum")}" +
+      s" / ${dbl("n")}) / (${dbl("n")} - 1.0))"
+    val biasD = s"(${dbl("sd_sum")} / ${dbl("n")})"
     s"""WITH cells AS (
       |  SELECT p.p_brand AS brand,
       |    CAST(SUM(CASE WHEN o.o_orderdate < DATE '$ShiftShareBreak'
@@ -6125,7 +5954,7 @@ object AuditQueries {
       |    SUM(CAST(d AS HUGEINT) * d) AS qdd
       |  FROM dd),
       |census AS (
-      |  SELECT SUM(CASE WHEN ABS(${d("d")} - $biasD) > $sdD * 1.96
+      |  SELECT SUM(CASE WHEN ABS(${dbl("d")} - $biasD) > $sdD * 1.96
       |    THEN 1 ELSE 0 END) AS n_outside
       |  FROM dd CROSS JOIN mo)
       |SELECT CAST(n AS BIGINT) AS n_brands,
@@ -6153,11 +5982,6 @@ object AuditQueries {
     * 1-row fold.
     */
   val q457Deming: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val cells = Tables.lineitem(s, dir)
       .select(col("l_orderkey"), col("l_partkey"),
         cents(col("l_extendedprice")).as("r"))
@@ -6180,11 +6004,10 @@ object AuditQueries {
         (col("n") * col("qxx") - col("sx") * col("sx")).as("dx"),
         (col("n") * col("qyy") - col("sy") * col("sy")).as("dy"),
         (col("n") * col("qxy") - col("sx") * col("sy")).as("cxy"))
-    def d(c: String) = col(c).cast("double")
-    val beta = (d("dy") - d("dx") +
-      sqrt((d("dy") - d("dx")) * (d("dy") - d("dx")) +
-        d("cxy") * d("cxy") * 4.0)) / (d("cxy") * 2.0)
-    val alpha = (d("sy") - beta * d("sx")) / d("n")
+    val beta = (double("dy") - double("dx") +
+      sqrt((double("dy") - double("dx")) * (double("dy") - double("dx")) +
+        double("cxy") * double("cxy") * 4.0)) / (double("cxy") * 2.0)
+    val alpha = (double("sy") - beta * double("sx")) / double("n")
     mo.select(col("n").cast("long").as("n_brands"),
       beta.as("deming_slope_d"),
       alpha.as("deming_intercept_d"),
@@ -6192,10 +6015,9 @@ object AuditQueries {
   }
 
   val q457Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val beta = s"((${d("dy")} - ${d("dx")} + sqrt((${d("dy")} - " +
-      s"${d("dx")}) * (${d("dy")} - ${d("dx")}) + ${d("cxy")} * " +
-      s"${d("cxy")} * 4.0)) / (${d("cxy")} * 2.0))"
+    val beta = s"((${dbl("dy")} - ${dbl("dx")} + sqrt((${dbl("dy")} - " +
+      s"${dbl("dx")}) * (${dbl("dy")} - ${dbl("dx")}) + ${dbl("cxy")} * " +
+      s"${dbl("cxy")} * 4.0)) / (${dbl("cxy")} * 2.0))"
     s"""WITH cells AS (
       |  SELECT p.p_brand AS brand,
       |    CAST(SUM(CASE WHEN o.o_orderdate < DATE '$ShiftShareBreak'
@@ -6220,7 +6042,7 @@ object AuditQueries {
       |  FROM cells)
       |SELECT CAST(n AS BIGINT) AS n_brands,
       |  $beta AS deming_slope_d,
-      |  ((${d("sy")} - $beta * ${d("sx")}) / ${d("n")})
+      |  ((${dbl("sy")} - $beta * ${dbl("sx")}) / ${dbl("n")})
       |    AS deming_intercept_d,
       |  CAST(CASE WHEN cxy >= 0 THEN 1 ELSE -1 END *
       |    (ABS(cxy * 1000000) // dx) AS BIGINT) AS beta_ols_e6
@@ -6256,29 +6078,26 @@ object AuditQueries {
       .orderBy(col("m")).collect()
     val ys = months.map(_.getAs[Long]("y"))
     val t = ys.length.toLong
-    def sdivL(num: BigInt, den: BigInt): Long =
-      ((if (num >= 0) BigInt(1) else BigInt(-1)) *
-        (num.abs / den)).toLong
     val n = BigInt(t); val st = ys.indices.map(i => BigInt(i + 1)).sum
     val sy = ys.map(BigInt(_)).sum
     val qtt = ys.indices.map(i => BigInt(i + 1) * (i + 1)).sum
     val qty = ys.zipWithIndex.map { case (y, i) => BigInt(i + 1) * y }.sum
     val dx = n * qtt - st * st
     val cxy = n * qty - st * sy
-    val alphaE6 = sdivL((sy * dx - cxy * st) * 1000000L, n * dx)
+    val alphaE6 = sdivLong((sy * dx - cxy * st) * 1000000L, n * dx)
     def trendE6(tt: Long): Long =
-      alphaE6 + sdivL(cxy * tt * 1000000L, dx)
+      alphaE6 + sdivLong(cxy * tt * 1000000L, dx)
     var l = 2L * ys.head * 1000000L - trendE6(1L) // SES seeded at z_1
     (2 to t.toInt).foreach { tt =>
       val z = 2L * ys(tt - 1) * 1000000L - trendE6(tt.toLong)
       val num = BigInt(ThetaSesAlphaE6) * z +
         BigInt(1000000L - ThetaSesAlphaE6) * l
-      l = sdivL(num, BigInt(1000000L))
+      l = sdivLong(num, BigInt(1000000L))
     }
     import s.implicits._
     (1 to ThetaHorizon).map { h =>
       val f = BigInt(trendE6(t + h)) + BigInt(l)
-      (h.toLong, sdivL(f, BigInt(2L)))
+      (h.toLong, sdivLong(f, BigInt(2L)))
     }.toDF("horizon", "forecast_e6").orderBy(col("horizon"))
   }
 
@@ -6349,9 +6168,6 @@ object AuditQueries {
     * fold (metadata) → scalar k broadcast → 25-row premium panel.
     */
   val q459Buhlmann: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val panel = Tables.orders(s, dir)
       .join(broadcast(Tables.customer(s, dir)
         .select(col("c_custkey"), col("c_nationkey"))),
@@ -6376,11 +6192,10 @@ object AuditQueries {
           "mi")).as("bt"))
     val scal = staged.groupBy(col("g"), col("mm"), col("ss"), col("m2"))
       .agg(sum(col("epv_t")).as("sepv"), sum(col("bt")).as("sbt"))
-    def d(c: String) = col(c).cast("double")
-    val epvD = d("sepv") / ((d("mm") - d("g")) * 1e6)
-    val bD = d("sbt") / (d("mm") * d("mm") * 1e6)
-    val vhmD = (bD - (d("g") - 1.0) * epvD) /
-      (d("mm") - d("m2") / d("mm"))
+    val epvD = double("sepv") / ((double("mm") - double("g")) * 1e6)
+    val bD = double("sbt") / (double("mm") * double("mm") * 1e6)
+    val vhmD = (bD - (double("g") - 1.0) * epvD) /
+      (double("mm") - double("m2") / double("mm"))
     val kD = epvD / vhmD
     staged.select(col("nat"), col("mi"), col("syi"), col("mm"), col("ss"))
       .crossJoin(broadcast(scal.select(col("g"), col("mm").as("mm2"),
@@ -6389,21 +6204,20 @@ object AuditQueries {
       .select(col("nat").as("nation"), col("mi").cast("long")
         .as("n_months"),
         expr(fdiv("syi * 1000000", "mi")).cast("long").as("own_mean_e6"),
-        (d("mi") / (d("mi") + col("k_d"))).as("z_d"),
-        ((d("mi") / (d("mi") + col("k_d"))) * (d("syi") / d("mi")) +
-          (lit(1.0) - d("mi") / (d("mi") + col("k_d"))) *
-            (d("ss") / d("mm"))).as("premium_d"))
+        (double("mi") / (double("mi") + col("k_d"))).as("z_d"),
+        ((double("mi") / (double("mi") + col("k_d"))) * (double("syi") / double("mi")) +
+          (lit(1.0) - double("mi") / (double("mi") + col("k_d"))) *
+            (double("ss") / double("mm"))).as("premium_d"))
       .orderBy(col("nation"))
   }
 
   val q459Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val epvD = s"(${d("sepv")} / ((${d("mm2")} - ${d("g")}) * 1e6))"
-    val bD = s"(${d("sbt")} / (${d("mm2")} * ${d("mm2")} * 1e6))"
-    val vhmD = s"(($bD - (${d("g")} - 1.0) * $epvD)" +
-      s" / (${d("mm2")} - ${d("m2")} / ${d("mm2")}))"
+    val epvD = s"(${dbl("sepv")} / ((${dbl("mm2")} - ${dbl("g")}) * 1e6))"
+    val bD = s"(${dbl("sbt")} / (${dbl("mm2")} * ${dbl("mm2")} * 1e6))"
+    val vhmD = s"(($bD - (${dbl("g")} - 1.0) * $epvD)" +
+      s" / (${dbl("mm2")} - ${dbl("m2")} / ${dbl("mm2")}))"
     val kD = s"($epvD / $vhmD)"
-    val zD = s"(${d("mi")} / (${d("mi")} + k_d))"
+    val zD = s"(${dbl("mi")} / (${dbl("mi")} + k_d))"
     s"""WITH panel AS (
       |  SELECT c.c_nationkey AS nat,
       |    year(o.o_orderdate) * 12 + month(o.o_orderdate) AS m,
@@ -6433,8 +6247,8 @@ object AuditQueries {
       |SELECT st.nat AS nation, CAST(st.mi AS BIGINT) AS n_months,
       |  CAST(st.syi * 1000000 // st.mi AS BIGINT) AS own_mean_e6,
       |  $zD AS z_d,
-      |  ($zD * (${d("syi")} / ${d("mi")})
-      |    + (1.0 - $zD) * (${d("ss")} / ${d("mm")})) AS premium_d
+      |  ($zD * (${dbl("syi")} / ${dbl("mi")})
+      |    + (1.0 - $zD) * (${dbl("ss")} / ${dbl("mm")})) AS premium_d
       |FROM staged st CROSS JOIN kv
       |ORDER BY nation""".stripMargin
   }
@@ -6465,7 +6279,6 @@ object AuditQueries {
     * table → 1-row fold.
     */
   val q460Rayleigh: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     val trig = s.createDataFrame((1 to 12).map(m =>
       (m.toLong, MonthCosE6(m - 1), MonthSinE6(m - 1))))
       .toDF("mo", "cos_e6", "sin_e6")
@@ -6477,8 +6290,7 @@ object AuditQueries {
     val fold = counts.agg(sum(col("nm")).cast(dec).as("n"),
       sum(col("nm").cast(dec) * col("cos_e6")).as("cc"),
       sum(col("nm").cast(dec) * col("sin_e6")).as("ss"))
-    def d(c: String) = col(c).cast("double")
-    val z = (d("cc") * d("cc") + d("ss") * d("ss")) / (d("n") * 1e12)
+    val z = (double("cc") * double("cc") + double("ss") * double("ss")) / (double("n") * 1e12)
     val peak = counts.crossJoin(broadcast(fold))
       .select(col("mo"),
         (col("cc") * col("cos_e6") + col("ss") * col("sin_e6"))
@@ -6498,9 +6310,8 @@ object AuditQueries {
   val q460Sql: String = {
     val trig = (1 to 12).map(m =>
       s"($m, ${MonthCosE6(m - 1)}, ${MonthSinE6(m - 1)})").mkString(", ")
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val z = s"((${d("cc")} * ${d("cc")} + ${d("ss")} * ${d("ss")})" +
-      s" / (${d("n")} * 1e12))"
+    val z = s"((${dbl("cc")} * ${dbl("cc")} + ${dbl("ss")} * ${dbl("ss")})" +
+      s" / (${dbl("n")} * 1e12))"
     s"""WITH trig(mo, cos_e6, sin_e6) AS (VALUES $trig),
       |counts AS (
       |  SELECT month(o_orderdate) AS mo, CAST(COUNT(*) AS BIGINT) AS nm
@@ -6547,9 +6358,6 @@ object AuditQueries {
     * metadata lattice → 8-row index panel.
     */
   val q461PowerIndices: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val g = PowerG
     val voters = Tables.lineitem(s, dir)
       .groupBy(col("l_suppkey").cast("long").as("sk"))
@@ -6661,12 +6469,6 @@ object AuditQueries {
     */
   val q462BornhuetterFerguson: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val cells = Tables.lineitem(s, dir)
       .join(Tables.orders(s, dir).select(col("o_orderkey"),
         year(col("o_orderdate")).as("oy")),
@@ -6736,9 +6538,9 @@ object AuditQueries {
         col("ult").cast("long").as("cl_ult_cents"),
         col("bf_ult").cast("long").as("bf_ult_cents"),
         col("actual_ult").cast("long").as("actual_ult_cents"),
-        expr(sdiv("(ult - actual_ult) * 1000000", "actual_ult"))
+        expr(sdivBigint("(ult - actual_ult) * 1000000", "actual_ult"))
           .as("cl_err_e6"),
-        expr(sdiv("(bf_ult - actual_ult) * 1000000", "actual_ult"))
+        expr(sdivBigint("(bf_ult - actual_ult) * 1000000", "actual_ult"))
           .as("bf_err_e6"))
       .orderBy(col("order_year"))
   }
@@ -6944,11 +6746,6 @@ object AuditQueries {
     * value-rollup rank windows → 1-row fold.
     */
   val q464ConcentrationIndex: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val cust = Tables.orders(s, dir)
       .groupBy(col("o_custkey")).agg(
         expr("SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) div 100")
@@ -7033,9 +6830,6 @@ object AuditQueries {
     * selection → one counting pass + one poor-subset rank fold.
     */
   val q465FgtSen: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val cust = Tables.orders(s, dir)
       .groupBy(col("o_custkey")).agg(
         expr("SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) div 100")
@@ -7078,7 +6872,6 @@ object AuditQueries {
           "CAST(((ydr - (qn + 1) * ty) * 1000000 - " +
             "((ydr - (qn + 1) * ty) * 1000000) % (qn * ty)) / (qn * ty)" +
             " AS DECIMAL(38,0))").as("gini_poor_e6"))
-    def d(c: String) = col(c).cast("double")
     agg.crossJoin(broadcast(gp))
       .select(col("n").cast("long").as("n_customers"),
         col("z").cast("long").as("poverty_line_dollars"),
@@ -7086,14 +6879,13 @@ object AuditQueries {
         expr(fdiv("sgap * 1000000", "n * z")).cast("long").as("fgt1_e6"),
         expr(fdiv("sfgt2", "n")).cast("long").as("fgt2_e6"),
         col("gini_poor_e6").cast("long").as("gini_poor_e6"),
-        ((d("q") / d("n")) * (d("sgap") / (d("q") * d("z")) +
-          (lit(1.0) - d("sgap") / (d("q") * d("z"))) *
-            (d("gini_poor_e6") / 1e6))).as("sen_index_d"))
+        ((double("q") / double("n")) * (double("sgap") / (double("q") * double("z")) +
+          (lit(1.0) - double("sgap") / (double("q") * double("z"))) *
+            (double("gini_poor_e6") / 1e6))).as("sen_index_d"))
   }
 
   val q465Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val iRatio = s"(${d("sgap")} / (${d("q")} * ${d("z")}))"
+    val iRatio = s"(${dbl("sgap")} / (${dbl("q")} * ${dbl("z")}))"
     s"""WITH cust AS (
       |  SELECT o_custkey,
       |    SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) // 100 AS y
@@ -7147,8 +6939,8 @@ object AuditQueries {
       |  CAST(sgap * 1000000 // (n * z) AS BIGINT) AS fgt1_e6,
       |  CAST(sfgt2 // n AS BIGINT) AS fgt2_e6,
       |  CAST(gini_poor_e6 AS BIGINT) AS gini_poor_e6,
-      |  ((${d("q")} / ${d("n")}) * ($iRatio + (1.0 - $iRatio) *
-      |    (${d("gini_poor_e6")} / 1e6))) AS sen_index_d
+      |  ((${dbl("q")} / ${dbl("n")}) * ($iRatio + (1.0 - $iRatio) *
+      |    (${dbl("gini_poor_e6")} / 1e6))) AS sen_index_d
       |FROM agg CROSS JOIN gp""".stripMargin
   }
 
@@ -7168,7 +6960,6 @@ object AuditQueries {
     * bounded rank windows → 1-row fold.
     */
   val q467PageL: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     val cells = Tables.orders(s, dir)
       .groupBy(expr("month(o_orderdate)").as("mo"),
         expr("CAST(substring(o_orderpriority, 1, 1) AS BIGINT)").as("g"))
@@ -7182,11 +6973,10 @@ object AuditQueries {
         sum(col("g").cast(dec) * col("rsum")).as("l"),
         sum(col("rsum")).cast(dec).as("tot"))
       .withColumn("b", expr("tot * 2 div (k * (k + 1))"))
-    def d(c: String) = col(c).cast("double")
-    val e = d("b") * d("k") * (d("k") + 1.0) * (d("k") + 1.0) / 4.0
-    val vr = d("b") * d("k") * d("k") * (d("k") + 1.0) *
-      (d("k") * d("k") - 1.0) / 144.0
-    val z = (d("l") - e) / sqrt(vr)
+    val e = double("b") * double("k") * (double("k") + 1.0) * (double("k") + 1.0) / 4.0
+    val vr = double("b") * double("k") * double("k") * (double("k") + 1.0) *
+      (double("k") * double("k") - 1.0) / 144.0
+    val z = (double("l") - e) / sqrt(vr)
     fold.select(col("k").cast("long").as("n_priorities"),
       col("b").cast("long").as("n_blocks"),
       col("l").cast("long").as("page_l"),
@@ -7196,12 +6986,11 @@ object AuditQueries {
   }
 
   val q467Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val e = s"(${d("b")} * ${d("k")} * (${d("k")} + 1.0) *" +
-      s" (${d("k")} + 1.0) / 4.0)"
-    val vr = s"(${d("b")} * ${d("k")} * ${d("k")} * (${d("k")} + 1.0) *" +
-      s" (${d("k")} * ${d("k")} - 1.0) / 144.0)"
-    val z = s"((${d("l")} - $e) / sqrt($vr))"
+    val e = s"(${dbl("b")} * ${dbl("k")} * (${dbl("k")} + 1.0) *" +
+      s" (${dbl("k")} + 1.0) / 4.0)"
+    val vr = s"(${dbl("b")} * ${dbl("k")} * ${dbl("k")} * (${dbl("k")} + 1.0) *" +
+      s" (${dbl("k")} * ${dbl("k")} - 1.0) / 144.0)"
+    val z = s"((${dbl("l")} - $e) / sqrt($vr))"
     s"""WITH cells AS (
       |  SELECT month(o_orderdate) AS mo,
       |    CAST(substring(o_orderpriority, 1, 1) AS BIGINT) AS g,
@@ -7254,11 +7043,6 @@ object AuditQueries {
     * contrast panel.
     */
   val q468PolyContrasts: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val folds = Tables.orders(s, dir)
       .groupBy(expr("CAST(substring(o_orderpriority, 1, 1) AS BIGINT)")
         .as("g"))
@@ -7280,9 +7064,8 @@ object AuditQueries {
         sum(expr(
           "CAST((cg * cg * 1000000 - (cg * cg * 1000000) % ng) / ng" +
             " AS DECIMAL(38,0))")).as("den_e6"))
-    def d(c: String) = col(c).cast("double")
-    val ssC = (d("l_e6") / 1e6) * (d("l_e6") / 1e6) / (d("den_e6") / 1e6)
-    val fStat = ssC / ((d("ssw") / (d("n") - 5.0)))
+    val ssC = (double("l_e6") / 1e6) * (double("l_e6") / 1e6) / (double("den_e6") / 1e6)
+    val fStat = ssC / ((double("ssw") / (double("n") - 5.0)))
     staged.crossJoin(broadcast(within))
       .select(col("contrast"), col("l_e6").cast("long").as("l_e6"),
         ssC.as("ss_contrast_d"), fStat.as("f_d"),
@@ -7295,10 +7078,9 @@ object AuditQueries {
     val cvals = Poly5.flatMap { case (nm, cs) =>
       cs.zipWithIndex.map { case (c, i) => s"('$nm', ${i + 1}, $c)" }
     }.mkString(", ")
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val ssC = s"((${d("l_e6")} / 1e6) * (${d("l_e6")} / 1e6)" +
-      s" / (${d("den_e6")} / 1e6))"
-    val f = s"($ssC / ((${d("ssw")} / (${d("n")} - 5.0))))"
+    val ssC = s"((${dbl("l_e6")} / 1e6) * (${dbl("l_e6")} / 1e6)" +
+      s" / (${dbl("den_e6")} / 1e6))"
+    val f = s"($ssC / ((${dbl("ssw")} / (${dbl("n")} - 5.0))))"
     s"""WITH folds AS (
       |  SELECT CAST(substring(o_orderpriority, 1, 1) AS BIGINT) AS g,
       |    CAST(COUNT(*) AS HUGEINT) AS ng,
@@ -7343,9 +7125,6 @@ object AuditQueries {
     * window feeding median, L(½) and Gini together → 1-row fold.
     */
   val q466Wolfson: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val cust = Tables.orders(s, dir)
       .groupBy(col("o_custkey")).agg(
         expr("SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) div 100")
@@ -7373,10 +7152,10 @@ object AuditQueries {
         sum(col("y").cast(dec) * col("take")).as("bh"),
         sum((col("below") * 2 + col("cnt") + 1).cast(dec) *
           (col("y").cast(dec) * col("cnt"))).as("ydr"))
-    def d(c: String) = col(c).cast("double")
-    val giniD = (d("ydr") - (d("n") + 1.0) * d("ty")) / (d("n") * d("ty"))
-    val tD = lit(0.5) - d("bh") / d("ty")
-    val muOverM = d("ty") / d("n") / d("m")
+    val giniD = (double("ydr") - (double("n") + 1.0) * double("ty")) /
+      (double("n") * double("ty"))
+    val tD = lit(0.5) - double("bh") / double("ty")
+    val muOverM = double("ty") / double("n") / double("m")
     val wD = (tD * 2.0 - giniD) * muOverM
     half.crossJoin(broadcast(med))
       .select(col("n").cast("long").as("n_customers"),
@@ -7387,12 +7166,11 @@ object AuditQueries {
   }
 
   val q466Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val gini = s"((${d("ydr")} - (${d("n")} + 1.0) * ${d("ty")})" +
-      s" / (${d("n")} * ${d("ty")}))"
-    val tD = s"(0.5 - ${d("bh")} / ${d("ty")})"
-    val wD = s"(($tD * 2.0 - $gini) * (${d("ty")} / ${d("n")}" +
-      s" / ${d("m")}))"
+    val gini = s"((${dbl("ydr")} - (${dbl("n")} + 1.0) * ${dbl("ty")})" +
+      s" / (${dbl("n")} * ${dbl("ty")}))"
+    val tD = s"(0.5 - ${dbl("bh")} / ${dbl("ty")})"
+    val wD = s"(($tD * 2.0 - $gini) * (${dbl("ty")} / ${dbl("n")}" +
+      s" / ${dbl("m")}))"
     s"""WITH cust AS (
       |  SELECT o_custkey,
       |    SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) // 100 AS y
@@ -7441,11 +7219,6 @@ object AuditQueries {
     * month spine rollup (metadata) → 1-row co-moment fold.
     */
   val q469BassDiffusion: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val firstM = Tables.orders(s, dir)
       .groupBy(col("o_custkey"))
       .agg(min(expr("year(o_orderdate) * 12 + month(o_orderdate)"))
@@ -7479,10 +7252,9 @@ object AuditQueries {
       (col("n") * col("qmy") - col("sm") * col("sy")).as("cmy"),
       col("sx"), col("sm"), col("sy"))
       .withColumn("d2", col("dx") * col("dm") - col("cxm") * col("cxm"))
-    def d(c: String) = col(c).cast("double")
-    val bD = (d("cxy") * d("dm") - d("cmy") * d("cxm")) / d("d2")
-    val cD = (d("cmy") * d("dx") - d("cxy") * d("cxm")) / d("d2")
-    val aD = (d("sy") - bD * d("sx") - cD * d("sm")) / d("n")
+    val bD = (double("cxy") * double("dm") - double("cmy") * double("cxm")) / double("d2")
+    val cD = (double("cmy") * double("dx") - double("cxy") * double("cxm")) / double("d2")
+    val aD = (double("sy") - bD * double("sx") - cD * double("sm")) / double("n")
     val mHat = (-bD - sqrt(bD * bD - cD * aD * 4.0)) / (cD * 2.0)
     cm.select(col("n").cast("long").as("n_months"),
       expr(sdiv("(cxy * dm - cmy * cxm) * 1000000", "d2")).cast("long")
@@ -7495,13 +7267,12 @@ object AuditQueries {
   }
 
   val q469Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val bD = s"((${d("cxy")} * ${d("dm")} - ${d("cmy")} * ${d("cxm")})" +
-      s" / ${d("d2")})"
-    val cD = s"((${d("cmy")} * ${d("dx")} - ${d("cxy")} * ${d("cxm")})" +
-      s" / ${d("d2")})"
-    val aD = s"((${d("sy")} - $bD * ${d("sx")} - $cD * ${d("sm")})" +
-      s" / ${d("n")})"
+    val bD = s"((${dbl("cxy")} * ${dbl("dm")} - ${dbl("cmy")} * ${dbl("cxm")})" +
+      s" / ${dbl("d2")})"
+    val cD = s"((${dbl("cmy")} * ${dbl("dx")} - ${dbl("cxy")} * ${dbl("cxm")})" +
+      s" / ${dbl("d2")})"
+    val aD = s"((${dbl("sy")} - $bD * ${dbl("sx")} - $cD * ${dbl("sm")})" +
+      s" / ${dbl("n")})"
     val mHat = s"((-$bD - sqrt($bD * $bD - $cD * $aD * 4.0))" +
       s" / ($cD * 2.0))"
     s"""WITH first_m AS (
@@ -7573,10 +7344,9 @@ object AuditQueries {
         expr("CAST(substring(o_orderpriority, 1, 1) AS BIGINT)").as("g"))
       .agg(expr("SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))" +
         " div (100 * COUNT(*))").as("y"))
-    def d(c: String) = col(c).cast("double")
-    val ssNa = d("p") * d("p") / (d("qa") * d("qb"))
-    val ssRes = d("e2") / (d("r") * d("r") * d("c") * d("c"))
-    val dfRes = (d("r") - 1.0) * (d("c") - 1.0) - 1.0
+    val ssNa = double("p") * double("p") / (double("qa") * double("qb"))
+    val ssRes = double("e2") / (double("r") * double("r") * double("c") * double("c"))
+    val dfRes = (double("r") - 1.0) * (double("c") - 1.0) - 1.0
     val fStat = ssNa / ((ssRes - ssNa) / dfRes)
     tukeyFold(cells)
       .select(col("r").cast("long").as("n_months"),
@@ -7646,12 +7416,11 @@ object AuditQueries {
   }
 
   val q470Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val ssNa = s"(${d("p")} * ${d("p")} / (${d("qa")} * ${d("qb")}))"
-    val ssRes = s"(${d("e2")} / (${d("r")} * ${d("r")} * ${d("c")}" +
-      s" * ${d("c")}))"
+    val ssNa = s"(${dbl("p")} * ${dbl("p")} / (${dbl("qa")} * ${dbl("qb")}))"
+    val ssRes = s"(${dbl("e2")} / (${dbl("r")} * ${dbl("r")} * ${dbl("c")}" +
+      s" * ${dbl("c")}))"
     val f = s"($ssNa / (($ssRes - $ssNa) /" +
-      s" ((${d("r")} - 1.0) * (${d("c")} - 1.0) - 1.0)))"
+      s" ((${dbl("r")} - 1.0) * (${dbl("c")} - 1.0) - 1.0)))"
     s"""WITH cells AS (
       |  SELECT month(o_orderdate) AS mo,
       |    CAST(substring(o_orderpriority, 1, 1) AS BIGINT) AS g,
@@ -7779,7 +7548,6 @@ object AuditQueries {
     * exact spec census.
     */
   val q472ProcessCapability: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     val delays = Tables.lineitem(s, dir)
       .select(col("l_orderkey"), col("l_shipdate"))
       .join(Tables.orders(s, dir)
@@ -7792,10 +7560,9 @@ object AuditQueries {
       sum(col("d").cast(dec) * col("d")).as("qdd"),
       sum(when(col("d") < SpecLslDays || col("d") > SpecUslDays, 1L)
         .otherwise(0L)).cast(dec).as("oos"))
-    def d(c: String) = col(c).cast("double")
-    val sigma = sqrt((d("qdd") - d("sd") * d("sd") / d("n")) /
-      (d("n") - 1.0))
-    val mu = d("sd") / d("n")
+    val sigma = sqrt((double("qdd") - double("sd") * double("sd") / double("n")) /
+      (double("n") - 1.0))
+    val mu = double("sd") / double("n")
     val cp = lit((SpecUslDays - SpecLslDays).toDouble) / (sigma * 6.0)
     val cpk = least(lit(SpecUslDays.toDouble) - mu,
       mu - SpecLslDays.toDouble) / (sigma * 3.0)
@@ -7809,10 +7576,9 @@ object AuditQueries {
   }
 
   val q472Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val sigma = s"sqrt((${d("qdd")} - ${d("sd")} * ${d("sd")} /" +
-      s" ${d("n")}) / (${d("n")} - 1.0))"
-    val mu = s"(${d("sd")} / ${d("n")})"
+    val sigma = s"sqrt((${dbl("qdd")} - ${dbl("sd")} * ${dbl("sd")} /" +
+      s" ${dbl("n")}) / (${dbl("n")} - 1.0))"
+    val mu = s"(${dbl("sd")} / ${dbl("n")})"
     val cp = s"(${(SpecUslDays - SpecLslDays).toDouble} / ($sigma * 6.0))"
     val cpk = s"(LEAST(${SpecUslDays.toDouble} - $mu," +
       s" $mu - ${SpecLslDays.toDouble}) / ($sigma * 3.0))"
@@ -7853,7 +7619,6 @@ object AuditQueries {
     * 1-row fold.
     */
   val q473DieboldMariano: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     val cells = Tables.orders(s, dir)
       .groupBy(expr("year(o_orderdate) * 12 + month(o_orderdate)").as("m"))
       .agg(expr("SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) div 100")
@@ -7870,10 +7635,9 @@ object AuditQueries {
     val fold = dd.agg(count(lit(1)).cast(dec).as("m"),
       sum(col("dt")).as("sdt"),
       sum(col("dt") * col("dt")).as("qdt"))
-    def d(c: String) = col(c).cast("double")
-    val dm = (d("sdt") / d("m")) /
-      sqrt((d("qdt") - d("sdt") * d("sdt") / d("m")) /
-        ((d("m") - 1.0) * d("m")))
+    val dm = (double("sdt") / double("m")) /
+      sqrt((double("qdt") - double("sdt") * double("sdt") / double("m")) /
+        ((double("m") - 1.0) * double("m")))
     fold.select(col("m").cast("long").as("n_forecasts"),
       col("sdt").cast("long").as("loss_diff_sum"),
       dm.as("dm_stat_d"),
@@ -7883,10 +7647,9 @@ object AuditQueries {
   }
 
   val q473Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val dm = s"((${d("sdt")} / ${d("m")}) / sqrt((${d("qdt")} -" +
-      s" ${d("sdt")} * ${d("sdt")} / ${d("m")}) /" +
-      s" ((${d("m")} - 1.0) * ${d("m")})))"
+    val dm = s"((${dbl("sdt")} / ${dbl("m")}) / sqrt((${dbl("qdt")} -" +
+      s" ${dbl("sdt")} * ${dbl("sdt")} / ${dbl("m")}) /" +
+      s" ((${dbl("m")} - 1.0) * ${dbl("m")})))"
     s"""WITH cells AS (
       |  SELECT year(o_orderdate) * 12 + month(o_orderdate) AS m,
       |    SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) // 100 AS y
@@ -7927,11 +7690,6 @@ object AuditQueries {
     * co-moment fold.
     */
   val q474MincerZarnowitz: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val cells = Tables.orders(s, dir)
       .groupBy(expr("year(o_orderdate) * 12 + month(o_orderdate)").as("m"))
       .agg(expr("SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) div 100")
@@ -7951,10 +7709,9 @@ object AuditQueries {
         (col("n") * col("qff") - col("sf") * col("sf")).as("dx"),
         (col("n") * col("qyy") - col("sy") * col("sy")).as("dy"),
         (col("n") * col("qfy") - col("sf") * col("sy")).as("cxy"))
-    def d(c: String) = col(c).cast("double")
-    val sseU = (d("dy") * d("dx") - d("cxy") * d("cxy")) /
-      (d("n") * d("dx"))
-    val fStat = ((d("sser") - sseU) / 2.0) / (sseU / (d("n") - 2.0))
+    val sseU = (double("dy") * double("dx") - double("cxy") * double("cxy")) /
+      (double("n") * double("dx"))
+    val fStat = ((double("sser") - sseU) / 2.0) / (sseU / (double("n") - 2.0))
     mo.select(col("n").cast("long").as("n_forecasts"),
       expr(sdiv("(sy * dx - cxy * sf) * 1000000", "n * dx")).cast("long")
         .as("alpha_e6"),
@@ -7965,10 +7722,9 @@ object AuditQueries {
   }
 
   val q474Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val sseU = s"((${d("dy")} * ${d("dx")} - ${d("cxy")} * ${d("cxy")})" +
-      s" / (${d("n")} * ${d("dx")}))"
-    val f = s"(((${d("sser")} - $sseU) / 2.0) / ($sseU / (${d("n")}" +
+    val sseU = s"((${dbl("dy")} * ${dbl("dx")} - ${dbl("cxy")} * ${dbl("cxy")})" +
+      s" / (${dbl("n")} * ${dbl("dx")}))"
+    val f = s"(((${dbl("sser")} - $sseU) / 2.0) / ($sseU / (${dbl("n")}" +
       s" - 2.0)))"
     s"""WITH cells AS (
       |  SELECT year(o_orderdate) * 12 + month(o_orderdate) AS m,
@@ -8014,7 +7770,6 @@ object AuditQueries {
     * metadata → 1-row fold.
     */
   val q475DirectionalSkill: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     val cells = Tables.orders(s, dir)
       .groupBy(expr("year(o_orderdate) * 12 + month(o_orderdate)").as("m"))
       .agg(expr("SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) div 100")
@@ -8038,19 +7793,18 @@ object AuditQueries {
         (col("y") - col("y12"))).as("ssn"),
         sum((col("y") - col("y1")).cast(dec) * (col("y") - col("y1")))
           .as("ss1"))
-    def d(c: String) = col(c).cast("double")
-    val py = d("nu") / d("m"); val pf = d("nf") / d("m")
-    val pHat = d("h") / d("m")
+    val py = double("nu") / double("m"); val pf = double("nf") / double("m")
+    val pHat = double("h") / double("m")
     val pStar = py * pf + (lit(1.0) - py) * (lit(1.0) - pf)
-    val vHat = pStar * (lit(1.0) - pStar) / d("m")
+    val vHat = pStar * (lit(1.0) - pStar) / double("m")
     val vStar = (py * 2.0 - 1.0) * (py * 2.0 - 1.0) * pf *
-      (lit(1.0) - pf) / d("m") +
+      (lit(1.0) - pf) / double("m") +
       (pf * 2.0 - 1.0) * (pf * 2.0 - 1.0) * py * (lit(1.0) - py) /
-        d("m") +
+        double("m") +
       py * pf * (lit(1.0) - py) * (lit(1.0) - pf) * 4.0 /
-        (d("m") * d("m"))
+        (double("m") * double("m"))
     val ptZ = (pHat - pStar) / sqrt(vHat - vStar)
-    val u2 = sqrt(d("ssn") / d("ss1"))
+    val u2 = sqrt(double("ssn") / double("ss1"))
     ptFold.crossJoin(broadcast(u2Fold))
       .select(col("m").cast("long").as("n_signs"),
         col("h").cast("long").as("n_hits"),
@@ -8060,18 +7814,17 @@ object AuditQueries {
   }
 
   val q475Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val py = s"(${d("nu")} / ${d("m")})"
-    val pf = s"(${d("nf")} / ${d("m")})"
-    val pHat = s"(${d("h")} / ${d("m")})"
+    val py = s"(${dbl("nu")} / ${dbl("m")})"
+    val pf = s"(${dbl("nf")} / ${dbl("m")})"
+    val pHat = s"(${dbl("h")} / ${dbl("m")})"
     val pStar = s"($py * $pf + (1.0 - $py) * (1.0 - $pf))"
-    val vHat = s"($pStar * (1.0 - $pStar) / ${d("m")})"
+    val vHat = s"($pStar * (1.0 - $pStar) / ${dbl("m")})"
     val vStar = s"(($py * 2.0 - 1.0) * ($py * 2.0 - 1.0) * $pf *" +
-      s" (1.0 - $pf) / ${d("m")} + ($pf * 2.0 - 1.0) * ($pf * 2.0 - 1.0)" +
-      s" * $py * (1.0 - $py) / ${d("m")} + $py * $pf * (1.0 - $py) *" +
-      s" (1.0 - $pf) * 4.0 / (${d("m")} * ${d("m")}))"
+      s" (1.0 - $pf) / ${dbl("m")} + ($pf * 2.0 - 1.0) * ($pf * 2.0 - 1.0)" +
+      s" * $py * (1.0 - $py) / ${dbl("m")} + $py * $pf * (1.0 - $py) *" +
+      s" (1.0 - $pf) * 4.0 / (${dbl("m")} * ${dbl("m")}))"
     val ptZ = s"(($pHat - $pStar) / sqrt($vHat - $vStar))"
-    val u2 = s"sqrt(${d("ssn")} / ${d("ss1")})"
+    val u2 = s"sqrt(${dbl("ssn")} / ${dbl("ss1")})"
     s"""WITH cells AS (
       |  SELECT year(o_orderdate) * 12 + month(o_orderdate) AS m,
       |    SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) // 100 AS y
@@ -8122,7 +7875,6 @@ object AuditQueries {
     * ×B spine fold on the row stream. Bounded fan-out.
     */
   val q476AnsariBradley: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     val li = Tables.lineitem(s, dir)
       .filter(col("l_returnflag").isin("R", "N"))
       .select(col("l_orderkey"), col("l_linenumber"),
@@ -8253,9 +8005,6 @@ object AuditQueries {
     * → 1-row fold.
     */
   val q477Quade: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val cells = Tables.orders(s, dir)
       .groupBy(expr("month(o_orderdate)").cast("long").as("mo"),
         expr("CAST(substring(o_orderpriority, 1, 1) AS BIGINT)").as("g"))
@@ -8342,9 +8091,6 @@ object AuditQueries {
     * bounded pair passes → 1-row fold.
     */
   val q478DistanceCorrelation: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val cells = Tables.lineitem(s, dir)
       .groupBy(expr("CAST(ROUND(l_quantity) AS BIGINT)").as("x"),
         expr("CAST(ROUND(l_discount * 100) AS BIGINT)").as("y"))
@@ -8391,16 +8137,14 @@ object AuditQueries {
       sum(col("w") * col("ac") * col("bc")).as("vxy"),
       sum(col("w") * col("ac") * col("ac")).as("vxx"),
       sum(col("w") * col("bc") * col("bc")).as("vyy"))
-    def d(c: String) = col(c).cast("double")
-    val dcor = d("vxy") / sqrt(d("vxx") * d("vyy"))
+    val dcor = double("vxy") / sqrt(double("vxx") * double("vyy"))
     folds.crossJoin(broadcast(nTot))
       .select(col("nn").cast("long").as("n_lines"),
         dcor.as("dcor_d"),
-        (d("vxy") / (d("nn") * d("nn") * 1e12)).as("dcov2_d"))
+        (double("vxy") / (double("nn") * double("nn") * 1e12)).as("dcov2_d"))
   }
 
   val q478Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
     s"""WITH cells AS (
       |  SELECT CAST(ROUND(l_quantity) AS BIGINT) AS x,
       |    CAST(ROUND(l_discount * 100) AS BIGINT) AS y,
@@ -8439,8 +8183,8 @@ object AuditQueries {
       |    SUM(w * bc * bc) AS vyy
       |  FROM paired)
       |SELECT CAST(nn AS BIGINT) AS n_lines,
-      |  (${d("vxy")} / sqrt(${d("vxx")} * ${d("vyy")})) AS dcor_d,
-      |  (${d("vxy")} / (${d("nn")} * ${d("nn")} * 1e12)) AS dcov2_d
+      |  (${dbl("vxy")} / sqrt(${dbl("vxx")} * ${dbl("vyy")})) AS dcor_d,
+      |  (${dbl("vxy")} / (${dbl("nn")} * ${dbl("nn")} * 1e12)) AS dcov2_d
       |FROM folds CROSS JOIN nt""".stripMargin
   }
 
@@ -8463,9 +8207,6 @@ object AuditQueries {
     * dim → 300-row pair table → ×B broadcast spine fold.
     */
   val q479Permanova: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val d1 = brayCurtisPairs(s, dir)
       .select(col("na"), col("nb"),
         (col("bc_e6").cast(dec) * col("bc_e6")).as("d2"))
@@ -8513,9 +8254,8 @@ object AuditQueries {
         first(col("g")).cast(dec).as("g"),
         expr(fdiv("SUM(d2) * 1000000", "first(n)")).as("t"))
     val obs = within.filter(col("b") === 0L).select(col("w").as("w_obs"))
-    def d(c: String) = col(c).cast("double")
-    val fStat = ((d("t") - d("w_obs")) / (d("g") - 1.0)) /
-      (d("w_obs") / (d("n") - d("g")))
+    val fStat = ((double("t") - double("w_obs")) / (double("g") - 1.0)) /
+      (double("w_obs") / (double("n") - double("g")))
     within.filter(col("b") > 0L).crossJoin(broadcast(obs))
       .agg(count(lit(1)).as("n_perm"),
         sum(when(col("w") <= col("w_obs"), 1L).otherwise(0L)).as("n_le"),
@@ -8530,9 +8270,8 @@ object AuditQueries {
   }
 
   val q479Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    val fStat = s"(((${d("t")} - ${d("w_obs")}) / (${d("g")} - 1.0))" +
-      s" / (${d("w_obs")} / (${d("n")} - ${d("g")})))"
+    val fStat = s"(((${dbl("t")} - ${dbl("w_obs")}) / (${dbl("g")} - 1.0))" +
+      s" / (${dbl("w_obs")} / (${dbl("n")} - ${dbl("g")})))"
     s"""WITH $BrayCurtisCtes,
       |d1 AS (
       |  SELECT na, nb, CAST(bc_e6 AS HUGEINT) * bc_e6 AS d2 FROM bc),
@@ -8691,7 +8430,6 @@ object AuditQueries {
     * metadata argmax rounds.
     */
   val q481RosnerEsd: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     val panel = Tables.orders(s, dir)
       .join(broadcast(Tables.customer(s, dir)
         .select(col("c_custkey"), col("c_nationkey"))),
@@ -8700,7 +8438,6 @@ object AuditQueries {
       .agg(expr("SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))" +
         " div COUNT(*)").as("y"))
       .localCheckpoint()
-    def d(c: String) = col(c).cast("double")
     var active = panel
     var outRows: Seq[DataFrame] = Seq.empty
     for (k <- 1 to 3) {
@@ -8711,9 +8448,9 @@ object AuditQueries {
         .withColumn("dev",
           abs(col("y").cast(dec) * col("n") - col("sy")))
         .orderBy(col("dev").desc, col("nat")).limit(1)
-      val sD = sqrt((d("qyy") - d("sy") * d("sy") / d("n")) /
-        (d("n") - 1.0))
-      val rD = (d("dev") / d("n")) / sD
+      val sD = sqrt((double("qyy") - double("sy") * double("sy") / double("n")) /
+        (double("n") - 1.0))
+      val rD = (double("dev") / double("n")) / sD
       val lam = EsdLambdas(k - 1)
       outRows = outRows :+ cand.select(lit(k.toLong).as("round"),
         col("nat").as("nation"), col("y").as("aov"),
@@ -8729,11 +8466,10 @@ object AuditQueries {
   }
 
   val q481Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
     def round(k: Int, from: String): String = {
       val lam = EsdLambdas(k - 1)
-      val sD = s"sqrt((${d("qyy")} - ${d("sy")} * ${d("sy")} /" +
-        s" ${d("n")}) / (${d("n")} - 1.0))"
+      val sD = s"sqrt((${dbl("qyy")} - ${dbl("sy")} * ${dbl("sy")} /" +
+        s" ${dbl("n")}) / (${dbl("n")} - 1.0))"
       s"""mo$k AS (
          |  SELECT CAST(COUNT(*) AS HUGEINT) AS n,
          |    CAST(SUM(y) AS HUGEINT) AS sy,
@@ -8747,9 +8483,9 @@ object AuditQueries {
          |  ORDER BY dev DESC, a.nat LIMIT 1),
          |out$k AS (
          |  SELECT round, nat AS nation, y AS aov,
-         |    ((${d("dev")} / ${d("n")}) / $sD) AS r_stat_d,
+         |    ((${dbl("dev")} / ${dbl("n")}) / $sD) AS r_stat_d,
          |    CAST('$lam' AS DOUBLE) AS lambda_d,
-         |    CASE WHEN (${d("dev")} / ${d("n")}) / $sD > $lam
+         |    CASE WHEN (${dbl("dev")} / ${dbl("n")}) / $sD > $lam
          |      THEN 1 ELSE 0 END AS is_outlier
          |  FROM cand$k),
          |act${k + 1} AS (
@@ -8884,7 +8620,6 @@ object AuditQueries {
     * cumulative folds (metadata).
     */
   val q483YuenTest: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     val li = Tables.lineitem(s, dir)
       .filter(col("l_returnflag").isin("R", "N"))
       .select((col("l_returnflag") === "R").cast("long").as("a"),
@@ -8929,17 +8664,16 @@ object AuditQueries {
             .as(s"ws$grp"))
     }
     val f1 = groupFold(1L); val f0 = groupFold(0L)
-    def d(c: String) = col(c).cast("double")
-    def h(g: String, n: String) = d(n) - d(g) * 2.0
-    val tm1 = d("mid1") / h("g1", "n1")
-    val tm0 = d("mid0") / h("g0", "n0")
-    val sw1 = (d("wss1") - d("ws1") * d("ws1") / d("n1")) /
-      (d("n1") - 1.0)
-    val sw0 = (d("wss0") - d("ws0") * d("ws0") / d("n0")) /
-      (d("n0") - 1.0)
-    val d1 = sw1 * (d("n1") - 1.0) /
+    def h(g: String, n: String) = double(n) - double(g) * 2.0
+    val tm1 = double("mid1") / h("g1", "n1")
+    val tm0 = double("mid0") / h("g0", "n0")
+    val sw1 = (double("wss1") - double("ws1") * double("ws1") / double("n1")) /
+      (double("n1") - 1.0)
+    val sw0 = (double("wss0") - double("ws0") * double("ws0") / double("n0")) /
+      (double("n0") - 1.0)
+    val d1 = sw1 * (double("n1") - 1.0) /
       (h("g1", "n1") * (h("g1", "n1") - 1.0))
-    val d0 = sw0 * (d("n0") - 1.0) /
+    val d0 = sw0 * (double("n0") - 1.0) /
       (h("g0", "n0") * (h("g0", "n0") - 1.0))
     val t = (tm1 - tm0) / sqrt(d1 + d0)
     f1.crossJoin(broadcast(f0))
@@ -8953,8 +8687,7 @@ object AuditQueries {
   }
 
   val q483Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    def h(g: String, n: String) = s"(${d(n)} - ${d(g)} * 2.0)"
+    def h(g: String, n: String) = s"(${dbl(n)} - ${dbl(g)} * 2.0)"
     def gf(grp: Int) =
       s"""cum$grp AS (
          |  SELECT v, n,
@@ -8989,15 +8722,15 @@ object AuditQueries {
          |      + ANY_VALUE(CAST(trim AS HUGEINT)) * ANY_VALUE(b.vhi)
          |      AS ws$grp
          |  FROM cum${grp}t CROSS JOIN bounds$grp b)""".stripMargin
-    val tm1 = s"(${d("mid1")} / ${h("g1", "n1")})"
-    val tm0 = s"(${d("mid0")} / ${h("g0", "n0")})"
-    val sw1 = s"((${d("wss1")} - ${d("ws1")} * ${d("ws1")} /" +
-      s" ${d("n1")}) / (${d("n1")} - 1.0))"
-    val sw0 = s"((${d("wss0")} - ${d("ws0")} * ${d("ws0")} /" +
-      s" ${d("n0")}) / (${d("n0")} - 1.0))"
-    val d1 = s"($sw1 * (${d("n1")} - 1.0) / (${h("g1", "n1")} *" +
+    val tm1 = s"(${dbl("mid1")} / ${h("g1", "n1")})"
+    val tm0 = s"(${dbl("mid0")} / ${h("g0", "n0")})"
+    val sw1 = s"((${dbl("wss1")} - ${dbl("ws1")} * ${dbl("ws1")} /" +
+      s" ${dbl("n1")}) / (${dbl("n1")} - 1.0))"
+    val sw0 = s"((${dbl("wss0")} - ${dbl("ws0")} * ${dbl("ws0")} /" +
+      s" ${dbl("n0")}) / (${dbl("n0")} - 1.0))"
+    val d1 = s"($sw1 * (${dbl("n1")} - 1.0) / (${h("g1", "n1")} *" +
       s" (${h("g1", "n1")} - 1.0)))"
-    val d0 = s"($sw0 * (${d("n0")} - 1.0) / (${h("g0", "n0")} *" +
+    val d0 = s"($sw0 * (${dbl("n0")} - 1.0) / (${h("g0", "n0")} *" +
       s" (${h("g0", "n0")} - 1.0)))"
     val t = s"(($tm1 - $tm0) / sqrt($d1 + $d0))"
     s"""WITH li AS (
@@ -9038,9 +8771,6 @@ object AuditQueries {
     * metadata. One shuffle.
     */
   val q388TwoWayAnova: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val o = Tables.orders(s, dir)
       .select(col("o_orderpriority").as("a"), col("o_orderstatus").as("b"),
         cents(col("o_totalprice")).as("c"))
@@ -9079,7 +8809,6 @@ object AuditQueries {
   }
 
   val q388Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
     s"""WITH o AS (
       |  SELECT o_orderpriority AS a, o_orderstatus AS b,
       |    CAST(ROUND(o_totalprice*100) AS BIGINT) AS c
@@ -9111,8 +8840,8 @@ object AuditQueries {
       |  CAST((ss_cells - ss_a - ss_b) // ((ka - 1) * (kb - 1)) AS BIGINT)
       |    AS ms_ab_c2,
       |  CAST(ss_w // (nn - ka * kb) AS BIGINT) AS ms_w_c2,
-      |  ${d("ss_a // (ka - 1)")} / ${d("ss_w // (nn - ka * kb)")} AS f_a_d,
-      |  ${d("ss_b // (kb - 1)")} / ${d("ss_w // (nn - ka * kb)")} AS f_b_d
+      |  ${dbl("ss_a // (ka - 1)")} / ${dbl("ss_w // (nn - ka * kb)")} AS f_a_d,
+      |  ${dbl("ss_b // (kb - 1)")} / ${dbl("ss_w // (nn - ka * kb)")} AS f_b_d
       |FROM sss""".stripMargin
   }
 
@@ -9134,9 +8863,6 @@ object AuditQueries {
     * Plan: one lineitem pass → bucket histogram → 1-row fold.
     */
   val q390HashBirthday: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val h = graft.functions.Text.portableHash(col("o_orderkey").cast("string"))
     val buckets = Tables.orders(s, dir)
       .select((h % BirthdayM).as("m"))
@@ -9193,7 +8919,6 @@ object AuditQueries {
     * two TakeOrdered top-Ks — never a global sort.
     */
   val q383TrendingParts: Q = (s, dir) => {
-    def l2(x: String) = graft.functions.Text.log2e6SparkSql(x)
     val li = Tables.lineitem(s, dir)
       .select(col("l_partkey").as("part"),
         expr("unix_millis(l_shipdate) div 86400000").as("day"))
@@ -9217,7 +8942,6 @@ object AuditQueries {
   }
 
   val q383Sql: String = {
-    def l2(x: String) = graft.functions.Text.log2e6DuckSql(x)
     s"""WITH li AS (
       |  SELECT l_partkey AS part,
       |    CAST(epoch_ms(l_shipdate) AS BIGINT) // 86400000 AS day
@@ -9232,7 +8956,7 @@ object AuditQueries {
       |  FROM li CROSS JOIN mid GROUP BY part),
       |scored AS (
       |  SELECT part, c0, c1,
-      |    ${l2("c1 + 1")} - ${l2("c0 + 1")} AS score_e6
+      |    ${duckL2("c1 + 1")} - ${duckL2("c0 + 1")} AS score_e6
       |  FROM wide),
       |up AS (SELECT 'up' AS direction, part, c0, c1, score_e6
       |  FROM scored ORDER BY score_e6 DESC, part LIMIT $TrendTopK),
@@ -9354,12 +9078,6 @@ object AuditQueries {
     * is a 3-row metadata fold.
     */
   val q381Lmdi: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def l2(x: String) = graft.functions.Text.log2e6SparkSql(x)
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val li = Tables.lineitem(s, dir)
       .select(col("l_returnflag").as("flag"),
         expr("unix_millis(l_shipdate) div 86400000").as("day"),
@@ -9401,10 +9119,6 @@ object AuditQueries {
   }
 
   val q381Sql: String = {
-    def l2(x: String) = graft.functions.Text.log2e6DuckSql(x)
-    def sd(num: String, den: String) =
-      s"""CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | (ABS($num) // ($den))""".stripMargin.replace("\n", " ")
     s"""WITH li AS (
       |  SELECT l_returnflag AS flag,
       |    CAST(epoch_ms(l_shipdate) AS BIGINT) // 86400000 AS day,
@@ -9422,20 +9136,20 @@ object AuditQueries {
       |    AND a.t = 1 AND b.t = 0),
       |lns AS (
       |  SELECT flag, v0, v1,
-      |    ${sd(s"(${l2("CAST(v1 AS BIGINT)")} - ${l2("CAST(v0 AS BIGINT)")}) * 693147", "1000000")} AS lnv,
-      |    ${sd(s"(${l2("CAST(q1 AS BIGINT)")} - ${l2("CAST(q0 AS BIGINT)")}) * 693147", "1000000")} AS lnq
+      |    ${duckSdiv(s"(${duckL2("CAST(v1 AS BIGINT)")} - ${duckL2("CAST(v0 AS BIGINT)")}) * 693147", "1000000")} AS lnv,
+      |    ${duckSdiv(s"(${duckL2("CAST(q1 AS BIGINT)")} - ${duckL2("CAST(q0 AS BIGINT)")}) * 693147", "1000000")} AS lnq
       |  FROM wide),
       |lw AS (
       |  SELECT flag, v0, v1, lnq, lnv - lnq AS lnp,
       |    CASE WHEN lnv = 0 THEN v1
-      |      ELSE ${sd("(v1 - v0) * 1000000", "lnv")} END AS lw
+      |      ELSE ${duckSdiv("(v1 - v0) * 1000000", "lnv")} END AS lw
       |  FROM lns)
       |SELECT flag, CAST(v0 AS BIGINT) AS v0_c, CAST(v1 AS BIGINT) AS v1_c,
       |  CAST(v1 - v0 AS BIGINT) AS dv_c,
-      |  CAST(${sd("lw * lnq", "1000000")} AS BIGINT) AS eff_qty_c,
-      |  CAST(${sd("lw * lnp", "1000000")} AS BIGINT) AS eff_price_c,
-      |  CAST((v1 - v0) - (${sd("lw * lnq", "1000000")})
-      |    - (${sd("lw * lnp", "1000000")}) AS BIGINT) AS residual_c
+      |  CAST(${duckSdiv("lw * lnq", "1000000")} AS BIGINT) AS eff_qty_c,
+      |  CAST(${duckSdiv("lw * lnp", "1000000")} AS BIGINT) AS eff_price_c,
+      |  CAST((v1 - v0) - (${duckSdiv("lw * lnq", "1000000")})
+      |    - (${duckSdiv("lw * lnp", "1000000")}) AS BIGINT) AS residual_c
       |FROM lw
       |ORDER BY flag""".stripMargin
   }
@@ -9531,9 +9245,6 @@ object AuditQueries {
     */
   val q376Wasserstein: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val o = Tables.orders(s, dir)
       .filter(col("o_orderpriority").isin(MwArmA, MwArmB))
       .select((col("o_orderpriority") === MwArmA).cast("long").as("a"),
@@ -9611,7 +9322,6 @@ object AuditQueries {
     * 10¹⁸ rows); the final z² is one fixed IEEE tree.
     */
   val q377CochranArmitage: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     val o = Tables.orders(s, dir)
       .select(col("o_orderpriority").as("g"), cents(col("o_totalprice")).as("c"))
     val byV = o.groupBy(col("c")).agg(count(lit(1)).as("cnt"))
@@ -9637,7 +9347,6 @@ object AuditQueries {
   }
 
   val q377Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
     s"""WITH o AS (
       |  SELECT o_orderpriority AS g,
       |    CAST(ROUND(o_totalprice*100) AS BIGINT) AS c
@@ -9655,9 +9364,9 @@ object AuditQueries {
       |      CAST(substr(g, 1, 1) AS BIGINT)) AS HUGEINT) AS sw2n
       |  FROM o CROSS JOIN med)
       |SELECT CAST(nn AS BIGINT) AS n_rows, CAST(aa AS BIGINT) AS n_above,
-      |  ${d("nn * swa - aa * swn")} * ${d("nn * swa - aa * swn")} *
-      |    ${d("nn")} /
-      |    (${d("aa * (nn - aa)")} * ${d("nn * sw2n - swn * swn")}) AS z2_d
+      |  ${dbl("nn * swa - aa * swn")} * ${dbl("nn * swa - aa * swn")} *
+      |    ${dbl("nn")} /
+      |    (${dbl("aa * (nn - aa)")} * ${dbl("nn * sw2n - swn * swn")}) AS z2_d
       |FROM folded""".stripMargin
   }
 
@@ -9680,9 +9389,6 @@ object AuditQueries {
     * shuffle beyond the final 8-row rollup.
     */
   val q374HrwPlacement: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     def score(i: Int) = graft.functions.Text.portableHash(
       concat(col("p_partkey").cast("string"), lit(s":$i")))
     val scored = Tables.part(s, dir).select(
@@ -9879,14 +9585,6 @@ object AuditQueries {
     * Plan: one fact pass → part rollup → a 1-row fold.
     */
   val q371PriceElasticity: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def l2(x: String) = graft.functions.Text.log2e6SparkSql(x)
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val pp = Tables.lineitem(s, dir)
       .groupBy(col("l_partkey"))
       .agg(sum(cents(col("l_extendedprice"))).as("sc"),
@@ -9906,15 +9604,13 @@ object AuditQueries {
     val r2 = (c("sxy", "sx", "sy") * c("sxy", "sx", "sy")) /
       (c("sxx", "sx", "sx") * c("syy", "sy", "sy"))
     sums.select(col("n").cast("long").as("n_parts"),
-      expr(sdiv("(n * sxy - sx * sy) * 1000000", "n * sxx - sx * sx"))
+      expr(sdivBigint("(n * sxy - sx * sy) * 1000000", "n * sxx - sx * sx"))
         .as("elasticity_e6"),
       r2.as("r2_d"))
   }
 
   val q371Sql: String = {
-    def l2(x: String) = graft.functions.Text.log2e6DuckSql(x)
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
-    def c(ab: String, a: String, b: String) = d(s"n * $ab - $a * $b")
+    def c(ab: String, a: String, b: String) = dbl(s"n * $ab - $a * $b")
     val r2 = s"((${c("sxy", "sx", "sy")} * ${c("sxy", "sx", "sy")}) / " +
       s"(${c("sxx", "sx", "sx")} * ${c("syy", "sy", "sy")}))"
     s"""WITH pp0 AS (
@@ -9924,8 +9620,8 @@ object AuditQueries {
       |    CAST(SUM(CAST(ROUND(l_quantity) AS BIGINT)) AS BIGINT) AS q
       |  FROM lineitem GROUP BY l_partkey),
       |pp AS (
-      |  SELECT CAST(${l2("CAST(avgp AS BIGINT)")} AS HUGEINT) AS x,
-      |    CAST(${l2("q")} AS HUGEINT) AS y
+      |  SELECT CAST(${duckL2("CAST(avgp AS BIGINT)")} AS HUGEINT) AS x,
+      |    CAST(${duckL2("q")} AS HUGEINT) AS y
       |  FROM pp0),
       |sums AS (
       |  SELECT CAST(COUNT(*) AS HUGEINT) AS n, SUM(x) AS sx, SUM(y) AS sy,
@@ -9952,9 +9648,6 @@ object AuditQueries {
     * Plan: one fact pass → 100-cell rollup → 100-row folds. One shuffle.
     */
   val q372LastDigitAudit: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val cells = Tables.orders(s, dir)
       .select((cents(col("o_totalprice")) % 100).as("dd"))
       .groupBy(col("dd")).agg(count(lit(1)).as("o"))
@@ -10013,13 +9706,6 @@ object AuditQueries {
     * fact pass.
     */
   val q368TukeyPairs: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS BIGINT)""".stripMargin.replace("\n", " ")
     val byG = Tables.orders(s, dir)
       .select(col("o_orderpriority").as("g"), cents(col("o_totalprice")).as("c"))
       .groupBy(col("g"))
@@ -10041,7 +9727,7 @@ object AuditQueries {
       (col("sb").cast("double") / col("nb").cast("double"))
     pairs.select(col("g_a"), col("g_b"),
         col("na").cast("long").as("n_a"), col("nb").cast("long").as("n_b"),
-        expr(sdiv("(sa * nb - sb * na) * 1000000", "na * nb")).as("diff_e6"),
+        expr(sdivBigint("(sa * nb - sb * na) * 1000000", "na * nb")).as("diff_e6"),
         (abs(diffD) / sqrt(col("msw_d") / lit(2.0) *
           (lit(1.0) / col("na").cast("double") +
             lit(1.0) / col("nb").cast("double")))).as("q_stat_d"))
@@ -10049,7 +9735,6 @@ object AuditQueries {
   }
 
   val q368Sql: String = {
-    def d(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
     s"""WITH o AS (
       |  SELECT o_orderpriority AS g,
       |    CAST(ROUND(o_totalprice*100) AS BIGINT) AS c
@@ -10061,7 +9746,7 @@ object AuditQueries {
       |  FROM o GROUP BY g),
       |bw AS (SELECT g, n, s, ss, (n * ss - s * s) // n AS w FROM by_g),
       |msw AS (
-      |  SELECT ${d("SUM(w)")} / ${d("SUM(n) - COUNT(*)")} AS msw_d
+      |  SELECT ${dbl("SUM(w)")} / ${dbl("SUM(n) - COUNT(*)")} AS msw_d
       |  FROM bw),
       |pairs AS (
       |  SELECT a.g AS g_a, b.g AS g_b, a.n AS na, b.n AS nb,
@@ -10071,8 +9756,8 @@ object AuditQueries {
       |  CAST(CASE WHEN sa * nb - sb * na >= 0 THEN 1 ELSE -1 END *
       |    (ABS((sa * nb - sb * na) * 1000000) // (na * nb)) AS BIGINT)
       |    AS diff_e6,
-      |  ABS(${d("sa")} / ${d("na")} - ${d("sb")} / ${d("nb")}) /
-      |    sqrt(msw_d / 2.0 * (1.0 / ${d("na")} + 1.0 / ${d("nb")}))
+      |  ABS(${dbl("sa")} / ${dbl("na")} - ${dbl("sb")} / ${dbl("nb")}) /
+      |    sqrt(msw_d / 2.0 * (1.0 / ${dbl("na")} + 1.0 / ${dbl("nb")}))
       |    AS q_stat_d
       |FROM pairs CROSS JOIN msw
       |ORDER BY g_a, g_b""".stripMargin
@@ -10096,9 +9781,6 @@ object AuditQueries {
     * scalar; the leaderboard is a distributed TakeOrdered top-15.
     */
   val q354EbShrinkage: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val rates = Tables.lineitem(s, dir)
       .groupBy(col("l_partkey"))
       .agg(count(lit(1)).as("n"),
@@ -10181,9 +9863,6 @@ object AuditQueries {
     * fold and a 2-row pivot finish.
     */
   val q352CramerVonMises: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val o = Tables.orders(s, dir)
       .filter(col("o_orderpriority").isin(MwArmA, MwArmB))
       .select(col("o_orderpriority").as("g"), cents(col("o_totalprice")).as("c"))
@@ -10277,9 +9956,6 @@ object AuditQueries {
     * metadata windows for the apportionment.
     */
   val q485NeymanAllocation: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val B = SampleBudget
     val o = Tables.orders(s, dir).select(col("o_orderpriority").as("g"),
       expr("CAST(ROUND(o_totalprice*100) AS BIGINT) div 100000").as("x"))
@@ -10375,9 +10051,6 @@ object AuditQueries {
     * pass → 5-region cell rollup → metadata folds.
     */
   val q486BreslowDay: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val o = Tables.orders(s, dir).select(col("o_custkey"),
       expr("CAST(substring(o_orderpriority, 1, 1) AS INT) <= 2")
         .cast("long").as("e"),
@@ -10516,11 +10189,6 @@ object AuditQueries {
     */
   val q487WoeIv: Q = (s, dir) => {
     import graft.functions.Text
-    val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val o = Tables.orders(s, dir).select(col("o_custkey"),
       cents(col("o_totalprice")).as("c"))
     val thr = o.agg(expr("SUM(c) div COUNT(*)").as("t"))
@@ -10614,9 +10282,6 @@ object AuditQueries {
     * Plan: one orders pass → customer rollup → 1-row moment fold.
     */
   val q488Overdispersion: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val y = Tables.orders(s, dir)
       .groupBy(col("o_custkey")).agg(count(lit(1)).as("y"))
     val m = y.agg(count(lit(1)).cast(dec).as("n"),
@@ -10703,9 +10368,6 @@ object AuditQueries {
     * 4-row plan-time spine.
     */
   val q489SampleSize: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val ud = Tables.events(s, dir)
       .select(col("user_id"), expr("unix_millis(ts) div 86400000").as("day"),
         (col("event_type") === "purchase").cast("long").as("p"))
@@ -10798,9 +10460,6 @@ object AuditQueries {
     * two-level medians → rollup-grain |deviation| fold → 5-row ANOVA.
     */
   val q490BrownForsythe: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val o = Tables.orders(s, dir).select(col("o_orderpriority").as("g"),
       expr("CAST(ROUND(o_totalprice*100) AS BIGINT) div 100").as("x"))
     val byV = o.groupBy(col("g"), col("x")).agg(count(lit(1)).as("cnt"))
@@ -10901,9 +10560,6 @@ object AuditQueries {
     * value) rollup (checkpointed) → two-level below-counts → 1-row fold.
     */
   val q491WinRatio: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val reg = Tables.customer(s, dir)
       .select(col("c_custkey"), col("c_nationkey"))
       .join(broadcast(Tables.nation(s, dir)
@@ -11034,11 +10690,6 @@ object AuditQueries {
     */
   val q492GravityModel: Q = (s, dir) => {
     import graft.functions.Text
-    val dec = "decimal(38,0)"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val sup = Tables.supplier(s, dir)
       .select(col("s_suppkey"), col("s_nationkey").as("sn"))
     val cus = Tables.customer(s, dir)
@@ -11081,10 +10732,6 @@ object AuditQueries {
 
   val q492Sql: String = {
     import graft.functions.Text
-    def sd(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | (ABS($num) // ($den)) AS HUGEINT)""".stripMargin
-        .replace("\n", " ")
     s"""WITH flows AS (
       |  SELECT s_nationkey AS sn, c_nationkey AS cn,
       |    SUM(CAST(ROUND(l_extendedprice*100) AS BIGINT)) // 100000 AS f
@@ -11109,11 +10756,11 @@ object AuditQueries {
       |  FROM pts)
       |SELECT CAST(n AS BIGINT) AS n_lanes,
       |  CAST(CASE WHEN n * sxx - sx * sx = 0 THEN NULL ELSE
-      |    ${sd("(n * sxy - sx * sy) * 1000000", "n * sxx - sx * sx")}
+      |    ${duckSdivHuge("(n * sxy - sx * sy) * 1000000", "n * sxx - sx * sx")}
       |    END AS BIGINT) AS beta_e6,
-      |  CAST(${sd(
+      |  CAST(${duckSdivHuge(
         "sy - CASE WHEN n * sxx - sx * sx = 0 THEN 0 ELSE " +
-          sd("(n * sxy - sx * sy) * sx", "n * sxx - sx * sx") + " END",
+          duckSdivHuge("(n * sxy - sx * sy) * sx", "n * sxx - sx * sx") + " END",
         "n")} AS BIGINT) AS alpha_l2e6,
       |  (CAST(CAST(n * sxy - sx * sy AS VARCHAR) AS DOUBLE)
       |      * CAST(CAST(n * sxy - sx * sy AS VARCHAR) AS DOUBLE))
@@ -11374,9 +11021,6 @@ object AuditQueries {
     * Plan: one lineitem counter fold × 8-row plan-time spine.
     */
   val q495OcCurve: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val base = Tables.lineitem(s, dir)
       .agg(count(lit(1)).cast(dec).as("b"),
         sum((col("l_returnflag") === "R").cast("long")).cast(dec).as("a"))
@@ -11780,9 +11424,6 @@ object AuditQueries {
     * Plan: one lineitem pass → 2-group moment rollup → 1-row stitch.
     */
   val q501MmdTest: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val li = Tables.lineitem(s, dir)
       .select((col("l_returnflag") === "R").cast("long").as("g"),
         expr("CAST(ROUND(l_quantity) AS BIGINT)").as("u1"),
@@ -11892,9 +11533,6 @@ object AuditQueries {
     * folds, all metadata.
     */
   val q502EnergyDistance: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
     val li = Tables.lineitem(s, dir)
       .filter(col("l_returnflag").isin("R", "N"))
       .select((col("l_returnflag") === "R").cast("long").as("g"),
@@ -11993,13 +11631,6 @@ object AuditQueries {
     * (checkpointed) → metadata pooling folds.
     */
   val q503MetaAnalysis: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val dim = Tables.customer(s, dir)
       .select(col("c_custkey"), col("c_nationkey"))
       .join(broadcast(Tables.nation(s, dir)
@@ -12436,13 +12067,6 @@ object AuditQueries {
     * (nation, month) rollup → per-nation score fold → 1-row sandwich.
     */
   val q507ClusterRobust: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
-    def fdiv(a: String, b: String) =
-      s"CAST((($a) - ($a) % ($b)) / ($b) AS DECIMAL(38,0))"
-    def sdiv(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | CAST((abs($num) - abs($num) % ($den)) / ($den) AS DECIMAL(38,0))
-         | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
     val cells = Tables.orders(s, dir)
       .join(broadcast(Tables.customer(s, dir)
         .select(col("c_custkey"), col("c_nationkey"))),
@@ -13547,10 +13171,6 @@ object AuditQueries {
     * metadata arithmetic.
     */
   val q524RegressionDiscontinuity: Q = (s, dir) => {
-    def sdivE(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | (abs($num) div ($den)) AS BIGINT)"""
-        .stripMargin.replace("\n", " ")
     val li = Tables.lineitem(s, dir)
       .select(expr("CAST(ROUND(l_discount*100) AS BIGINT)").as("d100"),
         expr("CAST(ROUND(l_quantity) AS BIGINT)").as("y"))
@@ -13563,9 +13183,9 @@ object AuditQueries {
         sum(col("x") * col("y")).as("sxy"))
       .withColumn("det", expr("n * sxx - sx * sx"))
       .withColumn("slope_e6",
-        expr(sdivE("(n * sxy - sx * sy) * 1000000", "det")))
+        expr(sdivDiv("(n * sxy - sx * sy) * 1000000", "det")))
       .withColumn("b0_e6",
-        expr(sdivE("(sy * sxx - sx * sxy) * 1000000", "det")))
+        expr(sdivDiv("(sy * sxx - sx * sxy) * 1000000", "det")))
     val wideRd = mom.agg(
       sum(when(col("side") === 0L, col("n")).otherwise(0L)).as("n_left"),
       sum(when(col("side") === 1L, col("n")).otherwise(0L)).as("n_right"),
@@ -13861,11 +13481,6 @@ object AuditQueries {
     * scalar ladder.
     */
   val q527Kelly: Q = (s, dir) => {
-    def l2(x: String) = graft.functions.Text.log2e6SparkSql(x)
-    def sdivK(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | (abs($num) div ($den)) AS BIGINT)"""
-        .stripMargin.replace("\n", " ")
     // day-over-day lag via the two-level day-bucket device (the day spine
     // funnels >1k rows through a single-task window otherwise)
     val bd = Prefix.lagOver(
@@ -13899,7 +13514,7 @@ object AuditQueries {
       .withColumn("has_edge", (col("f_raw_e6") > 0L).cast("long"))
       .withColumn("fb_e6", expr("f_e6 * b_e6 div 1000000"))
       .withColumn("g_e6", expr(
-        sdivK(s"""p_e6 * (((${l2("1000000 + fb_e6")}) - (${l2("1000000")}))
+        sdivDiv(s"""p_e6 * (((${l2("1000000 + fb_e6")}) - (${l2("1000000")}))
           | * 693147 div 1000000)
           | + (1000000 - p_e6) * (((${l2("1000000 - f_e6")})
           | - (${l2("1000000")})) * 693147 div 1000000)"""
@@ -13910,7 +13525,6 @@ object AuditQueries {
   }
 
   val q527Sql: String = {
-    def l2d(x: String) = graft.functions.Text.log2e6DuckSql(x)
     s"""WITH bd AS (
       |  SELECT d, x, LAG(x) OVER (ORDER BY d) AS px FROM (
       |    SELECT o_orderdate AS d,
@@ -13940,10 +13554,10 @@ object AuditQueries {
       |  SELECT st2.*, f_e6 * b_e6 // 1000000 AS fb_e6 FROM st2),
       |st4 AS (
       |  SELECT st3.*,
-      |    p_e6 * (((${l2d("1000000 + fb_e6")}) - (${l2d("1000000")}))
+      |    p_e6 * (((${duckL2("1000000 + fb_e6")}) - (${duckL2("1000000")}))
       |      * 693147 // 1000000)
-      |    + (1000000 - p_e6) * (((${l2d("1000000 - f_e6")})
-      |      - (${l2d("1000000")})) * 693147 // 1000000) AS gnum
+      |    + (1000000 - p_e6) * (((${duckL2("1000000 - f_e6")})
+      |      - (${duckL2("1000000")})) * 693147 // 1000000) AS gnum
       |  FROM st3)
       |SELECT CAST(up AS BIGINT) AS up_days, CAST(down AS BIGINT) AS down_days,
       |  CAST(p_e6 AS BIGINT) AS p_e6, CAST(b_e6 AS BIGINT) AS b_e6,
@@ -14277,10 +13891,6 @@ object AuditQueries {
     * 5-row report.
     */
   val q536ForecastReconcile: Q = (s, dir) => {
-    def sdivF(num: String, den: String) =
-      s"""CAST(CASE WHEN $num >= 0 THEN 1 ELSE -1 END *
-         | (abs($num) div ($den)) AS BIGINT)"""
-        .stripMargin.replace("\n", " ")
     val geo = Tables.customer(s, dir)
       .select(col("c_custkey"), col("c_nationkey").as("nk"))
       .join(broadcast(Tables.nation(s, dir)
@@ -14312,7 +13922,7 @@ object AuditQueries {
           max(col("nn")).as("nn"))
         .withColumn("fc", when(col("nn") === 1, col("lastv"))
           .otherwise(col("lastv") + expr(
-            sdivF("lastv - firstv", "nn - 1"))))
+            sdivDiv("lastv - firstv", "nn - 1"))))
         .withColumn("fc", greatest(col("fc"), lit(0L)))
     }
     val natTrainDay = train.groupBy(col("rk2"), col("nk"), col("d"))
@@ -14672,7 +14282,6 @@ object AuditQueries {
     * panel and 101-weight sweep are calendar-bounded metadata.
     */
   val q572SyntheticControl: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     val nd = Tables.orders(s, dir)
       .join(broadcast(Tables.customer(s, dir)
         .select(col("c_custkey"), col("c_nationkey"))),
@@ -14800,7 +14409,6 @@ object AuditQueries {
     * everything after is metadata.
     */
   val q573DoublyRobust: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     val base = Tables.orders(s, dir)
       .join(broadcast(Tables.customer(s, dir)
         .select(col("c_custkey"), col("c_mktsegment"))),
@@ -14913,7 +14521,6 @@ object AuditQueries {
     * back onto the test half.
     */
   val q575PinballBacktest: Q = (s, dir) => {
-    val dec = "decimal(38,0)"
     val base = Tables.orders(s, dir)
       .join(broadcast(Tables.customer(s, dir)
         .select(col("c_custkey"), col("c_mktsegment"))),
