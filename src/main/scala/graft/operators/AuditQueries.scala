@@ -1773,11 +1773,7 @@ object AuditQueries {
     * window is |days| rows — the corpus never re-shuffles).
     */
   val q307Pettitt: Q = (s, dir) => {
-    val byDay = Tables.events(s, dir)
-      .filter(col("event_type") === "purchase")
-      .select(expr("unix_millis(ts) div 86400000").as("day"),
-        cents(col("value")).as("v"))
-      .groupBy(col("day")).agg(sum(col("v")).as("x"))
+    val byDay = EventQueries.purchaseCentsByDay(s, dir).agg(sum(col("v")).as("x"))
     val byV = byDay.groupBy(col("x")).agg(count(lit(1)).as("cnt"))
     val vW = Window.orderBy(col("x")).rowsBetween(Window.unboundedPreceding, -1)
     val dRank = byV

@@ -5,7 +5,8 @@ import graft.functions.TSql._
 import graft.functions.Text
 import graft.functions.Exact._
 import graft.functions.Text.{log2e6DuckSql => duckL2, log2e6SparkSql => l2}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset,
+  SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -15,6 +16,17 @@ import org.apache.spark.sql.types.DecimalType
   * logic runs under Structured Streaming in graft.streaming.EventStream).
   */
 object EventQueries {
+
+  /** Purchases in integer cents `v`, grouped by UTC day (`unix_millis(ts)
+    * div 86400000`): the one event pass most daily statistics start from;
+    * callers pick the aggregate (docs/SCALE.md §3).
+    */
+  def purchaseCentsByDay(s: SparkSession, dir: String): RelationalGroupedDataset =
+    Tables.events(s, dir)
+      .filter(col("event_type") === "purchase")
+      .select(expr("unix_millis(ts) div 86400000").as("day"),
+        cents(col("value")).as("v"))
+      .groupBy(col("day"))
 
   /** Tumbling-window aggregate: epoch-aligned 1-hour windows via the same
     * `window()` operator the streaming path uses.
@@ -5297,11 +5309,7 @@ object EventQueries {
     * one-row summary all run over the metadata-sized day frame.
     */
   val q316XmrChart: Q = (s, dir) => {
-    val byDay = Tables.events(s, dir)
-      .filter(col("event_type") === "purchase")
-      .select(expr("unix_millis(ts) div 86400000").as("day"),
-        cents(col("value")).as("v"))
-      .groupBy(col("day")).agg(sum(col("v")).as("x"))
+    val byDay = purchaseCentsByDay(s, dir).agg(sum(col("v")).as("x"))
     xmrFromDays(byDay)
   }
 
@@ -6585,11 +6593,7 @@ object EventQueries {
     * |days|-sized metadata with broadcast scalars.
     */
   val q340JackknifeRatio: Q = (s, dir) => {
-    val bd = Tables.events(s, dir)
-      .filter(col("event_type") === "purchase")
-      .select(expr("unix_millis(ts) div 86400000").as("day"),
-        cents(col("value")).as("v"))
-      .groupBy(col("day"))
+    val bd = purchaseCentsByDay(s, dir)
       .agg(sum(col("v")).cast(dec).as("y"), count(lit(1)).cast(dec).as("x"))
       .localCheckpoint()
     val tot = bd.agg(sum(col("y")).as("sy"), sum(col("x")).as("sx"),
@@ -6774,11 +6778,7 @@ object EventQueries {
     */
   val q379ChatterjeeXi: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val byDay = Tables.events(s, dir)
-      .filter(col("event_type") === "purchase")
-      .select(expr("unix_millis(ts) div 86400000").as("day"),
-        cents(col("value")).as("v"))
-      .groupBy(col("day")).agg(sum(col("v")).as("x"))
+    val byDay = purchaseCentsByDay(s, dir).agg(sum(col("v")).as("x"))
       .localCheckpoint()
     val byV = byDay.groupBy(col("x")).agg(count(lit(1)).as("cnt"))
     val dRank = AuditQueries.doubledRankBelow(byV, Seq.empty, "x", 100000L)
@@ -6837,11 +6837,7 @@ object EventQueries {
     */
   val q387YuleWalker: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val byDay = Tables.events(s, dir)
-      .filter(col("event_type") === "purchase")
-      .select(expr("unix_millis(ts) div 86400000").as("day"),
-        cents(col("value")).as("v"))
-      .groupBy(col("day")).agg(sum(col("v")).cast(dec).as("x"))
+    val byDay = purchaseCentsByDay(s, dir).agg(sum(col("v")).cast(dec).as("x"))
       .localCheckpoint()
     val tot = byDay.agg(sum(col("x")).as("sx"),
       count(lit(1)).cast(dec).as("n"))
@@ -6926,11 +6922,7 @@ object EventQueries {
     */
   val q380LjungBox: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val byDay = Tables.events(s, dir)
-      .filter(col("event_type") === "purchase")
-      .select(expr("unix_millis(ts) div 86400000").as("day"),
-        cents(col("value")).as("v"))
-      .groupBy(col("day")).agg(sum(col("v")).cast(dec).as("x"))
+    val byDay = purchaseCentsByDay(s, dir).agg(sum(col("v")).cast(dec).as("x"))
       .localCheckpoint()
     val tot = byDay.agg(sum(col("x")).as("sx"),
       count(lit(1)).cast(dec).as("n"))
@@ -7399,11 +7391,7 @@ object EventQueries {
     * Plan: one event pass → day rollup (checkpointed); two 1-row folds.
     */
   val q361BreuschPagan: Q = (s, dir) => {
-    val byDay = Tables.events(s, dir)
-      .filter(col("event_type") === "purchase")
-      .select(expr("unix_millis(ts) div 86400000").as("day"),
-        cents(col("value")).as("v"))
-      .groupBy(col("day")).agg(sum(col("v")).cast(dec).as("y"))
+    val byDay = purchaseCentsByDay(s, dir).agg(sum(col("v")).cast(dec).as("y"))
       .localCheckpoint()
     val mn = byDay.agg(min(col("day")).as("d0"))
     val xd = byDay.crossJoin(broadcast(mn))
@@ -7481,11 +7469,7 @@ object EventQueries {
     * Plan: one event pass → day rollup (checkpointed); two 1-row folds.
     */
   val q362JarqueBera: Q = (s, dir) => {
-    val byDay = Tables.events(s, dir)
-      .filter(col("event_type") === "purchase")
-      .select(expr("unix_millis(ts) div 86400000").as("day"),
-        cents(col("value")).as("v"))
-      .groupBy(col("day")).agg(sum(col("v")).cast(dec).as("x"))
+    val byDay = purchaseCentsByDay(s, dir).agg(sum(col("v")).cast(dec).as("x"))
       .localCheckpoint()
     val tot = byDay.agg(sum(col("x")).as("sx"),
       count(lit(1)).cast(dec).as("n"))
@@ -7545,11 +7529,7 @@ object EventQueries {
   val q363ArchLm: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
     val w = Window.orderBy(col("day"))
-    val diffs = Tables.events(s, dir)
-      .filter(col("event_type") === "purchase")
-      .select(expr("unix_millis(ts) div 86400000").as("day"),
-        cents(col("value")).as("v"))
-      .groupBy(col("day")).agg(sum(col("v")).cast(dec).as("x"))
+    val diffs = purchaseCentsByDay(s, dir).agg(sum(col("v")).cast(dec).as("x"))
       .withColumn("xp", lag(col("x"), 1).over(w))
       .filter(col("xp").isNotNull)
       .select(col("day"), (col("x") - col("xp")).as("r"))
@@ -7623,11 +7603,7 @@ object EventQueries {
   val q364VarianceRatio: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
     val w = Window.orderBy(col("day"))
-    val diffs = Tables.events(s, dir)
-      .filter(col("event_type") === "purchase")
-      .select(expr("unix_millis(ts) div 86400000").as("day"),
-        cents(col("value")).as("v"))
-      .groupBy(col("day")).agg(sum(col("v")).cast(dec).as("x"))
+    val diffs = purchaseCentsByDay(s, dir).agg(sum(col("v")).cast(dec).as("x"))
       .withColumn("xp", lag(col("x"), 1).over(w))
       .filter(col("xp").isNotNull)
       .select(col("day"), (col("x") - col("xp")).as("r"))
@@ -7810,11 +7786,7 @@ object EventQueries {
     */
   val q358NeweyWest: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val byDay = Tables.events(s, dir)
-      .filter(col("event_type") === "purchase")
-      .select(expr("unix_millis(ts) div 86400000").as("day"),
-        cents(col("value")).as("v"))
-      .groupBy(col("day")).agg(sum(col("v")).cast(dec).as("x"))
+    val byDay = purchaseCentsByDay(s, dir).agg(sum(col("v")).cast(dec).as("x"))
       .localCheckpoint()
     val tot = byDay.agg(sum(col("x")).as("sx"),
       count(lit(1)).cast(dec).as("n"))
@@ -7975,11 +7947,7 @@ object EventQueries {
   val q360KupiecPof: Q = (s, dir) => {
     val l2pE6 = math.round(KupiecLog2P * 1e6)
     val l2qE6 = math.round(KupiecLog2Q * 1e6)
-    val byDay = Tables.events(s, dir)
-      .filter(col("event_type") === "purchase")
-      .select(expr("unix_millis(ts) div 86400000").as("day"),
-        cents(col("value")).as("v"))
-      .groupBy(col("day")).agg(sum(col("v")).as("x"))
+    val byDay = purchaseCentsByDay(s, dir).agg(sum(col("v")).as("x"))
       .localCheckpoint()
     val mid = byDay.agg(expr("CAST((min(day) + max(day) + 1) div 2 AS BIGINT)")
       .as("midday"))
@@ -8066,11 +8034,7 @@ object EventQueries {
     */
   val q353Drawdown: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val byDay = Tables.events(s, dir)
-      .filter(col("event_type") === "purchase")
-      .select(expr("unix_millis(ts) div 86400000").as("day"),
-        cents(col("value")).as("v"))
-      .groupBy(col("day")).agg(sum(col("v")).as("x"))
+    val byDay = purchaseCentsByDay(s, dir).agg(sum(col("v")).as("x"))
     val w = Window.orderBy(col("day"))
       .rowsBetween(Window.unboundedPreceding, 0)
     val lagW = Window.orderBy(col("day"))
@@ -8159,11 +8123,7 @@ object EventQueries {
     */
   val q355PageHinkley: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val byDay = Tables.events(s, dir)
-      .filter(col("event_type") === "purchase")
-      .select(expr("unix_millis(ts) div 86400000").as("day"),
-        cents(col("value")).as("v"))
-      .groupBy(col("day")).agg(sum(col("v")).cast(dec).as("x"))
+    val byDay = purchaseCentsByDay(s, dir).agg(sum(col("v")).cast(dec).as("x"))
       .localCheckpoint()
     val lam = byDay.agg(
       expr(fdiv(s"SUM(x) * 1000000 * $PhLambdaPct", "COUNT(1) * 100"))
@@ -8323,11 +8283,7 @@ object EventQueries {
     */
   val q349RunsTest: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val byDay = Tables.events(s, dir)
-      .filter(col("event_type") === "purchase")
-      .select(expr("unix_millis(ts) div 86400000").as("day"),
-        cents(col("value")).as("v"))
-      .groupBy(col("day")).agg(sum(col("v")).as("x"))
+    val byDay = purchaseCentsByDay(s, dir).agg(sum(col("v")).as("x"))
       .localCheckpoint()
     val byV = byDay.groupBy(col("x")).agg(count(lit(1)).as("cnt"))
     val nTot = byV.agg(sum(col("cnt")).as("n"))
@@ -8600,11 +8556,7 @@ object EventQueries {
     * Plan: one event pass → day maxima (metadata-sized) → a 1-row fold.
     */
   val q345GumbelMaxima: Q = (s, dir) => {
-    val bm = Tables.events(s, dir)
-      .filter(col("event_type") === "purchase")
-      .select(expr("unix_millis(ts) div 86400000").as("day"),
-        cents(col("value")).as("v"))
-      .groupBy(col("day")).agg(max(col("v")).cast(dec).as("x"))
+    val bm = purchaseCentsByDay(s, dir).agg(max(col("v")).cast(dec).as("x"))
     val sums = bm.agg(count(lit(1)).cast(dec).as("n"),
       sum(col("x")).as("sx"), sum(col("x") * col("x")).as("sxx"))
     val nD = col("n").cast("double")
@@ -8660,11 +8612,7 @@ object EventQueries {
     */
   val q344DurbinWatson: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val byDay = Tables.events(s, dir)
-      .filter(col("event_type") === "purchase")
-      .select(expr("unix_millis(ts) div 86400000").as("day"),
-        cents(col("value")).as("v"))
-      .groupBy(col("day")).agg(sum(col("v")).cast(dec).as("y"))
+    val byDay = purchaseCentsByDay(s, dir).agg(sum(col("v")).cast(dec).as("y"))
       .localCheckpoint()
     val mn = byDay.agg(min(col("day")).as("d0"))
     val xd = byDay.crossJoin(broadcast(mn))
@@ -8758,11 +8706,7 @@ object EventQueries {
     */
   val q399Hurst: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val byDay = Tables.events(s, dir)
-      .filter(col("event_type") === "purchase")
-      .select(expr("unix_millis(ts) div 86400000").as("day"),
-        cents(col("value")).as("v"))
-      .groupBy(col("day")).agg(expr("SUM(v) div 100").as("x"))
+    val byDay = purchaseCentsByDay(s, dir).agg(expr("SUM(v) div 100").as("x"))
       .withColumn("rn", row_number().over(Window.orderBy(col("day"))))
       .localCheckpoint()
     val spine = s.createDataFrame(HurstSizes.map(Tuple1(_)))
@@ -8892,11 +8836,7 @@ object EventQueries {
     * Plan: one event pass → day rollup → |days|-row driver fold.
     */
   val q400Holt: Q = (s, dir) => {
-    val roll = Tables.events(s, dir)
-      .filter(col("event_type") === "purchase")
-      .select(expr("unix_millis(ts) div 86400000").as("day"),
-        cents(col("value")).as("v"))
-      .groupBy(col("day")).agg(sum(col("v")).as("x"))
+    val roll = purchaseCentsByDay(s, dir).agg(sum(col("v")).as("x"))
       .orderBy(col("day")).collect()
     val xs = roll.map(_.getAs[Long]("x"))
     var lev = xs.head
@@ -9533,11 +9473,7 @@ object EventQueries {
     * Plan: one event pass → day rollup → |days|-row driver fold.
     */
   val q416Kalman: Q = (s, dir) => {
-    val roll = Tables.events(s, dir)
-      .filter(col("event_type") === "purchase")
-      .select(expr("unix_millis(ts) div 86400000").as("day"),
-        cents(col("value")).as("v"))
-      .groupBy(col("day")).agg(sum(col("v")).as("x"))
+    val roll = purchaseCentsByDay(s, dir).agg(sum(col("v")).as("x"))
       .orderBy(col("day")).collect()
     val xs = roll.map(_.getAs[Long]("x"))
     var m = xs.head
@@ -9814,11 +9750,7 @@ object EventQueries {
     */
   val q420Periodogram: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val byDay = Tables.events(s, dir)
-      .filter(col("event_type") === "purchase")
-      .select(expr("unix_millis(ts) div 86400000").as("day"),
-        cents(col("value")).as("v"))
-      .groupBy(col("day")).agg(expr("SUM(v) div 100").as("x"))
+    val byDay = purchaseCentsByDay(s, dir).agg(expr("SUM(v) div 100").as("x"))
       .withColumn("t",
         (row_number().over(Window.orderBy(col("day"))) - 1L).cast("long"))
       .localCheckpoint()
@@ -10222,11 +10154,7 @@ object EventQueries {
     */
   val q431Kpss: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val byDay = Tables.events(s, dir)
-      .filter(col("event_type") === "purchase")
-      .select(expr("unix_millis(ts) div 86400000").as("day"),
-        cents(col("value")).as("v"))
-      .groupBy(col("day")).agg(sum(col("v")).cast(dec).as("x"))
+    val byDay = purchaseCentsByDay(s, dir).agg(sum(col("v")).cast(dec).as("x"))
       .localCheckpoint()
     val sc = byDay.agg(count(lit(1)).cast(dec).as("n"),
       sum(col("x")).as("sx"))
@@ -10440,11 +10368,7 @@ object EventQueries {
     * Plan: one event pass → day rollup → |days|-row driver fold.
     */
   val q439Garch: Q = (s, dir) => {
-    val roll = Tables.events(s, dir)
-      .filter(col("event_type") === "purchase")
-      .select(expr("unix_millis(ts) div 86400000").as("day"),
-        cents(col("value")).as("v"))
-      .groupBy(col("day")).agg(expr("SUM(v) div 100").as("x"))
+    val roll = purchaseCentsByDay(s, dir).agg(expr("SUM(v) div 100").as("x"))
       .orderBy(col("day")).collect()
     val xs = roll.map(_.getAs[Long]("x"))
     val es = xs.sliding(2).map(p => p(1) - p(0)).toArray
@@ -10536,11 +10460,7 @@ object EventQueries {
     * Plan: one event pass → day rollup → |days|-row driver fold.
     */
   val q455ViterbiHmm: Q = (s, dir) => {
-    val roll = Tables.events(s, dir)
-      .filter(col("event_type") === "purchase")
-      .select(expr("unix_millis(ts) div 86400000").as("day"),
-        cents(col("value")).as("v"))
-      .groupBy(col("day")).agg(sum(col("v")).as("x"))
+    val roll = purchaseCentsByDay(s, dir).agg(sum(col("v")).as("x"))
       .orderBy(col("day")).collect()
     val xs = roll.map(_.getAs[Long]("x"))
     val n = xs.length
