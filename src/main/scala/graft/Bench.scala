@@ -221,7 +221,8 @@ object Bench {
     // min gets one more isolated, post-quiesce rerun (min kept); a query
     // STILL >2x after that ships in suspect_env — either a real plan
     // regression or sustained co-tenancy, but flagged either way instead
-    // of read at face value. SPARK_GRAFT_BENCH_SUSPECT=0 disables.
+    // of read at face value. SPARK_GRAFT_BENCH_SUSPECT=0 disables the >2x
+    // trigger only; the head-drift rerun below has its own off switch.
     //
     // Head-drift extension (r9, r8 verdict item 5): the >2x trigger was
     // blind to the expensive tier's 30% co-tenancy swings (q274-class:
@@ -234,8 +235,8 @@ object Bench {
     val headN = envInt("SPARK_GRAFT_BENCH_HEAD_N", 40)
     val headDriftPct = envInt("SPARK_GRAFT_BENCH_HEAD_DRIFT_PCT", 25)
     val suspectEnv = scala.collection.mutable.LinkedHashSet[String]()
-    val results = if (reps > 1 || suspectFactor <= 0 || prevTimes.isEmpty)
-      afterRerun
+    val results = if (reps > 1 || prevTimes.isEmpty ||
+        (suspectFactor <= 0 && headDriftPct <= 0)) afterRerun
     else {
       val byName = scala.collection.mutable.LinkedHashMap(afterRerun: _*)
       val head: Set[String] =
@@ -243,9 +244,10 @@ object Bench {
         else afterRerun.filterNot(r => failed(r._1)).sortBy(-_._2)
           .take(headN).map(_._1).toSet
       def bound(name: String, prev: Double): Double = {
-        val drift = prev * (1.0 + headDriftPct / 100.0)
-        if (head(name)) math.min(suspectFactor * prev, drift)
-        else suspectFactor * prev
+        val factor =
+          if (suspectFactor > 0) suspectFactor * prev else Double.PositiveInfinity
+        if (head(name)) math.min(factor, prev * (1.0 + headDriftPct / 100.0))
+        else factor
       }
       afterRerun.filterNot(r => failed(r._1)).foreach { case (name, t) =>
         prevTimes.get(name).foreach { prev =>

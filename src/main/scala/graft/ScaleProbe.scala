@@ -87,6 +87,8 @@ object ScaleProbe {
     def time(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
         dir: String): Double = {
       val runs = (1 to samples).map { _ =>
+        // as in Bench/Verify: a query's Tuning declaration must not leak
+        Tuning.reset(spark)
         val t0 = System.nanoTime()
         fn(spark, dir).write.format("noop").mode("overwrite").save()
         spark.sparkContext.getPersistentRDDs.values
