@@ -58,8 +58,9 @@ class QueriesSpec extends SparkSpec {
       if (!Files.exists(committed)) Map.empty[String, String]
       else Files.readAllLines(committed).asScala
         .map(l => l.takeWhile(_ != '\t') -> l).toMap
-    val drifted = (observed.map(_._1) ++ expected.keys).distinct.sorted
-      .filter(n => observed.toMap.get(n) != expected.get(n))
+    val got = observed.toMap
+    val drifted = (got.keySet ++ expected.keySet).toSeq.sorted
+      .filter(n => got.get(n) != expected.get(n))
     if (drifted.nonEmpty) {
       Files.createDirectories(Paths.get("target"))
       Files.write(Paths.get("target", file), observed.map(_._2).asJava)

@@ -28,16 +28,6 @@ class ResultCacheSpec extends SparkSpec {
       PlanFingerprint.fingerprint(qObserved))
   }
 
-  test("nested lambdas that bind different variables never collide") {
-    // both levels are named x_N by the DataFrame API: renumbering keeps
-    // `x_0 -> x_1 -> x_0` apart from `x_0 -> x_1 -> x_1`
-    def nested(pick: (Column, Column) => Column) =
-      spark.range(3).select(array(col("id")).as("a"))
-        .select(transform(col("a"), x => transform(col("a"), y => pick(x, y))))
-    assert(PlanFingerprint.fingerprint(nested((x, _) => x)) !==
-      PlanFingerprint.fingerprint(nested((_, y) => y)))
-  }
-
   test("different source directories never share a fingerprint") {
     // the cache-poisoning hazard: same query shape, different data
     def shape(dir: String) = graft.Tables.lineitem(spark, dir)
@@ -59,6 +49,14 @@ class ResultCacheSpec extends SparkSpec {
       graft.Tables.lineitem(spark, sfDir).groupBy(col("l_returnflag"))
         .agg(max(expr("cast(round(l_quantity*100) as bigint)")).as("s")))
     assert(base !== otherAgg, "a different aggregate must change the identity")
+    // nested lambdas are all named x_N by the DataFrame API: renumbering
+    // keeps `x_0 -> x_1 -> x_0` apart from `x_0 -> x_1 -> x_1`
+    def nested(pick: (Column, Column) => Column) =
+      spark.range(3).select(array(col("id")).as("a"))
+        .select(transform(col("a"), x => transform(col("a"), y => pick(x, y))))
+    assert(PlanFingerprint.fingerprint(nested((x, _) => x)) !==
+      PlanFingerprint.fingerprint(nested((_, y) => y)),
+      "a lambda binding a different variable must change the identity")
   }
 
   test("cache hits skip re-execution and never rescan the source") {
