@@ -100,7 +100,7 @@ object Exact {
   def double(c: String): Column = col(c).cast("double")
   def double(c: Column): Column = c.cast("double")
 
-  // --------------------------------------------- driver-side Scala
+  // --------------------------------------------- Scala, at plan-build time
 
   /** Truncating division toward zero, den > 0. */
   def sdivLong(num: Long, den: Long): Long =
