@@ -58,8 +58,9 @@ object PlanFingerprint {
     """(lambda [a-z]+_)(\d+)(?=#)""".r,
     // encoder lambdas: lambdavariable(MapObject, IntegerType, false, N)
     """(lambdavariable\((?:[^()]|\([^()]*\))*?, )(-?\d+)(?=\))""".r,
-    // Observation() names
-    """()([0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12})""".r,
+    // Observation() names, only where CollectMetrics prints them: a UUID
+    // in a literal or a scan path is data and stays
+    """(CollectMetrics )([0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12})""".r,
     // CollectMetrics' trailing dataset id
     """(?m)(CollectMetrics .*, )(\d+)$""".r,
     // AQE query stages in executed plans

@@ -38,6 +38,11 @@ class ResultCacheSpec extends SparkSpec {
     val in5 = q1.where(col("l_returnflag").isin("R"))
     val in7 = q1.where(col("l_returnflag").isin("N"))
     assert(PlanFingerprint.fingerprint(in5) !== PlanFingerprint.fingerprint(in7))
+    // a UUID literal is data, not an Observation() name to renumber
+    def byUuid(u: String) =
+      PlanFingerprint.fingerprint(q1.where(col("l_returnflag") === u))
+    assert(byUuid("3f2a6c1e-0b7d-4e59-9a1c-5d8e2f4b7a90") !==
+      byUuid("9c1b4d2e-7f3a-4b86-8e5d-1a2c3b4d5e6f"))
   }
 
   test("fingerprint moves when the plan meaningfully changes") {
