@@ -1,8 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.col
-
 /** The integer-exact SQL spellings of `docs/SCALE.md` §2, one helper per
   * spelling. Query builders splice these strings into `expr`/`selectExpr`
   * (Spark) and into oracle SQL (DuckDB), so each returns EXACTLY the text
@@ -96,10 +93,6 @@ object Exact {
        | ELSE -(abs($num) div ($den)) END"""
       .stripMargin.replace("\n", " ")
 
-  /** Exact integer → DOUBLE (the one IEEE rounding). */
-  def double(c: String): Column = col(c).cast("double")
-  def double(c: Column): Column = c.cast("double")
-
   // --------------------------------------------- Scala, at plan-build time
 
   /** Truncating division toward zero, den > 0. */
@@ -112,7 +105,7 @@ object Exact {
 
   // --------------------------------------------- DuckDB (oracle SQL only)
 
-  /** DuckDB twin of [[double]]: DECIMAL/HUGEINT → DOUBLE through its
+  /** DuckDB twin of `TSql.d`: DECIMAL/HUGEINT → DOUBLE through its
     * exact decimal text, the correctly rounded value Spark's cast gives.
     */
   def dbl(x: String): String = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"

@@ -236,6 +236,12 @@ object TSql {
   def dec4(c: Column): Column = c.cast(DecimalType(18, 4))
   def dec6(c: Column): Column = c.cast(DecimalType(18, 6))
 
+  /** Exact integer → DOUBLE (the one IEEE rounding); the DuckDB twin is
+    * `Exact.dbl`.
+    */
+  def d(c: String): Column = col(c).cast("double")
+  def d(c: Column): Column = c.cast("double")
+
   /** Money as exact integer cents. T-SQL's MONEY is itself a fixed-point
     * int64 (10^-4 units — reference:
     * samples/scripts/data-load/GenerateLoadScript-V2.sql:108-109 maps MONEY),

@@ -3820,9 +3820,9 @@ object AuditQueries {
         first(col("s_obs")).as("s_obs"))
       .crossJoin(broadcast(mo))
       .select(col("p").cast("long").as("n_pairs"),
-        ((double("p") * double("s_obs") - double("sx") * double("sy")) /
-          (sqrt(double("p") * double("qxx") - double("sx") * double("sx")) *
-            sqrt(double("p") * double("qyy") - double("sy") * double("sy"))))
+        ((d("p") * d("s_obs") - d("sx") * d("sy")) /
+          (sqrt(d("p") * d("qxx") - d("sx") * d("sx")) *
+            sqrt(d("p") * d("qyy") - d("sy") * d("sy"))))
           .as("mantel_r_d"),
         col("n_perm"), col("n_ge"),
         expr("CAST((1 + n_ge) * 1000000 div (1 + n_perm) AS BIGINT)")
@@ -4206,10 +4206,10 @@ object AuditQueries {
     val f1 = fold(pts.filter(col("pre") === 1L), "1")
     val f2 = fold(pts.filter(col("pre") === 0L), "2")
     def rss(tag: String) =
-      (double(s"dy_$tag") * double(s"dx_$tag") - double(s"c_$tag") * double(s"c_$tag")) /
-        (double(s"n_$tag") * double(s"dx_$tag"))
+      (d(s"dy_$tag") * d(s"dx_$tag") - d(s"c_$tag") * d(s"c_$tag")) /
+        (d(s"n_$tag") * d(s"dx_$tag"))
     val fStat = ((rss("p") - rss("1") - rss("2")) / 2.0) /
-      ((rss("1") + rss("2")) / (double("n_p") - 4.0))
+      ((rss("1") + rss("2")) / (d("n_p") - 4.0))
     fp.crossJoin(broadcast(f1)).crossJoin(broadcast(f2))
       .select(col("n_p").cast("long").as("n_months"),
         col("n_1").cast("long").as("n_pre"),
@@ -4523,12 +4523,12 @@ object AuditQueries {
         sum(col("tb").cast(dec) * (col("tb") - 1) * (col("tb") - 2))
           .as("tB"),
         sum(col("tb").cast(dec) * (col("tb") - 1)).as("tC"))
-    val aTerm = (double("nn") * (double("nn") - 1.0) * (double("nn") * 2.0 + 5.0) -
-      double("gA") - double("tA")) / 72.0
-    val bTerm = double("gB") * double("tB") /
-      (double("nn") * 36.0 * (double("nn") - 1.0) * (double("nn") - 2.0))
-    val cTerm = double("gC") * double("tC") / (double("nn") * 8.0 * (double("nn") - 1.0))
-    val z = (double("jt2") / 2.0 - (double("nn") * double("nn") - double("sn2")) / 4.0) /
+    val aTerm = (d("nn") * (d("nn") - 1.0) * (d("nn") * 2.0 + 5.0) -
+      d("gA") - d("tA")) / 72.0
+    val bTerm = d("gB") * d("tB") /
+      (d("nn") * 36.0 * (d("nn") - 1.0) * (d("nn") - 2.0))
+    val cTerm = d("gC") * d("tC") / (d("nn") * 8.0 * (d("nn") - 1.0))
+    val z = (d("jt2") / 2.0 - (d("nn") * d("nn") - d("sn2")) / 4.0) /
       sqrt(aTerm + bTerm + cTerm)
     jt.crossJoin(broadcast(gm)).crossJoin(broadcast(tm))
       .select(col("nn").cast("long").as("n_orders"),
@@ -4803,7 +4803,7 @@ object AuditQueries {
     mo.select(col("n").cast("long").as("n_brands"),
       expr(sdiv("2 * cxy * 1000000", "dx + dy + loc2")).cast("long")
         .as("ccc_e6"),
-      (double("cxy") / (sqrt(double("dx")) * sqrt(double("dy")))).as("pearson_r_d"),
+      (d("cxy") / (sqrt(d("dx")) * sqrt(d("dy")))).as("pearson_r_d"),
       expr(sdiv("(sx - sy) * 1000000", "sy")).cast("long")
         .as("level_shift_e6"))
   }
@@ -4887,13 +4887,13 @@ object AuditQueries {
         sum(col("n").cast(dec) *
           ((col("nn") + 1) * 2 - col("dr")) *
           ((col("nn") + 1) * 2 - col("dr"))).as("v4"))
-    val e = double("n2") * (double("nn") + 1.0) * (double("nn") * 2.0 + 1.0) / 6.0
-    val vr = double("m1") * double("n2") * (double("nn") + 1.0) * (double("nn") * 2.0 + 1.0) *
-      (double("nn") * 8.0 + 11.0) / 180.0
-    val uT = (double("u4") / 4.0 - e) / sqrt(vr)
-    val vT = (double("v4") / 4.0 - e) / sqrt(vr)
-    val rho = (double("nn") * double("nn") - 4.0) * 2.0 /
-      ((double("nn") * 2.0 + 1.0) * (double("nn") * 8.0 + 11.0)) - 1.0
+    val e = d("n2") * (d("nn") + 1.0) * (d("nn") * 2.0 + 1.0) / 6.0
+    val vr = d("m1") * d("n2") * (d("nn") + 1.0) * (d("nn") * 2.0 + 1.0) *
+      (d("nn") * 8.0 + 11.0) / 180.0
+    val uT = (d("u4") / 4.0 - e) / sqrt(vr)
+    val vT = (d("v4") / 4.0 - e) / sqrt(vr)
+    val rho = (d("nn") * d("nn") - 4.0) * 2.0 /
+      ((d("nn") * 2.0 + 1.0) * (d("nn") * 8.0 + 11.0)) - 1.0
     val cStat = (uT * uT + vT * vT - rho * uT * vT * 2.0) /
       ((lit(1.0) - rho * rho) * 2.0)
     folds.select(col("m1").cast("long").as("n_regular"),
@@ -5400,12 +5400,12 @@ object AuditQueries {
         (col("n") * col("qxx") - col("sx") * col("sx")).as("dx"),
         (col("n") * col("qxy") - col("sx") * col("sy")).as("cxy"))
     // first-stage F: pooled-variance two-sample t² for x on z
-    val ssw = (double("qxx1") - double("sx1") * double("sx1") / double("n1")) +
-      (double("qxx0") - double("sx0") * double("sx0") / double("n0"))
-    val gap = double("sx1") / double("n1") - double("sx0") / double("n0")
+    val ssw = (d("qxx1") - d("sx1") * d("sx1") / d("n1")) +
+      (d("qxx0") - d("sx0") * d("sx0") / d("n0"))
+    val gap = d("sx1") / d("n1") - d("sx0") / d("n0")
     val fStat = gap * gap /
-      ((ssw / (double("n1") + double("n0") - 2.0)) * (lit(1.0) / double("n1") +
-        lit(1.0) / double("n0")))
+      ((ssw / (d("n1") + d("n0") - 2.0)) * (lit(1.0) / d("n1") +
+        lit(1.0) / d("n0")))
     a.crossJoin(broadcast(b)).crossJoin(broadcast(all))
       .select(col("n1").cast("long").as("n_urgent"),
         col("n0").cast("long").as("n_regular"),
@@ -5804,10 +5804,10 @@ object AuditQueries {
       col("r2").as("ra"))
     val b2 = gsum.select(col("g").as("gb"), col("ng").as("nb"),
       col("r2").as("rb"))
-    val meanGap = (double("ra") / (double("na") * 2.0)) - (double("rb") / (double("nb") * 2.0))
-    val varTerm = (double("nn") * (double("nn") + 1.0) / 12.0 -
-      double("t3t") / ((double("nn") - 1.0) * 12.0)) *
-      (lit(1.0) / double("na") + lit(1.0) / double("nb"))
+    val meanGap = (d("ra") / (d("na") * 2.0)) - (d("rb") / (d("nb") * 2.0))
+    val varTerm = (d("nn") * (d("nn") + 1.0) / 12.0 -
+      d("t3t") / ((d("nn") - 1.0) * 12.0)) *
+      (lit(1.0) / d("na") + lit(1.0) / d("nb"))
     val z = meanGap / sqrt(varTerm)
     a.join(b2, col("ga") < col("gb")).crossJoin(broadcast(ties))
       .select(col("ga").as("priority_a"), col("gb").as("priority_b"),
@@ -6000,10 +6000,10 @@ object AuditQueries {
         (col("n") * col("qxx") - col("sx") * col("sx")).as("dx"),
         (col("n") * col("qyy") - col("sy") * col("sy")).as("dy"),
         (col("n") * col("qxy") - col("sx") * col("sy")).as("cxy"))
-    val beta = (double("dy") - double("dx") +
-      sqrt((double("dy") - double("dx")) * (double("dy") - double("dx")) +
-        double("cxy") * double("cxy") * 4.0)) / (double("cxy") * 2.0)
-    val alpha = (double("sy") - beta * double("sx")) / double("n")
+    val beta = (d("dy") - d("dx") +
+      sqrt((d("dy") - d("dx")) * (d("dy") - d("dx")) +
+        d("cxy") * d("cxy") * 4.0)) / (d("cxy") * 2.0)
+    val alpha = (d("sy") - beta * d("sx")) / d("n")
     mo.select(col("n").cast("long").as("n_brands"),
       beta.as("deming_slope_d"),
       alpha.as("deming_intercept_d"),
@@ -6188,10 +6188,10 @@ object AuditQueries {
           "mi")).as("bt"))
     val scal = staged.groupBy(col("g"), col("mm"), col("ss"), col("m2"))
       .agg(sum(col("epv_t")).as("sepv"), sum(col("bt")).as("sbt"))
-    val epvD = double("sepv") / ((double("mm") - double("g")) * 1e6)
-    val bD = double("sbt") / (double("mm") * double("mm") * 1e6)
-    val vhmD = (bD - (double("g") - 1.0) * epvD) /
-      (double("mm") - double("m2") / double("mm"))
+    val epvD = d("sepv") / ((d("mm") - d("g")) * 1e6)
+    val bD = d("sbt") / (d("mm") * d("mm") * 1e6)
+    val vhmD = (bD - (d("g") - 1.0) * epvD) /
+      (d("mm") - d("m2") / d("mm"))
     val kD = epvD / vhmD
     staged.select(col("nat"), col("mi"), col("syi"), col("mm"), col("ss"))
       .crossJoin(broadcast(scal.select(col("g"), col("mm").as("mm2"),
@@ -6200,10 +6200,10 @@ object AuditQueries {
       .select(col("nat").as("nation"), col("mi").cast("long")
         .as("n_months"),
         expr(fdiv("syi * 1000000", "mi")).cast("long").as("own_mean_e6"),
-        (double("mi") / (double("mi") + col("k_d"))).as("z_d"),
-        ((double("mi") / (double("mi") + col("k_d"))) * (double("syi") / double("mi")) +
-          (lit(1.0) - double("mi") / (double("mi") + col("k_d"))) *
-            (double("ss") / double("mm"))).as("premium_d"))
+        (d("mi") / (d("mi") + col("k_d"))).as("z_d"),
+        ((d("mi") / (d("mi") + col("k_d"))) * (d("syi") / d("mi")) +
+          (lit(1.0) - d("mi") / (d("mi") + col("k_d"))) *
+            (d("ss") / d("mm"))).as("premium_d"))
       .orderBy(col("nation"))
   }
 
@@ -6286,7 +6286,7 @@ object AuditQueries {
     val fold = counts.agg(sum(col("nm")).cast(dec).as("n"),
       sum(col("nm").cast(dec) * col("cos_e6")).as("cc"),
       sum(col("nm").cast(dec) * col("sin_e6")).as("ss"))
-    val z = (double("cc") * double("cc") + double("ss") * double("ss")) / (double("n") * 1e12)
+    val z = (d("cc") * d("cc") + d("ss") * d("ss")) / (d("n") * 1e12)
     val peak = counts.crossJoin(broadcast(fold))
       .select(col("mo"),
         (col("cc") * col("cos_e6") + col("ss") * col("sin_e6"))
@@ -6875,9 +6875,9 @@ object AuditQueries {
         expr(fdiv("sgap * 1000000", "n * z")).cast("long").as("fgt1_e6"),
         expr(fdiv("sfgt2", "n")).cast("long").as("fgt2_e6"),
         col("gini_poor_e6").cast("long").as("gini_poor_e6"),
-        ((double("q") / double("n")) * (double("sgap") / (double("q") * double("z")) +
-          (lit(1.0) - double("sgap") / (double("q") * double("z"))) *
-            (double("gini_poor_e6") / 1e6))).as("sen_index_d"))
+        ((d("q") / d("n")) * (d("sgap") / (d("q") * d("z")) +
+          (lit(1.0) - d("sgap") / (d("q") * d("z"))) *
+            (d("gini_poor_e6") / 1e6))).as("sen_index_d"))
   }
 
   val q465Sql: String = {
@@ -6969,10 +6969,10 @@ object AuditQueries {
         sum(col("g").cast(dec) * col("rsum")).as("l"),
         sum(col("rsum")).cast(dec).as("tot"))
       .withColumn("b", expr("tot * 2 div (k * (k + 1))"))
-    val e = double("b") * double("k") * (double("k") + 1.0) * (double("k") + 1.0) / 4.0
-    val vr = double("b") * double("k") * double("k") * (double("k") + 1.0) *
-      (double("k") * double("k") - 1.0) / 144.0
-    val z = (double("l") - e) / sqrt(vr)
+    val e = d("b") * d("k") * (d("k") + 1.0) * (d("k") + 1.0) / 4.0
+    val vr = d("b") * d("k") * d("k") * (d("k") + 1.0) *
+      (d("k") * d("k") - 1.0) / 144.0
+    val z = (d("l") - e) / sqrt(vr)
     fold.select(col("k").cast("long").as("n_priorities"),
       col("b").cast("long").as("n_blocks"),
       col("l").cast("long").as("page_l"),
@@ -7060,8 +7060,8 @@ object AuditQueries {
         sum(expr(
           "CAST((cg * cg * 1000000 - (cg * cg * 1000000) % ng) / ng" +
             " AS DECIMAL(38,0))")).as("den_e6"))
-    val ssC = (double("l_e6") / 1e6) * (double("l_e6") / 1e6) / (double("den_e6") / 1e6)
-    val fStat = ssC / ((double("ssw") / (double("n") - 5.0)))
+    val ssC = (d("l_e6") / 1e6) * (d("l_e6") / 1e6) / (d("den_e6") / 1e6)
+    val fStat = ssC / ((d("ssw") / (d("n") - 5.0)))
     staged.crossJoin(broadcast(within))
       .select(col("contrast"), col("l_e6").cast("long").as("l_e6"),
         ssC.as("ss_contrast_d"), fStat.as("f_d"),
@@ -7148,10 +7148,10 @@ object AuditQueries {
         sum(col("y").cast(dec) * col("take")).as("bh"),
         sum((col("below") * 2 + col("cnt") + 1).cast(dec) *
           (col("y").cast(dec) * col("cnt"))).as("ydr"))
-    val giniD = (double("ydr") - (double("n") + 1.0) * double("ty")) /
-      (double("n") * double("ty"))
-    val tD = lit(0.5) - double("bh") / double("ty")
-    val muOverM = double("ty") / double("n") / double("m")
+    val giniD = (d("ydr") - (d("n") + 1.0) * d("ty")) /
+      (d("n") * d("ty"))
+    val tD = lit(0.5) - d("bh") / d("ty")
+    val muOverM = d("ty") / d("n") / d("m")
     val wD = (tD * 2.0 - giniD) * muOverM
     half.crossJoin(broadcast(med))
       .select(col("n").cast("long").as("n_customers"),
@@ -7248,9 +7248,9 @@ object AuditQueries {
       (col("n") * col("qmy") - col("sm") * col("sy")).as("cmy"),
       col("sx"), col("sm"), col("sy"))
       .withColumn("d2", col("dx") * col("dm") - col("cxm") * col("cxm"))
-    val bD = (double("cxy") * double("dm") - double("cmy") * double("cxm")) / double("d2")
-    val cD = (double("cmy") * double("dx") - double("cxy") * double("cxm")) / double("d2")
-    val aD = (double("sy") - bD * double("sx") - cD * double("sm")) / double("n")
+    val bD = (d("cxy") * d("dm") - d("cmy") * d("cxm")) / d("d2")
+    val cD = (d("cmy") * d("dx") - d("cxy") * d("cxm")) / d("d2")
+    val aD = (d("sy") - bD * d("sx") - cD * d("sm")) / d("n")
     val mHat = (-bD - sqrt(bD * bD - cD * aD * 4.0)) / (cD * 2.0)
     cm.select(col("n").cast("long").as("n_months"),
       expr(sdiv("(cxy * dm - cmy * cxm) * 1000000", "d2")).cast("long")
@@ -7340,9 +7340,9 @@ object AuditQueries {
         expr("CAST(substring(o_orderpriority, 1, 1) AS BIGINT)").as("g"))
       .agg(expr("SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))" +
         " div (100 * COUNT(*))").as("y"))
-    val ssNa = double("p") * double("p") / (double("qa") * double("qb"))
-    val ssRes = double("e2") / (double("r") * double("r") * double("c") * double("c"))
-    val dfRes = (double("r") - 1.0) * (double("c") - 1.0) - 1.0
+    val ssNa = d("p") * d("p") / (d("qa") * d("qb"))
+    val ssRes = d("e2") / (d("r") * d("r") * d("c") * d("c"))
+    val dfRes = (d("r") - 1.0) * (d("c") - 1.0) - 1.0
     val fStat = ssNa / ((ssRes - ssNa) / dfRes)
     tukeyFold(cells)
       .select(col("r").cast("long").as("n_months"),
@@ -7556,9 +7556,9 @@ object AuditQueries {
       sum(col("d").cast(dec) * col("d")).as("qdd"),
       sum(when(col("d") < SpecLslDays || col("d") > SpecUslDays, 1L)
         .otherwise(0L)).cast(dec).as("oos"))
-    val sigma = sqrt((double("qdd") - double("sd") * double("sd") / double("n")) /
-      (double("n") - 1.0))
-    val mu = double("sd") / double("n")
+    val sigma = sqrt((d("qdd") - d("sd") * d("sd") / d("n")) /
+      (d("n") - 1.0))
+    val mu = d("sd") / d("n")
     val cp = lit((SpecUslDays - SpecLslDays).toDouble) / (sigma * 6.0)
     val cpk = least(lit(SpecUslDays.toDouble) - mu,
       mu - SpecLslDays.toDouble) / (sigma * 3.0)
@@ -7631,9 +7631,9 @@ object AuditQueries {
     val fold = dd.agg(count(lit(1)).cast(dec).as("m"),
       sum(col("dt")).as("sdt"),
       sum(col("dt") * col("dt")).as("qdt"))
-    val dm = (double("sdt") / double("m")) /
-      sqrt((double("qdt") - double("sdt") * double("sdt") / double("m")) /
-        ((double("m") - 1.0) * double("m")))
+    val dm = (d("sdt") / d("m")) /
+      sqrt((d("qdt") - d("sdt") * d("sdt") / d("m")) /
+        ((d("m") - 1.0) * d("m")))
     fold.select(col("m").cast("long").as("n_forecasts"),
       col("sdt").cast("long").as("loss_diff_sum"),
       dm.as("dm_stat_d"),
@@ -7705,9 +7705,9 @@ object AuditQueries {
         (col("n") * col("qff") - col("sf") * col("sf")).as("dx"),
         (col("n") * col("qyy") - col("sy") * col("sy")).as("dy"),
         (col("n") * col("qfy") - col("sf") * col("sy")).as("cxy"))
-    val sseU = (double("dy") * double("dx") - double("cxy") * double("cxy")) /
-      (double("n") * double("dx"))
-    val fStat = ((double("sser") - sseU) / 2.0) / (sseU / (double("n") - 2.0))
+    val sseU = (d("dy") * d("dx") - d("cxy") * d("cxy")) /
+      (d("n") * d("dx"))
+    val fStat = ((d("sser") - sseU) / 2.0) / (sseU / (d("n") - 2.0))
     mo.select(col("n").cast("long").as("n_forecasts"),
       expr(sdiv("(sy * dx - cxy * sf) * 1000000", "n * dx")).cast("long")
         .as("alpha_e6"),
@@ -7789,18 +7789,18 @@ object AuditQueries {
         (col("y") - col("y12"))).as("ssn"),
         sum((col("y") - col("y1")).cast(dec) * (col("y") - col("y1")))
           .as("ss1"))
-    val py = double("nu") / double("m"); val pf = double("nf") / double("m")
-    val pHat = double("h") / double("m")
+    val py = d("nu") / d("m"); val pf = d("nf") / d("m")
+    val pHat = d("h") / d("m")
     val pStar = py * pf + (lit(1.0) - py) * (lit(1.0) - pf)
-    val vHat = pStar * (lit(1.0) - pStar) / double("m")
+    val vHat = pStar * (lit(1.0) - pStar) / d("m")
     val vStar = (py * 2.0 - 1.0) * (py * 2.0 - 1.0) * pf *
-      (lit(1.0) - pf) / double("m") +
+      (lit(1.0) - pf) / d("m") +
       (pf * 2.0 - 1.0) * (pf * 2.0 - 1.0) * py * (lit(1.0) - py) /
-        double("m") +
+        d("m") +
       py * pf * (lit(1.0) - py) * (lit(1.0) - pf) * 4.0 /
-        (double("m") * double("m"))
+        (d("m") * d("m"))
     val ptZ = (pHat - pStar) / sqrt(vHat - vStar)
-    val u2 = sqrt(double("ssn") / double("ss1"))
+    val u2 = sqrt(d("ssn") / d("ss1"))
     ptFold.crossJoin(broadcast(u2Fold))
       .select(col("m").cast("long").as("n_signs"),
         col("h").cast("long").as("n_hits"),
@@ -8133,11 +8133,11 @@ object AuditQueries {
       sum(col("w") * col("ac") * col("bc")).as("vxy"),
       sum(col("w") * col("ac") * col("ac")).as("vxx"),
       sum(col("w") * col("bc") * col("bc")).as("vyy"))
-    val dcor = double("vxy") / sqrt(double("vxx") * double("vyy"))
+    val dcor = d("vxy") / sqrt(d("vxx") * d("vyy"))
     folds.crossJoin(broadcast(nTot))
       .select(col("nn").cast("long").as("n_lines"),
         dcor.as("dcor_d"),
-        (double("vxy") / (double("nn") * double("nn") * 1e12)).as("dcov2_d"))
+        (d("vxy") / (d("nn") * d("nn") * 1e12)).as("dcov2_d"))
   }
 
   val q478Sql: String = {
@@ -8250,8 +8250,8 @@ object AuditQueries {
         first(col("g")).cast(dec).as("g"),
         expr(fdiv("SUM(d2) * 1000000", "first(n)")).as("t"))
     val obs = within.filter(col("b") === 0L).select(col("w").as("w_obs"))
-    val fStat = ((double("t") - double("w_obs")) / (double("g") - 1.0)) /
-      (double("w_obs") / (double("n") - double("g")))
+    val fStat = ((d("t") - d("w_obs")) / (d("g") - 1.0)) /
+      (d("w_obs") / (d("n") - d("g")))
     within.filter(col("b") > 0L).crossJoin(broadcast(obs))
       .agg(count(lit(1)).as("n_perm"),
         sum(when(col("w") <= col("w_obs"), 1L).otherwise(0L)).as("n_le"),
@@ -8444,9 +8444,9 @@ object AuditQueries {
         .withColumn("dev",
           abs(col("y").cast(dec) * col("n") - col("sy")))
         .orderBy(col("dev").desc, col("nat")).limit(1)
-      val sD = sqrt((double("qyy") - double("sy") * double("sy") / double("n")) /
-        (double("n") - 1.0))
-      val rD = (double("dev") / double("n")) / sD
+      val sD = sqrt((d("qyy") - d("sy") * d("sy") / d("n")) /
+        (d("n") - 1.0))
+      val rD = (d("dev") / d("n")) / sD
       val lam = EsdLambdas(k - 1)
       outRows = outRows :+ cand.select(lit(k.toLong).as("round"),
         col("nat").as("nation"), col("y").as("aov"),
@@ -8660,16 +8660,16 @@ object AuditQueries {
             .as(s"ws$grp"))
     }
     val f1 = groupFold(1L); val f0 = groupFold(0L)
-    def h(g: String, n: String) = double(n) - double(g) * 2.0
-    val tm1 = double("mid1") / h("g1", "n1")
-    val tm0 = double("mid0") / h("g0", "n0")
-    val sw1 = (double("wss1") - double("ws1") * double("ws1") / double("n1")) /
-      (double("n1") - 1.0)
-    val sw0 = (double("wss0") - double("ws0") * double("ws0") / double("n0")) /
-      (double("n0") - 1.0)
-    val d1 = sw1 * (double("n1") - 1.0) /
+    def h(g: String, n: String) = d(n) - d(g) * 2.0
+    val tm1 = d("mid1") / h("g1", "n1")
+    val tm0 = d("mid0") / h("g0", "n0")
+    val sw1 = (d("wss1") - d("ws1") * d("ws1") / d("n1")) /
+      (d("n1") - 1.0)
+    val sw0 = (d("wss0") - d("ws0") * d("ws0") / d("n0")) /
+      (d("n0") - 1.0)
+    val d1 = sw1 * (d("n1") - 1.0) /
       (h("g1", "n1") * (h("g1", "n1") - 1.0))
-    val d0 = sw0 * (double("n0") - 1.0) /
+    val d0 = sw0 * (d("n0") - 1.0) /
       (h("g0", "n0") * (h("g0", "n0") - 1.0))
     val t = (tm1 - tm0) / sqrt(d1 + d0)
     f1.crossJoin(broadcast(f0))

@@ -2592,8 +2592,8 @@ object CoreQueries {
         sum(col("i").cast(dec) * col("rev_c").cast(dec)).as("s1"))
     g.select(col("c_nationkey"), col("n").cast("long").as("n_customers"),
       col("s0").cast("long").as("revenue_c"),
-      ((lit(2.0) * double(col("s1")) - double(col("n") + lit(1)) * double(col("s0"))) /
-        (double(col("n")) * double(col("s0")))).as("gini"))
+      ((lit(2.0) * d(col("s1")) - d(col("n") + lit(1)) * d(col("s0"))) /
+        (d(col("n")) * d(col("s0")))).as("gini"))
   }
 
   val q160Sql: String =
@@ -3221,12 +3221,12 @@ object CoreQueries {
       (col("n") * col("sx2x2") - col("sx2") * col("sx2")).as("a22"),
       (col("n") * col("sx1y") - col("sx1") * col("sy")).as("b1"),
       (col("n") * col("sx2y") - col("sx2") * col("sy")).as("b2"))
-    val det = double("a11") * double("a22") - double("a12") * double("a12")
-    val beta1 = (double("b1") * double("a22") - double("b2") * double("a12")) / det
-    val beta2 = (double("a11") * double("b2") - double("a12") * double("b1")) / det
+    val det = d("a11") * d("a22") - d("a12") * d("a12")
+    val beta1 = (d("b1") * d("a22") - d("b2") * d("a12")) / det
+    val beta2 = (d("a11") * d("b2") - d("a12") * d("b1")) / det
     m.select(col("l_returnflag"), col("n").cast("long").as("n_rows"),
       beta1.as("beta_qty"), beta2.as("beta_disc"),
-      ((double("sy") - beta1 * double("sx1") - beta2 * double("sx2")) / double("n"))
+      ((d("sy") - beta1 * d("sx1") - beta2 * d("sx2")) / d("n"))
         .as("beta_intercept"))
   }
 
