@@ -1,61 +1,38 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric":...,"queries":{...}}.
   *
   * Timing forces full materialization through the `noop` sink (a plain
   * count() would let Catalyst prune projections in map-only queries and
-  * under-report). Session config mirrors the 100 TB posture: AQE on,
-  * shuffle partitions sized to cores, broadcast threshold default.
+  * under-report). The session and the per-query run are `Session`'s, the
+  * ones `Verify` checks.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE coalescing floor, env-overridable for experiments. Keep the
-      // Spark default 1m: a full q1xx/q2xx sweep at 64k measured +34 s
-      // net — the per-stage task overhead across hundreds of byte-small
-      // shuffles outweighs the parallelism it buys the few CPU-dense ones
-      // (those get an explicit spread at the operator instead).
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "1m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build()
     // JVM/codegen warmup so the first measured query isn't charged for it.
-    SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
+    Session.noop(SparkEntry.entry(spark))
     // Gate queries plus the production-hash fingerprint twins: the *_prod
     // numbers document what the md5 oracle portability costs at scale.
     val allBench = SparkEntry.queries ++ operators.TextQueries.productionQueries ++
       operators.EventQueries.productionQueries ++
       operators.CoreQueries.productionQueries
-    // Iteration knobs: ONLY=substring filter; SAMPLES=runs per query (the
-    // reported number is the MIN across samples — steady-state behaviour,
-    // not first-sample codegen/JIT noise; the default 2 was chosen after a
-    // single-sample driver run showed 3-8× inflation on the MinHash family
-    // from cold classloading). REPS>1 instead reports every rep separately
-    // (warm-vs-cold inspection; overrides SAMPLES).
+    // Iteration knobs: ONLY=comma-separated substring filters (OR, as
+    // Verify's third arg); SAMPLES=runs per query (the reported number is
+    // the MIN across samples — steady-state behaviour, not first-sample
+    // codegen/JIT noise; the default 2 was chosen after a single-sample
+    // round showed 3-8× inflation on the MinHash family from cold
+    // classloading).
     // env knobs parse defensively (toIntOption + default): a malformed
     // value must degrade to the default, never crash the whole bench run
     def envInt(name: String, default: Int): Int =
       sys.env.get(name).flatMap(_.toIntOption).getOrElse(default)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-    val reps = envInt("SPARK_GRAFT_BENCH_REPS", 1)
-    val samples =
-      if (reps > 1) 1 else envInt("SPARK_GRAFT_BENCH_SAMPLES", 2)
+    val samples = envInt("SPARK_GRAFT_BENCH_SAMPLES", 2)
     require(samples >= 1, s"SPARK_GRAFT_BENCH_SAMPLES must be >= 1, got $samples")
-    // comma-separated substring filters (OR), matching Verify's third arg
-    val benchSet = only.fold(allBench) { f =>
-      val fs = f.split(',').toSeq
-      allBench.filter(kv => fs.exists(kv._1.contains))
-    }
+    val benchSet = Session.select(allBench, only.getOrElse(""))
     val failed = scala.collection.mutable.LinkedHashSet[String]()
     // Round-over-round self-defense against sandbox co-tenancy (r7 burned
     // a judge cycle proving a 22% "regression" was noise): the previous
@@ -99,32 +76,23 @@ object Bench {
     // runtime row counts, so tiny post-rollup windows don't false-positive).
     // Findings land in plan_lint.json beside bench_out.json and as a
     // lint_hits count on the summary line; the artifact must stay empty.
-    // Floor default 1000: below |documents| (5,000 at sf0.1) so the CORPUS
-    // axis is gated, not just the fact/event axes — the r7 default of 10k
-    // was blind to every per-document window. Post-rollup report windows
-    // are ≤ a few hundred rows at bench scale, so 1k stays
-    // false-positive-free.
-    val lintMinRows =
-      sys.env.get("SPARK_GRAFT_LINT_WINDOW_ROWS").flatMap(_.toLongOption)
-        .getOrElse(1000L)
+    // Floor 1000: below |documents| (5,000 at sf0.1) so the CORPUS axis is
+    // gated, not just the fact/event axes — the r7 floor of 10k was blind
+    // to every per-document window. Post-rollup report windows are ≤ a
+    // few hundred rows at bench scale, so 1k stays false-positive-free.
+    val lintMinRows = 1000L
     // Task-grain skew gate (complements the plan-grain funnel rule): a
-    // stage whose max task reads >= LINT_TASK_ROWS shuffle rows AND >=
-    // LINT_SKEW_RATIO x the stage mean is one hot key owning the stream.
-    // 0 disables. Defaults calibrated on the full sf0.1 bench.
-    val skewMinRows =
-      sys.env.get("SPARK_GRAFT_LINT_TASK_ROWS").flatMap(_.toLongOption)
-        .getOrElse(20000L)
-    val skewRatio =
-      sys.env.get("SPARK_GRAFT_LINT_SKEW_RATIO").flatMap(_.toDoubleOption)
-        .getOrElse(8.0)
+    // stage whose max task reads >= skewMinRows shuffle rows AND >=
+    // skewRatio x the stage mean is one hot key owning the stream.
+    // Calibrated on the full sf0.1 bench.
+    val skewMinRows = 20000L
+    val skewRatio = 8.0
     // byte floor: below this, row imbalance is the AQE coalescer packing
     // byte-small map outputs, not a hot key (a hot key is the one thing
     // coalescing can't split, so it exceeds the advisory size at scale)
-    val skewMinBytes =
-      sys.env.get("SPARK_GRAFT_LINT_TASK_BYTES").flatMap(_.toLongOption)
-        .getOrElse(32L * 1024 * 1024)
+    val skewMinBytes = 32L * 1024 * 1024
     val skewListener = new observability.TaskSkewListener
-    if (skewMinRows > 0) spark.sparkContext.addSparkListener(skewListener)
+    spark.sparkContext.addSparkListener(skewListener)
     val lintBuf = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val lintHits = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     val lintListener = new org.apache.spark.sql.util.QueryExecutionListener {
@@ -139,25 +107,13 @@ object Bench {
           error: Exception): Unit = ()
     }
     spark.listenerManager.register(lintListener)
-    // returns (elapsed, succeeded) — a failed sample must never win the
-    // min (its early abort looks fast), and failures are surfaced in the
-    // machine-readable JSON, not only on stderr
-    def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Boolean) = {
-      // per-query tuning declarations (Tuning.cpuDenseShuffles) must never
-      // leak into the next query's execution
-      Tuning.reset(spark)
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          false
-        }
-      val elapsed = (System.nanoTime() - t0) / 1e9
-      // drop any blocks the query pinned (localCheckpoint registers as a
-      // persistent RDD) so later queries never pay for earlier ones' state
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+    // a failed sample must never win the min (its early abort looks
+    // fast), and failures are surfaced in the machine-readable JSON, not
+    // only on stderr
+    def timeOnce(name: String, fn: Q): Session.Run = {
+      val run = Session.run(spark)(fn(spark, sfDir))
+      run.error.foreach(e =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}"))
       // drain the async listener bus OUTSIDE the timed section so funnel
       // findings attribute to the query that produced them; a timed-out
       // drain means pending findings may belong to an EARLIER query, so
@@ -172,10 +128,9 @@ object Bench {
       val attributeTo = if (drained) name else "(unattributed)"
       var d = lintBuf.poll()
       while (d != null) { lintHits += attributeTo -> d; d = lintBuf.poll() }
-      if (skewMinRows > 0)
-        skewListener.drain(skewMinRows, skewRatio, skewMinBytes)
-          .foreach(f => lintHits += attributeTo -> f.detail)
-      (elapsed, ok)
+      skewListener.drain(skewMinRows, skewRatio, skewMinBytes)
+        .foreach(f => lintHits += attributeTo -> f.detail)
+      run
     }
     // Periodic quiesce: a monolithic multi-hundred-query run accumulates
     // GC/codegen-cache pressure that charges later queries for earlier
@@ -183,20 +138,14 @@ object Bench {
     // isolated run). A GC every QuiesceEvery queries bounds the drift.
     val QuiesceEvery = 25
     var sinceGc = 0
-    val firstPass = benchSet.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+    val firstPass = benchSet.map { case (name, fn) =>
       sinceGc += 1
       if (sinceGc >= QuiesceEvery) { System.gc(); sinceGc = 0 }
-      if (reps > 1) (1 to reps).map { rep =>
-        val (t, ok) = timeOnce(name, fn)
-        if (!ok) failed += name
-        s"$name#$rep" -> t
-      } else {
-        val runs = (1 to samples).map(_ => timeOnce(name, fn))
-        val good = runs.collect { case (t, true) => t }
-        if (good.size < samples) failed += name
-        // all samples failed → report the slowest abort, flagged via "failed"
-        Seq(name -> (if (good.nonEmpty) good.min else runs.map(_._1).max))
-      }
+      val runs = (1 to samples).map(_ => timeOnce(name, fn))
+      val good = runs.filter(_.ok).map(_.seconds)
+      if (good.size < samples) failed += name
+      // all samples failed → report the slowest abort, flagged via "failed"
+      name -> (if (good.nonEmpty) good.min else runs.map(_.seconds).max)
     }
     // Attributability pass: re-run the slowest K in a freshly-quiesced JVM
     // and keep the min, so the headline per-query numbers track isolated
@@ -207,13 +156,13 @@ object Bench {
     // rerun cutoff; the artifact carries rerun_k so round-over-round deltas
     // are interpretable against the methodology that produced them.
     val rerunK = envInt("SPARK_GRAFT_BENCH_RERUN", 25)
-    val afterRerun = if (reps > 1 || rerunK <= 0) firstPass else {
+    val afterRerun = if (rerunK <= 0) firstPass else {
       val byName = scala.collection.mutable.LinkedHashMap(firstPass: _*)
       firstPass.filterNot(r => failed(r._1)).sortBy(-_._2).take(rerunK)
         .foreach { case (name, t) =>
           System.gc(); Thread.sleep(200)
-          val (t2, ok) = timeOnce(name, benchSet(name))
-          if (ok && t2 < t) byName(name) = t2
+          val r = timeOnce(name, allBench(name))
+          if (r.ok && r.seconds < t) byName(name) = r.seconds
         }
       byName.toSeq
     }
@@ -235,7 +184,7 @@ object Bench {
     val headN = envInt("SPARK_GRAFT_BENCH_HEAD_N", 40)
     val headDriftPct = envInt("SPARK_GRAFT_BENCH_HEAD_DRIFT_PCT", 25)
     val suspectEnv = scala.collection.mutable.LinkedHashSet[String]()
-    val results = if (reps > 1 || prevTimes.isEmpty ||
+    val results = if (prevTimes.isEmpty ||
         (suspectFactor <= 0 && headDriftPct <= 0)) afterRerun
     else {
       val byName = scala.collection.mutable.LinkedHashMap(afterRerun: _*)
@@ -253,9 +202,9 @@ object Bench {
         prevTimes.get(name).foreach { prev =>
           if (t > bound(name, prev)) {
             System.gc(); Thread.sleep(500)
-            val (t2, ok) = timeOnce(name, benchSet(name))
-            if (ok && t2 < t) byName(name) = math.min(t, t2)
-            if (!ok || math.min(t, t2) > bound(name, prev))
+            val r = timeOnce(name, allBench(name))
+            if (r.ok && r.seconds < t) byName(name) = r.seconds
+            if (!r.ok || math.min(t, r.seconds) > bound(name, prev))
               suspectEnv += name: Unit
           }
         }
@@ -263,30 +212,23 @@ object Bench {
       byName.toSeq
     }
     spark.listenerManager.unregister(lintListener)
-    if (skewMinRows > 0) spark.sparkContext.removeSparkListener(skewListener)
+    spark.sparkContext.removeSparkListener(skewListener)
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
-    val agg = if (reps > 1) "reps" else "min"
-    val sampleCount = if (reps > 1) reps else samples
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val suspectJson = suspectEnv.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val rerunTag = if (reps > 1) 0 else math.max(rerunK, 0)
+    val failedJson = failed.map(Session.jsonString).mkString("[", ",", "]")
+    val suspectJson = suspectEnv.map(Session.jsonString).mkString("[", ",", "]")
+    val rerunTag = math.max(rerunK, 0)
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","samples":$sampleCount,"agg":"$agg","rerun_k":$rerunTag,"failed":$failedJson,"suspect_env":$suspectJson,"queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","samples":$samples,"agg":"min","rerun_k":$rerunTag,"failed":$failedJson,"suspect_env":$suspectJson,"queries":$qs,"sf":"$sfDir"}"""
     // Full per-query detail (all ~200 entries, full precision) goes to the
     // file channel; it is far too long for the driver's stdout tail.
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out), json + "\n")
     // Plan-lint artifact: one entry per corpus-scale window funnel observed
     // during the run. De-duplicated per (query, detail); expected EMPTY.
-    def jq(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
-    val lintJson = lintHits.distinct
-      .map { case (q2, d2) => s"""{"query":${jq(q2)},"detail":${jq(d2)}}""" }
-      .mkString("[", ",", "]")
+    val lintJson = lintHits.distinct.map { case (q2, d2) =>
+      s"""{"query":${Session.jsonString(q2)},"detail":${Session.jsonString(d2)}}"""
+    }.mkString("[", ",", "]")
     val lintOut = sys.env.getOrElse("SPARK_GRAFT_LINT_OUT", "plan_lint.json")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(lintOut),
       s"""{"rules":["global-window-funnel","task-skew"],"min_rows":$lintMinRows,"task_min_rows":$skewMinRows,"task_min_bytes":$skewMinBytes,"skew_ratio":$skewRatio,"hits":$lintJson}\n""")
@@ -308,7 +250,7 @@ object Bench {
     def compactLine(entries: Seq[(String, Double)]): String = {
       val hq = entries.map { case (k, v) => "\"" + k + "\":" + r3(v) }
         .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","samples":$sampleCount,"agg":"$agg","rerun_k":$rerunTag,"n_queries":${results.size},"failed":$failedJson,"suspect_env":$suspectJson,"lint_hits":${lintHits.distinct.size},"detail":"$out","queries":$hq,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","samples":$samples,"agg":"min","rerun_k":$rerunTag,"n_queries":${results.size},"failed":$failedJson,"suspect_env":$suspectJson,"lint_hits":${lintHits.distinct.size},"detail":"$out","queries":$hq,"sf":"$sfDir"}"""
     }
     // Hard cap well under the 2000-char tail so the sbt [success] epilogue
     // never pushes the line's head out of the buffer.
@@ -317,22 +259,6 @@ object Bench {
     while (line.length > 1700 && keep.nonEmpty) {
       keep = keep.dropRight(10)
       line = compactLine(keep)
-    }
-    // Standing 10× volume probe (r9, r8 verdict item 6): env-gated so scale
-    // regressions on the dedup/ANN family are caught per round instead of
-    // once in SCALE.md. SPARK_GRAFT_SCALE_PROBE_OUT names the JSON artifact
-    // (one line: per-query base/scaled seconds + observed exponents); the
-    // probe reuses this session AFTER all timed work so it cannot perturb
-    // the bench numbers. Off by default — the driver's runs are unaffected.
-    sys.env.get("SPARK_GRAFT_SCALE_PROBE_OUT").foreach { probeOut =>
-      val probeLine = ScaleProbe.run(spark, sfDir,
-        sys.env.getOrElse("SPARK_GRAFT_SCALE_PROBE_ROOT", "/tmp/graft_scale"),
-        envInt("SPARK_GRAFT_SCALE_PROBE_FACTOR", 10),
-        sys.env.getOrElse("SPARK_GRAFT_SCALE_PROBE_QUERIES",
-          "q54_,q55_,q66_,q95_,q133_"),
-        envInt("SPARK_GRAFT_SCALE_SAMPLES", 2))
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(probeOut), probeLine + "\n")
     }
     // Stop Spark BEFORE the summary print: its shutdown logging must not
     // land after the line and push it out of the driver's tail window.

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-shot scale probe for the dedup/ANN family (r7 verdict stretch #7):
@@ -19,7 +18,8 @@ import org.apache.spark.sql.functions._
   * Prints one JSON line per (query, scale) and a final summary with the
   * observed exponent log(t_scaled/t_base)/log(factor) per query. Results
   * land in SCALE.md by hand — this main has no side effects outside
-  * `outRoot`.
+  * `outRoot`. It is the one volume probe; queries run on `Session`'s
+  * session and per-query run, as in Bench.
   *
   * Usage: runMain graft.ScaleProbe [baseDir] [outRoot] [factor] [queriesCsv]
   */
@@ -31,27 +31,7 @@ object ScaleProbe {
     val queriesCsv = args.lift(3).getOrElse("q54_,q55_,q66_,q95_,q133_")
     val samples = sys.env.get("SPARK_GRAFT_SCALE_SAMPLES")
       .flatMap(_.toIntOption).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val line = run(spark, baseDir, outRoot, factor, queriesCsv, samples)
-    spark.stop()
-    println(line)
-  }
-
-  /** The probe body, reusable from Bench's env-gated mode (r9, r8 verdict
-    * item 6): builds (or reuses) the factor× documents slice, times each
-    * matching query on base and scaled dirs, prints one JSON line per
-    * query, and RETURNS the summary JSON line with observed exponents.
-    */
-  def run(spark: SparkSession, baseDir: String, outRoot: String,
-      factor: Int, queriesCsv: String, samples: Int): String = {
+    val spark = Session.build()
     val scaledDir = s"$outRoot/x$factor"
     val fs = java.nio.file.Paths.get(scaledDir)
     if (!java.nio.file.Files.exists(fs.resolve("documents.parquet"))) {
@@ -81,23 +61,9 @@ object ScaleProbe {
       println(s"""{"probe":"built","dir":"$scaledDir","factor":$factor}""")
     }
 
-    val filters = queriesCsv.split(',').toSeq
-    val qs = SparkEntry.queries.filter(kv => filters.exists(kv._1.contains))
-      .toSeq.sortBy(_._1)
-    def time(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        dir: String): Double = {
-      val runs = (1 to samples).map { _ =>
-        // as in Bench/Verify: a query's Tuning declaration must not leak
-        Tuning.reset(spark)
-        val t0 = System.nanoTime()
-        fn(spark, dir).write.format("noop").mode("overwrite").save()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        (System.nanoTime() - t0) / 1e9
-      }
-      runs.min
-    }
-    val rows = qs.map { case (name, fn) =>
+    def time(fn: Q, dir: String): Double =
+      (1 to samples).map(_ => Session.run(spark)(fn(spark, dir)).get).min
+    val rows = Session.select(SparkEntry.queries, queriesCsv).map { case (name, fn) =>
       System.gc()
       val tBase = time(fn, baseDir)
       System.gc()
@@ -108,6 +74,7 @@ object ScaleProbe {
     }
     val line = rows.map { case (n, a, b, e) =>
       f""""$n":[$a%.2f,$b%.2f,$e%.2f]""" }.mkString("{", ",", "}")
-    s"""{"probe":"scale","factor":$factor,"base":"$baseDir","results":$line}"""
+    spark.stop()
+    println(s"""{"probe":"scale","factor":$factor,"base":"$baseDir","results":$line}""")
   }
 }

@@ -1,12 +1,21 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Engine session factory (SURVEY.md §7.1 module 1): one place that wires the
-  * engine posture — UTC, AQE (runtime re-planning ≈ the reference's
-  * distribution-aware re-optimization), CBO over collected statistics,
-  * shuffle partitions sized to the local cores (not the 200 default), the
-  * replicated-table auto-broadcast extension, and the T-SQL SQL dialect.
+/** The one harness (SURVEY.md §7.1 module 1): the session every main and
+  * the test suites run on, and the per-query run every harness times, so
+  * the measured program is the verified program.
+  *
+  * Posture: local[cores], shuffle partitions sized to the cores (not the
+  * 200 default), AQE with [[Tuning]]'s coalescing floor, UTC, UI off,
+  * WARN. CBO, the replicated-table broadcast rule
+  * (`plans.GraftExtensions`) and the T-SQL dialect
+  * (`functions.TSqlRegistry.register`) are opt-in library calls, not part
+  * of it: a second builder applies its runtime confs to the live session,
+  * so a posture that set them would change the plans of every harness that
+  * shares the JVM.
   *
   * ANSI stays off deliberately: the T-SQL compatibility layer relies on
   * non-ANSI null-on-bad-cast semantics. Integer-overflow safety for
@@ -16,34 +25,83 @@ import org.apache.spark.sql.SparkSession
   */
 object Session {
 
-  final case class EngineConf(
-      cores: Int = Runtime.getRuntime.availableProcessors(),
-      shufflePartitions: Option[Int] = None,
-      driverMemory: String = sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"),
-      broadcastThresholdBytes: Long = 10L * 1024 * 1024,
-      cbo: Boolean = true,
-      warehouseDir: Option[String] = None)
+  /** `SPARK_GRAFT_CPUS`, else every core of the machine. */
+  def defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
 
-  def build(conf: EngineConf = EngineConf()): SparkSession = {
+  def build(cores: Int = defaultCores,
+      warehouseDir: Option[String] = None): SparkSession = {
     val b = SparkSession.builder()
-      .master(s"local[${conf.cores}]")
-      .config("spark.sql.shuffle.partitions",
-        conf.shufflePartitions.getOrElse(conf.cores).toString)
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.cbo.enabled", conf.cbo.toString)
-      .config("spark.sql.cbo.joinReorder.enabled", conf.cbo.toString)
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        conf.broadcastThresholdBytes.toString)
+      .config(Tuning.FloorKey, Tuning.defaultFloor)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-    val withWh = conf.warehouseDir.fold(b)(d =>
-      b.config("spark.sql.warehouse.dir", d))
-    val spark = withWh.getOrCreate()
+    val spark =
+      warehouseDir.fold(b)(d => b.config("spark.sql.warehouse.dir", d))
+        .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.TSqlRegistry.register(spark)
+    // WindowExec warns once per unpartitioned window, and the corpus's
+    // post-rollup report windows are unpartitioned by design (tiny frames).
+    // The gate on the ones that are not tiny is PlanLint.windowFunnels
+    // (runtime row counts, in Bench's plan_lint.json), not this log line.
+    Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec", Level.ERROR)
     spark
   }
+
+  /** The sink every timed run uses: materializes every row and column and
+    * writes nothing (a plain count() would let Catalyst prune projections
+    * in map-only queries and under-report).
+    */
+  val noop: DataFrame => Unit = _.write.format("noop").mode("overwrite").save()
+
+  /** One query run: wall seconds of build plus sink, and its failure. */
+  final case class Run(seconds: Double, error: Option[Throwable]) {
+    def ok: Boolean = error.isEmpty
+    /** The seconds, or the failure rethrown. */
+    def get: Double = error.fold(seconds)(e => throw e)
+  }
+
+  /** Run one query the way every harness does. Resets [[Tuning]] first (a
+    * query's `cpuDenseShuffles` must never leak into the next), times the
+    * build plus the sink, and after the clock stops releases every RDD the
+    * query pinned (an eager localCheckpoint registers as persistent), so
+    * later queries never pay for earlier ones' state — also when the build
+    * or the sink throws. A failure is returned with its elapsed time, not
+    * thrown: callers decide whether an early abort may count.
+    */
+  def run(spark: SparkSession, sink: DataFrame => Unit = noop)(
+      build: => DataFrame): Run = {
+    Tuning.reset(spark)
+    val t0 = System.nanoTime()
+    try {
+      val error = try { sink(build); None } catch { case e: Throwable => Some(e) }
+      Run((System.nanoTime() - t0) / 1e9, error)
+    } finally spark.sparkContext.getPersistentRDDs.values
+      .foreach(org.apache.spark.graft.StorageBridge.release)
+  }
+
+  /** The entries whose name contains any of the comma-separated filters,
+    * by name (every harness's query selector; "" selects every entry).
+    */
+  def select[V](all: Map[String, V], filters: String): Seq[(String, V)] = {
+    val fs = filters.split(',').toSeq
+    all.toSeq.filter(kv => fs.exists(kv._1.contains)).sortBy(_._1)
+  }
+
+  /** JSON string literal: escapes backslash, quote and ALL control chars
+    * (<0x20) — a tab or CR in builder-authored SQL would otherwise make a
+    * reader's json.load fail and silently zero the round's correctness.
+    */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

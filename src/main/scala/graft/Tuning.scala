@@ -10,9 +10,9 @@ import org.apache.spark.sql.SparkSession
   * per-row work on narrow keys (array_intersect verification of candidate
   * pairs, signature agreement folds) coalesces to totalBytes/1m tasks no
   * matter how many cores are idle. A query whose dominant stage is
-  * CPU-dense declares it via [[cpuDenseShuffles]]; the harnesses (Bench,
-  * Scratch) reset the floor to the session default before every query so
-  * the declaration never leaks across queries.
+  * CPU-dense declares it via [[cpuDenseShuffles]]; `Session.run` resets
+  * the floor to the session default before every query so the
+  * declaration never leaks across queries.
   *
   * Scale posture: the floor only binds when totalBytes/parallelism <
   * minPartitionSize — i.e. on byte-small shuffles. At 100 TB the same
@@ -24,19 +24,17 @@ import org.apache.spark.sql.SparkSession
 object Tuning {
   val FloorKey = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
 
-  /** Session default, env-overridable (mirrors Bench's session posture). */
-  def defaultFloor: String =
-    sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "1m")
+  /** Session default: Spark's own 1m (64k everywhere measured worse, above). */
+  val defaultFloor = "1m"
 
   /** Floor used by queries that declare their shuffles CPU-dense. */
-  def denseFloor: String =
-    sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_DENSE", "64k")
+  val denseFloor = "64k"
 
   /** Declare the calling query's shuffles CPU-dense for this execution.
-    * Harnesses (Bench, Scratch, Verify) call [[reset]] before each query's
-    * build. Note this mutates session conf from inside a query builder —
-    * safe under the per-query reset, but a concurrent-query harness would
-    * need per-thread sessions (`SparkSession.newSession`).
+    * `Session.run` calls [[reset]] before each query's build. Note this
+    * mutates session conf from inside a query builder — safe under the
+    * per-query reset, but a concurrent-query harness would need per-thread
+    * sessions (`SparkSession.newSession`).
     */
   def cpuDenseShuffles(s: SparkSession): Unit =
     s.conf.set(FloorKey, denseFloor)

@@ -1,49 +1,26 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare
+  * (`tools/check_oracle.py`). Runs on the session and per-query run
+  * `Bench` times (`Session`). */
 object Verify {
   def main(args: Array[String]): Unit = {
     // optional third arg (unused by the driver): comma-separated substring
     // filters over query names (OR), for fast single-query iteration
     val Array(sfDir, outDir) = args.take(2)
-    val only = args.drop(2).headOption.map(_.split(',').toSeq)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.exists(name.contains)) }
+    Session.select(SparkEntry.queries, args.lift(2).getOrElse(""))
       .foreach { case (name, fn) =>
-      // same invariant as Bench/Scratch: a query's Tuning declaration
-      // (e.g. q65's cpuDenseShuffles floor) must not leak into the next
-      Tuning.reset(spark)
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        val sink = (df: org.apache.spark.sql.DataFrame) =>
+          df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        Session.run(spark, sink)(fn(spark, sfDir)).error.foreach(e =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}"))
       }
-    }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = (SparkEntry.oracleSql ++ SparkEntry.dataOracles(spark, sfDir))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Session.jsonString(k)}: ${Session.jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -49,11 +49,6 @@ object Exact {
        |   AS DECIMAL(38,0))
        | AS DECIMAL(38,0))""".stripMargin.replace("\n", " ")
 
-  /** The sign as a branch around [[fdiv]] instead of a factor. */
-  def sdivCases(num: String, den: String): String =
-    s"""CASE WHEN $num < 0 THEN -(${fdiv(s"-($num)", den)})
-       |     ELSE ${fdiv(num, den)} END""".stripMargin.replace("\n", " ")
-
   /** num·10⁶ / den, BIGINT: the e6-quantized ratio. */
   def sdivE6(num: String, den: String): String =
     s"""CASE WHEN $num >= 0
@@ -69,28 +64,6 @@ object Exact {
     s"""(CASE WHEN (($n) < 0) != (($d) < 0) THEN -1 ELSE 1 END *
        | (ABS(CAST(($n) AS DECIMAL(38,0)))
        |  div ABS(CAST(($d) AS DECIMAL(38,0)))))"""
-      .stripMargin.replace("\n", " ")
-
-  /** `div` with the sign as a branch; each arm cast to BIGINT. */
-  def sdivDivCases(num: String, den: String): String =
-    s"""CASE WHEN $num < 0 THEN -CAST(((-($num)) div ($den)) AS BIGINT)
-       |     ELSE CAST((($num) div ($den)) AS BIGINT) END""".stripMargin
-
-  /** [[sdivDivCases]] with one cast around the CASE. */
-  def sdivDivCasesCast(num: String, den: String): String =
-    s"""CAST(CASE WHEN $num < 0 THEN -((-($num)) div ($den))
-       |     ELSE ($num) div ($den) END AS BIGINT)""".stripMargin
-
-  /** [[sdivDivCases]] testing `>= 0`, no cast. */
-  def sdivDivCasesPos(num: String, den: String): String =
-    s"""CASE WHEN $num >= 0 THEN ($num) div ($den)
-       | ELSE -((-($num)) div ($den)) END"""
-      .stripMargin.replace("\n", " ")
-
-  /** [[sdivDivCasesPos]] negating through `abs`. */
-  def sdivDivCasesAbs(num: String, den: String): String =
-    s"""CASE WHEN $num >= 0 THEN $num div ($den)
-       | ELSE -(abs($num) div ($den)) END"""
       .stripMargin.replace("\n", " ")
 
   // --------------------------------------------- Scala, at plan-build time

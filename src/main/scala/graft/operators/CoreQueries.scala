@@ -2869,9 +2869,9 @@ object CoreQueries {
           col("q2").cast(dec) * col("r1").cast(dec))
       .withColumn("vn", col("r1").cast(dec) * (col("q2") - col("q1")).cast(dec))
       .withColumn("price_eff_c",
-        when(col("q1") > 0L && col("q2") > 0L, expr(sdivDivCases("pn", "q2"))).otherwise(0L))
+        when(col("q1") > 0L && col("q2") > 0L, expr(sdivDiv("pn", "q2"))).otherwise(0L))
       .withColumn("volume_eff_c",
-        when(col("q1") > 0L && col("q2") > 0L, expr(sdivDivCases("vn", "q1")))
+        when(col("q1") > 0L && col("q2") > 0L, expr(sdivDiv("vn", "q1")))
           .otherwise(col("delta_c")))
       .withColumn("joint_c",
         col("delta_c") - col("price_eff_c") - col("volume_eff_c"))

@@ -2610,7 +2610,7 @@ object CurationQueries {
       .select(col("nk").as("nation"), col("n"), col("true_cnt"),
         col("reported_cnt"),
         expr("true_cnt * 1000000 div n").as("true_e6"),
-        expr(sdivDivCasesPos("(4 * reported_cnt - n) * 1000000", "2 * n"))
+        expr(sdivDiv("(4 * reported_cnt - n) * 1000000", "2 * n"))
           .as("est_e6"))
       .withColumn("err_e6", col("est_e6") - col("true_e6"))
       .withColumn("epsilon_e6", lit(1098612L)) // ln 3, plan-time literal

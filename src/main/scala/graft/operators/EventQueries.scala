@@ -711,9 +711,7 @@ object EventQueries {
     * broadcast.
     */
   val q121Seasonality: Q = (s, dir) => {
-    val e = Tables.events(s, dir).filter(col("event_type") === "purchase")
-    val daily = e.groupBy(expr("unix_timestamp(ts) DIV 86400").as("day"))
-      .agg(sum(cents(col("value"))).as("total_c"))
+    val daily = purchaseCentsByDay(s, dir).agg(sum(col("v")).as("total_c"))
     // weekday sums accumulate IN decimal (long sums wrap silently first at
     // scale); the BIGINT output column is a final, loud-on-overflow cast
     val byDow = daily.groupBy(((col("day") + 4) % 7).as("day_of_week"))
@@ -767,9 +765,7 @@ object EventQueries {
     */
   val q124CusumShift: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val e = Tables.events(s, dir).filter(col("event_type") === "purchase")
-    val daily = e.groupBy(expr("unix_timestamp(ts) DIV 86400").as("day"))
-      .agg(sum(cents(col("value"))).as("total_c"))
+    val daily = purchaseCentsByDay(s, dir).agg(sum(col("v")).as("total_c"))
     val totals = daily.agg(count(lit(1)).cast(dec).as("n"),
       sum(col("total_c").cast(dec)).as("s_all"))
     val dev = daily.crossJoin(broadcast(totals))
@@ -1088,9 +1084,7 @@ object EventQueries {
     */
   val q130SeasonalBacktest: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val e = Tables.events(s, dir).filter(col("event_type") === "purchase")
-    val daily = e.groupBy(expr("unix_timestamp(ts) DIV 86400").as("day"))
-      .agg(sum(cents(col("value"))).as("total_c"))
+    val daily = purchaseCentsByDay(s, dir).agg(sum(col("v")).as("total_c"))
       .withColumn("dow", (col("day") + 4) % 7)
     val w = Window.partitionBy(col("dow")).orderBy(col("day"))
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -1151,9 +1145,7 @@ object EventQueries {
     */
   val q182ForecastScorecard: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val daily = Tables.events(s, dir).filter(col("event_type") === "purchase")
-      .groupBy(expr("unix_timestamp(ts) DIV 86400").as("day"))
-      .agg(sum(cents(col("value"))).as("total_c"))
+    val daily = purchaseCentsByDay(s, dir).agg(sum(col("v")).as("total_c"))
       .withColumn("dow", (col("day") + 4) % 7)
     val w = Window.partitionBy(col("dow")).orderBy(col("day"))
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -2755,9 +2747,7 @@ object EventQueries {
     */
   val q167SeasonalDecomp: Q = (s, dir) => {
     val W = org.apache.spark.sql.expressions.Window
-    val daily = Tables.events(s, dir).filter(col("event_type") === "purchase")
-      .groupBy(expr("unix_timestamp(ts) DIV 86400").as("day"))
-      .agg(sum(cents(col("value"))).as("v_c"))
+    val daily = purchaseCentsByDay(s, dir).agg(sum(col("v")).as("v_c"))
     val w7 = W.orderBy(col("day")).rowsBetween(-3, 3)
     // the |days|-row windowed frame feeds both the weekday index and the
     // final join — localCheckpoint so the event pass runs once, not per
@@ -2779,11 +2769,11 @@ object EventQueries {
       .withColumn("de", col("detr7").cast(dec) * lit(1000000L))
       .withColumn("se", col("s_sum") * lit(1000000L))
       .withColumn("sden", (lit(7L) * col("s_n")).cast(dec))
-      .withColumn("trend_e6", expr(sdivDivCasesCast("t7e", "7")))
+      .withColumn("trend_e6", expr(sdivDiv("t7e", "7")))
       .withColumn("seasonal_e6", when(col("s_n") > 0L,
-        expr(sdivDivCasesCast("se", "sden"))))
+        expr(sdivDiv("se", "sden"))))
       .withColumn("remainder_e6",
-        expr(sdivDivCasesCast("de", "7")) - col("seasonal_e6"))
+        expr(sdivDiv("de", "7")) - col("seasonal_e6"))
       .select(col("day"), col("dow"), col("v_c"), col("trend_e6"),
         col("seasonal_e6"), col("remainder_e6"))
   }
@@ -5139,7 +5129,7 @@ object EventQueries {
       .localCheckpoint() // consumed by the seasonal rollup AND the join
     val seasonal = trended.groupBy(col("dow"))
       .agg(sum(col("detr_e6")).as("sd"), count(lit(1)).as("nd"))
-      .select(col("dow"), expr(sdivCases("sd", "nd")).as("seasonal_e6"))
+      .select(col("dow"), expr(sdiv("sd", "nd")).as("seasonal_e6"))
     trended.join(broadcast(seasonal), Seq("dow"))
       .select(col("day"), col("a"),
         col("trend_e6").cast("long").as("trend_e6"),

@@ -496,7 +496,7 @@ object LayoutQueries {
       .groupBy(col("alpha"))
       .agg(max(col("n")).as("n_days"), max(col("m")).as("m"),
         max(col("delta")).as("var_c"), sum(col("delta")).as("sum_tail"))
-      .withColumn("cvar_c", expr(sdivDivCasesAbs("sum_tail", "m")))
+      .withColumn("cvar_c", expr(sdivDiv("sum_tail", "m")))
       .drop("sum_tail")
       .orderBy(col("alpha"))
   }

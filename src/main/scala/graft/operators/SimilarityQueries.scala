@@ -97,8 +97,8 @@ object SimilarityQueries {
     val gd = ld.groupBy(col("d"))
       .agg(sum(col("s")).as("gs"), sum(col("n")).as("gn"))
     val cent = ld.join(gd, "d")
-      .withColumn("c_ld", expr(sdivDivCases("s", "n")))
-      .withColumn("c_gd", expr(sdivDivCases("gs", "gn")))
+      .withColumn("c_ld", expr(sdivDiv("s", "n")))
+      .withColumn("c_gd", expr(sdivDiv("gs", "gn")))
       .withColumn("diff", col("c_ld") - col("c_gd"))
       .withColumn("term",
         col("ss") - (lit(2L) * col("c_ld")).cast(dec) * col("s").cast(dec) +
@@ -1019,7 +1019,7 @@ object SimilarityQueries {
       .agg(count(lit(1)).as("n"), sum(col("q")).as("s"),
         sum((col("q") * col("q")).cast(dec)).as("ss"))
     roll.join(broadcast(cent0), Seq("cid", "d"))
-      .withColumn("c1", expr(sdivDivCases("s", "n")))
+      .withColumn("c1", expr(sdivDiv("s", "n")))
       .withColumn("sse0", col("ss") -
         (lit(2L) * col("c0")).cast(dec) * col("s").cast(dec) +
         col("n").cast(dec) * col("c0").cast(dec) * col("c0").cast(dec))

@@ -37,8 +37,8 @@ object ReplicatedBroadcastRule extends Rule[LogicalPlan] {
       .contains("replicate"))
 }
 
-/** SparkSessionExtensions entry point:
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or config
+/** SparkSessionExtensions entry point: a session builder's
+  * `.withExtensions(new GraftExtensions)`, or the config
   * `spark.sql.extensions=graft.plans.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

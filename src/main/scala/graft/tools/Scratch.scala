@@ -1,36 +1,21 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Session
 
 /** Local profiling / plan-audit scratchpad (not part of the library
-  * surface). Usage: runMain graft.tools.Scratch [explain q76 q80 ...]
+  * surface). Usage: runMain graft.tools.Scratch explain|profile|time|dump
+  * [outDir suffix] <filters...>, each filter a comma-separated substring
+  * selector over query names, as Bench's SPARK_GRAFT_BENCH_ONLY.
   */
 object Scratch {
-  def time[A](label: String)(f: => A): A = {
-    val t0 = System.nanoTime()
-    val r = f
-    println(f"[scratch] $label%-40s ${(System.nanoTime() - t0) / 1e9}%.3f s")
-    r
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "1m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build()
+    def queries(filters: List[String]) =
+      Session.select(graft.SparkEntry.queries, filters.mkString(","))
     args.toList match {
       case "explain" :: names =>
-        names.foreach { n =>
-          val (full, fn) = graft.SparkEntry.queries
-            .find(_._1.startsWith(n))
-            .getOrElse(sys.error(s"no query matching $n"))
+        queries(names).foreach { case (full, fn) =>
           println(s"===== $full =====")
           val df = fn(spark, sfDir)
           println(df.queryExecution.executedPlan.toString.take(8000))
@@ -43,15 +28,9 @@ object Scratch {
         // plus one row per stage — tasks, wall, summed executor run time,
         // shuffle read/write — so "slow" decomposes into plan/driver vs
         // single-task map stages vs real shuffle volume.
-        names.foreach { n =>
-          val (full, fn) = graft.SparkEntry.queries
-            .find(_._1.startsWith(n))
-            .getOrElse(sys.error(s"no query matching $n"))
+        queries(names).foreach { case (full, fn) =>
           // warm run: JIT + codegen cache, matches the bench's min-of-2
-          graft.Tuning.reset(spark)
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
+          Session.run(spark)(fn(spark, sfDir)).get
           val stages = new java.util.concurrent.ConcurrentLinkedQueue[
             (Int, String, Int, Long, Long, Long, Long)]()
           val listener = new org.apache.spark.scheduler.SparkListener {
@@ -68,19 +47,19 @@ object Scratch {
             }
           }
           spark.sparkContext.addSparkListener(listener)
+          var df: org.apache.spark.sql.DataFrame = null
+          var tBuilt = 0L
           val t0 = System.nanoTime()
-          val df = fn(spark, sfDir)
-          val tBuilt = System.nanoTime()
-          df.write.format("noop").mode("overwrite").save()
-          val tDone = System.nanoTime()
+          val profiled = Session.run(spark, { built =>
+            df = built; tBuilt = System.nanoTime(); Session.noop(built)
+          })(fn(spark, sfDir))
           org.apache.spark.graft.ListenerBridge
             .waitUntilEmpty(spark.sparkContext, 5000L): Unit
           spark.sparkContext.removeSparkListener(listener)
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
+          profiled.get
           println(s"===== $full =====")
           println(f"[profile] build ${(tBuilt - t0) / 1e9}%.3f s, " +
-            f"execute ${(tDone - tBuilt) / 1e9}%.3f s (warm)")
+            f"execute ${profiled.seconds - (tBuilt - t0) / 1e9}%.3f s (warm)")
           val ph = df.queryExecution.tracker.phases
           ph.foreach { case (p, t) =>
             println(f"[profile]   phase $p%-16s ${(t.endTimeMs - t.startTimeMs) / 1e3}%.3f s")
@@ -98,10 +77,7 @@ object Scratch {
         // Write .explain("formatted") of each query to <outDir>/<name>_<suffix>.txt
         // (the round's plan-artifact contract: plans/r08/<q>_before.txt / _after.txt).
         java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-        names.foreach { n =>
-          val (full, fn) = graft.SparkEntry.queries
-            .find(_._1.startsWith(n))
-            .getOrElse(sys.error(s"no query matching $n"))
+        queries(names).foreach { case (full, fn) =>
           val df = fn(spark, sfDir)
           val txt = df.queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode)
@@ -111,45 +87,14 @@ object Scratch {
             s"${txt.linesIterator.count(_.contains("Exchange"))} Exchange lines")
         }
       case "time" :: names =>
-        names.foreach { n =>
-          val (full, fn) = graft.SparkEntry.queries
-            .find(_._1.startsWith(n))
-            .getOrElse(sys.error(s"no query matching $n"))
-          for (rep <- 1 to 3) time(s"$full #$rep") {
-            graft.Tuning.reset(spark)
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        queries(names).foreach { case (full, fn) =>
+          for (rep <- 1 to 3) {
+            val t = Session.run(spark)(fn(spark, sfDir)).get
+            println(f"[scratch] ${s"$full #$rep"}%-40s $t%.3f s")
           }
         }
-      case "gen10x" :: outDir :: Nil =>
-        // Synthesize the 10x documents slice for the SCALE.md probe
-        // (r7 verdict stretch item): 10 replicas of the sf documents,
-        // replica 0 verbatim, replicas 1-9 with every token suffixed
-        // "_r<k>" so replicas are token-DISJOINT — within-replica
-        // near-dup structure is preserved, cross-replica shingles never
-        // collide. This measures how the dedup/ANN machinery's shuffles,
-        // windows and candidate generation scale with VOLUME; it does
-        // not add cross-replica duplicate discovery (stated in SCALE.md).
-        // doc_id offset 10M per replica keeps ids disjoint.
-        import org.apache.spark.sql.functions._
-        val d = graft.Tables.documents(spark, sfDir)
-        val out = d
-          .select(col("doc_id"), col("text"), col("lang"), col("source"),
-            explode(expr("sequence(0, 9)")).as("r"))
-          .select(
-            (col("doc_id") + col("r") * 10000000L).as("doc_id"),
-            when(col("r") === 0, col("text"))
-              .otherwise(array_join(expr(
-                "transform(split(text, ' '), x -> concat(x, '_r', r))"),
-                " ")).as("text"),
-            col("lang"), col("source"))
-          .withColumn("n_chars", length(col("text")))
-          .select(col("doc_id"), col("text"), col("lang"), col("source"),
-            col("n_chars"))
-          .repartition(8)
-        out.write.mode("overwrite").parquet(outDir)
-        println(s"[scratch] gen10x: wrote ${spark.read.parquet(outDir).count()} docs to $outDir")
       case _ =>
-        println("usage: Scratch explain|time|profile|dump|gen10x ...")
+        println("usage: Scratch explain|time|profile|dump ...")
     }
     spark.stop()
   }

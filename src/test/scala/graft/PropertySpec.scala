@@ -201,14 +201,8 @@ class PropertySpec extends SparkSpec {
     check("sdiv", sdiv, cases(signedBig, pos), asDec)
     check("sdivBigint", sdivBigint, cases(longs, pos), asDec)
     check("sdivSigned", sdivSigned, cases(signedBig, anySign), asDec)
-    check("sdivCases", sdivCases, cases(signedBig, pos), asDec)
     check("sdivSignedDiv", sdivSignedDiv, cases(longs, anySign), asDec)
-    Seq[(String, (String, String) => String)]("sdivDiv" -> sdivDiv,
-      "sdivDivCases" -> sdivDivCases, "sdivDivCasesCast" -> sdivDivCasesCast,
-      "sdivDivCasesPos" -> sdivDivCasesPos,
-      "sdivDivCasesAbs" -> sdivDivCasesAbs).foreach { case (name, f) =>
-      check(name, f, cases(longs, pos), asLong)
-    }
+    check("sdivDiv", sdivDiv, cases(longs, pos), asLong)
     check("sdivE6", sdivE6,
       cases(Gen.choose(-1000000000000L, 1000000000000L).map(BigInt(_)), pos),
       asLong, (n, d) => n * 1000000 / d)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{SparkSpec, SparkEntry, Tables, Tuning}
+import graft.{Session, SparkSpec, SparkEntry, Tables}
 import graft.plans.PlanFingerprint
 import java.nio.file.{Files, Paths}
 import org.apache.spark.graft.ListenerBridge
@@ -21,8 +21,8 @@ class QueriesSpec extends SparkSpec {
   }
 
   test("every declared query runs and every oracle key exists in queries") {
-    // Each query runs to the noop sink as Bench does (count() would let
-    // Catalyst prune columns), and its plans must match the committed
+    // Each query runs through Bench's Session.run (noop sink; count() would
+    // let Catalyst prune columns), and its plans must match the committed
     // manifest: per query, the md5 of its oracle SQL and the sorted
     // multiset of analyzed-plan fingerprints of EVERY plan it executes,
     // build-time checkpoint/observe/collect jobs included. A refactor
@@ -43,8 +43,7 @@ class QueriesSpec extends SparkSpec {
     spark.listenerManager.register(listener)
     val observed = try SparkEntry.queries.toSeq.sortBy(_._1).map {
       case (name, q) =>
-        Tuning.reset(spark)
-        q(spark, sfDir).write.format("noop").mode("overwrite").save()
+        Session.run(spark)(q(spark, sfDir)).get
         assert(ListenerBridge.waitUntilEmpty(spark.sparkContext, 60000L),
           s"$name: listener bus did not drain")
         val fps = Iterator.continually(plans.poll()).takeWhile(_ != null)

@@ -45,12 +45,4 @@ class LoadPipelineSpec extends SparkSpec {
     assert(got.map(_.getString(1)).toSeq === Seq("line-11", "line-12", "line-13"))
     assert(got.head.getLong(0) === 11L)
   }
-
-  test("Session.build wires extensions, dialect, and AQE") {
-    // The shared test session already exists; build() must return a session
-    // with our function dialect and AQE posture without erroring.
-    val s = graft.Session.build(graft.Session.EngineConf(cores = 4))
-    assert(s.conf.get("spark.sql.adaptive.enabled") === "true")
-    assert(s.sql("SELECT len('xy ')").collect()(0).getInt(0) === 2)
-  }
 }
