@@ -66,11 +66,13 @@ object Session {
 
   /** Run one query the way every harness does. Resets [[Tuning]] first (a
     * query's `cpuDenseShuffles` must never leak into the next), times the
-    * build plus the sink, and after the clock stops releases every RDD the
-    * query pinned (an eager localCheckpoint registers as persistent), so
-    * later queries never pay for earlier ones' state — also when the build
-    * or the sink throws. A failure is returned with its elapsed time, not
-    * thrown: callers decide whether an early abort may count.
+    * build plus the sink, and after the clock stops drops every cached
+    * plan (else the next identical plan reuses it, blocks released) and
+    * every RDD the query pinned (an eager localCheckpoint registers as
+    * persistent), so later queries never pay for earlier ones' state —
+    * also when the build or the sink throws. A failure is returned with
+    * its elapsed time, not thrown: callers decide whether an early abort
+    * may count.
     */
   def run(spark: SparkSession, sink: DataFrame => Unit = noop)(
       build: => DataFrame): Run = {
@@ -79,8 +81,11 @@ object Session {
     try {
       val error = try { sink(build); None } catch { case e: Throwable => Some(e) }
       Run((System.nanoTime() - t0) / 1e9, error)
-    } finally spark.sparkContext.getPersistentRDDs.values
-      .foreach(org.apache.spark.graft.StorageBridge.release)
+    } finally {
+      spark.catalog.clearCache()
+      spark.sparkContext.getPersistentRDDs.values
+        .foreach(org.apache.spark.graft.StorageBridge.release)
+    }
   }
 
   /** The entries whose name contains any of the comma-separated filters,

@@ -16,6 +16,7 @@ import org.apache.spark.sql.functions._
   *  - vw_query_step_details              ← QueryJournal.stepDetails
   *  - vw_sql_requests                    ← QueryJournal.sqlRequests (per-task
   *    ≈ per-distribution request map, microsoft.vw_sql_requests.sql:60-79)
+  *  - vw_plan_findings                   ← QueryJournal.findings (PlanLint)
   *  - vw_query_queue                     ← Wlm.queueJournal
   *  - vw_query_slots                     ← Wlm.slotsView
   *    (microsoft.vw_query_slots.sql:30-33)
@@ -44,6 +45,7 @@ final class MonitoringViews(spark: SparkSession, journal: QueryJournal,
     journal.steps.createOrReplaceTempView("vw_query_steps")
     journal.stepDetails.createOrReplaceTempView("vw_query_step_details")
     journal.sqlRequests.createOrReplaceTempView("vw_sql_requests")
+    journal.findings.createOrReplaceTempView("vw_plan_findings")
     wlm.foreach { w =>
       w.resourceWaits.createOrReplaceTempView("vw_query_queue")
       w.slotsView.createOrReplaceTempView("vw_query_slots")

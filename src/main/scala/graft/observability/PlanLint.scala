@@ -43,13 +43,28 @@ object PlanLint {
 
   final case class Finding(rule: String, severity: String, detail: String)
 
-  /** One journaled finding (top-level: Spark encoders cannot instantiate
-    * inner case classes).
-    */
-  final case class FindingRow(action: String, rule: String, severity: String,
-    detail: String)
-
   val MaxShuffles = 8
+
+  /** The funnel rule's floor, as [[QueryJournal]] applies it to every
+    * executed query: 1000 rows, below |documents| (5,000 at sf0.1) so the
+    * CORPUS axis is gated, not just the fact/event axes — the r7 floor of
+    * 10k was blind to every per-document window. Post-rollup report
+    * windows are ≤ a few hundred rows at bench scale, so 1k stays
+    * false-positive-free.
+    */
+  val FunnelMinRows = 1000L
+
+  /** The task-skew gate's floors ([[taskSkew]]'s defaults), calibrated on
+    * the full sf0.1 bench: a stage whose max task reads >= SkewMinRows
+    * shuffle rows AND >= SkewRatio x the others' mean is one hot key
+    * owning the stream. Byte floor: below it, row imbalance is the AQE
+    * coalescer packing byte-small map outputs, not a hot key (a hot key is
+    * the one thing coalescing can't split, so it exceeds the advisory size
+    * at scale).
+    */
+  val SkewMinRows = 20000L
+  val SkewRatio = 8.0
+  val SkewMinBytes = 32L * 1024 * 1024
 
   def lint(df: DataFrame): Seq[Finding] = lintPlan(df.queryExecution.executedPlan)
 
@@ -197,6 +212,51 @@ object PlanLint {
       }
   }
 
+  /** Runtime shuffle-skew rule — the task-grain complement to
+    * [[windowFunnels]] (reference: the sqlops monitoring scripts'
+    * data-skew checks over distribution-incompatible joins; here measured
+    * from real task metrics, not catalog heuristics). A plan can partition
+    * "correctly" and still die at 100 TB when one key owns the stream — a
+    * window keyed by a low-cardinality axis, a join on a hot key the AQE
+    * skew rule didn't split (it only handles sort-merge sides), an
+    * exploded-array hotspot. None of that is visible in plan SHAPE; it is
+    * visible in the spread of shuffle-read rows across a stage's tasks.
+    *
+    * Over the journal's task rows (those that reported metrics), grouped
+    * by stage, this reports every stage whose max task met `minRows` AND
+    * exceeded `ratio` × the mean of the OTHER tasks (the plain mean
+    * includes the hot task itself, which halves the measured ratio on
+    * narrow stages) — both conditions, so tiny-but-lumpy report stages and
+    * big-but-even fact scans stay quiet. Single-task stages are skipped: a
+    * deliberate single-partition merge (TakeOrdered final, scalar rollup)
+    * has no "spread", and corpus-sized single-task funnels are
+    * [[windowFunnels]]'s rule.
+    *
+    * `minBytes` separates hot keys from AQE coalescing artifacts: the
+    * coalescer packs byte-SMALL map outputs into few tasks, so a
+    * byte-tiny stage can show an extreme row ratio that means nothing at
+    * scale (the first full-bench run flagged two unique-key stages whose
+    * "skew" was 1 MB of coalesced longs), while a genuinely hot key is
+    * the one thing coalescing can never split — it exceeds the advisory
+    * partition size by construction. Pass 0 to disable the byte floor
+    * (tests with synthetic byte-tiny fixtures).
+    */
+  def taskSkew(tasks: Seq[QueryJournal.TaskRow], minRows: Long = SkewMinRows,
+      ratio: Double = SkewRatio, minBytes: Long = SkewMinBytes): Seq[Finding] =
+    tasks.flatMap(t => t.shuffleRead.map(t.request.step_index -> _))
+      .groupMap(_._1)(_._2).toSeq.sortBy(_._1).flatMap { case (stage, reads) =>
+        val rows = reads.map(_._1)
+        val (n, mx, mxB) = (rows.size, rows.max, reads.map(_._2).max)
+        val restMean =
+          math.max(1.0, (rows.sum - mx).toDouble / math.max(1, n - 1))
+        Option.when(n >= 2 && mx >= minRows && mxB >= minBytes &&
+            mx.toDouble >= ratio * restMean)(Finding("task-skew", "warn",
+          s"stage $stage: max task read $mx shuffle rows ($mxB bytes) " +
+            s"vs ${restMean.toLong} mean across the other ${n - 1} tasks — " +
+            "one key owns the stream; salt it, bucket it, or move the hot " +
+            "group through the two-level device"))
+      }
+
   /** All nodes including those inside AQE-wrapped subtrees. */
   private def collectAll(p: SparkPlan): Seq[SparkPlan] = {
     val here = p match {
@@ -213,54 +273,5 @@ object PlanLint {
   def asFrame(spark: SparkSession, df: DataFrame): DataFrame = {
     import spark.implicits._
     lint(df).toDF("rule", "severity", "detail")
-  }
-}
-
-/** Continuous lint: a QueryExecutionListener that lints EVERY query the
-  * session executes (the listener is the one Spark hook that hands over the
-  * real QueryExecution, unlike the event-bus SparkPlanInfo skeleton) and
-  * journals findings per action, surfaced as `vw_plan_findings` next to the
-  * QueryJournal's DMV analogs — the always-on version of the reference's
-  * run-the-monitoring-scripts-nightly workflow.
-  */
-final class PlanLintJournal(spark: SparkSession) {
-  import java.util.concurrent.ConcurrentLinkedQueue
-  import PlanLint.FindingRow
-
-  private val buf = new ConcurrentLinkedQueue[FindingRow]()
-
-  private val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-    override def onSuccess(funcName: String,
-        qe: org.apache.spark.sql.execution.QueryExecution,
-        durationNs: Long): Unit =
-      PlanLint.lintPlan(qe.executedPlan).foreach(f =>
-        buf.add(FindingRow(funcName, f.rule, f.severity, f.detail)): Unit)
-    override def onFailure(funcName: String,
-        qe: org.apache.spark.sql.execution.QueryExecution,
-        error: Exception): Unit = onSuccess(funcName, qe, 0L)
-  }
-
-  def start(): this.type = {
-    spark.listenerManager.register(listener); this
-  }
-  def stop(): Unit = spark.listenerManager.unregister(listener)
-
-  /** Drain the shared listener bus so `findings` reflects finished actions. */
-  def flush(): Unit = {
-    org.apache.spark.graft.ListenerBridge.waitUntilEmpty(
-      spark.sparkContext, 10000L): Unit
-  }
-
-  def findings: DataFrame = {
-    import spark.implicits._
-    val rows = buf.iterator()
-    val out = scala.collection.mutable.ArrayBuffer.empty[FindingRow]
-    while (rows.hasNext) out += rows.next()
-    out.toSeq.toDF("action", "rule", "severity", "detail")
-  }
-
-  /** Register the findings view under the monitoring-view convention. */
-  def registerView(): Unit = {
-    findings.createOrReplaceTempView("vw_plan_findings")
   }
 }

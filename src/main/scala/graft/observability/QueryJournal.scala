@@ -2,10 +2,13 @@ package graft.observability
 
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import scala.jdk.CollectionConverters._
+import scala.reflect.runtime.universe.TypeTag
 
 /** Request/step/data-movement journal — the engine's observability layer
   * standing in for the reference's DMV surface (SURVEY.md §3.1):
@@ -22,6 +25,12 @@ import scala.jdk.CollectionConverters._
   * description. Local properties are thread-local, so the label is captured
   * from the event payloads (SQLExecutionStart.description, JobStart
   * properties) rather than read back on the listener thread.
+  *
+  * The engine's one observer (its only SparkListener and
+  * QueryExecutionListener): plan-lint findings and per-task shuffle reads
+  * are rows here too, so Bench's lint gates, `Scratch profile` and the
+  * monitoring views all read it. A harness that calls [[handover]] once
+  * per query keeps it bounded.
   */
 object QueryJournal {
   final case class RequestRow(request_id: Long, label: String, status: String,
@@ -41,14 +50,28 @@ object QueryJournal {
       error_id: String, start_time: java.sql.Timestamp,
       end_time: java.sql.Timestamp, total_elapsed_time: Long,
       row_count: Long, spid: Long, command: String)
+
+  /** A task's request row and shuffle (rows, bytes) read, if it had metrics. */
+  final case class TaskRow(request: SqlRequestRow, shuffleRead: Option[(Long, Long)])
+
+  /** A plan-lint finding of one executed action (e.g. "collect"). */
+  final case class FindingRow(action: String, rule: String, severity: String,
+    detail: String)
+
+  /** The rows since the previous handover; if the bus did not drain, late
+    * events of these queries arrive with the next one.
+    */
+  final case class Handover(drained: Boolean, requests: Seq[RequestRow],
+      steps: Seq[StepRow], tasks: Seq[TaskRow], findings: Seq[FindingRow])
 }
 
 final class QueryJournal(spark: SparkSession) {
-  import QueryJournal.{RequestRow, SqlRequestRow, StepRow}
+  import QueryJournal._
 
   private val requestsBuf = new ConcurrentLinkedQueue[RequestRow]()
   private val stepsBuf = new ConcurrentLinkedQueue[StepRow]()
-  private val sqlReqBuf = new ConcurrentLinkedQueue[SqlRequestRow]()
+  private val tasksBuf = new ConcurrentLinkedQueue[TaskRow]()
+  private val findingsBuf = new ConcurrentLinkedQueue[FindingRow]()
   private val execStarts = new ConcurrentHashMap[Long, (String, Long)]()
   private val stageLabels = new ConcurrentHashMap[Int, String]()
   private val stageNames = new ConcurrentHashMap[Int, String]()
@@ -77,10 +100,11 @@ final class QueryJournal(spark: SparkSession) {
           a(1).addAndGet(m.diskBytesSpilled)
           a(2).addAndGet(m.shuffleWriteMetrics.bytesWritten): Unit
         }
-        val rows = Option(te.taskMetrics)
-          .map(m => m.inputMetrics.recordsRead +
-            m.shuffleReadMetrics.recordsRead).getOrElse(0L)
-        sqlReqBuf.add(SqlRequestRow(
+        val shuffleRead = Option(te.taskMetrics).map(m =>
+          (m.shuffleReadMetrics.recordsRead, m.shuffleReadMetrics.totalBytesRead))
+        val rows = Option(te.taskMetrics).fold(0L)(_.inputMetrics.recordsRead) +
+          shuffleRead.fold(0L)(_._1)
+        tasksBuf.add(TaskRow(SqlRequestRow(
           stageLabels.getOrDefault(te.stageId, ""),
           te.stageId, ti.executorId, ti.index,
           if (ti.successful) "Complete" else "Failed",
@@ -91,7 +115,7 @@ final class QueryJournal(spark: SparkSession) {
           new java.sql.Timestamp(ti.launchTime),
           new java.sql.Timestamp(ti.finishTime),
           ti.duration, rows, ti.taskId,
-          stageNames.getOrDefault(te.stageId, "")))
+          stageNames.getOrDefault(te.stageId, "")), shuffleRead))
       }
     }
 
@@ -125,37 +149,74 @@ final class QueryJournal(spark: SparkSession) {
     }
   }
 
+  /** Continuous lint: the QueryExecutionListener is the one Spark hook
+    * that hands over the real QueryExecution (the event bus carries only a
+    * SparkPlanInfo skeleton), so every executed query is linted here —
+    * the always-on version of the reference's run-the-monitoring-scripts-
+    * nightly workflow. A failed query gets the static rules; a finished one
+    * also gets the runtime funnel rule, whose metrics only it has. A rule
+    * that throws drops its findings, never the query.
+    */
+  private val lintListener = new QueryExecutionListener {
+    private def record(funcName: String, rule: => Seq[PlanLint.Finding]): Unit =
+      (try rule catch { case _: Throwable => Seq.empty }).foreach(f =>
+        findingsBuf.add(FindingRow(funcName, f.rule, f.severity, f.detail)): Unit)
+    override def onSuccess(funcName: String, qe: QueryExecution,
+        durationNs: Long): Unit = {
+      record(funcName, PlanLint.lintPlan(qe.executedPlan))
+      record(funcName,
+        PlanLint.windowFunnels(qe.executedPlan, PlanLint.FunnelMinRows))
+    }
+    override def onFailure(funcName: String, qe: QueryExecution,
+        error: Exception): Unit =
+      record(funcName, PlanLint.lintPlan(qe.executedPlan))
+  }
+
   def start(): this.type = {
     spark.sparkContext.addSparkListener(listener)
+    spark.listenerManager.register(lintListener)
     this
   }
 
-  def stop(): Unit = spark.sparkContext.removeSparkListener(listener)
+  def stop(): Unit = {
+    spark.listenerManager.unregister(lintListener)
+    spark.sparkContext.removeSparkListener(listener)
+  }
 
   /** Listener delivery is async: block until the bus has drained (a fixed
-    * sleep silently misses recently finished queries under load).
+    * sleep silently misses recently finished queries under load); false
+    * if it did not within 10 s.
     */
-  def flush(): Unit =
+  def flush(): Boolean =
     org.apache.spark.graft.ListenerBridge.waitUntilEmpty(
       spark.sparkContext, 10000L)
 
-  def requests: DataFrame = {
-    import spark.implicits._
-    flush(); requestsBuf.asScala.toSeq.toDF()
+  /** Drain the bus, then hand over, and forget, every row recorded since
+    * the previous handover.
+    */
+  def handover(): Handover = {
+    def take[T](q: ConcurrentLinkedQueue[T]): Seq[T] =
+      Iterator.continually(q.poll()).takeWhile(_ != null).toSeq
+    val drained = flush()
+    Handover(drained, take(requestsBuf), take(stepsBuf), take(tasksBuf),
+      take(findingsBuf))
   }
 
-  def steps: DataFrame = {
+  private def snapshot[T <: Product : TypeTag](rows: => Iterable[T]): DataFrame = {
     import spark.implicits._
-    flush(); stepsBuf.asScala.toSeq.toDF()
+    flush(); rows.toSeq.toDF()
   }
+
+  def requests: DataFrame = snapshot(requestsBuf.asScala)
+  def steps: DataFrame = snapshot(stepsBuf.asScala)
 
   /** Per-distribution request map ≈ sys.dm_pdw_sql_requests: one row per
     * task, with the reference view's column names (vw_sql_requests).
     */
-  def sqlRequests: DataFrame = {
-    import spark.implicits._
-    flush(); sqlReqBuf.asScala.toSeq.toDF()
-  }
+  def sqlRequests: DataFrame = snapshot(tasksBuf.asScala.map(_.request))
+
+  /** Every executed query's plan-lint findings (vw_plan_findings). */
+  def findings: DataFrame = snapshot(findingsBuf.asScala)
 
   /** Per-node scratch-space widget ≈ TempdbConsumption.sql (reference:
     * samples/sqlops/MonitoringScripts/TempdbConsumption.sql:1-8): the
@@ -164,23 +225,15 @@ final class QueryJournal(spark: SparkSession) {
     * objects) plus spill files (internal objects) written to executor-local
     * disk. Reference column shape exactly.
     */
-  def tempdbConsumption: DataFrame = {
-    import spark.implicits._
-    flush()
-    nodeScratch.asScala.toSeq
-      .map { case (exec, a) => (exec, (a(1).get() + a(2).get()) / 1024L) }
-      .toDF("pdw_node_id", "Tempdb_Space_Allocated_KB")
-  }
+  def tempdbConsumption: DataFrame = snapshot(nodeScratch.asScala
+    .map { case (exec, a) => (exec, (a(1).get() + a(2).get()) / 1024L) })
+    .toDF("pdw_node_id", "Tempdb_Space_Allocated_KB")
 
   /** Engine-shaped spill detail behind [[tempdbConsumption]]. */
-  def spillDetail: DataFrame = {
-    import spark.implicits._
-    flush()
-    nodeScratch.asScala.toSeq
-      .map { case (exec, a) => (exec, a(0).get(), a(1).get(), a(2).get()) }
-      .toDF("pdw_node_id", "memory_bytes_spilled", "disk_bytes_spilled",
-        "shuffle_write_bytes")
-  }
+  def spillDetail: DataFrame = snapshot(nodeScratch.asScala
+    .map { case (exec, a) => (exec, a(0).get(), a(1).get(), a(2).get()) })
+    .toDF("pdw_node_id", "memory_bytes_spilled", "disk_bytes_spilled",
+      "shuffle_write_bytes")
 
   /** Data-movement summary per label ≈ DMS worker rollup. */
   def stepDetails: DataFrame = {

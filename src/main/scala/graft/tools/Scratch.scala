@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.Session
+import graft.observability.QueryJournal
 
 /** Local profiling / plan-audit scratchpad (not part of the library
   * surface). Usage: runMain graft.tools.Scratch explain|profile|time|dump
@@ -25,37 +26,21 @@ object Scratch {
         }
       case "profile" :: names =>
         // Per-query cost breakdown: Catalyst phase times (planning tracker)
-        // plus one row per stage — tasks, wall, summed executor run time,
+        // plus the journal's row per stage — tasks, wall, summed task time,
         // shuffle read/write — so "slow" decomposes into plan/driver vs
         // single-task map stages vs real shuffle volume.
+        val journal = new QueryJournal(spark).start()
         queries(names).foreach { case (full, fn) =>
           // warm run: JIT + codegen cache, matches the bench's min-of-2
           Session.run(spark)(fn(spark, sfDir)).get
-          val stages = new java.util.concurrent.ConcurrentLinkedQueue[
-            (Int, String, Int, Long, Long, Long, Long)]()
-          val listener = new org.apache.spark.scheduler.SparkListener {
-            override def onStageCompleted(
-                sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-              val si = sc.stageInfo
-              val m = si.taskMetrics
-              stages.add((si.stageId,
-                si.name.split('\n').head.take(60), si.numTasks,
-                si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L),
-                m.executorRunTime,
-                m.shuffleReadMetrics.totalBytesRead,
-                m.shuffleWriteMetrics.bytesWritten)): Unit
-            }
-          }
-          spark.sparkContext.addSparkListener(listener)
+          journal.handover()
           var df: org.apache.spark.sql.DataFrame = null
           var tBuilt = 0L
           val t0 = System.nanoTime()
           val profiled = Session.run(spark, { built =>
             df = built; tBuilt = System.nanoTime(); Session.noop(built)
           })(fn(spark, sfDir))
-          org.apache.spark.graft.ListenerBridge
-            .waitUntilEmpty(spark.sparkContext, 5000L): Unit
-          spark.sparkContext.removeSparkListener(listener)
+          val h = journal.handover()
           profiled.get
           println(s"===== $full =====")
           println(f"[profile] build ${(tBuilt - t0) / 1e9}%.3f s, " +
@@ -64,15 +49,21 @@ object Scratch {
           ph.foreach { case (p, t) =>
             println(f"[profile]   phase $p%-16s ${(t.endTimeMs - t.startTimeMs) / 1e3}%.3f s")
           }
-          import scala.jdk.CollectionConverters._
-          val ss = stages.asScala.toSeq.sortBy(_._1)
+          val taskMs = h.tasks.groupMapReduce(_.request.step_index)(
+            _.request.total_elapsed_time)(_ + _)
+          val ss = h.steps.sortBy(_.stage_id)
           println(f"[profile] ${ss.size} stages, " +
-            f"${ss.map(_._4).sum / 1e3}%.3f s stage wall (overlaps ok)")
-          ss.foreach { case (id, nm, nt, wall, run, sr, sw) =>
-            println(f"[profile]   stage $id%4d $nt%4d tasks wall ${wall / 1e3}%6.3f" +
-              f" run ${run / 1e3}%7.3f  sRead ${sr / 1e6}%7.1fMB sWrite ${sw / 1e6}%7.1fMB  $nm")
+            f"${ss.map(_.duration_ms).sum / 1e3}%.3f s stage wall (overlaps ok)")
+          ss.foreach { s =>
+            val run = taskMs.getOrElse(s.stage_id, 0L)
+            val nm = s.name.split('\n').head.take(60)
+            println(f"[profile]   stage ${s.stage_id}%4d ${s.n_tasks}%4d tasks" +
+              f" wall ${s.duration_ms / 1e3}%6.3f run ${run / 1e3}%7.3f" +
+              f"  sRead ${s.shuffle_read_bytes / 1e6}%7.1fMB" +
+              f" sWrite ${s.shuffle_write_bytes / 1e6}%7.1fMB  $nm")
           }
         }
+        journal.stop()
       case "dump" :: outDir :: suffix :: names =>
         // Write .explain("formatted") of each query to <outDir>/<name>_<suffix>.txt
         // (the round's plan-artifact contract: plans/r08/<q>_before.txt / _after.txt).

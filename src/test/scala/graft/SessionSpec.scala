@@ -1,7 +1,8 @@
 package graft
 
 /** The one per-query run (`Session.run`) every harness times: the tuning
-  * reset before the clock, and the release of pinned RDDs after it.
+  * reset before the clock, and the release of cached plans and pinned RDDs
+  * after it.
   */
 class SessionSpec extends SparkSpec {
 
@@ -25,6 +26,8 @@ class SessionSpec extends SparkSpec {
     }
     assert(run.ok && run.seconds >= 0)
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "a cached plan outlives the run")
   }
 
   test("pinned RDDs are released when the sink or the build throws") {

@@ -82,13 +82,13 @@ class PlanLintSpec extends SparkSpec {
   }
 
   test("the continuous lint journal records offenders per executed action") {
-    val j = new PlanLintJournal(spark).start()
+    val j = new QueryJournal(spark).start()
     try {
       Tables.lineitem(spark, sfDir).orderBy(col("l_shipdate")).collect()
       j.flush()
       val f = j.findings.filter(col("rule") === "global-sort")
       assert(f.count() >= 1, "the executed global sort must be journaled")
-      j.registerView()
+      new MonitoringViews(spark, j).registerQueryViews()
       assert(spark.sql(
         "SELECT COUNT(*) FROM vw_plan_findings WHERE rule = 'global-sort'")
         .collect()(0).getLong(0) >= 1)
