@@ -183,18 +183,22 @@ object Text {
   /** Mersenne prime 2^61-1: modulus of the universal hash family below. */
   val HashP: Long = 2305843009213693951L
 
+  /** splitmix64 (Steele, Lea & Flood 2014): the one seeded 64-bit mixer
+    * behind every deterministic coefficient and matrix in `functions`.
+    */
+  def splitmix64(seed: Long): Long = {
+    var z = seed + 0x9E3779B97F4A7C15L
+    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
+    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
+    z ^ (z >>> 31)
+  }
+
   /** Deterministic (a_i, b_i) coefficients for the universal hash family
     * h_i(x) = (a_i·x32 + b_i) mod P over 32-bit inputs. a_i < 2^29 keeps the
     * product < 2^61 — exact in int64 arithmetic on both engines, no wrapping
     * multiply needed (DuckDB raises on int64 overflow rather than wrapping).
     */
   def hashFamily(k: Int): Seq[(Long, Long)] = {
-    def splitmix64(seed: Long): Long = {
-      var z = seed + 0x9E3779B97F4A7C15L
-      z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-      z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-      z ^ (z >>> 31)
-    }
     (0 until k).map { i =>
       val a = (splitmix64(2L * i) & ((1L << 29) - 1)) | 1L
       val b = splitmix64(2L * i + 1) & ((1L << 29) - 1)

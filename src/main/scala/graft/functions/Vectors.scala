@@ -34,15 +34,9 @@ object Vectors {
     * seconds).
     */
   def planeMatrix(dim: Int, planes: Int): Seq[Seq[Double]] = {
-    def splitmix64(seed: Long): Long = {
-      var z = seed + 0x9E3779B97F4A7C15L
-      z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-      z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-      z ^ (z >>> 31)
-    }
     (0 until planes).map { p =>
       (0 until dim).map { d =>
-        val h = splitmix64(p.toLong * 1000003L + d)
+        val h = Text.splitmix64(p.toLong * 1000003L + d)
         ((h & 0xFFFFFFFFL).toDouble / 4294967296.0) - 0.5
       }
     }
@@ -58,16 +52,10 @@ object Vectors {
     * constant) as [[planeMatrix]].
     */
   def sparseSignMatrix(dim: Int, planes: Int): Seq[Seq[Long]] = {
-    def splitmix64(seed: Long): Long = {
-      var z = seed + 0x9E3779B97F4A7C15L
-      z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-      z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-      z ^ (z >>> 31)
-    }
     (0 until planes).map { p =>
       (0 until dim).map { d =>
         val h = java.lang.Long.remainderUnsigned(
-          splitmix64(p.toLong * 7368787L + d + 1777771L), 6L)
+          Text.splitmix64(p.toLong * 7368787L + d + 1777771L), 6L)
         if (h == 0L) -1L else if (h == 5L) 1L else 0L
       }
     }

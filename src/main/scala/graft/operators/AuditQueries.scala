@@ -4,7 +4,7 @@ import graft.{Q, Tables}
 import graft.functions.TSql._
 import graft.functions.Exact._
 import graft.functions.Text.{log2e6DuckSql => duckL2, log2e6SparkSql => l2}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
@@ -1456,6 +1456,23 @@ object AuditQueries {
 
   // -------------------------------------- q272: Kruskal–Wallis rank test
 
+  /** Doubled mid-ranks of the order prices in `o` (g, c): returns the
+    * (g, c, n_gc) cell counts and, per distinct price c, its doubled
+    * mid-rank d = 2·below + cnt + 1 with its tie count `cnt` (q272,
+    * q295). The ranking is two-level ([[doubledRankBelow]]): order totals
+    * are nearly unique, so a single ordered window over the rollup would
+    * be one sort task at any cluster size; the oracles keep the plain
+    * formulation.
+    */
+  private def doubledMidRanks(o: DataFrame): (DataFrame, DataFrame) = {
+    val gc = o.groupBy(col("g"), col("c")).agg(count(lit(1)).as("n_gc"))
+    val byV = gc.groupBy(col("c")).agg(sum(col("n_gc")).as("cnt"))
+    val dRank = doubledRankBelow(byV, Seq.empty, "c", 100000L)
+      .select(col("c"), (lit(2L) * col("below") + col("cnt") + 1L).as("d"),
+        col("cnt"))
+    (gc, dRank)
+  }
+
   /** q272: Kruskal–Wallis H — the rank-based (distribution-free) sibling of
     * q268's ANOVA over the same design, for when order values are heavy-
     * tailed enough that mean-based F is the wrong test. Runs entirely in
@@ -1477,14 +1494,7 @@ object AuditQueries {
   val q272KruskalWallis: Q = (s, dir) => {
     val o = Tables.orders(s, dir).select(col("o_orderpriority").as("g"),
       cents(col("o_totalprice")).as("c"))
-    val gc = o.groupBy(col("g"), col("c")).agg(count(lit(1)).as("n_gc"))
-    val byV = gc.groupBy(col("c")).agg(sum(col("n_gc")).as("cnt"))
-    // two-level ranking (doubledRankBelow): order totals are nearly unique,
-    // so a single ordered window over the rollup would be one sort task at
-    // any cluster size; the oracle keeps the plain formulation
-    val dRank = doubledRankBelow(byV, Seq.empty, "c", 100000L)
-      .select(col("c"), (lit(2L) * col("below") + col("cnt") + 1L).as("d"),
-        col("cnt"))
+    val (gc, dRank) = doubledMidRanks(o)
     val scalars = dRank.agg(
       sum(col("cnt")).cast(dec).as("n_all"),
       sum(col("cnt").cast(dec) * col("cnt") * col("cnt") -
@@ -1675,11 +1685,7 @@ object AuditQueries {
     val o = Tables.orders(s, dir)
       .filter(col("o_orderpriority").isin(MwArmA, MwArmB))
       .select(col("o_orderpriority").as("g"), cents(col("o_totalprice")).as("c"))
-    val gc = o.groupBy(col("g"), col("c")).agg(count(lit(1)).as("n_gc"))
-    val byV = gc.groupBy(col("c")).agg(sum(col("n_gc")).as("cnt"))
-    val dRank = doubledRankBelow(byV, Seq.empty, "c", 100000L)
-      .select(col("c"), (lit(2L) * col("below") + col("cnt") + 1L).as("d"),
-        col("cnt"))
+    val (gc, dRank) = doubledMidRanks(o)
     val scalars = dRank.agg(sum(col("cnt")).cast(dec).as("n_all"),
       sum(col("cnt").cast(dec) * col("cnt") * col("cnt") -
         col("cnt").cast(dec)).as("ties"))
@@ -2202,6 +2208,23 @@ object AuditQueries {
 
   // ------------------ q347: Mood's median test across k groups
 
+  /** Orders as (priority `g`, price cents `c`) and the one-row grand
+    * median price `med`: the lower median, selected relationally at rank
+    * ⌈n/2⌉ off [[doubledRankBelow]] (q347, q377).
+    */
+  private def ordersAndMedian(s: SparkSession,
+      dir: String): (DataFrame, DataFrame) = {
+    val o = Tables.orders(s, dir)
+      .select(col("o_orderpriority").as("g"), cents(col("o_totalprice")).as("c"))
+    val byV = o.groupBy(col("c")).agg(count(lit(1)).as("cnt"))
+    val nTot = byV.agg(sum(col("cnt")).as("n"))
+    val med = doubledRankBelow(byV, Seq.empty, "c", 100000L)
+      .crossJoin(broadcast(nTot))
+      .filter(col("below") + col("cnt") >= expr("(n + 1) div 2"))
+      .agg(min(col("c")).as("med"))
+    (o, med)
+  }
+
   /** q347: Mood's median test — the COUNTS-ONLY k-group location test:
     * split every order at the grand median price and ask whether the five
     * priorities land above it at the same rate (a 2×k chi-square on
@@ -2222,14 +2245,7 @@ object AuditQueries {
     * rollup; a 5-row fold with broadcast scalars ends it.
     */
   val q347MoodMedian: Q = (s, dir) => {
-    val o = Tables.orders(s, dir)
-      .select(col("o_orderpriority").as("g"), cents(col("o_totalprice")).as("c"))
-    val byV = o.groupBy(col("c")).agg(count(lit(1)).as("cnt"))
-    val nTot = byV.agg(sum(col("cnt")).as("n"))
-    val med = doubledRankBelow(byV, Seq.empty, "c", 100000L)
-      .crossJoin(broadcast(nTot))
-      .filter(col("below") + col("cnt") >= expr("(n + 1) div 2"))
-      .agg(min(col("c")).as("med"))
+    val (o, med) = ordersAndMedian(s, dir)
     val byG = o.crossJoin(broadcast(med))
       .groupBy(col("g"))
       .agg(count(lit(1)).cast(dec).as("n_g"),
@@ -2279,6 +2295,25 @@ object AuditQueries {
 
   // ------------- q391: Taylor's power law across part demand
 
+  /** The least-squares line through per-part log₂ points `pp` (DECIMAL
+    * x, y at e6): n_parts, the slope at e6 named `slope` (one signed
+    * floor over exact sums) and r2_d, one fixed IEEE tree.
+    */
+  private def logLogFit(pp: DataFrame, slope: String): DataFrame = {
+    val sums = pp.agg(count(lit(1)).cast(dec).as("n"),
+      sum(col("x")).as("sx"), sum(col("y")).as("sy"),
+      sum(col("x") * col("x")).as("sxx"), sum(col("y") * col("y")).as("syy"),
+      sum(col("x") * col("y")).as("sxy"))
+    def c(ab: String, a: String, b: String) =
+      (col("n") * col(ab) - col(a) * col(b)).cast("double")
+    val r2 = (c("sxy", "sx", "sy") * c("sxy", "sx", "sy")) /
+      (c("sxx", "sx", "sx") * c("syy", "sy", "sy"))
+    sums.select(col("n").cast("long").as("n_parts"),
+      expr(sdivBigint("(n * sxy - sx * sy) * 1000000", "n * sxx - sx * sx"))
+        .as(slope),
+      r2.as("r2_d"))
+  }
+
   /** q391: Taylor's law — does demand variance scale as a POWER of mean
     * demand across parts (V = a·m^b)? The ecology-famous scaling law is
     * the right aggregate view where q179's per-segment VMR reads one
@@ -2306,18 +2341,7 @@ object AuditQueries {
       .select(
         expr(s"CAST(${l2("CAST(m_e6 AS BIGINT)")} AS DECIMAL(38,0))").as("x"),
         expr(s"CAST(${l2("CAST(v_e6 AS BIGINT)")} AS DECIMAL(38,0))").as("y"))
-    val sums = pp.agg(count(lit(1)).cast(dec).as("n"),
-      sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-      sum(col("x") * col("x")).as("sxx"), sum(col("y") * col("y")).as("syy"),
-      sum(col("x") * col("y")).as("sxy"))
-    def c(ab: String, a: String, b: String) =
-      (col("n") * col(ab) - col(a) * col(b)).cast("double")
-    val r2 = (c("sxy", "sx", "sy") * c("sxy", "sx", "sy")) /
-      (c("sxx", "sx", "sx") * c("syy", "sy", "sy"))
-    sums.select(col("n").cast("long").as("n_parts"),
-      expr(sdivBigint("(n * sxy - sx * sy) * 1000000", "n * sxx - sx * sx"))
-        .as("taylor_b_e6"),
-      r2.as("r2_d"))
+    logLogFit(pp, "taylor_b_e6")
   }
 
   val q391Sql: String = {
@@ -2956,27 +2980,12 @@ object AuditQueries {
     */
   val ClMaxDev = 8
 
-  /** q418: the chain-ladder method — actuarial run-off projection
-    * applied to the order→ship revenue flow: order-year cohorts
-    * develop as their lineitems ship in later years, the
-    * volume-weighted development factors f_k = ΣC_{i,k+1}/ΣC_{i,k}
-    * (computed ONLY from cells a reserver standing at the latest
-    * order year could see — i + k ≤ Y) project each cohort's
-    * ultimate. Because this dataset is COMPLETE, the projection is a
-    * BACKTEST: the masked lower triangle is projected, then compared
-    * against the actual ultimates in-output (err_e6 per cohort) — the
-    * operator certifies its own accuracy, the q374 convention. The
-    * per-cohort factor product unrolls over the plan-time
-    * [[ClMaxDev]] ladder (one e6 floor per applied factor, identity
-    * 10⁶ padding), so no recursion is needed anywhere.
-    *
-    * Plan: one fact-orders join (the one real shuffle) → (cohort,
-    * dev) rollup → dense 7×8 grid windows PARTITIONED by cohort →
-    * metadata folds.
+  /** The run-off triangle q418 and q462 project from: revenue cents `v`
+    * per (order year `oy`, development year `dev` = ship year − oy ≥ 0),
+    * pinned.
     */
-  val q418ChainLadder: Q = (s, dir) => {
-    import org.apache.spark.sql.expressions.Window
-    val cells = Tables.lineitem(s, dir)
+  private def runOffCells(s: SparkSession, dir: String): DataFrame =
+    Tables.lineitem(s, dir)
       .join(Tables.orders(s, dir).select(col("o_orderkey"),
         year(col("o_orderdate")).as("oy")),
         col("l_orderkey") === col("o_orderkey"))
@@ -2985,10 +2994,20 @@ object AuditQueries {
       .groupBy(col("oy"), col("dev"))
       .agg(sum(cents(col("l_extendedprice"))).as("v"))
       .localCheckpoint()
+
+  /** Chain-ladder development of [[runOffCells]] `cells`, given the
+    * one-row `maxY` (max_y, the latest order year, plus any columns the
+    * caller needs later). Returns (cum, fRow): `cum` holds the cumulative
+    * cents `c` and the next development year's `cn` per (oy, dev) on the
+    * dense [[ClMaxDev]] spine, crossed with `maxY`, and is pinned; `fRow`
+    * is the one-row volume-weighted age-to-age factors f_0.. at e6 (10⁶
+    * where no cohort developed).
+    */
+  private def chainLadder(s: SparkSession, cells: DataFrame,
+      maxY: DataFrame): (DataFrame, DataFrame) = {
     val years = cells.select(col("oy")).distinct().localCheckpoint()
-    val maxY = cells.agg(max(col("oy")).as("max_y"))
-    val devSpine = s.range(0L, ClMaxDev.toLong).select(col("id").cast("int")
-      .as("dev"))
+    val devSpine = s.range(0L, ClMaxDev.toLong)
+      .select(col("id").cast("int").as("dev"))
     val dense = years.crossJoin(broadcast(devSpine))
       .join(cells, Seq("oy", "dev"), "left")
       .select(col("oy"), col("dev"), coalesce(col("v"), lit(0L)).as("v"))
@@ -3013,6 +3032,31 @@ object AuditQueries {
     val fRow = factors.agg(fArm.head, fArm.tail: _*)
       .select((0 until ClMaxDev).map(k =>
         coalesce(col(s"f_$k"), lit(1000000L)).as(s"f_$k")): _*)
+    (cum, fRow)
+  }
+
+  /** q418: the chain-ladder method — actuarial run-off projection
+    * applied to the order→ship revenue flow: order-year cohorts
+    * develop as their lineitems ship in later years, the
+    * volume-weighted development factors f_k = ΣC_{i,k+1}/ΣC_{i,k}
+    * (computed ONLY from cells a reserver standing at the latest
+    * order year could see — i + k ≤ Y) project each cohort's
+    * ultimate. Because this dataset is COMPLETE, the projection is a
+    * BACKTEST: the masked lower triangle is projected, then compared
+    * against the actual ultimates in-output (err_e6 per cohort) — the
+    * operator certifies its own accuracy, the q374 convention. The
+    * per-cohort factor product unrolls over the plan-time
+    * [[ClMaxDev]] ladder (one e6 floor per applied factor, identity
+    * 10⁶ padding), so no recursion is needed anywhere.
+    *
+    * Plan: one fact-orders join (the one real shuffle) → (cohort,
+    * dev) rollup → dense 7×8 grid windows PARTITIONED by cohort →
+    * metadata folds.
+    */
+  val q418ChainLadder: Q = (s, dir) => {
+    val cells = runOffCells(s, dir)
+    val (cum, fRow) =
+      chainLadder(s, cells, cells.agg(max(col("oy")).as("max_y")))
     val latest = cum.filter(col("dev") === col("max_y") - col("oy"))
       .select(col("oy"), col("dev").as("latest_dev"), col("c").as("latest_c"))
     val actual = cum.groupBy(col("oy")).agg(max(col("c")).as("actual_ult"))
@@ -3099,6 +3143,16 @@ object AuditQueries {
 
   // ----- q422: OLS influence diagnostics (leverage + Cook's D)
 
+  /** Order revenue per month `m` (year·12 + month) in thousands of units
+    * (integer cents `div 100000`), pinned — q422's and q423's series.
+    */
+  private def monthlyRevenueE3(s: SparkSession, dir: String): DataFrame =
+    Tables.orders(s, dir)
+      .select(expr("year(o_orderdate) * 12 + month(o_orderdate)").as("m"),
+        cents(col("o_totalprice")).as("c"))
+      .groupBy(col("m")).agg(expr("SUM(c) div 100000").as("y"))
+      .localCheckpoint()
+
   /** q422: regression influence diagnostics — which MONTHS drive the
     * fitted revenue trend? Every OLS in the inventory (q117, q371,
     * q391, q405) reports coefficients; none yet reports how fragile
@@ -3114,11 +3168,7 @@ object AuditQueries {
     * fold broadcast back → scoring pass → TakeOrdered(5).
     */
   val q422Influence: Q = (s, dir) => {
-    val bm = Tables.orders(s, dir)
-      .select(expr("year(o_orderdate) * 12 + month(o_orderdate)").as("m"),
-        cents(col("o_totalprice")).as("c"))
-      .groupBy(col("m")).agg(expr("SUM(c) div 100000").as("y"))
-      .localCheckpoint()
+    val bm = monthlyRevenueE3(s, dir)
     val t0 = bm.agg(min(col("m")).as("m0"))
     val pts = bm.crossJoin(broadcast(t0))
       .select(col("m"), (col("m") - col("m0") + 1L).as("t"), col("y"))
@@ -3201,11 +3251,7 @@ object AuditQueries {
     */
   val q423Segmented: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val bm = Tables.orders(s, dir)
-      .select(expr("year(o_orderdate) * 12 + month(o_orderdate)").as("m"),
-        cents(col("o_totalprice")).as("c"))
-      .groupBy(col("m")).agg(expr("SUM(c) div 100000").as("y"))
-      .localCheckpoint()
+    val bm = monthlyRevenueE3(s, dir)
     val t0 = bm.agg(min(col("m")).as("m0"))
     val w = Window.orderBy(col("t"))
       .rowsBetween(Window.unboundedPreceding, 0)
@@ -3422,6 +3468,16 @@ object AuditQueries {
 
   // ----- q429: panel fixed-effects (within) trend estimator
 
+  /** Orders joined to a broadcast of their customer's `c_nationkey`: the
+    * fact side of every per-nation order panel (q429, q435, q437, q449,
+    * q459, q481, q507, q567, q572).
+    */
+  def ordersWithNation(s: SparkSession, dir: String): DataFrame =
+    Tables.orders(s, dir)
+      .join(broadcast(Tables.customer(s, dir)
+        .select(col("c_custkey"), col("c_nationkey"))),
+        col("o_custkey") === col("c_custkey"))
+
   /** q429: the panel-data within estimator — econometrics' answer to
     * confounded trends that q117-style pooled OLS cannot separate: on
     * the (nation, month) revenue panel, the POOLED slope mixes
@@ -3437,10 +3493,7 @@ object AuditQueries {
     * per-nation fold (metadata) → 1-row estimator fold. One shuffle.
     */
   val q429FixedEffects: Q = (s, dir) => {
-    val cells = Tables.orders(s, dir)
-      .join(broadcast(Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_nationkey"))),
-        col("o_custkey") === col("c_custkey"))
+    val cells = ordersWithNation(s, dir)
       .select(col("c_nationkey").as("nat"),
         expr("year(o_orderdate) * 12 + month(o_orderdate)").as("m"),
         cents(col("o_totalprice")).as("c"))
@@ -3548,6 +3601,54 @@ object AuditQueries {
     */
   val ShiftShareBreak = "1995-07-01"
 
+  /** `pre` = 1 for an order placed before [[ShiftShareBreak]], else 0. */
+  private def prePeriod: Column =
+    (col("o_orderdate") < lit(ShiftShareBreak)).cast("long").as("pre")
+
+  /** Lineitem revenue `r` (integer cents) with l_orderkey and l_partkey,
+    * joined to its order's o_orderkey plus `orderCols`: the one
+    * lineitem ⋈ orders pass of the brand two-period family.
+    */
+  private def linesWithOrder(s: SparkSession, dir: String,
+      orderCols: Column*): DataFrame =
+    Tables.lineitem(s, dir)
+      .select(col("l_orderkey"), col("l_partkey"),
+        cents(col("l_extendedprice")).as("r"))
+      .join(Tables.orders(s, dir).select((col("o_orderkey") +: orderCols): _*),
+        col("l_orderkey") === col("o_orderkey"))
+
+  /** `lines` (with l_partkey) joined to a broadcast of part's brand. */
+  private def withBrand(s: SparkSession, dir: String,
+      lines: DataFrame): DataFrame =
+    lines.join(broadcast(Tables.part(s, dir)
+        .select(col("p_partkey"), col("p_brand"))),
+      col("l_partkey") === col("p_partkey"))
+
+  /** Revenue cents per (order month `mo`, brand): the voting table of
+    * q442 and q463, one brand ranking per month.
+    */
+  private def brandRevenueByMonth(s: SparkSession, dir: String): DataFrame =
+    withBrand(s, dir,
+        linesWithOrder(s, dir, expr("month(o_orderdate)").as("mo")))
+      .groupBy(col("mo"), col("p_brand").as("brand"))
+      .agg(sum(col("r")).as("rev"))
+
+  /** Per brand, revenue before (`x`) and after (`y`) [[ShiftShareBreak]]
+    * in thousands of cents, folded to the exact DECIMAL(38,0) moments
+    * (n, sx, sy, qxx, qyy, qxy) that q448 and q457 compare the halves by.
+    */
+  private def brandPeriodMoments(s: SparkSession, dir: String): DataFrame =
+    withBrand(s, dir, linesWithOrder(s, dir, prePeriod))
+      .groupBy(col("p_brand").as("brand"))
+      .agg(expr("SUM(CASE WHEN pre = 1 THEN r ELSE 0 END) div 1000")
+        .as("x"),
+        expr("SUM(CASE WHEN pre = 0 THEN r ELSE 0 END) div 1000").as("y"))
+      .agg(count(lit(1)).cast(dec).as("n"),
+        sum(col("x")).cast(dec).as("sx"), sum(col("y")).cast(dec).as("sy"),
+        sum(col("x").cast(dec) * col("x")).as("qxx"),
+        sum(col("y").cast(dec) * col("y")).as("qyy"),
+        sum(col("x").cast(dec) * col("y")).as("qxy"))
+
   /** q433: classical shift-share analysis — the REGIONAL-economics
     * growth decomposition next to q381's LMDI (which decomposes by
     * FACTOR, not by region): each nation's revenue change between the
@@ -3565,18 +3666,11 @@ object AuditQueries {
     * totals and the output all ride it) → metadata folds.
     */
   val q433ShiftShare: Q = (s, dir) => {
-    val cells = Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_partkey"),
-        cents(col("l_extendedprice")).as("r"))
-      .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"),
-        (col("o_orderdate") < lit(ShiftShareBreak)).cast("long").as("pre")),
-        col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_nationkey"))),
-        col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.part(s, dir)
-        .select(col("p_partkey"), col("p_brand"))),
-        col("l_partkey") === col("p_partkey"))
+    val cells = withBrand(s, dir,
+        linesWithOrder(s, dir, col("o_custkey"), prePeriod)
+          .join(broadcast(Tables.customer(s, dir)
+            .select(col("c_custkey"), col("c_nationkey"))),
+            col("o_custkey") === col("c_custkey")))
       .groupBy(col("c_nationkey").as("nat"), col("p_brand").as("brand"))
       .agg(sum(when(col("pre") === 1L, col("r")).otherwise(0L)).cast(dec)
         .as("r0"),
@@ -3650,18 +3744,15 @@ object AuditQueries {
     */
   private def brandMixCells(s: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame =
-    Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_partkey"),
-        expr("CAST(ROUND(l_quantity) AS BIGINT)").as("q"))
-      .join(Tables.orders(s, dir)
-        .select(col("o_orderkey"), col("o_custkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_nationkey"))),
-        col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.part(s, dir)
-        .select(col("p_partkey"), col("p_brand"))),
-        col("l_partkey") === col("p_partkey"))
+    withBrand(s, dir, Tables.lineitem(s, dir)
+        .select(col("l_orderkey"), col("l_partkey"),
+          expr("CAST(ROUND(l_quantity) AS BIGINT)").as("q"))
+        .join(Tables.orders(s, dir)
+          .select(col("o_orderkey"), col("o_custkey")),
+          col("l_orderkey") === col("o_orderkey"))
+        .join(broadcast(Tables.customer(s, dir)
+          .select(col("c_custkey"), col("c_nationkey"))),
+          col("o_custkey") === col("c_custkey")))
       .groupBy(col("c_nationkey").as("nat"), col("p_brand").as("brand"))
       .agg(sum(col("q")).as("q"))
 
@@ -3764,10 +3855,7 @@ object AuditQueries {
   val q435MantelTest: Q = (s, dir) => {
     val d1 = brayCurtisPairs(s, dir).select(col("na"), col("nb"),
       col("bc_e6"))
-    val aov = Tables.orders(s, dir)
-      .join(broadcast(Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_nationkey"))),
-        col("o_custkey") === col("c_custkey"))
+    val aov = ordersWithNation(s, dir)
       .groupBy(col("c_nationkey").as("nat"))
       .agg(expr("SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))" +
         " div COUNT(*)").as("aov"))
@@ -3906,24 +3994,7 @@ object AuditQueries {
     * rollup; the pair fold is metadata.
     */
   val q436OrdinalAssoc: Q = (s, dir) => {
-    val ord = Tables.orders(s, dir)
-      .select(expr("CAST(substring(o_orderpriority, 1, 1) AS BIGINT)")
-        .as("x"), cents(col("o_totalprice")).as("c"))
-    val byV = ord.groupBy(col("c")).agg(count(lit(1)).as("cnt"))
-    val ranked = doubledRankBelow(byV, Seq.empty, "c", 100000L)
-    val nAll = byV.agg(sum(col("cnt")).as("n_all"))
-    val cuts = ranked.crossJoin(broadcast(nAll))
-      .select(col("c"), col("below"), col("cnt"),
-        explode(expr("sequence(1, 4)")).as("i"))
-      .filter(col("below") < expr("(n_all * i + 4) div 5") &&
-        expr("(n_all * i + 4) div 5") <= col("below") + col("cnt"))
-      .groupBy().pivot("i", 1 to 4).agg(first(col("c")))
-      .select((1 to 4).map(i => col(i.toString).as(s"k$i")): _*)
-    val binExpr = (1 to 4).map(i => s"CAST(c > k$i AS INT)").mkString(" + ")
-    val cells = ord.crossJoin(broadcast(cuts))
-      .select(col("x"), expr(binExpr).cast("long").as("y"))
-      .groupBy(col("x"), col("y")).agg(count(lit(1)).as("n"))
-      .localCheckpoint()
+    val cells = priceQuantileCells(s, dir, "x", "y", 5, "k")
     val a = cells.select(col("x").as("xa"), col("y").as("ya"),
       col("n").as("na"))
     val b = cells.select(col("x").as("xb"), col("y").as("yb"),
@@ -4042,10 +4113,7 @@ object AuditQueries {
     * pair fold → 625-row collect → driver MM → 25-row output.
     */
   val q437BradleyTerry: Q = (s, dir) => {
-    val mn = Tables.orders(s, dir)
-      .join(broadcast(Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_nationkey"))),
-        col("o_custkey") === col("c_custkey"))
+    val mn = ordersWithNation(s, dir)
       .groupBy(col("c_nationkey").cast("long").as("nat"),
         expr("year(o_orderdate) * 12 + month(o_orderdate)").as("m"))
       .agg(sum(cents(col("o_totalprice"))).as("rev"))
@@ -4166,6 +4234,17 @@ object AuditQueries {
   /** 5% critical value for F(2, ~76) — published table constant. */
   val ChowCrit5 = 3.13
 
+  /** Order revenue per calendar month: `m` = year·12 + month of
+    * o_orderdate and `y` = the month's total in whole units (integer cents
+    * `div 100`) — the series the monthly time-series family (q438, q445,
+    * q453, q458, q473, q474, q475, q482) models.
+    */
+  def monthlyRevenue(s: SparkSession, dir: String): DataFrame =
+    Tables.orders(s, dir)
+      .groupBy(expr("year(o_orderdate) * 12 + month(o_orderdate)").as("m"))
+      .agg(expr("SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) div 100")
+        .as("y"))
+
   /** q438: the Chow test — the HYPOTHESIS-TEST counterpart of q423's
     * segmented fit: q423 PROFILES the best breakpoint, Chow asks
     * whether a break at a KNOWN date (policy change, regime start —
@@ -4180,11 +4259,7 @@ object AuditQueries {
     * folds off one checkpointed rollup. One shuffle.
     */
   val q438ChowTest: Q = (s, dir) => {
-    val cells = Tables.orders(s, dir)
-      .groupBy(expr("year(o_orderdate) * 12 + month(o_orderdate)").as("m"))
-      .agg(expr("SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) div 100")
-        .as("y"))
-      .localCheckpoint()
+    val cells = monthlyRevenue(s, dir).localCheckpoint()
     val t0 = cells.agg(min(col("m")).as("m0"))
     val pts = cells.crossJoin(broadcast(t0))
       .select((col("m") - col("m0") + 1L).as("t"), col("y"),
@@ -4464,6 +4539,35 @@ object AuditQueries {
 
   // ------ q441: Jonckheere–Terpstra ordered-alternative test
 
+  /** Orders per (priority group `g` = 1..5, price `k`-quantile bin `b` =
+    * 0..k−1) as (g, b, n), pinned: the contingency of q436 (k = 5) and of
+    * q441/q454 (k = 10). The k − 1 cutpoints (columns `cut`1..) are
+    * rank-target selections ⌈n·i/k⌉ off the two-level [[doubledRankBelow]]
+    * construction over the distinct-cents rollup.
+    */
+  private def priceQuantileCells(s: SparkSession, dir: String, g: String,
+      b: String, k: Int, cut: String): DataFrame = {
+    val ord = Tables.orders(s, dir)
+      .select(expr("CAST(substring(o_orderpriority, 1, 1) AS BIGINT)")
+        .as(g), cents(col("o_totalprice")).as("c"))
+    val byV = ord.groupBy(col("c")).agg(count(lit(1)).as("cnt"))
+    val ranked = doubledRankBelow(byV, Seq.empty, "c", 100000L)
+    val nAll = byV.agg(sum(col("cnt")).as("n_all"))
+    val cuts = ranked.crossJoin(broadcast(nAll))
+      .select(col("c"), col("below"), col("cnt"),
+        explode(expr(s"sequence(1, ${k - 1})")).as("i"))
+      .filter(col("below") < expr(s"(n_all * i + ${k - 1}) div $k") &&
+        expr(s"(n_all * i + ${k - 1}) div $k") <= col("below") + col("cnt"))
+      .groupBy().pivot("i", 1 until k).agg(first(col("c")))
+      .select((1 until k).map(i => col(i.toString).as(s"$cut$i")): _*)
+    val binExpr =
+      (1 until k).map(i => s"CAST(c > $cut$i AS INT)").mkString(" + ")
+    ord.crossJoin(broadcast(cuts))
+      .select(col(g), expr(binExpr).cast("long").as(b))
+      .groupBy(col(g), col(b)).agg(count(lit(1)).as("n"))
+      .localCheckpoint()
+  }
+
   /** q441: the Jonckheere–Terpstra test — the ORDERED-alternative
     * sibling of Kruskal–Wallis (q272): KW asks "do the five priority
     * classes differ at all in order value", JT asks the sharper
@@ -4481,24 +4585,7 @@ object AuditQueries {
     * everything after is metadata.
     */
   val q441Jonckheere: Q = (s, dir) => {
-    val ord = Tables.orders(s, dir)
-      .select(expr("CAST(substring(o_orderpriority, 1, 1) AS BIGINT)")
-        .as("g"), cents(col("o_totalprice")).as("c"))
-    val byV = ord.groupBy(col("c")).agg(count(lit(1)).as("cnt"))
-    val ranked = doubledRankBelow(byV, Seq.empty, "c", 100000L)
-    val nAll = byV.agg(sum(col("cnt")).as("n_all"))
-    val cuts = ranked.crossJoin(broadcast(nAll))
-      .select(col("c"), col("below"), col("cnt"),
-        explode(expr("sequence(1, 9)")).as("i"))
-      .filter(col("below") < expr("(n_all * i + 9) div 10") &&
-        expr("(n_all * i + 9) div 10") <= col("below") + col("cnt"))
-      .groupBy().pivot("i", 1 to 9).agg(first(col("c")))
-      .select((1 to 9).map(i => col(i.toString).as(s"c$i")): _*)
-    val binExpr = (1 to 9).map(i => s"CAST(c > c$i AS INT)").mkString(" + ")
-    val cells = ord.crossJoin(broadcast(cuts))
-      .select(col("g"), expr(binExpr).cast("long").as("b"))
-      .groupBy(col("g"), col("b")).agg(count(lit(1)).as("n"))
-      .localCheckpoint()
+    val cells = priceQuantileCells(s, dir, "g", "b", 10, "c")
     val wg = Window.partitionBy(col("g")).orderBy(col("b"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val withBelow = cells
@@ -4620,17 +4707,7 @@ object AuditQueries {
     * 25-row-per-month rank windows (bounded partitions) → 1-row fold.
     */
   val q442KendallW: Q = (s, dir) => {
-    val mb = Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_partkey"),
-        cents(col("l_extendedprice")).as("r"))
-      .join(Tables.orders(s, dir)
-        .select(col("o_orderkey"), expr("month(o_orderdate)").as("mo")),
-        col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(Tables.part(s, dir)
-        .select(col("p_partkey"), col("p_brand"))),
-        col("l_partkey") === col("p_partkey"))
-      .groupBy(col("mo"), col("p_brand").as("brand"))
-      .agg(sum(col("r")).as("rev"))
+    val mb = brandRevenueByMonth(s, dir)
     val ranked = mb.withColumn("rk",
       row_number().over(Window.partitionBy(col("mo"))
         .orderBy(col("rev").desc, col("brand"))).cast("long"))
@@ -4681,6 +4758,19 @@ object AuditQueries {
 
   // ------ q443: Cliff's delta / Vargha–Delaney A dominance panel
 
+  /** Lines per (returned?, whole quantity): `a` = 1 for returnflag R and
+    * 0 for N (A lines left out), `v` = the rounded quantity and `n` the
+    * line count, pinned — the two-sample table behind q443, q444, q480
+    * and q483, which compare returned with unreturned quantities.
+    */
+  def returnedQuantityCounts(s: SparkSession, dir: String): DataFrame =
+    Tables.lineitem(s, dir)
+      .filter(col("l_returnflag").isin("R", "N"))
+      .select((col("l_returnflag") === "R").cast("long").as("a"),
+        expr("CAST(ROUND(l_quantity) AS BIGINT)").as("v"))
+      .groupBy(col("a"), col("v")).agg(count(lit(1)).as("n"))
+      .localCheckpoint()
+
   /** q443: the rank dominance effect sizes — Cliff's δ and
     * Vargha–Delaney Â answer "how often does an AIR-shipped line
     * outweigh a SHIP-shipped one in quantity" WITHOUT the normality
@@ -4692,12 +4782,7 @@ object AuditQueries {
     * Plan: one lineitem pass → ≤ 100-cell rollup → metadata fold.
     */
   val q443CliffsDelta: Q = (s, dir) => {
-    val li = Tables.lineitem(s, dir)
-      .filter(col("l_returnflag").isin("R", "N"))
-      .select((col("l_returnflag") === "R").cast("long").as("a"),
-        expr("CAST(ROUND(l_quantity) AS BIGINT)").as("v"))
-      .groupBy(col("a"), col("v")).agg(count(lit(1)).as("n"))
-      .localCheckpoint()
+    val li = returnedQuantityCounts(s, dir)
     val xa = li.filter(col("a") === 1L).select(col("v"), col("n").as("nx"))
     val yb = li.filter(col("a") === 0L).select(col("v").as("w"),
       col("n").as("ny"))
@@ -4777,24 +4862,7 @@ object AuditQueries {
     * 1-row fold.
     */
   val q448LinCcc: Q = (s, dir) => {
-    val cells = Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_partkey"),
-        cents(col("l_extendedprice")).as("r"))
-      .join(Tables.orders(s, dir).select(col("o_orderkey"),
-        (col("o_orderdate") < lit(ShiftShareBreak)).cast("long").as("pre")),
-        col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(Tables.part(s, dir)
-        .select(col("p_partkey"), col("p_brand"))),
-        col("l_partkey") === col("p_partkey"))
-      .groupBy(col("p_brand").as("brand"))
-      .agg(expr("SUM(CASE WHEN pre = 1 THEN r ELSE 0 END) div 1000")
-        .as("x"),
-        expr("SUM(CASE WHEN pre = 0 THEN r ELSE 0 END) div 1000").as("y"))
-    val mo = cells.agg(count(lit(1)).cast(dec).as("n"),
-      sum(col("x")).cast(dec).as("sx"), sum(col("y")).cast(dec).as("sy"),
-      sum(col("x").cast(dec) * col("x")).as("qxx"),
-      sum(col("y").cast(dec) * col("y")).as("qyy"),
-      sum(col("x").cast(dec) * col("y")).as("qxy"))
+    val mo = brandPeriodMoments(s, dir)
       .select(col("n"), col("sx"), col("sy"),
         (col("n") * col("qxx") - col("sx") * col("sx")).as("dx"),
         (col("n") * col("qyy") - col("sy") * col("sy")).as("dy"),
@@ -4860,12 +4928,7 @@ object AuditQueries {
     * Plan: one lineitem pass → 100-cell rollup → metadata fold.
     */
   val q444Cucconi: Q = (s, dir) => {
-    val li = Tables.lineitem(s, dir)
-      .filter(col("l_returnflag").isin("R", "N"))
-      .select((col("l_returnflag") === "R").cast("long").as("a"),
-        expr("CAST(ROUND(l_quantity) AS BIGINT)").as("v"))
-      .groupBy(col("a"), col("v")).agg(count(lit(1)).as("n"))
-      .localCheckpoint()
+    val li = returnedQuantityCounts(s, dir)
     val byV = li.groupBy(col("v")).agg(sum(col("n")).as("cnt"))
     val w = Window.orderBy(col("v")).rowsBetween(
       Window.unboundedPreceding, -1)
@@ -4969,11 +5032,7 @@ object AuditQueries {
     * windows over ≤ |months| metadata rows.
     */
   val q445CochraneOrcutt: Q = (s, dir) => {
-    val cells = Tables.orders(s, dir)
-      .groupBy(expr("year(o_orderdate) * 12 + month(o_orderdate)").as("m"))
-      .agg(expr("SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) div 100")
-        .as("y"))
-      .localCheckpoint()
+    val cells = monthlyRevenue(s, dir).localCheckpoint()
     val t0 = cells.agg(min(col("m")).as("m0"))
     val pts = cells.crossJoin(broadcast(t0))
       .select((col("m") - col("m0") + 1L).as("t"), col("y"))
@@ -5277,10 +5336,7 @@ object AuditQueries {
     * collect) → driver tail sum.
     */
   val q449FisherExact: Q = (s, dir) => {
-    val panel = Tables.orders(s, dir)
-      .join(broadcast(Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_nationkey"))),
-        col("o_custkey") === col("c_custkey"))
+    val panel = ordersWithNation(s, dir)
       .groupBy(col("c_nationkey").cast("long").as("nat"))
       .agg(expr("SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))" +
         " div COUNT(*)").as("aov"))
@@ -5683,11 +5739,7 @@ object AuditQueries {
     * 12-row output.
     */
   val q453HoltWinters: Q = (s, dir) => {
-    val months = Tables.orders(s, dir)
-      .groupBy(expr("year(o_orderdate) * 12 + month(o_orderdate)").as("m"))
-      .agg(expr("SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) div 100")
-        .as("y"))
-      .orderBy(col("m")).collect()
+    val months = monthlyRevenue(s, dir).orderBy(col("m")).collect()
     val ys = months.map(_.getAs[Long]("y"))
     val t = ys.length
     var l = ys.take(12).sum / 12L
@@ -5767,24 +5819,7 @@ object AuditQueries {
     * orders pass, ≤ 50-cell rollup) → 10-row pair panel.
     */
   val q454DunnTest: Q = (s, dir) => {
-    val ord = Tables.orders(s, dir)
-      .select(expr("CAST(substring(o_orderpriority, 1, 1) AS BIGINT)")
-        .as("g"), cents(col("o_totalprice")).as("c"))
-    val byV = ord.groupBy(col("c")).agg(count(lit(1)).as("cnt"))
-    val ranked = doubledRankBelow(byV, Seq.empty, "c", 100000L)
-    val nAll = byV.agg(sum(col("cnt")).as("n_all"))
-    val cuts = ranked.crossJoin(broadcast(nAll))
-      .select(col("c"), col("below"), col("cnt"),
-        explode(expr("sequence(1, 9)")).as("i"))
-      .filter(col("below") < expr("(n_all * i + 9) div 10") &&
-        expr("(n_all * i + 9) div 10") <= col("below") + col("cnt"))
-      .groupBy().pivot("i", 1 to 9).agg(first(col("c")))
-      .select((1 to 9).map(i => col(i.toString).as(s"c$i")): _*)
-    val binExpr = (1 to 9).map(i => s"CAST(c > c$i AS INT)").mkString(" + ")
-    val cells = ord.crossJoin(broadcast(cuts))
-      .select(col("g"), expr(binExpr).cast("long").as("b"))
-      .groupBy(col("g"), col("b")).agg(count(lit(1)).as("n"))
-      .localCheckpoint()
+    val cells = priceQuantileCells(s, dir, "g", "b", 10, "c")
     val wAll = Window.orderBy(col("b")).rowsBetween(
       Window.unboundedPreceding, -1)
     val dr = cells.groupBy(col("b")).agg(sum(col("n")).as("tb"))
@@ -5892,15 +5927,7 @@ object AuditQueries {
     * (checkpointed; the limit fold and the census both ride it).
     */
   val q456BlandAltman: Q = (s, dir) => {
-    val cells = Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_partkey"),
-        cents(col("l_extendedprice")).as("r"))
-      .join(Tables.orders(s, dir).select(col("o_orderkey"),
-        (col("o_orderdate") < lit(ShiftShareBreak)).cast("long").as("pre")),
-        col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(Tables.part(s, dir)
-        .select(col("p_partkey"), col("p_brand"))),
-        col("l_partkey") === col("p_partkey"))
+    val cells = withBrand(s, dir, linesWithOrder(s, dir, prePeriod))
       .groupBy(col("p_brand").as("brand"))
       .agg(expr("""SUM(CASE WHEN pre = 0 THEN r ELSE -r END)
                   | div 1000""".stripMargin.replace("\n", " ")).as("d"))
@@ -5978,24 +6005,7 @@ object AuditQueries {
     * 1-row fold.
     */
   val q457Deming: Q = (s, dir) => {
-    val cells = Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_partkey"),
-        cents(col("l_extendedprice")).as("r"))
-      .join(Tables.orders(s, dir).select(col("o_orderkey"),
-        (col("o_orderdate") < lit(ShiftShareBreak)).cast("long").as("pre")),
-        col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(Tables.part(s, dir)
-        .select(col("p_partkey"), col("p_brand"))),
-        col("l_partkey") === col("p_partkey"))
-      .groupBy(col("p_brand").as("brand"))
-      .agg(expr("SUM(CASE WHEN pre = 1 THEN r ELSE 0 END) div 1000")
-        .as("x"),
-        expr("SUM(CASE WHEN pre = 0 THEN r ELSE 0 END) div 1000").as("y"))
-    val mo = cells.agg(count(lit(1)).cast(dec).as("n"),
-      sum(col("x")).cast(dec).as("sx"), sum(col("y")).cast(dec).as("sy"),
-      sum(col("x").cast(dec) * col("x")).as("qxx"),
-      sum(col("y").cast(dec) * col("y")).as("qyy"),
-      sum(col("x").cast(dec) * col("y")).as("qxy"))
+    val mo = brandPeriodMoments(s, dir)
       .select(col("n"), col("sx"), col("sy"),
         (col("n") * col("qxx") - col("sx") * col("sx")).as("dx"),
         (col("n") * col("qyy") - col("sy") * col("sy")).as("dy"),
@@ -6067,11 +6077,7 @@ object AuditQueries {
     * [[ThetaHorizon]]-row output.
     */
   val q458ThetaMethod: Q = (s, dir) => {
-    val months = Tables.orders(s, dir)
-      .groupBy(expr("year(o_orderdate) * 12 + month(o_orderdate)").as("m"))
-      .agg(expr("SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) div 100")
-        .as("y"))
-      .orderBy(col("m")).collect()
+    val months = monthlyRevenue(s, dir).orderBy(col("m")).collect()
     val ys = months.map(_.getAs[Long]("y"))
     val t = ys.length.toLong
     val n = BigInt(t); val st = ys.indices.map(i => BigInt(i + 1)).sum
@@ -6164,10 +6170,7 @@ object AuditQueries {
     * fold (metadata) → scalar k broadcast → 25-row premium panel.
     */
   val q459Buhlmann: Q = (s, dir) => {
-    val panel = Tables.orders(s, dir)
-      .join(broadcast(Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_nationkey"))),
-        col("o_custkey") === col("c_custkey"))
+    val panel = ordersWithNation(s, dir)
       .groupBy(col("c_nationkey").cast("long").as("nat"),
         expr("year(o_orderdate) * 12 + month(o_orderdate)").as("m"))
       .agg(expr("SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) div 100")
@@ -6464,45 +6467,10 @@ object AuditQueries {
     * dense-grid windows per cohort, metadata folds after.
     */
   val q462BornhuetterFerguson: Q = (s, dir) => {
-    import org.apache.spark.sql.expressions.Window
-    val cells = Tables.lineitem(s, dir)
-      .join(Tables.orders(s, dir).select(col("o_orderkey"),
-        year(col("o_orderdate")).as("oy")),
-        col("l_orderkey") === col("o_orderkey"))
-      .withColumn("dev", year(col("l_shipdate")) - col("oy"))
-      .filter(col("dev") >= 0)
-      .groupBy(col("oy"), col("dev"))
-      .agg(sum(cents(col("l_extendedprice"))).as("v"))
-      .localCheckpoint()
-    val years = cells.select(col("oy")).distinct().localCheckpoint()
+    val cells = runOffCells(s, dir)
     val maxY = cells.agg(max(col("oy")).as("max_y"),
       min(col("oy")).as("min_y"))
-    val devSpine = s.range(0L, ClMaxDev.toLong)
-      .select(col("id").cast("int").as("dev"))
-    val dense = years.crossJoin(broadcast(devSpine))
-      .join(cells, Seq("oy", "dev"), "left")
-      .select(col("oy"), col("dev"), coalesce(col("v"), lit(0L)).as("v"))
-    val wC = Window.partitionBy(col("oy")).orderBy(col("dev"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val cum = dense.withColumn("c", sum(col("v")).over(wC))
-      .withColumn("cn", lead(col("c"), 1).over(
-        Window.partitionBy(col("oy")).orderBy(col("dev"))))
-      .crossJoin(broadcast(maxY))
-      .localCheckpoint()
-    val factors = cum
-      .filter(col("oy") + col("dev") + 1 <= col("max_y") &&
-        col("cn").isNotNull && col("c") > 0L)
-      .groupBy(col("dev"))
-      .agg(sum(col("cn").cast("decimal(38,0)")).as("num"),
-        sum(col("c").cast("decimal(38,0)")).as("den"))
-      .select(col("dev"), expr(fdiv("num * 1000000", "den")).cast("long")
-        .as("f_e6"))
-    val fArm = (0 until ClMaxDev).map { k =>
-      max(when(col("dev") === k, col("f_e6"))).as(s"f_$k")
-    }
-    val fRow = factors.agg(fArm.head, fArm.tail: _*)
-      .select((0 until ClMaxDev).map(k =>
-        coalesce(col(s"f_$k"), lit(1000000L)).as(s"f_$k")): _*)
+    val (cum, fRow) = chainLadder(s, cells, maxY)
     val latest = cum.filter(col("dev") === col("max_y") - col("oy"))
       .select(col("oy"), col("dev").as("latest_dev"),
         col("c").as("latest_c"))
@@ -6641,17 +6609,7 @@ object AuditQueries {
     * bounded rank windows → metadata pair fold.
     */
   val q463SocialChoice: Q = (s, dir) => {
-    val mb = Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_partkey"),
-        cents(col("l_extendedprice")).as("r"))
-      .join(Tables.orders(s, dir)
-        .select(col("o_orderkey"), expr("month(o_orderdate)").as("mo")),
-        col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(Tables.part(s, dir)
-        .select(col("p_partkey"), col("p_brand"))),
-        col("l_partkey") === col("p_partkey"))
-      .groupBy(col("mo"), col("p_brand").as("brand"))
-      .agg(sum(col("r")).as("rev"))
+    val mb = brandRevenueByMonth(s, dir)
     val ranked = mb.withColumn("rk",
       row_number().over(Window.partitionBy(col("mo"))
         .orderBy(col("rev").desc, col("brand"))).cast("long"))
@@ -6727,6 +6685,15 @@ object AuditQueries {
 
   // ------ q464: concentration index and Kakwani-style progressivity
 
+  /** Each ordering customer's total order revenue `y` in whole units
+    * (integer cents `div 100`), keyed by o_custkey.
+    */
+  private def revenueByCustomer(s: SparkSession, dir: String): DataFrame =
+    Tables.orders(s, dir)
+      .groupBy(col("o_custkey")).agg(
+        expr("SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) div 100")
+          .as("y"))
+
   /** q464: the health-economics concentration index — q160's Gini
     * ranks spend BY ITSELF; the concentration index ranks customer
     * spend by a DIFFERENT welfare variable (account balance), so it
@@ -6742,10 +6709,7 @@ object AuditQueries {
     * value-rollup rank windows → 1-row fold.
     */
   val q464ConcentrationIndex: Q = (s, dir) => {
-    val cust = Tables.orders(s, dir)
-      .groupBy(col("o_custkey")).agg(
-        expr("SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) div 100")
-          .as("y"))
+    val cust = revenueByCustomer(s, dir)
       .join(broadcast(Tables.customer(s, dir).select(
         col("c_custkey").as("o_custkey"),
         cents(col("c_acctbal")).as("bal"))), Seq("o_custkey"))
@@ -6826,10 +6790,7 @@ object AuditQueries {
     * selection → one counting pass + one poor-subset rank fold.
     */
   val q465FgtSen: Q = (s, dir) => {
-    val cust = Tables.orders(s, dir)
-      .groupBy(col("o_custkey")).agg(
-        expr("SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) div 100")
-          .as("y"))
+    val cust = revenueByCustomer(s, dir)
       .localCheckpoint()
     val byV = cust.groupBy(col("y")).agg(count(lit(1)).as("cnt"))
     // two-level below-count over the distinct-income rollup (grows with
@@ -7121,10 +7082,7 @@ object AuditQueries {
     * window feeding median, L(½) and Gini together → 1-row fold.
     */
   val q466Wolfson: Q = (s, dir) => {
-    val cust = Tables.orders(s, dir)
-      .groupBy(col("o_custkey")).agg(
-        expr("SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) div 100")
-          .as("y"))
+    val cust = revenueByCustomer(s, dir)
       .localCheckpoint()
     val byV = cust.groupBy(col("y")).agg(count(lit(1)).as("cnt"))
     // two-level below-count over the distinct-income rollup — no global
@@ -7615,11 +7573,7 @@ object AuditQueries {
     * 1-row fold.
     */
   val q473DieboldMariano: Q = (s, dir) => {
-    val cells = Tables.orders(s, dir)
-      .groupBy(expr("year(o_orderdate) * 12 + month(o_orderdate)").as("m"))
-      .agg(expr("SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) div 100")
-        .as("y"))
-      .localCheckpoint()
+    val cells = monthlyRevenue(s, dir).localCheckpoint()
     val w = Window.orderBy(col("m"))
     val dd = cells
       .withColumn("y1", lag(col("y"), 1).over(w))
@@ -7686,11 +7640,7 @@ object AuditQueries {
     * co-moment fold.
     */
   val q474MincerZarnowitz: Q = (s, dir) => {
-    val cells = Tables.orders(s, dir)
-      .groupBy(expr("year(o_orderdate) * 12 + month(o_orderdate)").as("m"))
-      .agg(expr("SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) div 100")
-        .as("y"))
-      .localCheckpoint()
+    val cells = monthlyRevenue(s, dir).localCheckpoint()
     val w = Window.orderBy(col("m"))
     val pts = cells.withColumn("f", lag(col("y"), 12).over(w))
       .filter(col("f").isNotNull)
@@ -7766,11 +7716,7 @@ object AuditQueries {
     * metadata → 1-row fold.
     */
   val q475DirectionalSkill: Q = (s, dir) => {
-    val cells = Tables.orders(s, dir)
-      .groupBy(expr("year(o_orderdate) * 12 + month(o_orderdate)").as("m"))
-      .agg(expr("SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) div 100")
-        .as("y"))
-      .localCheckpoint()
+    val cells = monthlyRevenue(s, dir).localCheckpoint()
     val w = Window.orderBy(col("m"))
     val lagged = cells
       .withColumn("y1", lag(col("y"), 1).over(w))
@@ -8340,12 +8286,7 @@ object AuditQueries {
     * fold → rank-target pick.
     */
   val q480HodgesLehmann: Q = (s, dir) => {
-    val li = Tables.lineitem(s, dir)
-      .filter(col("l_returnflag").isin("R", "N"))
-      .select((col("l_returnflag") === "R").cast("long").as("a"),
-        expr("CAST(ROUND(l_quantity) AS BIGINT)").as("v"))
-      .groupBy(col("a"), col("v")).agg(count(lit(1)).as("n"))
-      .localCheckpoint()
+    val li = returnedQuantityCounts(s, dir)
     val xr = li.filter(col("a") === 1L).select(col("v").as("vr"),
       col("n").as("nr"))
     val xn = li.filter(col("a") === 0L).select(col("v").as("vn"),
@@ -8426,10 +8367,7 @@ object AuditQueries {
     * metadata argmax rounds.
     */
   val q481RosnerEsd: Q = (s, dir) => {
-    val panel = Tables.orders(s, dir)
-      .join(broadcast(Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_nationkey"))),
-        col("o_custkey") === col("c_custkey"))
+    val panel = ordersWithNation(s, dir)
       .groupBy(col("c_nationkey").cast("long").as("nat"))
       .agg(expr("SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))" +
         " div COUNT(*)").as("y"))
@@ -8521,11 +8459,7 @@ object AuditQueries {
     * two rank-window medians.
     */
   val q482SiegelSlope: Q = (s, dir) => {
-    val cells = Tables.orders(s, dir)
-      .groupBy(expr("year(o_orderdate) * 12 + month(o_orderdate)").as("m"))
-      .agg(expr("SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) div 100")
-        .as("y"))
-      .localCheckpoint()
+    val cells = monthlyRevenue(s, dir).localCheckpoint()
     val t0 = cells.agg(min(col("m")).as("m0"),
       count(lit(1)).as("tn"))
     val pts = cells.crossJoin(broadcast(t0))
@@ -8616,12 +8550,7 @@ object AuditQueries {
     * cumulative folds (metadata).
     */
   val q483YuenTest: Q = (s, dir) => {
-    val li = Tables.lineitem(s, dir)
-      .filter(col("l_returnflag").isin("R", "N"))
-      .select((col("l_returnflag") === "R").cast("long").as("a"),
-        expr("CAST(ROUND(l_quantity) AS BIGINT)").as("v"))
-      .groupBy(col("a"), col("v")).agg(count(lit(1)).as("n"))
-      .localCheckpoint()
+    val li = returnedQuantityCounts(s, dir)
     def groupFold(grp: Long): DataFrame = {
       val g = li.filter(col("a") === grp)
       val nTot = g.agg(sum(col("n")).as("ng"))
@@ -8918,9 +8847,7 @@ object AuditQueries {
     val li = Tables.lineitem(s, dir)
       .select(col("l_partkey").as("part"),
         expr("unix_millis(l_shipdate) div 86400000").as("day"))
-    val mid = li.agg(expr("CAST((min(day) + max(day) + 1) div 2 AS BIGINT)")
-      .as("midday"))
-    val wide = li.crossJoin(broadcast(mid))
+    val wide = EventQueries.splitAtMidday(li)
       .groupBy(col("part"))
       .agg(sum(when(col("day") < col("midday"), 1L).otherwise(0L)).as("c0"),
         sum(when(col("day") >= col("midday"), 1L).otherwise(0L)).as("c1"))
@@ -8999,16 +8926,11 @@ object AuditQueries {
   val q384Rbo: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
     val wArr = RboW.mkString(", ")
-    val li = Tables.lineitem(s, dir)
-      .join(broadcast(Tables.part(s, dir)
-        .select(col("p_partkey"), col("p_brand"))),
-        col("l_partkey") === col("p_partkey"))
+    val li = withBrand(s, dir, Tables.lineitem(s, dir))
       .select(col("p_brand").as("brand"),
         expr("unix_millis(l_shipdate) div 86400000").as("day"),
         cents(col("l_extendedprice")).as("v"))
-    val mid = li.agg(expr("CAST((min(day) + max(day) + 1) div 2 AS BIGINT)")
-      .as("midday"))
-    val halves = li.crossJoin(broadcast(mid))
+    val halves = EventQueries.splitAtMidday(li)
       .groupBy(col("brand"), (col("day") >= col("midday")).cast("long").as("t"))
       .agg(sum(col("v")).as("rev"))
       .localCheckpoint()
@@ -9079,9 +9001,7 @@ object AuditQueries {
         expr("unix_millis(l_shipdate) div 86400000").as("day"),
         cents(col("l_extendedprice")).as("v"),
         expr("CAST(ROUND(l_quantity) AS BIGINT)").as("q"))
-    val mid = li.agg(expr("CAST((min(day) + max(day) + 1) div 2 AS BIGINT)")
-      .as("midday"))
-    val cells = li.crossJoin(broadcast(mid))
+    val cells = EventQueries.splitAtMidday(li)
       .groupBy(col("flag"),
         (col("day") >= col("midday")).cast("long").as("t"))
       .agg(sum(col("v")).cast(dec).as("vv"), sum(col("q")).cast(dec).as("qq"))
@@ -9318,14 +9238,7 @@ object AuditQueries {
     * 10¹⁸ rows); the final z² is one fixed IEEE tree.
     */
   val q377CochranArmitage: Q = (s, dir) => {
-    val o = Tables.orders(s, dir)
-      .select(col("o_orderpriority").as("g"), cents(col("o_totalprice")).as("c"))
-    val byV = o.groupBy(col("c")).agg(count(lit(1)).as("cnt"))
-    val nTot = byV.agg(sum(col("cnt")).as("n"))
-    val med = doubledRankBelow(byV, Seq.empty, "c", 100000L)
-      .crossJoin(broadcast(nTot))
-      .filter(col("below") + col("cnt") >= expr("(n + 1) div 2"))
-      .agg(min(col("c")).as("med"))
+    val (o, med) = ordersAndMedian(s, dir)
     val byG = o.crossJoin(broadcast(med))
       .select(substring(col("g"), 1, 1).cast(dec).as("w"),
         when(col("c") > col("med"), 1L).otherwise(0L).as("y"))
@@ -9591,18 +9504,7 @@ object AuditQueries {
           l2(s"CAST(${fdiv("CAST(sc AS DECIMAL(38,0))", "nl")} AS BIGINT)") +
           " AS DECIMAL(38,0))").as("x"),
         expr(s"CAST(${l2("q")} AS DECIMAL(38,0))").as("y"))
-    val sums = pp.agg(count(lit(1)).cast(dec).as("n"),
-      sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-      sum(col("x") * col("x")).as("sxx"), sum(col("y") * col("y")).as("syy"),
-      sum(col("x") * col("y")).as("sxy"))
-    def c(ab: String, a: String, b: String) =
-      (col("n") * col(ab) - col(a) * col(b)).cast("double")
-    val r2 = (c("sxy", "sx", "sy") * c("sxy", "sx", "sy")) /
-      (c("sxx", "sx", "sx") * c("syy", "sy", "sy"))
-    sums.select(col("n").cast("long").as("n_parts"),
-      expr(sdivBigint("(n * sxy - sx * sy) * 1000000", "n * sxx - sx * sx"))
-        .as("elasticity_e6"),
-      r2.as("r2_d"))
+    logLogFit(pp, "elasticity_e6")
   }
 
   val q371Sql: String = {
@@ -10029,6 +9931,15 @@ object AuditQueries {
 
   // ------ q486: Breslow-Day homogeneity of stratified odds ratios
 
+  /** Each customer's region: (c_custkey, r = n_regionkey). */
+  private def customerRegion(s: SparkSession, dir: String): DataFrame =
+    Tables.customer(s, dir)
+      .select(col("c_custkey"), col("c_nationkey"))
+      .join(broadcast(Tables.nation(s, dir)
+        .select(col("n_nationkey"), col("n_regionkey"))),
+        col("c_nationkey") === col("n_nationkey"))
+      .select(col("c_custkey"), col("n_regionkey").as("r"))
+
   /** q486: the Breslow–Day test — the companion question to the engine's
     * Mantel–Haenszel common odds ratio (q-MH family): MH ASSUMES the
     * exposure→outcome odds ratio is the same in every stratum; BD TESTS
@@ -10052,12 +9963,7 @@ object AuditQueries {
         .cast("long").as("e"),
       cents(col("o_totalprice")).as("c"))
     val thr = o.agg(expr("SUM(c) div COUNT(*)").as("t"))
-    val dim = Tables.customer(s, dir)
-      .select(col("c_custkey"), col("c_nationkey"))
-      .join(broadcast(Tables.nation(s, dir)
-        .select(col("n_nationkey"), col("n_regionkey"))),
-        col("c_nationkey") === col("n_nationkey"))
-      .select(col("c_custkey"), col("n_regionkey").as("r"))
+    val dim = customerRegion(s, dir)
     val cells = o.crossJoin(broadcast(thr))
       .join(broadcast(dim), col("o_custkey") === col("c_custkey"))
       .select(col("r"), col("e"), (col("c") > col("t")).cast("long").as("y"))
@@ -11627,12 +11533,7 @@ object AuditQueries {
     * (checkpointed) → metadata pooling folds.
     */
   val q503MetaAnalysis: Q = (s, dir) => {
-    val dim = Tables.customer(s, dir)
-      .select(col("c_custkey"), col("c_nationkey"))
-      .join(broadcast(Tables.nation(s, dir)
-        .select(col("n_nationkey"), col("n_regionkey"))),
-        col("c_nationkey") === col("n_nationkey"))
-      .select(col("c_custkey"), col("n_regionkey").as("r"))
+    val dim = customerRegion(s, dir)
     val li = Tables.lineitem(s, dir)
       .filter(col("l_returnflag").isin("R", "N"))
       .select(col("l_orderkey"),
@@ -12063,10 +11964,7 @@ object AuditQueries {
     * (nation, month) rollup → per-nation score fold → 1-row sandwich.
     */
   val q507ClusterRobust: Q = (s, dir) => {
-    val cells = Tables.orders(s, dir)
-      .join(broadcast(Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_nationkey"))),
-        col("o_custkey") === col("c_custkey"))
+    val cells = ordersWithNation(s, dir)
       .select(col("c_nationkey").as("nat"),
         expr("year(o_orderdate) * 12 + month(o_orderdate)").as("m"),
         expr("CAST(ROUND(o_totalprice*100) AS BIGINT) div 100000").as("v"))
@@ -12994,6 +12892,22 @@ object AuditQueries {
 
   // ------ q520: interval scheduling (earliest-finish greedy)
 
+  /** The supplier with the most lines (ties to the lower key, picked by
+    * one collected top-1) and its lines, each joined to its order's
+    * o_orderdate — the interval set q520 and q526 schedule.
+    */
+  private def topSupplierLines(s: SparkSession,
+      dir: String): (Long, DataFrame) = {
+    val li = Tables.lineitem(s, dir)
+    val topSupp = li.groupBy(col("l_suppkey")).agg(count(lit(1)).as("n"))
+      .orderBy(col("n").desc, col("l_suppkey")).limit(1)
+      .collect()(0).getAs[Long]("l_suppkey")
+    val lines = li.filter(col("l_suppkey") === topSupp)
+      .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_orderdate")),
+        col("l_orderkey") === col("o_orderkey"))
+    (topSupp, lines)
+  }
+
   /** q520: maximum non-overlapping job set — the classic activity-
     * selection greedy over the busiest supplier's fulfillment
     * intervals (order date → ship date): sort by finish and take
@@ -13009,13 +12923,8 @@ object AuditQueries {
     * interval collect (bounded) → greedy fold → 1-row report.
     */
   val q520IntervalSchedule: Q = (s, dir) => {
-    val li = Tables.lineitem(s, dir)
-    val topSupp = li.groupBy(col("l_suppkey")).agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("l_suppkey")).limit(1)
-      .collect()(0).getAs[Long]("l_suppkey")
-    val ivs = li.filter(col("l_suppkey") === topSupp)
-      .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_orderdate")),
-        col("l_orderkey") === col("o_orderkey"))
+    val (topSupp, lines) = topSupplierLines(s, dir)
+    val ivs = lines
       .select(expr("datediff(o_orderdate, DATE '1970-01-01')").as("sd"),
         expr("datediff(l_shipdate, DATE '1970-01-01')").as("rd"),
         col("l_orderkey"), col("l_linenumber"))
@@ -13381,13 +13290,8 @@ object AuditQueries {
     * |intervals|-step fold → 1-row report.
     */
   val q526WeightedSchedule: Q = (s, dir) => {
-    val li = Tables.lineitem(s, dir)
-    val topSupp = li.groupBy(col("l_suppkey")).agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("l_suppkey")).limit(1)
-      .collect()(0).getAs[Long]("l_suppkey")
-    val ivs = li.filter(col("l_suppkey") === topSupp)
-      .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_orderdate")),
-        col("l_orderkey") === col("o_orderkey"))
+    val (topSupp, lines) = topSupplierLines(s, dir)
+    val ivs = lines
       .select(expr("datediff(o_orderdate, DATE '1970-01-01')").as("sd"),
         expr("datediff(l_shipdate, DATE '1970-01-01')").as("rd"),
         cents(col("l_extendedprice")).as("w"),
@@ -13464,6 +13368,20 @@ object AuditQueries {
 
   // ------ q527: Kelly criterion from the daily revenue tape
 
+  /** Order revenue per day `x` (cents) next to the previous order day's
+    * `px`, keeping only days that moved (q527, q530). The day-over-day
+    * lag is the two-level day-bucket device: the day spine funnels >1k
+    * rows through a single-task window otherwise.
+    */
+  private def dailyRevenueMoves(s: SparkSession, dir: String): DataFrame =
+    Prefix.lagOver(
+      Tables.orders(s, dir)
+        .select(col("o_orderdate").as("d"), cents(col("o_totalprice")).as("c"))
+        .groupBy(col("d")).agg(sum(col("c")).as("x"))
+        .withColumn("dd", expr("datediff(d, DATE '1970-01-01')")),
+      "dd", Nil, "x", "px")
+      .filter(col("px").isNotNull && col("x") =!= col("px"))
+
   /** q527: the Kelly fraction — from the measured win rate and payoff
     * ratio of day-over-day revenue moves (ties excluded), how much of
     * a bankroll would the growth-optimal bettor stake on "tomorrow is
@@ -13477,15 +13395,7 @@ object AuditQueries {
     * scalar ladder.
     */
   val q527Kelly: Q = (s, dir) => {
-    // day-over-day lag via the two-level day-bucket device (the day spine
-    // funnels >1k rows through a single-task window otherwise)
-    val bd = Prefix.lagOver(
-        Tables.orders(s, dir)
-          .select(col("o_orderdate").as("d"), cents(col("o_totalprice")).as("c"))
-          .groupBy(col("d")).agg(sum(col("c")).as("x"))
-          .withColumn("dd", expr("datediff(d, DATE '1970-01-01')")),
-        "dd", Nil, "x", "px")
-      .filter(col("px").isNotNull && col("x") =!= col("px"))
+    val bd = dailyRevenueMoves(s, dir)
     val agg = bd.agg(
       sum((col("x") > col("px")).cast("long")).as("up"),
       sum((col("x") < col("px")).cast("long")).as("down"),
@@ -13695,14 +13605,7 @@ object AuditQueries {
     * Plan: one orders pass → lag-window deltas → 1-row scalar chain.
     */
   val q530GamblersRuin: Q = (s, dir) => {
-    // same two-level lag device as q527 (single-task day window otherwise)
-    val bd = Prefix.lagOver(
-        Tables.orders(s, dir)
-          .select(col("o_orderdate").as("d"), cents(col("o_totalprice")).as("c"))
-          .groupBy(col("d")).agg(sum(col("c")).as("x"))
-          .withColumn("dd", expr("datediff(d, DATE '1970-01-01')")),
-        "dd", Nil, "x", "px")
-      .filter(col("px").isNotNull && col("x") =!= col("px"))
+    val bd = dailyRevenueMoves(s, dir)
     bd.agg(sum((col("x") > col("px")).cast("long")).as("up"),
         sum((col("x") < col("px")).cast("long")).as("down"))
       .withColumn("p_e6", expr("up * 1000000 div (up + down)"))
@@ -14278,10 +14181,7 @@ object AuditQueries {
     * panel and 101-weight sweep are calendar-bounded metadata.
     */
   val q572SyntheticControl: Q = (s, dir) => {
-    val nd = Tables.orders(s, dir)
-      .join(broadcast(Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_nationkey"))),
-        col("o_custkey") === col("c_custkey"))
+    val nd = ordersWithNation(s, dir)
       .groupBy(col("c_nationkey").cast("long").as("nat"),
         col("o_orderdate").as("day"))
       .agg(sum(cents(col("o_totalprice"))).as("rev"))
@@ -14389,6 +14289,13 @@ object AuditQueries {
 
   // ------ q573: doubly-robust ATE on the priority treatment
 
+  /** Orders joined to a broadcast of their customer's c_mktsegment. */
+  private def ordersWithSegment(s: SparkSession, dir: String): DataFrame =
+    Tables.orders(s, dir)
+      .join(broadcast(Tables.customer(s, dir)
+        .select(col("c_custkey"), col("c_mktsegment"))),
+        col("o_custkey") === col("c_custkey"))
+
   /** q573: the doubly-robust (AIPW) average treatment effect — the
     * estimator that stays consistent if EITHER the propensity model OR the
     * outcome model is right, here both fit exactly per market-segment
@@ -14405,10 +14312,7 @@ object AuditQueries {
     * everything after is metadata.
     */
   val q573DoublyRobust: Q = (s, dir) => {
-    val base = Tables.orders(s, dir)
-      .join(broadcast(Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_mktsegment"))),
-        col("o_custkey") === col("c_custkey"))
+    val base = ordersWithSegment(s, dir)
       .select(col("c_mktsegment").as("seg"),
         when(expr("CAST(substring(o_orderpriority, 1, 1) AS INT)") <= 2, 1L)
           .otherwise(0L).as("t"),
@@ -14517,10 +14421,7 @@ object AuditQueries {
     * back onto the test half.
     */
   val q575PinballBacktest: Q = (s, dir) => {
-    val base = Tables.orders(s, dir)
-      .join(broadcast(Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_mktsegment"))),
-        col("o_custkey") === col("c_custkey"))
+    val base = ordersWithSegment(s, dir)
       .select(col("c_mktsegment").as("seg"),
         (col("o_orderkey") % 2).as("split"),
         cents(col("o_totalprice")).as("y"))

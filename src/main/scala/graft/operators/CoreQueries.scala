@@ -5,6 +5,7 @@ import graft.functions.TSql._
 import graft.functions.Text
 import graft.functions.Exact._
 import graft.functions.Text.{log2e6DuckSql => duckL2, log2e6SparkSql => l2}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
@@ -888,6 +889,20 @@ object CoreQueries {
 
   // ------------------------------------------- q214: Mann-Kendall trend
 
+  /** Per order priority, its weekly order counts as `pts`, a week-sorted
+    * array of (wk, cnt) — one fact rollup, then |priorities × weeks|
+    * rows (q214, q215).
+    */
+  private def weeklyOrderSeries(s: SparkSession, dir: String): DataFrame = {
+    val weekly = Tables.orders(s, dir)
+      .groupBy(col("o_orderpriority"),
+        expr("unix_timestamp(o_orderdate) DIV 604800").as("wk"))
+      .agg(count(lit(1)).as("cnt"))
+    weekly.groupBy(col("o_orderpriority"))
+      .agg(sort_array(collect_list(struct(col("wk"), col("cnt"))))
+        .as("pts"))
+  }
+
   /** q214: Mann-Kendall trend detection — the NON-PARAMETRIC "is this
     * series trending?" test, chosen here precisely because it is exact in
     * integer arithmetic end to end (no mean, no variance estimate, no
@@ -902,13 +917,7 @@ object CoreQueries {
     * |priorities × weeks| rows.
     */
   val q214MannKendall: Q = (s, dir) => {
-    val weekly = Tables.orders(s, dir)
-      .groupBy(col("o_orderpriority"),
-        expr("unix_timestamp(o_orderdate) DIV 604800").as("wk"))
-      .agg(count(lit(1)).as("cnt"))
-    val series = weekly.groupBy(col("o_orderpriority"))
-      .agg(sort_array(collect_list(struct(col("wk"), col("cnt"))))
-        .as("pts"))
+    val series = weeklyOrderSeries(s, dir)
     val pairs = series.select(col("o_orderpriority"),
         size(col("pts")).as("n"),
         graft.functions.Pairs.inPlace(col("pts"), (x, y) =>
@@ -957,13 +966,7 @@ object CoreQueries {
     * in-place pair generation as q214; one rollup feeds both.
     */
   val q215TheilSen: Q = (s, dir) => {
-    val weekly = Tables.orders(s, dir)
-      .groupBy(col("o_orderpriority"),
-        expr("unix_timestamp(o_orderdate) DIV 604800").as("wk"))
-      .agg(count(lit(1)).as("cnt"))
-    val series = weekly.groupBy(col("o_orderpriority"))
-      .agg(sort_array(collect_list(struct(col("wk"), col("cnt"))))
-        .as("pts"))
+    val series = weeklyOrderSeries(s, dir)
     val slopes = series.select(col("o_orderpriority"),
         graft.functions.Pairs.inPlace(col("pts"), (x, y) =>
           struct((y.getField("cnt") - x.getField("cnt")).as("dy"),
@@ -2060,6 +2063,22 @@ object CoreQueries {
       |  percentile_disc(0.75) WITHIN GROUP (ORDER BY CAST(ROUND(l_quantity*100) AS BIGINT)) AS q3_c
       |FROM lineitem GROUP BY l_returnflag""".stripMargin
 
+  /** q81/q89's inputs: each 1-URGENT order's window (o_orderkey,
+    * win_start, win_end = o_orderdate + 1..3 days by key) and every
+    * line's ship point (l_orderkey, l_shipdate, qty_c in integer cents).
+    */
+  private def urgentWindowsAndShips(s: SparkSession,
+      dir: String): (DataFrame, DataFrame) = {
+    val windows = Tables.orders(s, dir)
+      .filter(col("o_orderpriority") === "1-URGENT")
+      .select(col("o_orderkey"), col("o_orderdate").as("win_start"),
+        expr("o_orderdate + make_interval(0,0,0,(o_orderkey % 3)+1,0,0,0)")
+          .as("win_end"))
+    val ships = Tables.lineitem(s, dir)
+      .select(col("l_orderkey"), col("l_shipdate"), cents(col("l_quantity")).as("qty_c"))
+    (windows, ships)
+  }
+
   /** Range (interval) join without an equality key — shipments in transit
     * during each urgent order's fulfillment window. The window is a
     * deterministic derivation of the order row ([o_orderdate,
@@ -2072,13 +2091,7 @@ object CoreQueries {
     * aggregate-then-left-join with zero defaults.
     */
   val q81RangeJoin: Q = (s, dir) => {
-    val windows = Tables.orders(s, dir)
-      .filter(col("o_orderpriority") === "1-URGENT")
-      .select(col("o_orderkey"), col("o_orderdate").as("win_start"),
-        expr("o_orderdate + make_interval(0,0,0,(o_orderkey % 3)+1,0,0,0)")
-          .as("win_end"))
-    val ships = Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_shipdate"), cents(col("l_quantity")).as("qty_c"))
+    val (windows, ships) = urgentWindowsAndShips(s, dir)
     // Density collapse before the bin join: its cost is points-per-bucket ×
     // intervals-per-bucket, and ship events are day-granular, so they
     // collapse ~|lineitem|/|days|-fold onto their day first (a 240× candidate
@@ -2132,13 +2145,7 @@ object CoreQueries {
     * collapsible points, q89 when you need only prefix-summable aggregates.
     */
   val q89RangeAggPrefix: Q = (s, dir) => {
-    val windows = Tables.orders(s, dir)
-      .filter(col("o_orderpriority") === "1-URGENT")
-      .select(col("o_orderkey"), col("o_orderdate").as("win_start"),
-        expr("o_orderdate + make_interval(0,0,0,(o_orderkey % 3)+1,0,0,0)")
-          .as("win_end"))
-    val ships = Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_shipdate"), cents(col("l_quantity")).as("qty_c"))
+    val (windows, ships) = urgentWindowsAndShips(s, dir)
     val gross = RangeJoin.rangeAggregate(ships, "l_shipdate", "qty_c",
       windows, "win_start", "win_end")
     // same-order lines inside the window: a plain equi-join on the order key
@@ -3120,6 +3127,17 @@ object CoreQueries {
 
   // ------------------------------------------- q181: k-anonymity audit
 
+  /** Each customer's quasi-identifiers: c_nationkey, bal_band (balance
+    * cents + 100000, `div 100000`: 1000-unit bands) and c_mktsegment —
+    * the release q181 and q255 audit.
+    */
+  private def customerQuasiIds(s: SparkSession, dir: String): DataFrame =
+    Tables.customer(s, dir)
+      .select(col("c_nationkey"),
+        expr("(CAST(ROUND(c_acctbal*100) AS BIGINT) + 100000) div 100000")
+          .as("bal_band"),
+        col("c_mktsegment"))
+
   /** q181: k-anonymity / l-diversity audit — before publishing a customer
     * extract, how identifiable are its rows? Quasi-identifier = (nation,
     * $1000 account-balance band); sensitive attribute = market segment.
@@ -3136,11 +3154,7 @@ object CoreQueries {
     * rollup is the only corpus-scale shuffle.
     */
   val q181KAnonymity: Q = (s, dir) => {
-    val c = Tables.customer(s, dir)
-      .select(col("c_nationkey"),
-        expr("(CAST(ROUND(c_acctbal*100) AS BIGINT) + 100000) div 100000")
-          .as("bal_band"),
-        col("c_mktsegment"))
+    val c = customerQuasiIds(s, dir)
     val groups = c.groupBy(col("c_nationkey"), col("bal_band"))
       .agg(count(lit(1)).as("k"),
         countDistinct(col("c_mktsegment")).as("l"))
@@ -3753,12 +3767,7 @@ object CoreQueries {
         col("c_custkey") === col("o_custkey"), "left")
       .select(col("c_custkey"), coalesce(col("rev_c"), lit(0L)).as("rev_c"))
     val vc = rev.groupBy(col("rev_c")).agg(count(lit(1)).as("cnt"))
-    val scal = vc.agg(min(col("rev_c")).as("pfx_mn"),
-      max(col("rev_c")).as("pfx_mx"))
-    val vb = vc.crossJoin(broadcast(scal))
-      .withColumn("pfx_bkt",
-        expr("(rev_c - pfx_mn) div ((pfx_mx - pfx_mn) div 1024 + 1)"))
-      .drop("pfx_mn", "pfx_mx")
+    val vb = Prefix.bucketize(vc, "rev_c", materialize = false)
     val bRoll = vb.groupBy(col("pfx_bkt")).agg(sum(col("cnt")).as("pfx_bsum"))
     val prior = bucketPrior(bRoll, "pfx_bkt", "pfx_bsum", desc = false)
     val inW = Window.partitionBy(col("pfx_bkt")).orderBy(col("rev_c"))
@@ -4035,11 +4044,7 @@ object CoreQueries {
     * — bounded by the QI domain, not the corpus, at any scale.
     */
   val q255LDiversity: Q = (s, dir) => {
-    val c = Tables.customer(s, dir)
-      .select(col("c_nationkey"),
-        expr("(CAST(ROUND(c_acctbal*100) AS BIGINT) + 100000) div 100000")
-          .as("bal_band"),
-        col("c_mktsegment"))
+    val c = customerQuasiIds(s, dir)
     c.groupBy(col("c_nationkey"), col("bal_band"), col("c_mktsegment"))
       .agg(count(lit(1)).as("n_sv"))
       .groupBy(col("c_nationkey"), col("bal_band"))
@@ -5237,10 +5242,7 @@ object CoreQueries {
     * sum of regions) is pinned in the spec.
     */
   val q567RollupLattice: Q = (s, dir) => {
-    val base = Tables.orders(s, dir)
-      .join(broadcast(Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_nationkey"))),
-        col("o_custkey") === col("c_custkey"))
+    val base = AuditQueries.ordersWithNation(s, dir)
       .join(broadcast(Tables.nation(s, dir)
         .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))),
         col("c_nationkey") === col("n_nationkey"))

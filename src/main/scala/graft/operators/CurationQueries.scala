@@ -1492,6 +1492,18 @@ object CurationQueries {
     s"WITH $bpeCtes\n$outs"
   }
 
+  /** Every vocabulary word with its length in characters `n_char` and in
+    * merged BPE symbols `n_sym` after [[bpeTrain]] — the broadcast
+    * dimension q135 and q169 apply to the token stream.
+    */
+  private def bpeWordSizes(s: org.apache.spark.sql.SparkSession,
+      dir: String): DataFrame = {
+    val (_, vocab) = bpeTrain(s, dir)
+    vocab.select(col("word"),
+      length(col("word")).as("n_char"),
+      size(bpeSymbols(col("ws"))).as("n_sym"))
+  }
+
   /** Tokenizer application at corpus scale: every document re-tokenized with
     * the q134 merge table — per document, the whitespace word count, the
     * pre-merge symbol count (characters), the post-merge BPE token count,
@@ -1501,10 +1513,7 @@ object CurationQueries {
     * broadcast-join + one doc_id aggregation.
     */
   val q135BpeApply: Q = (s, dir) => {
-    val (_, vocab) = bpeTrain(s, dir)
-    val vsize = vocab.select(col("word"),
-      length(col("word")).as("n_char"),
-      size(bpeSymbols(col("ws"))).as("n_sym"))
+    val vsize = bpeWordSizes(s, dir)
     Tables.documents(s, dir)
       .select(col("doc_id"), explode(Text.tokens(col("text"))).as("word"))
       .join(broadcast(vsize), "word")
@@ -1549,10 +1558,7 @@ object CurationQueries {
     * corpus scale, so the ×1e6 numerators leave int64).
     */
   val q169VocabCoverage: Q = (s, dir) => {
-    val (_, vocab) = bpeTrain(s, dir)
-    val vsize = vocab.select(col("word"),
-      length(col("word")).as("n_char"),
-      size(bpeSymbols(col("ws"))).as("n_sym"))
+    val vsize = bpeWordSizes(s, dir)
     Tables.documents(s, dir)
       .select(col("lang"), explode(Text.tokens(col("text"))).as("word"))
       .join(broadcast(vsize), "word")
@@ -2764,6 +2770,25 @@ object CurationQueries {
 
   // --------------- q578/q579: token-budget selection + its mix shift
 
+  /** Documents (doc_id, score, `carry`..., n_tokens) with `cum_before`,
+    * the token mass ahead in (score desc, doc_id) order, and the totals
+    * total_tokens, n_docs_all: what q578/q579/q601's budgets cut. One
+    * scan, pinned once for the prefix device (materialize=false) and the
+    * totals scalar, so neither re-runs the md5 scoring pass.
+    */
+  private def tokenMassBefore(s: org.apache.spark.sql.SparkSession,
+      dir: String, carry: Column*): DataFrame = {
+    val scored = Tables.documents(s, dir)
+      .select((Seq(col("doc_id"), q99ScoreCol.as("score")) ++ carry :+
+        size(Text.tokens(col("text"))).cast("long").as("n_tokens")): _*)
+      .localCheckpoint()
+    val cum = Prefix.runningSum(scored, "score", Seq("doc_id"), "n_tokens",
+      "cum_before", desc = true, materialize = false)
+    val tot = scored.agg(sum(col("n_tokens")).as("total_tokens"),
+      count(lit(1)).as("n_docs_all"))
+    cum.crossJoin(broadcast(tot))
+  }
+
   /** Per-document selection frame shared by q578/q579: q99 scores join
     * (lang, token count), the greedy quality-first rule marks a document
     * selected iff the token mass of strictly-better documents (score
@@ -2775,24 +2800,11 @@ object CurationQueries {
     * rule is exactly the window formulation's greedy prefix.
     */
   private def budgetSelection(s: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    // one documents scan (q99ScoreCol inlined — no self-join back on
-    // doc_id), checkpointed ONCE for its two consumers: the prefix device
-    // (materialize=false — it would otherwise checkpoint a second copy)
-    // and the totals scalar, which previously re-ran the md5 scoring pass
-    val scored = Tables.documents(s, dir)
-      .select(col("doc_id"), q99ScoreCol.as("score"), col("lang"),
-        size(Text.tokens(col("text"))).cast("long").as("n_tokens"))
-      .localCheckpoint()
-    val cum = Prefix.runningSum(scored, "score", Seq("doc_id"), "n_tokens",
-      "cum_before", desc = true, materialize = false)
-    val tot = scored.agg(sum(col("n_tokens")).as("total_tokens"),
-      count(lit(1)).as("n_docs_all"))
-    cum.crossJoin(broadcast(tot))
+      dir: String): DataFrame =
+    tokenMassBefore(s, dir, col("lang"))
       .withColumn("budget", expr("total_tokens div 2"))
       .withColumn("selected",
         (col("cum_before") < col("budget")).cast("long"))
-  }
 
   /** Shared oracle CTE chain: the q99 scoring plus the same greedy
     * prefix rule in window form.
@@ -3705,17 +3717,7 @@ object CurationQueries {
     */
   val q601BudgetSweep: Q = (s, dir) => {
     val pcts = Seq(10L, 25L, 50L, 75L)
-    // single checkpointed documents scan shared by the prefix device and
-    // the totals scalar (the budgetSelection posture, r9)
-    val scored = Tables.documents(s, dir)
-      .select(col("doc_id"), q99ScoreCol.as("score"),
-        size(Text.tokens(col("text"))).cast("long").as("n_tokens"))
-      .localCheckpoint()
-    val cum = Prefix.runningSum(scored, "score", Seq("doc_id"), "n_tokens",
-      "cum_before", desc = true, materialize = false)
-    val tot = scored.agg(sum(col("n_tokens")).as("total_tokens"),
-      count(lit(1)).as("n_docs_all"))
-    val withB = cum.crossJoin(broadcast(tot))
+    val withB = tokenMassBefore(s, dir)
     val aggCols = Seq(max(col("total_tokens")).as("total_tokens"),
       max(col("n_docs_all")).as("n_docs_all")) ++
       pcts.flatMap { p =>

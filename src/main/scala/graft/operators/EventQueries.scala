@@ -28,19 +28,54 @@ object EventQueries {
         cents(col("value")).as("v"))
       .groupBy(col("day"))
 
-  /** Tumbling-window aggregate: epoch-aligned 1-hour windows via the same
-    * `window()` operator the streaming path uses.
+  /** Every event's type and value in integer cents `v`, grouped by UTC day
+    * as in [[purchaseCentsByDay]]: the one pass of the daily cross-series
+    * statistics (q405, q410, q421, q428, q432), whose conditional
+    * aggregates pick the series.
     */
-  val q70Tumbling: Q = (s, dir) => {
-    val e = Tables.events(s, dir)
-    e.groupBy(window(col("ts"), "1 hour"), col("event_type"))
+  def eventsByDay(s: SparkSession, dir: String): RelationalGroupedDataset =
+    Tables.events(s, dir)
+      .select(expr("unix_millis(ts) div 86400000").as("day"),
+        col("event_type"), cents(col("value")).as("v"))
+      .groupBy(col("day"))
+
+  /** Purchases as (user_id, v cents, day), the day as in
+    * [[purchaseCentsByDay]], split at the window's mid-day by
+    * [[splitAtMidday]]: the one event pass of the before/after family
+    * (q298, q300, q329, q337, q370, q378).
+    */
+  def purchasesSplitAtMidday(s: SparkSession, dir: String): DataFrame =
+    splitAtMidday(Tables.events(s, dir)
+      .filter(col("event_type") === "purchase")
+      .select(col("user_id"), cents(col("value")).as("v"),
+        expr("unix_millis(ts) div 86400000").as("day")))
+
+  /** `df` (with an integral `day`) crossed with its broadcast mid-day
+    * `midday` = (min(day) + max(day) + 1) div 2; rows with
+    * day >= midday form the post period.
+    */
+  def splitAtMidday(df: DataFrame): DataFrame =
+    df.crossJoin(broadcast(df.agg(
+      expr("CAST((min(day) + max(day) + 1) div 2 AS BIGINT)").as("midday"))))
+
+  /** Per (`window`, event type): events, value cents and distinct users,
+    * keyed by the window's start `bucket` (q70, q75).
+    */
+  def windowedEventStats(s: SparkSession, dir: String,
+      window: Column): DataFrame =
+    Tables.events(s, dir)
+      .groupBy(window, col("event_type"))
       .agg(
         count(lit(1)).as("n_events"),
         sum(cents(col("value"))).as("total_value_c"),
         countDistinct(col("user_id")).as("n_users"))
       .select(col("window.start").as("bucket"), col("event_type"),
         col("n_events"), col("total_value_c"), col("n_users"))
-  }
+
+  /** Tumbling-window aggregate: epoch-aligned 1-hour windows via the same
+    * `window()` operator the streaming path uses.
+    */
+  val q70Tumbling: Q = (s, dir) => windowedEventStats(s, dir, window(col("ts"), "1 hour"))
 
   val q70Sql: String =
     """SELECT DATE_TRUNC('hour', ts) AS bucket, event_type,
@@ -89,16 +124,7 @@ object EventQueries {
     * same two epoch-aligned window starts per event (the 30-minute floor and
     * its predecessor) via UNNEST.
     */
-  val q75Sliding: Q = (s, dir) => {
-    val e = Tables.events(s, dir)
-    e.groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
-      .agg(
-        count(lit(1)).as("n_events"),
-        sum(cents(col("value"))).as("total_value_c"),
-        countDistinct(col("user_id")).as("n_users"))
-      .select(col("window.start").as("bucket"), col("event_type"),
-        col("n_events"), col("total_value_c"), col("n_users"))
-  }
+  val q75Sliding: Q = (s, dir) => windowedEventStats(s, dir, window(col("ts"), "1 hour", "30 minutes"))
 
   val q75Sql: String =
     """WITH b AS (
@@ -174,17 +200,26 @@ object EventQueries {
       |  CAST(CAST(json_extract_string(props, '$.k') AS INT) >= 50 AS INT) AS k_high
       |FROM events""".stripMargin
 
+  /** The as-of join's two sides: clicks (event_id, user_id, ts) and
+    * purchases (user_id, ts, event_id, value) — q76 and q231.
+    */
+  def clicksAndPurchases(s: SparkSession,
+      dir: String): (DataFrame, DataFrame) = {
+    val e = Tables.events(s, dir)
+    val clicks = e.filter(col("event_type") === "click")
+      .select(col("event_id"), col("user_id"), col("ts"))
+    val purchases = e.filter(col("event_type") === "purchase")
+      .select(col("user_id"), col("ts"), col("event_id"), col("value"))
+    (clicks, purchases)
+  }
+
   /** As-of join: every click event annotated with the user's most recent
     * prior purchase (value + timestamp) — the point-in-time feature lookup,
     * via [[AsOfJoin.latestPrior]]'s single-shuffle union+window plan. The
     * oracle states the same semantics declaratively with a LATERAL TOP-1.
     */
   val q76AsOfJoin: Q = (s, dir) => {
-    val e = Tables.events(s, dir)
-    val clicks = e.filter(col("event_type") === "click")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    val purchases = e.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("ts"), col("event_id"), col("value"))
+    val (clicks, purchases) = clicksAndPurchases(s, dir)
     AsOfJoin.latestPrior(clicks, purchases,
         keys = Seq("user_id"), leftTime = "ts", rightTime = "ts",
         payload = Seq("value"), tieBreak = Seq("event_id"))
@@ -215,11 +250,7 @@ object EventQueries {
     * operator ALSO survives the bit-exact DuckDB compare end to end.
     */
   val q231AsOfMerge: Q = (s, dir) => {
-    val e = Tables.events(s, dir)
-    val clicks = e.filter(col("event_type") === "click")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    val purchases = e.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("ts"), col("event_id"), col("value"))
+    val (clicks, purchases) = clicksAndPurchases(s, dir)
     graft.plans.AsOfMergeJoin.latestPrior(clicks, purchases,
         keys = Seq("user_id"), leftTime = "ts", rightTime = "ts",
         payload = Seq("value"), tieBreak = Seq("event_id"))
@@ -959,6 +990,24 @@ object EventQueries {
     */
   val AttrWindowMs = 7L * 86400000L
 
+  /** Every event as (user_id, ts, event_id, event_type, `carry`..., tkey)
+    * with `attr_key`, the packed key (epoch ms·4 + channel code: 1 click,
+    * 2 view) of the user's latest earlier click or view, NULL when there
+    * is none — q128's last-touch derivation, one user-keyed window pass.
+    */
+  def lastTouch(s: SparkSession, dir: String, carry: Column*): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val tkey = when(col("event_type") === "click", unix_millis(col("ts")) * 4 + 1)
+      .when(col("event_type") === "view", unix_millis(col("ts")) * 4 + 2)
+    val w = Window.partitionBy(col("user_id"))
+      .orderBy(col("ts"), col("event_id"))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    Tables.events(s, dir)
+      .select((Seq(col("user_id"), col("ts"), col("event_id"),
+        col("event_type")) ++ carry :+ tkey.as("tkey")): _*)
+      .withColumn("attr_key", max(col("tkey")).over(w))
+  }
+
   /** Last-touch attribution: each purchase is credited to the user's most
     * recent PRIOR click or view (the marketing-attribution staple), rolled
     * up to channel totals. The "most recent eligible prior event" is not a
@@ -972,16 +1021,7 @@ object EventQueries {
     * than the user's own history.
     */
   val q128Attribution: Q = (s, dir) => {
-    import org.apache.spark.sql.expressions.Window
-    val e = Tables.events(s, dir)
-    val tkey = when(col("event_type") === "click", unix_millis(col("ts")) * 4 + 1)
-      .when(col("event_type") === "view", unix_millis(col("ts")) * 4 + 2)
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val attr = e.select(col("user_id"), col("ts"), col("event_id"),
-        col("event_type"), col("value"), tkey.as("tkey"))
-      .withColumn("attr_key", max(col("tkey")).over(w))
+    val attr = lastTouch(s, dir, col("value"))
     val channel = when(col("attr_key").isNull, "none")
       .when(unix_millis(col("ts")) - expr("attr_key div 4") > AttrWindowMs,
         "stale")
@@ -1024,16 +1064,7 @@ object EventQueries {
     * aggregation touches only purchase rows.
     */
   val q129TimeToConvert: Q = (s, dir) => {
-    import org.apache.spark.sql.expressions.Window
-    val tkey = when(col("event_type") === "click", unix_millis(col("ts")) * 4 + 1)
-      .when(col("event_type") === "view", unix_millis(col("ts")) * 4 + 2)
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    Tables.events(s, dir)
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"),
-        tkey.as("tkey"))
-      .withColumn("attr_key", max(col("tkey")).over(w))
+    lastTouch(s, dir)
       .filter(col("event_type") === "purchase" && col("attr_key").isNotNull)
       .select(
         when(col("attr_key") % 4 === 1, "click").otherwise("view").as("channel"),
@@ -1285,29 +1316,44 @@ object EventQueries {
     * independent naive formulation (spine join + COUNT(DISTINCT)) — the
     * gate proves the interval algebra equals textbook semantics.
     */
-  val q137RollingActives: Q = (s, dir) => {
+  val q137RollingActives: Q = (s, dir) =>
+    trailingActives(s, dir, activeUserDays(s, dir), RollingDays)
+      .agg(count(lit(1)).as("active_7d"))
+
+  /** One row per (user, active day) with `pday`, the user's previous
+    * active day (NULL on the first). The lag runs over day-ordered
+    * events: within a day the order is ambiguous but immaterial — exactly
+    * one row per user-day sees a lag-day < its own (the rest see their own
+    * day), and its lag IS the previous active day.
+    */
+  def activeUserDays(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val e = Tables.events(s, dir)
-      .select(col("user_id"), expr("unix_timestamp(ts) DIV 86400").as("day"))
-    // lag over day-ordered events: within a day the order is ambiguous but
-    // immaterial — exactly one row per user-day sees a lag-day < its own
-    // (the rest see their own day), and its lag IS the previous active day.
     val w = Window.partitionBy(col("user_id")).orderBy(col("day"))
-    val firsts = e.withColumn("pday", lag(col("day"), 1).over(w))
+    Tables.events(s, dir)
+      .select(col("user_id"), expr("unix_timestamp(ts) DIV 86400").as("day"))
+      .withColumn("pday", lag(col("day"), 1).over(w))
       .filter(col("pday").isNull || col("pday") < col("day"))
+  }
+
+  /** The users active in the trailing `days`-day window ending on each
+    * day, grouped by day: each [[activeUserDays]] row covers only the
+    * window ends its previous active day does not (the interval algebra),
+    * clipped at the last event day. `days` keeps its numeric type in the
+    * plan.
+    */
+  def trailingActives[N](s: SparkSession, dir: String, userDays: DataFrame,
+      days: N)(implicit num: Numeric[N]): RelationalGroupedDataset = {
     val mx = Tables.events(s, dir)
       .agg(max(expr("unix_timestamp(ts) DIV 86400")).as("maxday"))
-    firsts
-      .select(
-        greatest(col("day"),
-          coalesce(col("pday") + RollingDays, col("day"))).as("lo"),
-        (col("day") + (RollingDays - 1)).as("hi"))
+    userDays
+      .select(greatest(col("day"),
+          coalesce(col("pday") + days, col("day"))).as("lo"),
+        (col("day") + num.minus(days, num.one)).as("hi"))
       .join(broadcast(mx))
       .select(col("lo"), least(col("hi"), col("maxday")).as("hi"))
       .filter(col("lo") <= col("hi"))
       .select(explode(sequence(col("lo"), col("hi"))).as("day"))
       .groupBy(col("day"))
-      .agg(count(lit(1)).as("active_7d"))
   }
 
   val q137Sql: String =
@@ -1340,25 +1386,10 @@ object EventQueries {
     * both metrics branch from it.
     */
   val q183Stickiness: Q = (s, dir) => {
-    import org.apache.spark.sql.expressions.Window
-    val e = Tables.events(s, dir)
-      .select(col("user_id"), expr("unix_timestamp(ts) DIV 86400").as("day"))
-    val w = Window.partitionBy(col("user_id")).orderBy(col("day"))
-    val userDays = e.withColumn("pday", lag(col("day"), 1).over(w))
-      .filter(col("pday").isNull || col("pday") < col("day"))
-      .localCheckpoint()
+    val userDays = activeUserDays(s, dir).localCheckpoint()
     val dau = userDays.groupBy(col("day")).agg(count(lit(1)).as("dau"))
-    val mx = Tables.events(s, dir)
-      .agg(max(expr("unix_timestamp(ts) DIV 86400")).as("maxday"))
-    val mau = userDays
-      .select(greatest(col("day"),
-          coalesce(col("pday") + MauDays, col("day"))).as("lo"),
-        (col("day") + (MauDays - 1)).as("hi"))
-      .join(broadcast(mx))
-      .select(col("lo"), least(col("hi"), col("maxday")).as("hi"))
-      .filter(col("lo") <= col("hi"))
-      .select(explode(sequence(col("lo"), col("hi"))).as("day"))
-      .groupBy(col("day")).agg(count(lit(1)).as("mau"))
+    val mau = trailingActives(s, dir, userDays, MauDays)
+      .agg(count(lit(1)).as("mau"))
     dau.join(mau, "day")
       .select(col("day"), col("dau"), col("mau"),
         expr("""CAST(CAST(dau AS DECIMAL(38,0)) * 1000000
@@ -1823,16 +1854,7 @@ object EventQueries {
     * windows is riding stale touches.
     */
   val q204AttributionSensitivity: Q = (s, dir) => {
-    import org.apache.spark.sql.expressions.Window
-    val e = Tables.events(s, dir)
-    val tkey = when(col("event_type") === "click", unix_millis(col("ts")) * 4 + 1)
-      .when(col("event_type") === "view", unix_millis(col("ts")) * 4 + 2)
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val attr = e.select(col("user_id"), col("ts"), col("event_id"),
-        col("event_type"), col("value"), tkey.as("tkey"))
-      .withColumn("attr_key", max(col("tkey")).over(w))
+    val attr = lastTouch(s, dir, col("value"))
       .filter(col("event_type") === "purchase" && col("attr_key").isNotNull)
       .select(
         when(col("attr_key") % 4 === 1, "click").otherwise("view").as("channel"),
@@ -3629,13 +3651,36 @@ object EventQueries {
     * metadata: collected, folded on the driver, returned as a literal frame.
     */
   val q259SurvivalKm: Q = (s, dir) => {
-    val e = Tables.events(s, dir)
+    import s.implicits._
+    kaplanMeier(s, dir).toSeq
+      .toDF("dur_days", "n_risk", "d_ev", "c_cens", "s_e6")
+      .orderBy(col("dur_days"))
+  }
+
+  /** Per user: the first event day `d0`, the first day of each event type
+    * in `firsts` (type -> column name), and the last event day `dlast`,
+    * with days as `unix_timestamp(ts) DIV 86400` — the user-grain rollup
+    * the survival family (q259, q332, q357, q373, q393) starts from.
+    */
+  def firstEventDays(s: SparkSession, dir: String,
+      firsts: (String, String)*): DataFrame = {
     val day = expr("unix_timestamp(ts) DIV 86400")
-    val byUser = e.groupBy(col("user_id")).agg(
+    Tables.events(s, dir).groupBy(col("user_id")).agg(
       min(day).as("d0"),
-      min(when(col("event_type") === "purchase", day)).as("dconv"),
-      max(day).as("dlast"))
-    val durs = byUser.select(
+      (firsts.map { case (t, name) =>
+        min(when(col("event_type") === t, day)).as(name)
+      } :+ max(day).as("dlast")): _*)
+  }
+
+  /** q259's Kaplan–Meier curve of time to first purchase, one step per
+    * duration in days (non-converters censor at their last event), as
+    * (dur, n at risk, events, censored, S e6): the |durations| rollup is
+    * collected as control metadata and each step folds
+    * S ← S·(n − d)/n in truncating BigInt arithmetic on the driver.
+    */
+  def kaplanMeier(s: SparkSession,
+      dir: String): Array[(Long, Long, Long, Long, Long)] = {
+    val durs = firstEventDays(s, dir, "purchase" -> "dconv").select(
       when(col("dconv").isNotNull, col("dconv") - col("d0"))
         .otherwise(col("dlast") - col("d0")).as("dur"),
       when(col("dconv").isNotNull, 1L).otherwise(0L).as("ev"))
@@ -3644,7 +3689,7 @@ object EventQueries {
       .orderBy(col("dur")).collect()
     var atRisk = roll.map(r => r.getAs[Long]("d_ev") + r.getAs[Long]("c_cens")).sum
     var sE6 = 1000000L
-    val out = roll.map { r =>
+    roll.map { r =>
       val (dur, dEv, cCens) = (r.getAs[Long]("dur"), r.getAs[Long]("d_ev"),
         r.getAs[Long]("c_cens"))
       val n = atRisk
@@ -3652,9 +3697,6 @@ object EventQueries {
       atRisk -= (dEv + cCens)
       (dur, n, dEv, cCens, sE6)
     }
-    import s.implicits._
-    out.toSeq.toDF("dur_days", "n_risk", "d_ev", "c_cens", "s_e6")
-      .orderBy(col("dur_days"))
   }
 
   val q259Sql: String =
@@ -4046,6 +4088,22 @@ object EventQueries {
 
   // ----------------------------- q292: two-arm log-rank survival test
 
+  /** Per user: first event day `d0`, first purchase day `dp` (NULL for
+    * non-converters) and the corpus's last day `maxday`, the censoring
+    * horizon — the user rollup of q292 and q301.
+    */
+  def firstPurchaseByUser(s: SparkSession, dir: String): DataFrame = {
+    val e = Tables.events(s, dir)
+      .select(col("user_id"), col("event_type"),
+        expr("unix_millis(ts) div 86400000").as("day"))
+    val horizon = e.agg(max(col("day")).as("maxday"))
+    e.crossJoin(broadcast(horizon))
+      .groupBy(col("user_id"))
+      .agg(min(col("day")).as("d0"),
+        min(when(col("event_type") === "purchase", col("day"))).as("dp"),
+        max(col("maxday")).as("maxday"))
+  }
+
   /** q292: log-rank test — do the A/B arms differ in TIME-TO-FIRST-
     * PURCHASE, not just in whether they purchase? The censoring-correct
     * companion to q259's Kaplan-Meier curve and the survival leg of the
@@ -4068,15 +4126,7 @@ object EventQueries {
     * re-shuffle after the user rollup.
     */
   val q292LogRank: Q = (s, dir) => {
-    val e = Tables.events(s, dir)
-      .select(col("user_id"), col("event_type"),
-        expr("unix_millis(ts) div 86400000").as("day"))
-    val horizon = e.agg(max(col("day")).as("maxday"))
-    val perUser = e.crossJoin(broadcast(horizon))
-      .groupBy(col("user_id"))
-      .agg(min(col("day")).as("d0"),
-        min(when(col("event_type") === "purchase", col("day"))).as("dp"),
-        max(col("maxday")).as("maxday"))
+    val perUser = firstPurchaseByUser(s, dir)
       .select(col("user_id"),
         when(col("dp").isNotNull, col("dp") - col("d0"))
           .otherwise(col("maxday") - col("d0")).as("t"),
@@ -4463,6 +4513,29 @@ object EventQueries {
   /** Seasonal period (days) of q296's naive forecast. */
   val ForecastSeason = 7L
 
+  /** Events per UTC day as (day, `n`), pinned: every caller reads it
+    * twice (day bounds, then the rows), and neither read replays the
+    * corpus pass.
+    */
+  def eventsPerDay(s: SparkSession, dir: String, n: String): DataFrame =
+    Tables.events(s, dir)
+      .select(expr("unix_millis(ts) div 86400000").as("day"))
+      .groupBy(col("day")).agg(count(lit(1)).as(n))
+      .localCheckpoint()
+
+  /** [[eventsPerDay]] on the complete min..max day spine as (day, a):
+    * gap days count zero, so a lag over the spine never compares across
+    * a gap.
+    */
+  def eventDaySpine(s: SparkSession, dir: String): DataFrame = {
+    val byDay = eventsPerDay(s, dir, "cnt")
+    val bounds = byDay.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
+    bounds
+      .select(explode(expr("sequence(d0, d1)")).as("day"))
+      .join(byDay, Seq("day"), "left")
+      .select(col("day"), coalesce(col("cnt"), lit(0L)).as("a"))
+  }
+
   /** q296: the forecast-accuracy panel every demand/capacity pipeline runs
     * after q261's Croston and the smoothing family: score the SEASONAL
     * NAIVE forecast (predict day d with day d−7) on daily event volume,
@@ -4483,17 +4556,7 @@ object EventQueries {
     * Corpus rows are touched exactly once.
     */
   val q296ForecastEval: Q = (s, dir) => {
-    val e = Tables.events(s, dir)
-      .select(expr("unix_millis(ts) div 86400000").as("day"))
-    // metadata rollup consumed by bounds AND the spine join — checkpoint
-    // so neither branch replays the corpus pass
-    val byDay = e.groupBy(col("day")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
-    val bounds = byDay.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
-    val spine = bounds
-      .select(explode(expr("sequence(d0, d1)")).as("day"))
-      .join(byDay, Seq("day"), "left")
-      .select(col("day"), coalesce(col("cnt"), lit(0L)).as("a"))
+    val spine = eventDaySpine(s, dir)
     val W = org.apache.spark.sql.expressions.Window.orderBy(col("day"))
     val lagged = spine
       .withColumn("f", lag(col("a"), ForecastSeason.toInt).over(W))
@@ -4681,14 +4744,8 @@ object EventQueries {
     * conditional rollup. No window, no join beyond the scalar.
     */
   val q298DiffInDiff: Q = (s, dir) => {
-    val e = Tables.events(s, dir)
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id"), cents(col("value")).as("v"),
-        expr("unix_millis(ts) div 86400000").as("day"))
-    val mid = e.agg(expr("CAST((min(day) + max(day) + 1) div 2 AS BIGINT)")
-      .as("midday"))
     val hv = graft.functions.Text.portableHash(col("user_id").cast("string"))
-    val cells = e.crossJoin(broadcast(mid))
+    val cells = purchasesSplitAtMidday(s, dir)
       .select(when(hv % 2 === 0, lit(1L)).otherwise(0L).as("treated"),
         when(col("day") >= col("midday"), lit(1L)).otherwise(0L).as("post"),
         col("v"))
@@ -4767,14 +4824,8 @@ object EventQueries {
     * second pass, no join back.
     */
   val q300Cuped: Q = (s, dir) => {
-    val e = Tables.events(s, dir)
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id"), cents(col("value")).as("v"),
-        expr("unix_millis(ts) div 86400000").as("day"))
-    val mid = e.agg(expr("CAST((min(day) + max(day) + 1) div 2 AS BIGINT)")
-      .as("midday"))
     val hv = graft.functions.Text.portableHash(col("user_id").cast("string"))
-    val perUser = e.crossJoin(broadcast(mid))
+    val perUser = purchasesSplitAtMidday(s, dir)
       .groupBy(col("user_id"))
       .agg(sum(when(col("day") < col("midday"), col("v")).otherwise(0L))
           .cast(dec).as("x"),
@@ -4862,15 +4913,7 @@ object EventQueries {
     * rollup.
     */
   val q301NelsonAalen: Q = (s, dir) => {
-    val e = Tables.events(s, dir)
-      .select(col("user_id"), col("event_type"),
-        expr("unix_millis(ts) div 86400000").as("day"))
-    val horizon = e.agg(max(col("day")).as("maxday"))
-    val perUser = e.crossJoin(broadcast(horizon))
-      .groupBy(col("user_id"))
-      .agg(min(col("day")).as("d0"),
-        min(when(col("event_type") === "purchase", col("day"))).as("dp"),
-        max(col("maxday")).as("maxday"))
+    val perUser = firstPurchaseByUser(s, dir)
       .select(
         when(col("dp").isNotNull, col("dp") - col("d0"))
           .otherwise(col("maxday") - col("d0")).as("t"),
@@ -5106,17 +5149,7 @@ object EventQueries {
     * day-of-week rollup all run over metadata-sized frames.
     */
   val q306SeasonalDecomp: Q = (s, dir) => {
-    val e = Tables.events(s, dir)
-      .select(expr("unix_millis(ts) div 86400000").as("day"))
-    // metadata rollup consumed by bounds AND the spine join — checkpoint
-    // so neither branch replays the corpus pass
-    val byDay = e.groupBy(col("day")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
-    val bounds = byDay.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
-    val spine = bounds
-      .select(explode(expr("sequence(d0, d1)")).as("day"))
-      .join(byDay, Seq("day"), "left")
-      .select(col("day"), coalesce(col("cnt"), lit(0L)).as("a"))
+    val spine = eventDaySpine(s, dir)
     val W = org.apache.spark.sql.expressions.Window.orderBy(col("day"))
       .rowsBetween(-3, 3)
     val trended = spine
@@ -5171,6 +5204,20 @@ object EventQueries {
 
   // ----------------------- q308: off-policy evaluation (IPS estimator)
 
+  /** The logged bandit actions: every non-purchase event with
+    * `next_type`, the type of the user's next event (NULL for the last),
+    * from one lead window partitioned by user (q308, q334).
+    */
+  def actionsBeforeNext(s: SparkSession, dir: String): DataFrame = {
+    val W = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("user_id")).orderBy(col("ms"), col("event_id"))
+    Tables.events(s, dir)
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        expr("unix_millis(ts)").as("ms"))
+      .withColumn("next_type", lead(col("event_type"), 1).over(W))
+      .filter(col("event_type") =!= "purchase")
+  }
+
   /** q308: inverse-propensity-scored off-policy evaluation — the
     * counterfactual question every recommendation/ranking pipeline asks of
     * its logs: "what conversion rate WOULD the greedy policy get?" without
@@ -5195,13 +5242,7 @@ object EventQueries {
     * the cell frame.
     */
   val q308IpsOffPolicy: Q = (s, dir) => {
-    val W = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("ms"), col("event_id"))
-    val logged = Tables.events(s, dir)
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        expr("unix_millis(ts)").as("ms"))
-      .withColumn("next_type", lead(col("event_type"), 1).over(W))
-      .filter(col("event_type") =!= "purchase")
+    val logged = actionsBeforeNext(s, dir)
       .select(col("user_id"), col("event_type").as("a"),
         when(col("next_type") === "purchase", 1L).otherwise(0L).as("r"))
     val strata = Tables.events(s, dir)
@@ -5603,12 +5644,9 @@ object EventQueries {
       (0 until p).map(k =>
         s"WHEN ${k}L THEN ${Math.round(fn(2 * Math.PI * k / p) * 1e6)}L")
         .mkString(s"CASE t % $p ", " ", " END")
-    val e = Tables.events(s, dir)
-      .select(expr("unix_millis(ts) div 86400000").as("day"))
-    // metadata rollup consumed by bounds AND the spine join — checkpoint
-    // so neither branch replays the corpus pass
-    val byDay = e.groupBy(col("day")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
+    // metadata rollup consumed by bounds AND the spine join — pinned so
+    // neither branch replays the corpus pass
+    val byDay = eventsPerDay(s, dir, "cnt")
     val bounds = byDay.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
     val spine = bounds
       .select(explode(expr("sequence(d0, d1)")).as("day"), col("d0"))
@@ -5694,13 +5732,10 @@ object EventQueries {
     * pass binning via 9 integer comparisons, a 10-row rollup.
     */
   val q325Psi: Q = (s, dir) => {
-    val e = Tables.events(s, dir)
-      .filter(col("event_type") === "purchase")
-      .select(cents(col("value")).as("v"),
-        expr("unix_millis(ts) div 86400000").as("day"))
-    val mid = e.agg(expr("CAST((min(day) + max(day) + 1) div 2 AS BIGINT)")
-      .as("midday"))
-    val staged = e.crossJoin(broadcast(mid))
+    val staged = splitAtMidday(Tables.events(s, dir)
+        .filter(col("event_type") === "purchase")
+        .select(cents(col("value")).as("v"),
+          expr("unix_millis(ts) div 86400000").as("day")))
       .select(col("v"), (col("day") >= col("midday")).cast("long").as("post"))
     // decile cutpoints via the two-level rank-target selection (the q327
     // fix): nine ungrouped percentile_disc aggregates over a corpus-scale
@@ -5823,13 +5858,7 @@ object EventQueries {
     * broadcast cutpoint rows → a 25-cell rollup.
     */
   val q329Mobility: Q = (s, dir) => {
-    val e = Tables.events(s, dir)
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id"), cents(col("value")).as("v"),
-        expr("unix_millis(ts) div 86400000").as("day"))
-    val mid = e.agg(expr("CAST((min(day) + max(day) + 1) div 2 AS BIGINT)")
-      .as("midday"))
-    val pu = e.crossJoin(broadcast(mid))
+    val pu = purchasesSplitAtMidday(s, dir)
       .groupBy(col("user_id"))
       .agg(sum(when(col("day") < col("midday"), col("v")).otherwise(0L))
           .as("pre"),
@@ -5961,13 +5990,9 @@ object EventQueries {
     * rollup and the selection all run on metadata frames.
     */
   val q330Conformal: Q = (s, dir) => {
-    val e = Tables.events(s, dir)
-      .select(expr("unix_millis(ts) div 86400000").as("day"))
-    val byDay = e.groupBy(col("day")).agg(count(lit(1)).as("a"))
-      .localCheckpoint() // consumed by the midpoint scalar AND the marking
-    val mid = byDay.agg(expr("CAST((min(day) + max(day) + 1) div 2 AS BIGINT)")
-      .as("midday"))
-    val marked = byDay.crossJoin(broadcast(mid))
+    // consumed by the midpoint scalar AND the marking
+    val byDay = eventsPerDay(s, dir, "a")
+    val marked = splitAtMidday(byDay)
       .select(col("day"), col("a"), expr("day % 7").as("dow"),
         (col("day") >= col("midday")).cast("long").as("is_test"))
       .localCheckpoint() // consumed by the calibration means AND the scoring
@@ -6060,13 +6085,7 @@ object EventQueries {
     * control metadata; output is a literal frame.
     */
   val q332CompetingRisks: Q = (s, dir) => {
-    val e = Tables.events(s, dir)
-    val day = expr("unix_timestamp(ts) DIV 86400")
-    val byUser = e.groupBy(col("user_id")).agg(
-      min(day).as("d0"),
-      min(when(col("event_type") === "purchase", day)).as("dp"),
-      min(when(col("event_type") === "error", day)).as("de"),
-      max(day).as("dlast"))
+    val byUser = firstEventDays(s, dir, "purchase" -> "dp", "error" -> "de")
     val durs = byUser.select(
       when(col("dp").isNotNull &&
           (col("de").isNull || col("dp") <= col("de")),
@@ -6183,13 +6202,7 @@ object EventQueries {
     * rollups; everything downstream is metadata joined on broadcast.
     */
   val q334DoublyRobust: Q = (s, dir) => {
-    val W = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("ms"), col("event_id"))
-    val logged = Tables.events(s, dir)
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        expr("unix_millis(ts)").as("ms"))
-      .withColumn("next_type", lead(col("event_type"), 1).over(W))
-      .filter(col("event_type") =!= "purchase")
+    val logged = actionsBeforeNext(s, dir)
       .select(col("user_id"), col("event_type").as("a"),
         when(col("next_type") === "purchase", 1L).otherwise(0L).as("r"),
         (graft.functions.Text.portableHash(col("user_id").cast("string"))
@@ -6407,13 +6420,7 @@ object EventQueries {
     * broadcast scalars finishes.
     */
   val q337SignedRank: Q = (s, dir) => {
-    val e = Tables.events(s, dir)
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id"), cents(col("value")).as("v"),
-        expr("unix_millis(ts) div 86400000").as("day"))
-    val mid = e.agg(expr("CAST((min(day) + max(day) + 1) div 2 AS BIGINT)")
-      .as("midday"))
-    val pairs = e.crossJoin(broadcast(mid))
+    val pairs = purchasesSplitAtMidday(s, dir)
       .groupBy(col("user_id"))
       .agg(sum(when(col("day") >= col("midday"), col("v")).otherwise(0L))
         .as("post"),
@@ -6827,13 +6834,8 @@ object EventQueries {
     */
   val q387YuleWalker: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val byDay = purchaseCentsByDay(s, dir).agg(sum(col("v")).cast(dec).as("x"))
-      .localCheckpoint()
-    val tot = byDay.agg(sum(col("x")).as("sx"),
-      count(lit(1)).cast(dec).as("n"))
     val w = Window.orderBy(col("day"))
-    val gs = byDay.crossJoin(broadcast(tot))
-      .select(col("day"), col("n"), expr(sdiv("x * n - sx", "n")).as("d0"))
+    val gs = dailyRevenueDeviations(s, dir)
       .withColumn("d1", lag(col("d0"), 1).over(w))
       .withColumn("d2", lag(col("d0"), 2).over(w))
       .agg(max(col("n")).as("n"),
@@ -6912,12 +6914,7 @@ object EventQueries {
     */
   val q380LjungBox: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val byDay = purchaseCentsByDay(s, dir).agg(sum(col("v")).cast(dec).as("x"))
-      .localCheckpoint()
-    val tot = byDay.agg(sum(col("x")).as("sx"),
-      count(lit(1)).cast(dec).as("n"))
-    val devs = byDay.crossJoin(broadcast(tot))
-      .select(col("day"), col("n"), expr(sdiv("x * n - sx", "n")).as("d0"))
+    val devs = dailyRevenueDeviations(s, dir)
     val w = Window.orderBy(col("day"))
     val lagged = (1 to LbLags).foldLeft(devs) { (df, l) =>
       df.withColumn(s"d$l", lag(col("d0"), l).over(w))
@@ -6991,13 +6988,7 @@ object EventQueries {
     * are 8 broadcast rows; the matrix is ≤ 25 metadata cells.
     */
   val q378WeightedKappa: Q = (s, dir) => {
-    val e = Tables.events(s, dir)
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id"), cents(col("value")).as("v"),
-        expr("unix_millis(ts) div 86400000").as("day"))
-    val mid = e.agg(expr("CAST((min(day) + max(day) + 1) div 2 AS BIGINT)")
-      .as("midday"))
-    val pu = e.crossJoin(broadcast(mid))
+    val pu = purchasesSplitAtMidday(s, dir)
       .select(col("user_id"),
         when(col("day") >= col("midday"), "post").otherwise("pre").as("p"),
         col("v"))
@@ -7098,41 +7089,29 @@ object EventQueries {
     * the fold touches only that rollup.
     */
   val q373GreenwoodCi: Q = (s, dir) => {
-    val e = Tables.events(s, dir)
-    val day = expr("unix_timestamp(ts) DIV 86400")
-    val byUser = e.groupBy(col("user_id")).agg(
-      min(day).as("d0"),
-      min(when(col("event_type") === "purchase", day)).as("dconv"),
-      max(day).as("dlast"))
-    val durs = byUser.select(
-      when(col("dconv").isNotNull, col("dconv") - col("d0"))
-        .otherwise(col("dlast") - col("d0")).as("dur"),
-      when(col("dconv").isNotNull, 1L).otherwise(0L).as("ev"))
-    val roll = durs.groupBy(col("dur"))
-      .agg(sum(col("ev")).as("d_ev"), sum(lit(1L) - col("ev")).as("c_cens"))
-      .orderBy(col("dur")).collect()
-    var atRisk = roll.map(r => r.getAs[Long]("d_ev") + r.getAs[Long]("c_cens")).sum
-    var sE6 = 1000000L
+    import s.implicits._
+    greenwoodBand(s, dir).toSeq
+      .toDF("dur_days", "n_risk", "d_ev", "s_e6", "se_e6", "ci_lo_e6",
+        "ci_hi_e6")
+      .orderBy(col("dur_days"))
+  }
+
+  /** q373's band over the [[kaplanMeier]] steps, per step (dur, n at risk,
+    * events, S e6, SE e6, lower e6, upper e6): the Greenwood sum
+    * accumulates at e12 and the ±1.96·SE band clamps to [0, 10⁶].
+    */
+  private def greenwoodBand(s: SparkSession,
+      dir: String): Array[(Long, Long, Long, Long, Long, Long, Long)] = {
     var gwE12 = BigInt(0)
-    val out = roll.map { r =>
-      val (dur, dEv, cCens) = (r.getAs[Long]("dur"), r.getAs[Long]("d_ev"),
-        r.getAs[Long]("c_cens"))
-      val n = atRisk
-      sE6 = (BigInt(sE6) * (n - dEv) / n).toLong
+    kaplanMeier(s, dir).map { case (dur, n, dEv, _, sE6) =>
       if (dEv < n)
         gwE12 += BigInt(dEv) * 1000000000000L / (BigInt(n) * (n - dEv))
       val v = BigInt(sE6) * sE6 * gwE12 / 1000000000000L
       val se = math.floor(math.sqrt(v.toDouble)).toLong
       val lo = math.max(0L, sE6 - se * 196L / 100L)
       val hi = math.min(1000000L, sE6 + se * 196L / 100L)
-      atRisk -= (dEv + cCens)
       (dur, n, dEv, sE6, se, lo, hi)
     }
-    import s.implicits._
-    out.toSeq
-      .toDF("dur_days", "n_risk", "d_ev", "s_e6", "se_e6", "ci_lo_e6",
-        "ci_hi_e6")
-      .orderBy(col("dur_days"))
   }
 
   val q373Sql: String =
@@ -7194,42 +7173,13 @@ object EventQueries {
     * recursive-CTE band as a derived table.
     */
   val q393MedianSurvival: Q = (s, dir) => {
-    val e = Tables.events(s, dir)
-    val day = expr("unix_timestamp(ts) DIV 86400")
-    val byUser = e.groupBy(col("user_id")).agg(
-      min(day).as("d0"),
-      min(when(col("event_type") === "purchase", day)).as("dconv"),
-      max(day).as("dlast"))
-    val durs = byUser.select(
-      when(col("dconv").isNotNull, col("dconv") - col("d0"))
-        .otherwise(col("dlast") - col("d0")).as("dur"),
-      when(col("dconv").isNotNull, 1L).otherwise(0L).as("ev"))
-    val roll = durs.groupBy(col("dur"))
-      .agg(sum(col("ev")).as("d_ev"), sum(lit(1L) - col("ev")).as("c_cens"))
-      .orderBy(col("dur")).collect()
-    var atRisk = roll.map(r => r.getAs[Long]("d_ev") + r.getAs[Long]("c_cens")).sum
-    val nAll = atRisk
-    var sE6 = 1000000L
-    var gwE12 = BigInt(0)
-    var med = -1L; var tLo = -1L; var tHi = -1L
-    roll.foreach { r =>
-      val (dur, dEv, cCens) = (r.getAs[Long]("dur"), r.getAs[Long]("d_ev"),
-        r.getAs[Long]("c_cens"))
-      val n = atRisk
-      sE6 = (BigInt(sE6) * (n - dEv) / n).toLong
-      if (dEv < n)
-        gwE12 += BigInt(dEv) * 1000000000000L / (BigInt(n) * (n - dEv))
-      val v = BigInt(sE6) * sE6 * gwE12 / 1000000000000L
-      val se = math.floor(math.sqrt(v.toDouble)).toLong
-      val lo = math.max(0L, sE6 - se * 196L / 100L)
-      val hi = math.min(1000000L, sE6 + se * 196L / 100L)
-      if (med < 0 && sE6 <= 500000L) med = dur
-      if (tLo < 0 && lo <= 500000L) tLo = dur
-      if (tHi < 0 && hi <= 500000L) tHi = dur
-      atRisk -= (dEv + cCens)
-    }
+    val band = greenwoodBand(s, dir)
+    val nAll = band.headOption.fold(0L)(_._2)
+    def firstAtOrBelowHalf(v: ((Long, Long, Long, Long, Long, Long, Long)) => Long) =
+      band.find(b => v(b) <= 500000L).fold(-1L)(_._1)
     import s.implicits._
-    Seq((nAll, med, tLo, tHi))
+    Seq((nAll, firstAtOrBelowHalf(_._4), firstAtOrBelowHalf(_._6),
+        firstAtOrBelowHalf(_._7)))
       .toDF("n_users", "median_days", "ci_lo_days", "ci_hi_days")
   }
 
@@ -7329,13 +7279,7 @@ object EventQueries {
     * Plan: one event pass → user pre/post rollup → a 1-row fold.
     */
   val q370SignTest: Q = (s, dir) => {
-    val e = Tables.events(s, dir)
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id"), cents(col("value")).as("v"),
-        expr("unix_millis(ts) div 86400000").as("day"))
-    val mid = e.agg(expr("CAST((min(day) + max(day) + 1) div 2 AS BIGINT)")
-      .as("midday"))
-    e.crossJoin(broadcast(mid))
+    purchasesSplitAtMidday(s, dir)
       .groupBy(col("user_id"))
       .agg((sum(when(col("day") >= col("midday"), col("v")).otherwise(0L)) -
         sum(when(col("day") < col("midday"), col("v")).otherwise(0L)))
@@ -7383,20 +7327,7 @@ object EventQueries {
   val q361BreuschPagan: Q = (s, dir) => {
     val byDay = purchaseCentsByDay(s, dir).agg(sum(col("v")).cast(dec).as("y"))
       .localCheckpoint()
-    val mn = byDay.agg(min(col("day")).as("d0"))
-    val xd = byDay.crossJoin(broadcast(mn))
-      .select((col("day") - col("d0")).cast(dec).as("x"), col("y"))
-      .localCheckpoint()
-    val sums = xd.agg(count(lit(1)).cast(dec).as("n"),
-        sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-        sum(col("x") * col("x")).as("sxx"), sum(col("x") * col("y")).as("sxy"))
-      .select(col("n"),
-        (col("n") * col("sxx") - col("sx") * col("sx")).as("dd"),
-        (col("sy") * col("sxx") - col("sx") * col("sxy")).as("num_a"),
-        (col("n") * col("sxy") - col("sx") * col("sy")).as("num_b"))
-    val aux = xd.crossJoin(broadcast(sums))
-      .select(col("x"),
-        expr(sdiv("dd * y - num_a - num_b * x", "dd")).as("rc"))
+    val aux = trendResiduals(byDay)
       .select(col("x"), (col("rc") * col("rc")).as("z"))
       .agg(count(lit(1)).cast(dec).as("n"),
         sum(col("x")).as("sx"), sum(col("z")).as("sz"),
@@ -7506,6 +7437,19 @@ object EventQueries {
 
   // ----------------- q363: Engle's ARCH LM test (volatility clustering)
 
+  /** Day-over-day change `r` of daily purchase revenue (DECIMAL cents)
+    * per day after the first, pinned — the series q363 and q364 test.
+    */
+  def dailyRevenueChanges(s: SparkSession, dir: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.orderBy(col("day"))
+    purchaseCentsByDay(s, dir).agg(sum(col("v")).cast(dec).as("x"))
+      .withColumn("xp", lag(col("x"), 1).over(w))
+      .filter(col("xp").isNotNull)
+      .select(col("day"), (col("x") - col("xp")).as("r"))
+      .localCheckpoint()
+  }
+
   /** q363: Engle's ARCH test — does a big revenue SWING predict another
     * big swing tomorrow? q344 tests level autocorrelation; this tests
     * VOLATILITY clustering (the ARCH effect), the reason naive daily
@@ -7519,11 +7463,7 @@ object EventQueries {
   val q363ArchLm: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
     val w = Window.orderBy(col("day"))
-    val diffs = purchaseCentsByDay(s, dir).agg(sum(col("v")).cast(dec).as("x"))
-      .withColumn("xp", lag(col("x"), 1).over(w))
-      .filter(col("xp").isNotNull)
-      .select(col("day"), (col("x") - col("xp")).as("r"))
-      .localCheckpoint()
+    val diffs = dailyRevenueChanges(s, dir)
     val tot = diffs.agg(sum(col("r")).as("sr"),
       count(lit(1)).cast(dec).as("n"))
     val zs = diffs.crossJoin(broadcast(tot))
@@ -7592,12 +7532,7 @@ object EventQueries {
     */
   val q364VarianceRatio: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val w = Window.orderBy(col("day"))
-    val diffs = purchaseCentsByDay(s, dir).agg(sum(col("v")).cast(dec).as("x"))
-      .withColumn("xp", lag(col("x"), 1).over(w))
-      .filter(col("xp").isNotNull)
-      .select(col("day"), (col("x") - col("xp")).as("r"))
-      .localCheckpoint()
+    val diffs = dailyRevenueChanges(s, dir)
     def varOf(df: DataFrame, c: String) = df.agg(
       count(lit(1)).cast(dec).as("n"), sum(col(c)).as("s"),
       sum(col(c) * col(c)).as("ss"))
@@ -7675,31 +7610,15 @@ object EventQueries {
     * the fold touches only that rollup.
     */
   val q357Rmst: Q = (s, dir) => {
-    val e = Tables.events(s, dir)
-    val day = expr("unix_timestamp(ts) DIV 86400")
-    val byUser = e.groupBy(col("user_id")).agg(
-      min(day).as("d0"),
-      min(when(col("event_type") === "purchase", day)).as("dconv"),
-      max(day).as("dlast"))
-    val durs = byUser.select(
-      when(col("dconv").isNotNull, col("dconv") - col("d0"))
-        .otherwise(col("dlast") - col("d0")).as("dur"),
-      when(col("dconv").isNotNull, 1L).otherwise(0L).as("ev"))
-    val roll = durs.groupBy(col("dur"))
-      .agg(sum(col("ev")).as("d_ev"), sum(lit(1L) - col("ev")).as("c_cens"))
-      .orderBy(col("dur")).collect()
-    var atRisk = roll.map(r => r.getAs[Long]("d_ev") + r.getAs[Long]("c_cens")).sum
-    val nAll = atRisk
+    val steps = kaplanMeier(s, dir)
+    val nAll = steps.headOption.fold(0L)(_._2)
     var sE6 = 1000000L
     var prevT = 0L
     var rmstE6 = 0L
-    roll.foreach { r =>
-      val (dur, dEv, cCens) = (r.getAs[Long]("dur"), r.getAs[Long]("d_ev"),
-        r.getAs[Long]("c_cens"))
+    steps.foreach { case (dur, _, _, _, sAfter) =>
       val dt = math.min(dur, RmstTau) - math.min(prevT, RmstTau)
       rmstE6 += sE6 * dt
-      sE6 = (BigInt(sE6) * (atRisk - dEv) / atRisk).toLong
-      atRisk -= (dEv + cCens)
+      sE6 = sAfter
       prevT = dur
     }
     if (prevT < RmstTau) rmstE6 += sE6 * (RmstTau - math.min(prevT, RmstTau))
@@ -7757,6 +7676,19 @@ object EventQueries {
   /** Bartlett-kernel lag window for the HAC estimate. */
   val NwLags = 5
 
+  /** Daily purchase revenue as deviations from its mean: (day, n days,
+    * d0 = the signed floor of x − x̄ at cents resolution), off one pinned
+    * day rollup — the series q358, q380 and q387 take lags of.
+    */
+  def dailyRevenueDeviations(s: SparkSession, dir: String): DataFrame = {
+    val byDay = purchaseCentsByDay(s, dir).agg(sum(col("v")).cast(dec).as("x"))
+      .localCheckpoint()
+    val tot = byDay.agg(sum(col("x")).as("sx"),
+      count(lit(1)).cast(dec).as("n"))
+    byDay.crossJoin(broadcast(tot))
+      .select(col("day"), col("n"), expr(sdiv("x * n - sx", "n")).as("d0"))
+  }
+
   /** q358: Newey–West — the autocorrelation-robust variance every
     * daily-mean confidence interval on a SERIALLY DEPENDENT series needs
     * (q344 shows ρ₁ ≠ 0 is real; a naive s²/n interval is then wrong by
@@ -7776,13 +7708,7 @@ object EventQueries {
     */
   val q358NeweyWest: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val byDay = purchaseCentsByDay(s, dir).agg(sum(col("v")).cast(dec).as("x"))
-      .localCheckpoint()
-    val tot = byDay.agg(sum(col("x")).as("sx"),
-      count(lit(1)).cast(dec).as("n"))
-    val devs = byDay.crossJoin(broadcast(tot))
-      .select(col("day"), col("n"),
-        expr(sdiv("x * n - sx", "n")).as("d0"))
+    val devs = dailyRevenueDeviations(s, dir)
     val w = Window.orderBy(col("day"))
     val lagged = (1 to NwLags).foldLeft(devs) { (df, l) =>
       df.withColumn(s"d$l", lag(col("d0"), l).over(w))
@@ -7939,9 +7865,7 @@ object EventQueries {
     val l2qE6 = math.round(KupiecLog2Q * 1e6)
     val byDay = purchaseCentsByDay(s, dir).agg(sum(col("v")).as("x"))
       .localCheckpoint()
-    val mid = byDay.agg(expr("CAST((min(day) + max(day) + 1) div 2 AS BIGINT)")
-      .as("midday"))
-    val half1 = byDay.crossJoin(broadcast(mid))
+    val half1 = splitAtMidday(byDay)
       .filter(col("day") < col("midday"))
     val byV = half1.groupBy(col("x")).agg(count(lit(1)).as("cnt"))
     val n1 = byV.agg(sum(col("cnt")).as("n1"))
@@ -7949,7 +7873,7 @@ object EventQueries {
       .crossJoin(broadcast(n1))
       .filter(col("below") + col("cnt") >= expr(s"(n1 + ${KupiecP - 1}) div $KupiecP"))
       .agg(min(col("x")).as("thr"))
-    val test = byDay.crossJoin(broadcast(mid)).filter(col("day") >= col("midday"))
+    val test = splitAtMidday(byDay).filter(col("day") >= col("midday"))
       .crossJoin(broadcast(thr))
       .agg(count(lit(1)).cast(dec).as("n"),
         sum(when(col("x") < col("thr"), 1L).otherwise(0L)).cast(dec).as("xx"))
@@ -8336,6 +8260,19 @@ object EventQueries {
 
   // ------- q350: 2×2 effect measures — odds ratio / relative risk
 
+  /** The 2×2 (arm_a, y) table as DECIMAL counts: a = (1, 1), b = (1, 0),
+    * c = (0, 1), d = (0, 0) — the cells q350 and q351 fold.
+    */
+  private def armOutcomeCells: Seq[Column] = Seq(
+    sum(when(col("arm_a") === 1L && col("y") === 1L, 1L).otherwise(0L))
+      .cast(dec).as("a"),
+    sum(when(col("arm_a") === 1L && col("y") === 0L, 1L).otherwise(0L))
+      .cast(dec).as("b"),
+    sum(when(col("arm_a") === 0L && col("y") === 1L, 1L).otherwise(0L))
+      .cast(dec).as("c"),
+    sum(when(col("arm_a") === 0L && col("y") === 0L, 1L).otherwise(0L))
+      .cast(dec).as("d"))
+
   /** q350: the epidemiologist's 2×2 panel for a binary outcome — odds
     * ratio, relative risk and risk difference of "active user-day saw a
     * purchase" across the hash arms, with Woolf's log-scale standard
@@ -8357,15 +8294,7 @@ object EventQueries {
       .agg(max(when(col("event_type") === "purchase", 1L).otherwise(0L))
         .as("y"))
       .select(when(hv % 2 === 0, 1L).otherwise(0L).as("arm_a"), col("y"))
-    pu.agg(
-        sum(when(col("arm_a") === 1L && col("y") === 1L, 1L).otherwise(0L))
-          .cast(dec).as("a"),
-        sum(when(col("arm_a") === 1L && col("y") === 0L, 1L).otherwise(0L))
-          .cast(dec).as("b"),
-        sum(when(col("arm_a") === 0L && col("y") === 1L, 1L).otherwise(0L))
-          .cast(dec).as("c"),
-        sum(when(col("arm_a") === 0L && col("y") === 0L, 1L).otherwise(0L))
-          .cast(dec).as("d"))
+    pu.agg(armOutcomeCells.head, armOutcomeCells.tail: _*)
       .select(col("a").cast("long").as("n11"),
         col("b").cast("long").as("n10"),
         col("c").cast("long").as("n01"),
@@ -8455,15 +8384,7 @@ object EventQueries {
       .select(when(hv % 2 === 0, 1L).otherwise(0L).as("arm_a"), col("y"),
         col("band"))
     val strata = pu.groupBy(col("band"))
-      .agg(
-        sum(when(col("arm_a") === 1L && col("y") === 1L, 1L).otherwise(0L))
-          .cast(dec).as("a"),
-        sum(when(col("arm_a") === 1L && col("y") === 0L, 1L).otherwise(0L))
-          .cast(dec).as("b"),
-        sum(when(col("arm_a") === 0L && col("y") === 1L, 1L).otherwise(0L))
-          .cast(dec).as("c"),
-        sum(when(col("arm_a") === 0L && col("y") === 0L, 1L).otherwise(0L))
-          .cast(dec).as("d"))
+      .agg(armOutcomeCells.head, armOutcomeCells.tail: _*)
       .select(col("band"), col("a"), col("b"), col("c"), col("d"),
         (col("a") + col("b") + col("c") + col("d")).as("nn"))
     strata.agg(
@@ -8584,6 +8505,28 @@ object EventQueries {
 
   // ---------------- q344: Durbin–Watson serial-correlation statistic
 
+  /** Residuals of the least-squares line through a daily series `byDay`
+    * (day, DECIMAL y): `x` = days since the first day, `rc` = the signed
+    * floor of y − (a + b·x) at the series' own resolution, from exact
+    * DECIMAL(38,0) sums — the residual series q344 and q361 test.
+    */
+  def trendResiduals(byDay: DataFrame): DataFrame = {
+    val mn = byDay.agg(min(col("day")).as("d0"))
+    val xd = byDay.crossJoin(broadcast(mn))
+      .select((col("day") - col("d0")).cast(dec).as("x"), col("y"))
+      .localCheckpoint()
+    val sums = xd.agg(count(lit(1)).cast(dec).as("n"),
+        sum(col("x")).as("sx"), sum(col("y")).as("sy"),
+        sum(col("x") * col("x")).as("sxx"), sum(col("x") * col("y")).as("sxy"))
+      .select(col("n"),
+        (col("n") * col("sxx") - col("sx") * col("sx")).as("dd"),
+        (col("sy") * col("sxx") - col("sx") * col("sxy")).as("num_a"),
+        (col("n") * col("sxy") - col("sx") * col("sy")).as("num_b"))
+    xd.crossJoin(broadcast(sums))
+      .select(col("x"),
+        expr(sdiv("dd * y - num_a - num_b * x", "dd")).as("rc"))
+  }
+
   /** q344: Durbin–Watson — ARE the residuals of the daily-revenue trend
     * fit independent? The classical post-regression diagnostic q117/q154
     * never report: fit y = a + b·x by exact OLS sums (x = day offset),
@@ -8604,20 +8547,7 @@ object EventQueries {
     import org.apache.spark.sql.expressions.Window
     val byDay = purchaseCentsByDay(s, dir).agg(sum(col("v")).cast(dec).as("y"))
       .localCheckpoint()
-    val mn = byDay.agg(min(col("day")).as("d0"))
-    val xd = byDay.crossJoin(broadcast(mn))
-      .select((col("day") - col("d0")).cast(dec).as("x"), col("y"))
-      .localCheckpoint()
-    val sums = xd.agg(count(lit(1)).cast(dec).as("n"),
-        sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-        sum(col("x") * col("x")).as("sxx"), sum(col("x") * col("y")).as("sxy"))
-      .select(col("n"),
-        (col("n") * col("sxx") - col("sx") * col("sx")).as("dd"),
-        (col("sy") * col("sxx") - col("sx") * col("sxy")).as("num_a"),
-        (col("n") * col("sxy") - col("sx") * col("sy")).as("num_b"))
-    val r = xd.crossJoin(broadcast(sums))
-      .select(col("x"),
-        expr(sdiv("dd * y - num_a - num_b * x", "dd")).as("rc"))
+    val r = trendResiduals(byDay)
     val lagW = Window.orderBy(col("x"))
     r.withColumn("rp", lag(col("rc"), 1).over(lagW))
       .agg(count(lit(1)).as("n_days"),
@@ -8915,10 +8845,7 @@ object EventQueries {
     */
   val q405Granger: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val byDay = Tables.events(s, dir)
-      .select(expr("unix_millis(ts) div 86400000").as("day"),
-        col("event_type"), cents(col("value")).as("v"))
-      .groupBy(col("day"))
+    val byDay = eventsByDay(s, dir)
       .agg(expr("SUM(CASE WHEN event_type = 'purchase' THEN v ELSE 0 END)" +
         " div 100000").as("rev"),
         sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("clk"))
@@ -9120,6 +9047,27 @@ object EventQueries {
 
   // ------ q408: Little's law day ledger over 30-minute sessions
 
+  /** Sessions as (user_id, sid, st, en) in epoch ms: a user's next event
+    * 30 minutes or more after the previous one opens a new session
+    * (gaps-and-islands over windows partitioned by user).
+    */
+  def sessionSpans(s: SparkSession, dir: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val wU = Window.partitionBy(col("user_id"))
+      .orderBy(col("ts"), col("event_id"))
+    Tables.events(s, dir)
+      .select(col("user_id"), col("event_id"),
+        expr("unix_millis(ts)").as("ms"), col("ts"))
+      .withColumn("prev", lag(col("ms"), 1).over(wU))
+      .withColumn("new_s",
+        when(col("prev").isNull || col("ms") - col("prev") >= 1800000L, 1L)
+          .otherwise(0L))
+      .withColumn("sid", sum(col("new_s")).over(
+        wU.rowsBetween(Window.unboundedPreceding, 0)))
+      .groupBy(col("user_id"), col("sid"))
+      .agg(min(col("ms")).as("st"), max(col("ms")).as("en"))
+  }
+
   /** q408: the Little's-law ledger — per DAY, the two accountings of
     * session time that the law L̄ = λ·W̄ equates at the horizon:
     * time-IN-system (the concurrency integral of q71-style 30-minute
@@ -9135,21 +9083,7 @@ object EventQueries {
     * (fan-out bounded by the horizon day count) → day rollup.
     */
   val q408LittlesLaw: Q = (s, dir) => {
-    import org.apache.spark.sql.expressions.Window
-    val wU = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val sess = Tables.events(s, dir)
-      .select(col("user_id"), col("event_id"),
-        expr("unix_millis(ts)").as("ms"), col("ts"))
-      .withColumn("prev", lag(col("ms"), 1).over(wU))
-      .withColumn("new_s",
-        when(col("prev").isNull || col("ms") - col("prev") >= 1800000L, 1L)
-          .otherwise(0L))
-      .withColumn("sid", sum(col("new_s")).over(
-        wU.rowsBetween(Window.unboundedPreceding, 0)))
-      .groupBy(col("user_id"), col("sid"))
-      .agg(min(col("ms")).as("st"), max(col("ms")).as("en"))
-      .localCheckpoint()
+    val sess = sessionSpans(s, dir).localCheckpoint()
     val spans = sess
       .withColumn("day", explode(sequence(expr("st div 86400000"),
         expr("en div 86400000"))))
@@ -9224,10 +9158,7 @@ object EventQueries {
     * 7-row fold.
     */
   val q410Ccf: Q = (s, dir) => {
-    val byDay = Tables.events(s, dir)
-      .select(expr("unix_millis(ts) div 86400000").as("day"),
-        col("event_type"), cents(col("value")).as("v"))
-      .groupBy(col("day"))
+    val byDay = eventsByDay(s, dir)
       .agg(expr("SUM(CASE WHEN event_type = 'purchase' THEN v ELSE 0 END)" +
         " div 100").as("rev"),
         sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("clk"))
@@ -9536,20 +9467,7 @@ object EventQueries {
     * partitioned by user) → 1-row load fold → 10-row plan-time spine.
     */
   val q417Erlang: Q = (s, dir) => {
-    import org.apache.spark.sql.expressions.Window
-    val wU = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val sess = Tables.events(s, dir)
-      .select(col("user_id"), col("event_id"),
-        expr("unix_millis(ts)").as("ms"), col("ts"))
-      .withColumn("prev", lag(col("ms"), 1).over(wU))
-      .withColumn("new_s",
-        when(col("prev").isNull || col("ms") - col("prev") >= 1800000L, 1L)
-          .otherwise(0L))
-      .withColumn("sid", sum(col("new_s")).over(
-        wU.rowsBetween(Window.unboundedPreceding, 0)))
-      .groupBy(col("user_id"), col("sid"))
-      .agg(min(col("ms")).as("st"), max(col("ms")).as("en"))
+    val sess = sessionSpans(s, dir)
     var load = sess.agg(count(lit(1)).as("n_sessions"),
       sum(col("en") - col("st")).as("dur_ms"),
       (max(col("en")) - min(col("st"))).as("horizon_ms"))
@@ -9835,10 +9753,7 @@ object EventQueries {
     * |days|²-band driver fold.
     */
   val q421Dtw: Q = (s, dir) => {
-    val byDay = Tables.events(s, dir)
-      .select(expr("unix_millis(ts) div 86400000").as("day"),
-        col("event_type"), cents(col("value")).as("v"))
-      .groupBy(col("day"))
+    val byDay = eventsByDay(s, dir)
       .agg(expr("SUM(CASE WHEN event_type = 'purchase' THEN v ELSE 0 END)")
         .as("rev"),
         sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("clk"))
@@ -10016,10 +9931,7 @@ object EventQueries {
     * Plan: one event pass → day rollup → 1-row co-moment fold.
     */
   val q428Mediation: Q = (s, dir) => {
-    val byDay = Tables.events(s, dir)
-      .select(expr("unix_millis(ts) div 86400000").as("day"),
-        col("event_type"), cents(col("value")).as("v"))
-      .groupBy(col("day"))
+    val byDay = eventsByDay(s, dir)
       .agg(sum(when(col("event_type") === "signup", 1L).otherwise(0L))
         .as("x"),
         sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("m"),
@@ -10235,10 +10147,7 @@ object EventQueries {
     */
   val q432EngleGranger: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val byDay = Tables.events(s, dir)
-      .select(expr("unix_millis(ts) div 86400000").as("day"),
-        col("event_type"), cents(col("value")).as("v"))
-      .groupBy(col("day"))
+    val byDay = eventsByDay(s, dir)
       .agg(sum(when(col("event_type") === "click", 1L).otherwise(0L))
         .cast(dec).as("x"),
         expr("CAST(SUM(CASE WHEN event_type = 'purchase' THEN v ELSE 0 END)" +

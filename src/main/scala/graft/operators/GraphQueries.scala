@@ -96,15 +96,20 @@ object GraphQueries {
     */
   private[operators] def copurchaseEdges(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    orderItems(s, dir).groupBy(col("o"))
-      .agg(sort_array(collect_list(col("p"))).as("parts"))
-      .filter(size(col("parts")).between(2, BasketCap))
-      .select(graft.functions.Pairs.inPlace(col("parts"), (x, y) =>
-        struct(x.as("part_a"), y.as("part_b"))).as("pr"))
-      .select(col("pr.part_a"), col("pr.part_b"))
-      .groupBy(col("part_a"), col("part_b"))
-      .agg(count(lit(1)).as("n_ab"))
-      .filter(col("n_ab") >= MinSupport)
+    basketPairCounts(orderItems(s, dir)).filter(col("n_ab") >= MinSupport)
+
+  /** Co-occurrence pair counts (part_a < part_b, n_ab) from the (o, p)
+    * incidences `items`, baskets capped at [[BasketCap]] parts (in-place
+    * i<j pairs).
+    */
+  private def basketPairCounts(items: org.apache.spark.sql.DataFrame) = items
+    .groupBy(col("o")).agg(sort_array(collect_list(col("p"))).as("parts"))
+    .filter(size(col("parts")).between(2, BasketCap))
+    .select(graft.functions.Pairs.inPlace(col("parts"), (x, y) =>
+      struct(x.as("part_a"), y.as("part_b"))).as("pr"))
+    .select(col("pr.part_a"), col("pr.part_b"))
+    .groupBy(col("part_a"), col("part_b"))
+    .agg(count(lit(1)).as("n_ab"))
 
   /** q107: association rules from the weighted bipartite projection of the
     * order–part graph — parts co-ordered in the same order, with support,
@@ -896,36 +901,8 @@ object GraphQueries {
     * part×part product.
     */
   val q202RecsysEval: Q = (s, dir) => {
-    import org.apache.spark.sql.expressions.Window
-    def itemsIn(test: Boolean) = {
-      val o = Tables.orders(s, dir).select(col("o_orderkey"), col("o_orderdate"))
-      val cond = if (test) col("o_orderdate") >= lit(recCutoff).cast("timestamp")
-        else col("o_orderdate") < lit(recCutoff).cast("timestamp")
-      Tables.lineitem(s, dir)
-        .join(o.filter(cond), col("l_orderkey") === col("o_orderkey"))
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
-    }
-    def edges(items: org.apache.spark.sql.DataFrame) = items
-      .groupBy(col("o")).agg(sort_array(collect_list(col("p"))).as("parts"))
-      .filter(size(col("parts")).between(2, BasketCap))
-      .select(graft.functions.Pairs.inPlace(col("parts"), (x, y) =>
-        struct(x.as("part_a"), y.as("part_b"))).as("pr"))
-      .select(col("pr.part_a"), col("pr.part_b"))
-      .groupBy(col("part_a"), col("part_b"))
-      .agg(count(lit(1)).as("n_ab"))
-    def directional(e: org.apache.spark.sql.DataFrame) =
-      graft.functions.Pairs.bothOrientations(
-        e.select(col("part_a").as("a"), col("part_b").as("b"), col("n_ab")),
-        "a", "b", "n_ab")
-    val train = directional(edges(itemsIn(test = false)))
-    val recs = train
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("a")).orderBy(col("n_ab").desc, col("b"))))
-      .filter(col("rk") <= RecK)
-      .select(col("a"), col("b"))
-    val testPairs = directional(edges(itemsIn(test = true)))
-      .select(col("a"), col("b"))
+    val recs = rankedRecs(s, dir, RecK).select(col("a"), col("b"))
+    val testPairs = recTestPairs(s, dir)
     testPairs
       .join(recs.withColumn("hit", lit(1L)), Seq("a", "b"), "left")
       .agg(count(lit(1)).as("n_test_pairs"),
@@ -1049,16 +1026,6 @@ object GraphQueries {
       .distinct()
   }
 
-  /** Co-occurrence pair counts from capped baskets (in-place i<j pairs). */
-  private def recPairEdges(items: org.apache.spark.sql.DataFrame) = items
-    .groupBy(col("o")).agg(sort_array(collect_list(col("p"))).as("parts"))
-    .filter(size(col("parts")).between(2, BasketCap))
-    .select(graft.functions.Pairs.inPlace(col("parts"), (x, y) =>
-      struct(x.as("part_a"), y.as("part_b"))).as("pr"))
-    .select(col("pr.part_a"), col("pr.part_b"))
-    .groupBy(col("part_a"), col("part_b"))
-    .agg(count(lit(1)).as("n_ab"))
-
   /** Both directions of the undirected co-occurrence edge list — in place
     * (Pairs.bothOrientations), so the pair-generation pipeline upstream is
     * derived once, not once per union branch (r9).
@@ -1067,6 +1034,26 @@ object GraphQueries {
     graft.functions.Pairs.bothOrientations(
       e.select(col("part_a").as("a"), col("part_b").as("b"), col("n_ab")),
       "a", "b", "n_ab")
+
+  /** The recommender: train-side directional edges ranked per part `a`
+    * by co-occurrence (ties to the lower `b`), top `k` kept with `rk`.
+    */
+  private def rankedRecs(s: org.apache.spark.sql.SparkSession, dir: String,
+      k: Int) = {
+    import org.apache.spark.sql.expressions.Window
+    recDirectional(basketPairCounts(recItems(s, dir, test = false)))
+      .withColumn("rk", row_number().over(
+        Window.partitionBy(col("a")).orderBy(col("n_ab").desc, col("b"))))
+      .filter(col("rk") <= k)
+  }
+
+  /** The test-side directional pairs (a, b) the recommendations are
+    * graded against.
+    */
+  private def recTestPairs(s: org.apache.spark.sql.SparkSession,
+      dir: String) =
+    recDirectional(basketPairCounts(recItems(s, dir, test = true)))
+      .select(col("a"), col("b"))
 
   /** q217: ranking-metrics panel — MRR, precision@{1,3,10} and recall@10
     * for the q202 recommender under the same leak-free temporal split.
@@ -1085,14 +1072,9 @@ object GraphQueries {
     * |test users| rows. At 100 TB each stage shuffles once on its key.
     */
   val q217RankingMetrics: Q = (s, dir) => {
-    import org.apache.spark.sql.expressions.Window
-    val recs = recDirectional(recPairEdges(recItems(s, dir, test = false)))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("a")).orderBy(col("n_ab").desc, col("b"))))
-      .filter(col("rk") <= RankK)
+    val recs = rankedRecs(s, dir, RankK)
       .select(col("a"), col("b"), col("rk"))
-    val relevant = recDirectional(recPairEdges(recItems(s, dir, test = true)))
-      .select(col("a"), col("b"))
+    val relevant = recTestPairs(s, dir)
     // LEFT-JOIN-FIRST (r9): the old shape consumed `relevant` twice (per-
     // user relevance rollup + inner hit join) and re-derived the whole test
     // pair pipeline per consumer (materializing it was counter-measured
@@ -1219,14 +1201,9 @@ object GraphQueries {
     * discount lookup is an element_at into a 10-literal array — free.
     */
   val q262Ndcg: Q = (s, dir) => {
-    import org.apache.spark.sql.expressions.Window
-    val recs = recDirectional(recPairEdges(recItems(s, dir, test = false)))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("a")).orderBy(col("n_ab").desc, col("b"))))
-      .filter(col("rk") <= RankK)
+    val recs = rankedRecs(s, dir, RankK)
       .select(col("a"), col("b"), col("rk"))
-    val relevant = recDirectional(recPairEdges(recItems(s, dir, test = true)))
-      .select(col("a"), col("b"))
+    val relevant = recTestPairs(s, dir)
     val discArr = array(DcgDisc.map(lit): _*)
     val cumArr = array(DcgCum.map(lit): _*)
     // LEFT-JOIN-FIRST (r9, the q217 rewrite): one derivation of the test

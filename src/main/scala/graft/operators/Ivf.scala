@@ -72,35 +72,7 @@ object Ivf {
     require(sample.nonEmpty, "cannot train a quantizer on an empty table")
     // fewer sample rows than requested centroids → train the smaller
     // quantizer (every row its own seed) instead of indexing past the seeds
-    var centroids: Array[Array[Double]] = sample.take(k).map(_.clone())
-    val kEff = centroids.length
-    (1 to iters).foreach { _ =>
-      val cn2 = centroids.map(c => c.map(x => x * x).sum)
-      val sums = Array.fill(kEff)(new Array[Double](dim))
-      val counts = new Array[Long](kEff)
-      sample.foreach { v =>
-        // same (-2·v·c + |c|², then j) argmin ordering as assignExpr
-        var best = 0
-        var bestD = Double.PositiveInfinity
-        var j = 0
-        while (j < kEff) {
-          var dp = 0.0
-          var i = 0
-          while (i < dim) { dp += v(i) * centroids(j)(i); i += 1 }
-          val d = -2.0 * dp + cn2(j)
-          if (d < bestD) { bestD = d; best = j }
-          j += 1
-        }
-        counts(best) += 1
-        var i = 0
-        while (i < dim) { sums(best)(i) += v(i); i += 1 }
-      }
-      centroids = Array.tabulate(kEff) { j =>
-        if (counts(j) == 0) centroids(j)
-        else Array.tabulate(dim)(i => sums(j)(i) / counts(j))
-      }
-    }
-    centroids.map(_.toSeq).toSeq
+    localLloyd(sample, k, dim, iters)
   }
 
   /** Build the inverted assignment (vec_id, cluster) for a vector table. */
@@ -173,6 +145,7 @@ object Ivf {
       val sums = Array.fill(centroids.length)(new Array[Double](dim))
       val counts = new Array[Long](centroids.length)
       sample.foreach { v =>
+        // same (-2·v·c + |c|², then j) argmin ordering as assignExpr
         var best = 0
         var bestD = Double.PositiveInfinity
         var j = 0

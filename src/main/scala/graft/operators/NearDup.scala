@@ -150,7 +150,6 @@ object NearDup {
       // centre-that-is-a-leaf keeps contracting.) One role aggregation
       // replaces the former count + exceptAll pair of jobs per round, and
       // fires a round earlier than edge-set-unchanged.
-      val t0 = System.nanoTime()
       val roles = small.select(col("v").as("id"),
           lit(1L).as("leaf_deg"), lit(0).as("centre"))
         .union(small.select(col("u").as("id"),
@@ -159,8 +158,6 @@ object NearDup {
         .agg(sum(col("leaf_deg")).as("leaf_deg"), max(col("centre")).as("centre"))
       converged = roles.filter(col("leaf_deg") > 1 ||
         (col("leaf_deg") === 1 && col("centre") === 1)).isEmpty
-      if (sys.env.contains("GRAFT_DEBUG"))
-        println(s"[star] round $iters ${(System.nanoTime()-t0)/1e9}s")
       edges.unpersist()
       edges = small
       iters += 1

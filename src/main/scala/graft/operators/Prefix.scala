@@ -1,7 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** Distributed order-statistics primitives — the two-level bucket devices
@@ -43,6 +43,34 @@ object Prefix {
       .agg(coalesce(sum(col("pfx_os")), lit(0L)).as("prior"))
   }
 
+  /** Step 1 of every device below: the input (localCheckpoint'd when
+    * `materialize`) plus `pfx_bkt`, the row's ~1/1024 slice of the global
+    * [min, max] range of `valueCol`, from one broadcast min/max scalar.
+    */
+  private[operators] def bucketize(df: DataFrame, valueCol: String,
+      materialize: Boolean): DataFrame = {
+    val src = if (materialize) df.localCheckpoint() else df
+    val scal = src.agg(min(col(valueCol)).as("pfx_mn"),
+      max(col(valueCol)).as("pfx_mx"))
+    src.crossJoin(broadcast(scal))
+      .withColumn("pfx_bkt",
+        expr(s"($valueCol - pfx_mn) div ((pfx_mx - pfx_mn) div 1024 + 1)"))
+      .drop("pfx_mn", "pfx_mx")
+  }
+
+  /** Step 3's frame: rows of one `partition` (bucket) in (valueCol
+    * asc/desc, tieCols...) order, from the first row to the one before
+    * this one, or to this one when `includeCurrent`.
+    */
+  private def withinBucket(partition: Seq[Column], valueCol: String,
+      tieCols: Seq[String], desc: Boolean,
+      includeCurrent: Boolean): WindowSpec = {
+    val ord = (if (desc) col(valueCol).desc else col(valueCol).asc) +:
+      tieCols.map(col)
+    Window.partitionBy(partition: _*).orderBy(ord: _*)
+      .rowsBetween(Window.unboundedPreceding, if (includeCurrent) 0 else -1)
+  }
+
   /** Running sum of `weightCol` over (valueCol asc/desc, tieCols...) order
     * — `out` = Σ weight over rows strictly before this one, plus this
     * row's weight when `includeCurrent`. Weights may be negative (the
@@ -76,20 +104,12 @@ object Prefix {
       weightCol: String, out: String, desc: Boolean = false,
       includeCurrent: Boolean = false,
       materialize: Boolean = true): DataFrame = {
-    val src = if (materialize) df.localCheckpoint() else df
-    val scal = src.agg(min(col(valueCol)).as("pfx_mn"),
-      max(col(valueCol)).as("pfx_mx"))
-    val bucketed = src.crossJoin(broadcast(scal))
-      .withColumn("pfx_bkt",
-        expr(s"($valueCol - pfx_mn) div ((pfx_mx - pfx_mn) div 1024 + 1)"))
-      .drop("pfx_mn", "pfx_mx")
+    val bucketed = bucketize(df, valueCol, materialize)
     val bRoll = bucketed.groupBy(col("pfx_bkt"))
       .agg(sum(col(weightCol)).as("pfx_bsum"))
     val prior = bucketPrior(bRoll, "pfx_bkt", "pfx_bsum", desc)
-    val ord = (if (desc) col(valueCol).desc else col(valueCol).asc) +:
-      tieCols.map(col)
-    val inW = Window.partitionBy(col("pfx_bkt")).orderBy(ord: _*)
-      .rowsBetween(Window.unboundedPreceding, if (includeCurrent) 0 else -1)
+    val inW = withinBucket(Seq(col("pfx_bkt")), valueCol, tieCols, desc,
+      includeCurrent)
     bucketed.join(broadcast(prior), Seq("pfx_bkt"))
       .withColumn(out,
         col("prior") + coalesce(sum(col(weightCol)).over(inW), lit(0L)))
@@ -127,14 +147,8 @@ object Prefix {
       tieCols: Seq[String], weightCol: String, out: String,
       desc: Boolean = false, includeCurrent: Boolean = false,
       materialize: Boolean = true): DataFrame = {
-    val src = if (materialize) df.localCheckpoint() else df
     val gCols = groupCols.map(col)
-    val scal = src.agg(min(col(valueCol)).as("pfx_mn"),
-      max(col(valueCol)).as("pfx_mx"))
-    val bucketed = src.crossJoin(broadcast(scal))
-      .withColumn("pfx_bkt",
-        expr(s"($valueCol - pfx_mn) div ((pfx_mx - pfx_mn) div 1024 + 1)"))
-      .drop("pfx_mn", "pfx_mx")
+    val bucketed = bucketize(df, valueCol, materialize)
     val bRoll = bucketed.groupBy((gCols :+ col("pfx_bkt")): _*)
       .agg(sum(col(weightCol)).as("pfx_bsum"))
     val other = bRoll.select((groupCols.map(g => col(g).as(s"pfx_g_$g")) :+
@@ -146,10 +160,8 @@ object Prefix {
     val prior = bRoll.join(broadcast(other), cond, "left")
       .groupBy((gCols :+ col("pfx_bkt")): _*)
       .agg(coalesce(sum(col("pfx_os")), lit(0L)).as("pfx_prior"))
-    val ord = (if (desc) col(valueCol).desc else col(valueCol).asc) +:
-      tieCols.map(col)
-    val inW = Window.partitionBy((gCols :+ col("pfx_bkt")): _*).orderBy(ord: _*)
-      .rowsBetween(Window.unboundedPreceding, if (includeCurrent) 0 else -1)
+    val inW = withinBucket(gCols :+ col("pfx_bkt"), valueCol, tieCols, desc,
+      includeCurrent)
     bucketed.join(broadcast(prior), groupCols :+ "pfx_bkt")
       .withColumn(out,
         col("pfx_prior") + coalesce(sum(col(weightCol)).over(inW), lit(0L)))
@@ -171,13 +183,7 @@ object Prefix {
       aggCol: String, out: String, desc: Boolean = false,
       includeCurrent: Boolean = false,
       materialize: Boolean = true): DataFrame = {
-    val src = if (materialize) df.localCheckpoint() else df
-    val scal = src.agg(min(col(valueCol)).as("pfx_mn"),
-      max(col(valueCol)).as("pfx_mx"))
-    val bucketed = src.crossJoin(broadcast(scal))
-      .withColumn("pfx_bkt",
-        expr(s"($valueCol - pfx_mn) div ((pfx_mx - pfx_mn) div 1024 + 1)"))
-      .drop("pfx_mn", "pfx_mx")
+    val bucketed = bucketize(df, valueCol, materialize)
     val bRoll = bucketed.groupBy(col("pfx_bkt"))
       .agg(max(col(aggCol)).as("pfx_bmax"))
     val other = bRoll.select(col("pfx_bkt").as("pfx_ob"),
@@ -187,10 +193,8 @@ object Prefix {
     // max over an all-null (no earlier bucket) group is NULL — preserved
     val prior = bRoll.join(broadcast(other), cond, "left")
       .groupBy(col("pfx_bkt")).agg(max(col("pfx_om")).as("pfx_prior"))
-    val ord = (if (desc) col(valueCol).desc else col(valueCol).asc) +:
-      tieCols.map(col)
-    val inW = Window.partitionBy(col("pfx_bkt")).orderBy(ord: _*)
-      .rowsBetween(Window.unboundedPreceding, if (includeCurrent) 0 else -1)
+    val inW = withinBucket(Seq(col("pfx_bkt")), valueCol, tieCols, desc,
+      includeCurrent)
     bucketed.join(broadcast(prior), Seq("pfx_bkt"))
       .withColumn(out, greatest(col("pfx_prior"), max(col(aggCol)).over(inW)))
       .drop("pfx_bkt", "pfx_prior")
@@ -206,13 +210,7 @@ object Prefix {
     */
   def lagOver(df: DataFrame, valueCol: String, tieCols: Seq[String],
       srcCol: String, out: String, materialize: Boolean = true): DataFrame = {
-    val src = if (materialize) df.localCheckpoint() else df
-    val scal = src.agg(min(col(valueCol)).as("pfx_mn"),
-      max(col(valueCol)).as("pfx_mx"))
-    val bucketed = src.crossJoin(broadcast(scal))
-      .withColumn("pfx_bkt",
-        expr(s"($valueCol - pfx_mn) div ((pfx_mx - pfx_mn) div 1024 + 1)"))
-      .drop("pfx_mn", "pfx_mx")
+    val bucketed = bucketize(df, valueCol, materialize)
     val ordCols = col(valueCol) +: tieCols.map(col)
     val bLast = bucketed.groupBy(col("pfx_bkt"))
       .agg(max_by(col(srcCol), struct(ordCols: _*)).as("pfx_bval"))
@@ -237,13 +235,7 @@ object Prefix {
     */
   def leadOver(df: DataFrame, valueCol: String, tieCols: Seq[String],
       srcCol: String, out: String, materialize: Boolean = true): DataFrame = {
-    val src = if (materialize) df.localCheckpoint() else df
-    val scal = src.agg(min(col(valueCol)).as("pfx_mn"),
-      max(col(valueCol)).as("pfx_mx"))
-    val bucketed = src.crossJoin(broadcast(scal))
-      .withColumn("pfx_bkt",
-        expr(s"($valueCol - pfx_mn) div ((pfx_mx - pfx_mn) div 1024 + 1)"))
-      .drop("pfx_mn", "pfx_mx")
+    val bucketed = bucketize(df, valueCol, materialize)
     val ordCols = col(valueCol) +: tieCols.map(col)
     val bFirst = bucketed.groupBy(col("pfx_bkt"))
       .agg(min_by(col(srcCol), struct(ordCols: _*)).as("pfx_bval"))

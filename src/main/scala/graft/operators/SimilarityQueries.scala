@@ -3,6 +3,7 @@ package graft.operators
 import graft.{Q, Tables}
 import graft.functions.{Pairs, Vectors}
 import graft.functions.Exact._
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
@@ -19,6 +20,25 @@ object SimilarityQueries {
 
   private val K = 5
 
+  /** The [[K]] most cosine-similar neighbors per probe as (probe_id,
+    * neighbor_id, rnk), ties to the lower neighbor id, from candidate
+    * pairs that carry both sides' embedding and precomputed norm
+    * (`embedding`/`nrm`, `probe_vec`/`probe_nrm`); a vector never
+    * neighbors itself. Each pair costs one codegen'd dot product.
+    */
+  private def topKNeighbors(pairs: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(col("probe_id"))
+      .orderBy(col("sim").desc, col("neighbor_id"))
+    pairs.filter(col("vec_id") =!= col("probe_id"))
+      .select(col("probe_id"), col("vec_id").as("neighbor_id"),
+        (Vectors.dot(col("embedding"), col("probe_vec")) /
+          (col("nrm") * col("probe_nrm"))).as("sim"))
+      .withColumn("rnk", row_number().over(w))
+      .filter(col("rnk") <= K)
+      .select(col("probe_id"), col("neighbor_id"), col("rnk"))
+  }
+
   /** Exact brute-force cosine top-k for a 10-probe batch. Output is rank-only
     * (ints), so the result is robust to last-ulp float noise.
     */
@@ -31,17 +51,7 @@ object SimilarityQueries {
         col("nrm").as("probe_nrm"))
     // norms are precomputed per row (identical arithmetic, evaluated once);
     // each pair costs a single codegen'd dot product
-    val sims = e.crossJoin(broadcast(probes))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-        (Vectors.dot(col("embedding"), col("probe_vec")) /
-          (col("nrm") * col("probe_nrm"))).as("sim"))
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    sims.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= K)
-      .select(col("probe_id"), col("neighbor_id"), col("rnk"))
+    topKNeighbors(e.crossJoin(broadcast(probes)))
   }
 
   /** Embedding norm/label rollup: per-row sequential-fold norms (exact given
@@ -288,17 +298,7 @@ object SimilarityQueries {
         col("nrm").as("probe_nrm"),
         explode(Ivf.probeExpr(col("embedding").cast("array<double>"),
           centroids, IvfNprobe)).as("cluster"))
-    val cands = listed.join(probes, Seq("cluster"))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-        (Vectors.dot(col("embedding"), col("probe_vec")) /
-          (col("nrm") * col("probe_nrm"))).as("sim"))
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    cands.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= K)
-      .select(col("probe_id"), col("neighbor_id"), col("rnk"))
+    topKNeighbors(listed.join(probes, Seq("cluster")))
   }
 
   /** IVF-PQ: q64's inverted lists with product-quantized candidates and
@@ -360,23 +360,26 @@ object SimilarityQueries {
       .select(col("probe_id"), col("neighbor_id"), col("rnk"))
   }
 
+  /** PQ codebooks as oracle VALUES rows `(m, j, [c…], ‖c‖²)`, for the
+    * data oracles that inline them (q82, q216).
+    */
+  private def pqCodebookRows(cb: Pq.Codebooks): String =
+    (for {
+      mi <- 0 until cb.m
+      (c, j) <- cb.books(mi).zipWithIndex
+    } yield s"($mi, $j, [${c.mkString(", ")}], ${c.map(x => x * x).sum})")
+      .mkString(",\n    ")
+
   /** DuckDB oracle for q82: trained coarse centroids AND per-subspace PQ
     * codebooks inlined as VALUES; code assignment and ADC entries are the
     * same `-2·v·c + |c|²` correlated-subquery scalars the engine computes,
     * summed per candidate in the same subspace order.
     */
   def q82SqlFor(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val e = Tables.embeddings(s, dir)
-    val coarse = Ivf.train(e, IvfK, Dim, iters = IvfIters)
-    val cb = Pq.train(e, PqM, PqKsub, Dim, iters = IvfIters)
-    val centRows = coarse.zipWithIndex.map { case (c, j) =>
-      s"($j, [${c.mkString(", ")}], ${c.map(x => x * x).sum})"
-    }.mkString(",\n    ")
-    val pqRows = (for {
-      mi <- 0 until cb.m
-      (c, j) <- cb.books(mi).zipWithIndex
-    } yield s"($mi, $j, [${c.mkString(", ")}], ${c.map(x => x * x).sum})")
-      .mkString(",\n    ")
+    val centRows = ivfCentroidRows(s, dir)
+    val cb = Pq.train(Tables.embeddings(s, dir), PqM, PqKsub, Dim,
+      iters = IvfIters)
+    val pqRows = pqCodebookRows(cb)
     def sub(mi: Int) = s"[${mi * cb.dsub + 1}:${(mi + 1) * cb.dsub}]"
     val codeExprs = (0 until cb.m).map { mi =>
       s"""(SELECT j FROM pq WHERE m = $mi
@@ -457,15 +460,21 @@ object SimilarityQueries {
         floor(col("n") * 1000000.0 / col("n_vecs")).as("purity_e6"))
   }
 
+  /** The trained IVF centroids as oracle VALUES rows `(j, [c…], ‖c‖²)`,
+    * for the data oracles that inline them (q64, q88, q250).
+    */
+  private def ivfCentroidRows(s: SparkSession, dir: String): String =
+    Ivf.train(Tables.embeddings(s, dir), IvfK, Dim, IvfIters)
+      .zipWithIndex.map { case (c, j) =>
+        val cn2 = c.map(x => x * x).sum
+        s"($j, [${c.mkString(", ")}], $cn2)"
+      }.mkString(",\n    ")
+
   /** Data-dependent oracle for q88 — same inlined-centroid scheme as
     * [[q64SqlFor]].
     */
   def q88SqlFor(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val centroids = Ivf.train(Tables.embeddings(s, dir), IvfK, Dim, IvfIters)
-    val centRows = centroids.zipWithIndex.map { case (c, j) =>
-      val cn2 = c.map(x => x * x).sum
-      s"($j, [${c.mkString(", ")}], $cn2)"
-    }.mkString(",\n    ")
+    val centRows = ivfCentroidRows(s, dir)
     s"""WITH base AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
        |cent(j, c, cn2) AS (SELECT * FROM (VALUES
        |    $centRows)),
@@ -526,11 +535,7 @@ object SimilarityQueries {
   def q216SqlFor(s: org.apache.spark.sql.SparkSession, dir: String): String = {
     val cb = Pq.train(Tables.embeddings(s, dir), PqM, PqKsub, Dim,
       iters = IvfIters)
-    val pqRows = (for {
-      mi <- 0 until cb.m
-      (c, j) <- cb.books(mi).zipWithIndex
-    } yield s"($mi, $j, [${c.mkString(", ")}], ${c.map(x => x * x).sum})")
-      .mkString(",\n    ")
+    val pqRows = pqCodebookRows(cb)
     def sub(mi: Int) = s"[${mi * cb.dsub + 1}:${(mi + 1) * cb.dsub}]"
     val branches = (0 until cb.m).map { mi =>
       s"""SELECT $mi AS m,
@@ -942,11 +947,7 @@ object SimilarityQueries {
 
   /** Data-generated oracle for q250 (trained centroids inlined). */
   def q250SqlFor(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val centroids = Ivf.train(Tables.embeddings(s, dir), IvfK, Dim, IvfIters)
-    val centRows = centroids.zipWithIndex.map { case (c, j) =>
-      val cn2 = c.map(x => x * x).sum
-      s"($j, [${c.mkString(", ")}], $cn2)"
-    }.mkString(",\n    ")
+    val centRows = ivfCentroidRows(s, dir)
     s"""WITH base AS (
        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
        |cent(j, c, cn2) AS (SELECT * FROM (VALUES
@@ -970,6 +971,47 @@ object SimilarityQueries {
 
   /** Cluster count for the relational Lloyd step. */
   private val LloydK = 8
+
+  /** Every embedding component as an e4 integer: (vec_id, d, q), one row
+    * per (vector, dimension).
+    */
+  private def quantizedComponents(s: SparkSession, dir: String): DataFrame =
+    Tables.embeddings(s, dir)
+      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("d", "x")))
+      .select(col("vec_id"), col("d"),
+        round(col("x").cast("double") * 10000, 0).cast("long").as("q"))
+
+  /** The [[LloydK]] deterministic seed centroids — the lowest vec_ids'
+    * rows of `qv` as (cid, d, `c`), pinned (k·dims rows).
+    */
+  private def lloydSeeds(s: SparkSession, dir: String, qv: DataFrame,
+      c: String): DataFrame = {
+    val seedIds = Tables.embeddings(s, dir)
+      .select(col("vec_id")).orderBy(col("vec_id")).limit(LloydK)
+    qv.join(broadcast(seedIds), Seq("vec_id"))
+      .select(col("vec_id").as("cid"), col("d"), col("q").as(c))
+      .localCheckpoint()
+  }
+
+  /** Exact squared distance `dist` of every (vec_id, cid) pair, `qv`
+    * against the broadcast centroid frame `cent` (component column `c`).
+    */
+  private def seedDistances(qv: DataFrame, cent: DataFrame,
+      c: String): DataFrame =
+    qv.join(broadcast(cent), Seq("d"))
+      .groupBy(col("vec_id"), col("cid"))
+      .agg(sum((col("q") - col(c)) * (col("q") - col(c)).cast(dec))
+        .as("dist"))
+
+  /** Lloyd's assignment step: each vec_id's nearest centroid `cid` by
+    * [[seedDistances]], ties to the lower cid.
+    */
+  private def nearestSeed(qv: DataFrame, cent: DataFrame,
+      c: String): DataFrame =
+    seedDistances(qv, cent, c)
+      .groupBy(col("vec_id"))
+      .agg(min(struct(col("dist"), col("cid"))).as("best"))
+      .select(col("vec_id"), col("best.cid").as("cid"))
 
   /** q282: ONE full Lloyd (k-means) iteration executed entirely as a
     * query — no driver-side model state, unlike [[Ivf.train]] whose
@@ -996,24 +1038,11 @@ object SimilarityQueries {
     * both SSE evaluations.
     */
   val q282LloydStep: Q = (s, dir) => {
-    val qv = Tables.embeddings(s, dir)
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("d", "x")))
-      .select(col("vec_id"), col("d"),
-        round(col("x").cast("double") * 10000, 0).cast("long").as("q"))
-    val seedIds = Tables.embeddings(s, dir)
-      .select(col("vec_id")).orderBy(col("vec_id")).limit(LloydK)
+    val qv = quantizedComponents(s, dir)
     // k·dims rows; checkpointed so its three consumers (assign fan-out,
     // SSE join) never replay the seed scan
-    val cent0 = qv.join(broadcast(seedIds), Seq("vec_id"))
-      .select(col("vec_id").as("cid"), col("d"), col("q").as("c0"))
-      .localCheckpoint()
-    val assign = qv.join(broadcast(cent0), Seq("d"))
-      .groupBy(col("vec_id"), col("cid"))
-      .agg(sum((col("q") - col("c0")) * (col("q") - col("c0")).cast(dec))
-        .as("dist"))
-      .groupBy(col("vec_id"))
-      .agg(min(struct(col("dist"), col("cid"))).as("best"))
-      .select(col("vec_id"), col("best.cid").as("cid"))
+    val cent0 = lloydSeeds(s, dir, qv, "c0")
+    val assign = nearestSeed(qv, cent0, "c0")
     val roll = qv.join(assign, Seq("vec_id"))
       .groupBy(col("cid"), col("d"))
       .agg(count(lit(1)).as("n"), sum(col("q")).as("s"),
@@ -1102,19 +1131,8 @@ object SimilarityQueries {
     * the report is a |k|-row rollup.
     */
   val q303Silhouette: Q = (s, dir) => {
-    val qv = Tables.embeddings(s, dir)
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("d", "x")))
-      .select(col("vec_id"), col("d"),
-        round(col("x").cast("double") * 10000, 0).cast("long").as("q"))
-    val seedIds = Tables.embeddings(s, dir)
-      .select(col("vec_id")).orderBy(col("vec_id")).limit(LloydK)
-    val cent = qv.join(broadcast(seedIds), Seq("vec_id"))
-      .select(col("vec_id").as("cid"), col("d"), col("q").as("c"))
-      .localCheckpoint()
-    val two = qv.join(broadcast(cent), Seq("d"))
-      .groupBy(col("vec_id"), col("cid"))
-      .agg(sum((col("q") - col("c")) * (col("q") - col("c")).cast(dec))
-        .as("dist"))
+    val qv = quantizedComponents(s, dir)
+    val two = seedDistances(qv, lloydSeeds(s, dir, qv, "c"), "c")
       .groupBy(col("vec_id"))
       .agg(sort_array(collect_list(struct(col("dist"), col("cid")))).as("ds"))
       .select(col("vec_id"), col("ds")(0).getField("cid").as("cid"),
@@ -1175,6 +1193,38 @@ object SimilarityQueries {
   /** Core-point threshold: neighbors within ε, self included. */
   private val DbMinPts = 6L
 
+  /** Each vector's first two components as e4 integers `x`, `y` with
+    * their `eps`-wide grid cell (`cx`, `cy`), after vec_id and `extra`.
+    * Cell keys floor-divide the possibly-negative coordinates: integer
+    * `div` truncates toward zero, so they shift into the positive range
+    * first (coordinates are within ±10⁵ e4 units by construction).
+    */
+  private def gridPoints(s: SparkSession, dir: String, eps: Long,
+      extra: Column*): DataFrame =
+    Tables.embeddings(s, dir)
+      .select((col("vec_id") +: extra) ++ Seq(
+        round(element_at(col("embedding"), 1).cast("double") * 10000, 0)
+          .cast("long").as("x"),
+        round(element_at(col("embedding"), 2).cast("double") * 10000, 0)
+          .cast("long").as("y")): _*)
+      .withColumn("cx", expr(s"(x + 1000000) div $eps"))
+      .withColumn("cy", expr(s"(y + 1000000) div $eps"))
+
+  /** Every (probe, member) pair of [[gridPoints]] rows in the same or an
+    * adjacent cell: the probe's 3×3 cell fan-out equi-joined on the cell
+    * key, members as (m_id, mx, my). Callers apply the exact distance test.
+    */
+  private def cellNeighbors(probe: DataFrame, members: DataFrame): DataFrame =
+    probe
+      .select(col("vec_id"), col("x"), col("y"),
+        explode(expr("flatten(transform(sequence(-1, 1), dx -> " +
+          "transform(sequence(-1, 1), dy -> struct(cx + dx AS cx, cy + dy AS cy))))"))
+          .as("c"))
+      .select(col("vec_id"), col("x"), col("y"),
+        col("c.cx").as("cx"), col("c.cy").as("cy"))
+      .join(members.select(col("vec_id").as("m_id"), col("cx"), col("cy"),
+        col("x").as("mx"), col("y").as("my")), Seq("cx", "cy"))
+
   /** q299: density-based clustering census — the DBSCAN complement to the
     * centroid family (Lloyd q282, silhouette q303): per ground-truth
     * label, how many points are CORE (≥ [[DbMinPts]] neighbors within
@@ -1193,46 +1243,17 @@ object SimilarityQueries {
     * textbook two-round distributed DBSCAN.
     */
   val q299DbscanCensus: Q = (s, dir) => {
-    val pts = Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("label"),
-        round(element_at(col("embedding"), 1).cast("double") * 10000, 0)
-          .cast("long").as("x"),
-        round(element_at(col("embedding"), 2).cast("double") * 10000, 0)
-          .cast("long").as("y"))
-      // floor-divide the possibly-negative coordinates: integer `div`
-      // truncates toward zero, so shift into the positive range first
-      // (coordinates are within ±10⁵ e4 units by construction)
-      .withColumn("cx", expr(s"(x + 1000000) div $DbEps"))
-      .withColumn("cy", expr(s"(y + 1000000) div $DbEps"))
-    val members = pts.select(col("vec_id").as("m_id"), col("cx"), col("cy"),
-      col("x").as("mx"), col("y").as("my"))
-    def neighbors(probe: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = probe
-      .select(col("vec_id"), col("x"), col("y"),
-        explode(expr("flatten(transform(sequence(-1, 1), dx -> " +
-          "transform(sequence(-1, 1), dy -> struct(cx + dx AS cx, cy + dy AS cy))))"))
-          .as("c"))
-      .select(col("vec_id"), col("x"), col("y"),
-        col("c.cx").as("cx"), col("c.cy").as("cy"))
-      .join(members, Seq("cx", "cy"))
+    val pts = gridPoints(s, dir, DbEps, col("label"))
+    val counts = cellNeighbors(pts, pts)
       .filter((col("x") - col("mx")) * (col("x") - col("mx")) +
         (col("y") - col("my")) * (col("y") - col("my")) <= DbEps * DbEps)
-    val counts = neighbors(pts).groupBy(col("vec_id"))
+      .groupBy(col("vec_id"))
       .agg(count(lit(1)).as("n_nb"))
     val flagged = pts.join(counts, Seq("vec_id"))
       .withColumn("core", (col("n_nb") >= DbMinPts).cast("long"))
       .localCheckpoint()
-    val coreMembers = flagged.filter(col("core") === 1L)
-      .select(col("vec_id").as("m_id"), col("cx"), col("cy"),
-        col("x").as("mx"), col("y").as("my"))
-    val borderIds = flagged.filter(col("core") === 0L)
-      .select(col("vec_id"), col("x"), col("y"),
-        explode(expr("flatten(transform(sequence(-1, 1), dx -> " +
-          "transform(sequence(-1, 1), dy -> struct(cx + dx AS cx, cy + dy AS cy))))"))
-          .as("c"))
-      .select(col("vec_id"), col("x"), col("y"),
-        col("c.cx").as("cx"), col("c.cy").as("cy"))
-      .join(coreMembers, Seq("cx", "cy"))
+    val borderIds = cellNeighbors(flagged.filter(col("core") === 0L),
+        flagged.filter(col("core") === 1L))
       .filter(col("vec_id") =!= col("m_id") &&
         (col("x") - col("mx")) * (col("x") - col("mx")) +
         (col("y") - col("my")) * (col("y") - col("my")) <= DbEps * DbEps)
@@ -1319,22 +1340,8 @@ object SimilarityQueries {
     * (k·|labels| rows) → three marginal folds → a 1-row finish.
     */
   val q324AdjustedRand: Q = (s, dir) => {
-    val qv = Tables.embeddings(s, dir)
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("d", "x")))
-      .select(col("vec_id"), col("d"),
-        round(col("x").cast("double") * 10000, 0).cast("long").as("q"))
-    val seedIds = Tables.embeddings(s, dir)
-      .select(col("vec_id")).orderBy(col("vec_id")).limit(LloydK)
-    val cent = qv.join(broadcast(seedIds), Seq("vec_id"))
-      .select(col("vec_id").as("cid"), col("d"), col("q").as("c"))
-      .localCheckpoint()
-    val assign = qv.join(broadcast(cent), Seq("d"))
-      .groupBy(col("vec_id"), col("cid"))
-      .agg(sum((col("q") - col("c")) * (col("q") - col("c")).cast(dec))
-        .as("dist"))
-      .groupBy(col("vec_id"))
-      .agg(min(struct(col("dist"), col("cid"))).as("best"))
-      .select(col("vec_id"), col("best.cid").as("cid"))
+    val qv = quantizedComponents(s, dir)
+    val assign = nearestSeed(qv, lloydSeeds(s, dir, qv, "c"), "c")
     val cont = assign
       .join(Tables.embeddings(s, dir).select(col("vec_id"), col("label")),
         Seq("vec_id"))
@@ -1738,25 +1745,8 @@ object SimilarityQueries {
     */
   val q411Lof: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val pts = Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("label"),
-        round(element_at(col("embedding"), 1).cast("double") * 10000, 0)
-          .cast("long").as("x"),
-        round(element_at(col("embedding"), 2).cast("double") * 10000, 0)
-          .cast("long").as("y"))
-      .withColumn("cx", expr(s"(x + 1000000) div $LofEps"))
-      .withColumn("cy", expr(s"(y + 1000000) div $LofEps"))
-      .localCheckpoint()
-    val members = pts.select(col("vec_id").as("m_id"), col("cx"), col("cy"),
-      col("x").as("mx"), col("y").as("my"))
-    val nb = pts
-      .select(col("vec_id"), col("x"), col("y"),
-        explode(expr("flatten(transform(sequence(-1, 1), dx -> " +
-          "transform(sequence(-1, 1), dy -> struct(cx + dx AS cx, cy + dy AS cy))))"))
-          .as("c"))
-      .select(col("vec_id"), col("x"), col("y"),
-        col("c.cx").as("cx"), col("c.cy").as("cy"))
-      .join(members, Seq("cx", "cy"))
+    val pts = gridPoints(s, dir, LofEps, col("label")).localCheckpoint()
+    val nb = cellNeighbors(pts, pts)
       .filter(col("m_id") =!= col("vec_id") &&
         (col("x") - col("mx")) * (col("x") - col("mx")) +
           (col("y") - col("my")) * (col("y") - col("my")) <= LofEps * LofEps)
@@ -1878,25 +1868,8 @@ object SimilarityQueries {
     */
   val q425Hubness: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val pts = Tables.embeddings(s, dir)
-      .select(col("vec_id"),
-        round(element_at(col("embedding"), 1).cast("double") * 10000, 0)
-          .cast("long").as("x"),
-        round(element_at(col("embedding"), 2).cast("double") * 10000, 0)
-          .cast("long").as("y"))
-      .withColumn("cx", expr(s"(x + 1000000) div $LofEps"))
-      .withColumn("cy", expr(s"(y + 1000000) div $LofEps"))
-      .localCheckpoint()
-    val members = pts.select(col("vec_id").as("m_id"), col("cx"), col("cy"),
-      col("x").as("mx"), col("y").as("my"))
-    val nb = pts
-      .select(col("vec_id"), col("x"), col("y"),
-        explode(expr("flatten(transform(sequence(-1, 1), dx -> " +
-          "transform(sequence(-1, 1), dy -> struct(cx + dx AS cx, cy + dy AS cy))))"))
-          .as("c"))
-      .select(col("vec_id"), col("x"), col("y"),
-        col("c.cx").as("cx"), col("c.cy").as("cy"))
-      .join(members, Seq("cx", "cy"))
+    val pts = gridPoints(s, dir, LofEps).localCheckpoint()
+    val nb = cellNeighbors(pts, pts)
       .filter(col("m_id") =!= col("vec_id") &&
         (col("x") - col("mx")) * (col("x") - col("mx")) +
           (col("y") - col("my")) * (col("y") - col("my")) <= LofEps * LofEps)
@@ -2123,10 +2096,7 @@ object SimilarityQueries {
     */
   val q552MrlTruncation: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val base = Tables.embeddings(s, dir)
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("d", "x")))
-      .select(col("vec_id"), col("d"),
-        round(col("x").cast("double") * 10000, 0).cast("long").as("q"))
+    val base = quantizedComponents(s, dir)
     val probes = base.filter(col("vec_id") < 10)
       .select(col("vec_id").as("probe_id"), col("d").as("pd"),
         col("q").as("qp"))
@@ -2227,10 +2197,7 @@ object SimilarityQueries {
     */
   val q553Int8Recall: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val base = Tables.embeddings(s, dir)
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("d", "x")))
-      .select(col("vec_id"), col("d"),
-        round(col("x").cast("double") * 10000, 0).cast("long").as("q"))
+    val base = quantizedComponents(s, dir)
       .localCheckpoint()
     val scales = base.groupBy(col("d"))
       .agg(greatest(max(abs(col("q"))), lit(1L)).as("sc"))
@@ -2588,11 +2555,7 @@ object SimilarityQueries {
     * ORDER BY -2·v·c + |c|², then centroid id.
     */
   def q64SqlFor(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val centroids = Ivf.train(Tables.embeddings(s, dir), IvfK, Dim, IvfIters)
-    val centRows = centroids.zipWithIndex.map { case (c, j) =>
-      val cn2 = c.map(x => x * x).sum
-      s"($j, [${c.mkString(", ")}], $cn2)"
-    }.mkString(",\n    ")
+    val centRows = ivfCentroidRows(s, dir)
     s"""WITH base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
        |cent(j, c, cn2) AS (SELECT * FROM (VALUES
        |    $centRows)),

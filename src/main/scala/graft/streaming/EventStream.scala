@@ -578,7 +578,9 @@ object EventStream {
     * column and the write is a DYNAMIC PARTITION OVERWRITE of exactly that
     * partition — a replayed batch rewrites its own partition instead of
     * duplicating rows, which upgrades the end-to-end guarantee to effective
-    * exactly-once. Per-batch work runs under a job label so the QueryJournal
+    * exactly-once. The dynamic mode is a table property set when the first
+    * batch creates the table, so every later `insertInto` (a replay's too)
+    * reads it without touching session conf. Per-batch work runs under a job label so the QueryJournal
     * attributes it.
     */
   def appendToTable(spark: SparkSession, df: DataFrame, table: String,
@@ -587,22 +589,16 @@ object EventStream {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         spark.sparkContext.setJobDescription(s"$label batch=$batchId")
-        val prevMode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
         try {
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
           val stamped = batch.withColumn(BatchIdCol, lit(batchId))
           if (!spark.catalog.tableExists(table)) {
             stamped.write.format("parquet").partitionBy(BatchIdCol)
+              .option("partitionOverwriteMode", "dynamic")
               .saveAsTable(table)
           } else {
             stamped.write.mode("overwrite").insertInto(table)
           }
-        } finally {
-          prevMode.fold(
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode"))(
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", _))
-          spark.sparkContext.setJobDescription(null)
-        }
+        } finally spark.sparkContext.setJobDescription(null)
       }
       .start()
     try q.processAllAvailable() finally q.stop()

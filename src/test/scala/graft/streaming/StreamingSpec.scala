@@ -206,19 +206,14 @@ class StreamingSpec extends SparkSpec {
 
   test("replayed micro-batch overwrites its own partition (no duplicates)") {
     // foreachBatch is at-least-once: simulate the crash-after-write replay by
-    // re-issuing batch 0's rows with the same batch id — the dynamic
-    // partition overwrite must land them in place, not append.
+    // re-issuing batch 0's rows with the same batch id — the table's own
+    // dynamic partition-overwrite mode must land them in place, not append
+    // or drop the other batches' partitions.
     val before = spark.table("stream_events").count()
     val batch0 = spark.table("stream_events")
       .filter(col(EventStream.BatchIdCol) === 0)
     assert(batch0.count() > 0)
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    try {
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      batch0.write.mode("overwrite").insertInto("stream_events")
-    } finally prev.fold(
-      spark.conf.unset("spark.sql.sources.partitionOverwriteMode"))(
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", _))
+    batch0.write.mode("overwrite").insertInto("stream_events")
     assert(spark.table("stream_events").count() === before)
   }
 
