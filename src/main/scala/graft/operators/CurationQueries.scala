@@ -1409,13 +1409,13 @@ object CurationQueries {
     * one string replace. Returns the merge table and the merged vocabulary.
     *
     * Scale posture: the per-round job runs over the vocabulary, not the
-    * corpus — millions of rows at web scale, cached once; the per-round
+    * corpus — millions of rows at web scale, pinned once; the per-round
     * collect is one row (metadata-scale control flow, like IVF's trained
     * centroids). R rounds = R small jobs.
     */
   private def bpeTrain(s: org.apache.spark.sql.SparkSession, dir: String)
       : (Seq[(Int, String, String, Long)], DataFrame) = {
-    var vocab = bpeVocab(s, dir).cache()
+    var vocab = bpeVocab(s, dir).localCheckpoint()
     val merges = Seq.newBuilder[(Int, String, String, Long)]
     for (r <- 1 to BpeRounds) {
       val syms = bpeSymbols(col("ws"))
