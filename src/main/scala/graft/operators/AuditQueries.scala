@@ -1456,13 +1456,10 @@ object AuditQueries {
 
   // -------------------------------------- q272: Kruskal–Wallis rank test
 
-  /** Doubled mid-ranks of the order prices in `o` (g, c): returns the
-    * (g, c, n_gc) cell counts and, per distinct price c, its doubled
-    * mid-rank d = 2·below + cnt + 1 with its tie count `cnt` (q272,
-    * q295). The ranking is two-level ([[doubledRankBelow]]): order totals
-    * are nearly unique, so a single ordered window over the rollup would
-    * be one sort task at any cluster size; the oracles keep the plain
-    * formulation.
+  /** (g, c, n_gc) cell counts of `o` and, per price c, its doubled
+    * mid-rank d = 2·below + cnt + 1 (q272, q295). Two-level
+    * ([[doubledRankBelow]]): order totals are nearly unique, so one
+    * ordered window would be one sort task at any cluster size.
     */
   private def doubledMidRanks(o: DataFrame): (DataFrame, DataFrame) = {
     val gc = o.groupBy(col("g"), col("c")).agg(count(lit(1)).as("n_gc"))
@@ -2995,13 +2992,10 @@ object AuditQueries {
       .agg(sum(cents(col("l_extendedprice"))).as("v"))
       .localCheckpoint()
 
-  /** Chain-ladder development of [[runOffCells]] `cells`, given the
-    * one-row `maxY` (max_y, the latest order year, plus any columns the
-    * caller needs later). Returns (cum, fRow): `cum` holds the cumulative
-    * cents `c` and the next development year's `cn` per (oy, dev) on the
-    * dense [[ClMaxDev]] spine, crossed with `maxY`, and is pinned; `fRow`
-    * is the one-row volume-weighted age-to-age factors f_0.. at e6 (10⁶
-    * where no cohort developed).
+  /** Develops [[runOffCells]] against the one-row `maxY` (max_y, ...):
+    * (cum, fRow) = the pinned cumulative `c`/next `cn` per (oy, dev) on
+    * the [[ClMaxDev]] spine crossed with `maxY`, and the one-row
+    * volume-weighted age-to-age factors f_0.. at e6 (10⁶ if undeveloped).
     */
   private def chainLadder(s: SparkSession, cells: DataFrame,
       maxY: DataFrame): (DataFrame, DataFrame) = {
@@ -4539,11 +4533,9 @@ object AuditQueries {
 
   // ------ q441: Jonckheere–Terpstra ordered-alternative test
 
-  /** Orders per (priority group `g` = 1..5, price `k`-quantile bin `b` =
-    * 0..k−1) as (g, b, n), pinned: the contingency of q436 (k = 5) and of
-    * q441/q454 (k = 10). The k − 1 cutpoints (columns `cut`1..) are
-    * rank-target selections ⌈n·i/k⌉ off the two-level [[doubledRankBelow]]
-    * construction over the distinct-cents rollup.
+  /** Orders per (priority `g`, price `k`-quantile bin `b`) as (g, b, n),
+    * pinned (q436: k = 5; q441, q454: k = 10). Cutpoints `cut`1.. are
+    * rank-target selections ⌈n·i/k⌉ off [[doubledRankBelow]].
     */
   private def priceQuantileCells(s: SparkSession, dir: String, g: String,
       b: String, k: Int, cut: String): DataFrame = {

@@ -1335,11 +1335,9 @@ object EventQueries {
       .filter(col("pday").isNull || col("pday") < col("day"))
   }
 
-  /** The users active in the trailing `days`-day window ending on each
-    * day, grouped by day: each [[activeUserDays]] row covers only the
-    * window ends its previous active day does not (the interval algebra),
-    * clipped at the last event day. `days` keeps its numeric type in the
-    * plan.
+  /** Users active in the trailing `days`-day window, grouped by window
+    * end day (clipped at the last event day); `days` keeps its numeric
+    * type in the plan.
     */
   def trailingActives[N](s: SparkSession, dir: String, userDays: DataFrame,
       days: N)(implicit num: Numeric[N]): RelationalGroupedDataset = {
@@ -3672,11 +3670,9 @@ object EventQueries {
       } :+ max(day).as("dlast")): _*)
   }
 
-  /** q259's Kaplan–Meier curve of time to first purchase, one step per
-    * duration in days (non-converters censor at their last event), as
-    * (dur, n at risk, events, censored, S e6): the |durations| rollup is
-    * collected as control metadata and each step folds
-    * S ← S·(n − d)/n in truncating BigInt arithmetic on the driver.
+  /** q259's Kaplan–Meier steps of time to first purchase as (dur, n at
+    * risk, events, censored, S e6): the collected |durations| rollup
+    * folds S ← S·(n − d)/n in truncating BigInt on the driver.
     */
   def kaplanMeier(s: SparkSession,
       dir: String): Array[(Long, Long, Long, Long, Long)] = {

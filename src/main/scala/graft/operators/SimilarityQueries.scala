@@ -20,11 +20,9 @@ object SimilarityQueries {
 
   private val K = 5
 
-  /** The [[K]] most cosine-similar neighbors per probe as (probe_id,
-    * neighbor_id, rnk), ties to the lower neighbor id, from candidate
-    * pairs that carry both sides' embedding and precomputed norm
-    * (`embedding`/`nrm`, `probe_vec`/`probe_nrm`); a vector never
-    * neighbors itself. Each pair costs one codegen'd dot product.
+  /** The [[K]] most cosine-similar neighbors per probe (probe_id,
+    * neighbor_id, rnk) from candidate pairs carrying `embedding`/`nrm` and
+    * `probe_vec`/`probe_nrm`; ties go to the lower id, self-pairs drop.
     */
   private def topKNeighbors(pairs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
