@@ -4233,7 +4233,7 @@ object AuditQueries {
     * `div 100`) — the series the monthly time-series family (q438, q445,
     * q453, q458, q473, q474, q475, q482) models.
     */
-  def monthlyRevenue(s: SparkSession, dir: String): DataFrame =
+  private def monthlyRevenue(s: SparkSession, dir: String): DataFrame =
     Tables.orders(s, dir)
       .groupBy(expr("year(o_orderdate) * 12 + month(o_orderdate)").as("m"))
       .agg(expr("SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) div 100")
@@ -4755,7 +4755,7 @@ object AuditQueries {
     * line count, pinned — the two-sample table behind q443, q444, q480
     * and q483, which compare returned with unreturned quantities.
     */
-  def returnedQuantityCounts(s: SparkSession, dir: String): DataFrame =
+  private def returnedQuantityCounts(s: SparkSession, dir: String): DataFrame =
     Tables.lineitem(s, dir)
       .filter(col("l_returnflag").isin("R", "N"))
       .select((col("l_returnflag") === "R").cast("long").as("a"),

@@ -2075,7 +2075,8 @@ object CoreQueries {
         expr("o_orderdate + make_interval(0,0,0,(o_orderkey % 3)+1,0,0,0)")
           .as("win_end"))
     val ships = Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_shipdate"), cents(col("l_quantity")).as("qty_c"))
+      .select(col("l_orderkey"), col("l_shipdate"),
+        cents(col("l_quantity")).as("qty_c"))
     (windows, ships)
   }
 

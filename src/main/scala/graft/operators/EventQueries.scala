@@ -33,7 +33,8 @@ object EventQueries {
     * statistics (q405, q410, q421, q428, q432), whose conditional
     * aggregates pick the series.
     */
-  def eventsByDay(s: SparkSession, dir: String): RelationalGroupedDataset =
+  private def eventsByDay(s: SparkSession,
+      dir: String): RelationalGroupedDataset =
     Tables.events(s, dir)
       .select(expr("unix_millis(ts) div 86400000").as("day"),
         col("event_type"), cents(col("value")).as("v"))
@@ -44,7 +45,7 @@ object EventQueries {
     * [[splitAtMidday]]: the one event pass of the before/after family
     * (q298, q300, q329, q337, q370, q378).
     */
-  def purchasesSplitAtMidday(s: SparkSession, dir: String): DataFrame =
+  private def purchasesSplitAtMidday(s: SparkSession, dir: String): DataFrame =
     splitAtMidday(Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(col("user_id"), cents(col("value")).as("v"),
@@ -61,7 +62,7 @@ object EventQueries {
   /** Per (`window`, event type): events, value cents and distinct users,
     * keyed by the window's start `bucket` (q70, q75).
     */
-  def windowedEventStats(s: SparkSession, dir: String,
+  private def windowedEventStats(s: SparkSession, dir: String,
       window: Column): DataFrame =
     Tables.events(s, dir)
       .groupBy(window, col("event_type"))
@@ -75,7 +76,8 @@ object EventQueries {
   /** Tumbling-window aggregate: epoch-aligned 1-hour windows via the same
     * `window()` operator the streaming path uses.
     */
-  val q70Tumbling: Q = (s, dir) => windowedEventStats(s, dir, window(col("ts"), "1 hour"))
+  val q70Tumbling: Q = (s, dir) =>
+    windowedEventStats(s, dir, window(col("ts"), "1 hour"))
 
   val q70Sql: String =
     """SELECT DATE_TRUNC('hour', ts) AS bucket, event_type,
@@ -124,7 +126,8 @@ object EventQueries {
     * same two epoch-aligned window starts per event (the 30-minute floor and
     * its predecessor) via UNNEST.
     */
-  val q75Sliding: Q = (s, dir) => windowedEventStats(s, dir, window(col("ts"), "1 hour", "30 minutes"))
+  val q75Sliding: Q = (s, dir) =>
+    windowedEventStats(s, dir, window(col("ts"), "1 hour", "30 minutes"))
 
   val q75Sql: String =
     """WITH b AS (
@@ -203,7 +206,7 @@ object EventQueries {
   /** The as-of join's two sides: clicks (event_id, user_id, ts) and
     * purchases (user_id, ts, event_id, value) — q76 and q231.
     */
-  def clicksAndPurchases(s: SparkSession,
+  private def clicksAndPurchases(s: SparkSession,
       dir: String): (DataFrame, DataFrame) = {
     val e = Tables.events(s, dir)
     val clicks = e.filter(col("event_type") === "click")
@@ -995,7 +998,8 @@ object EventQueries {
     * 2 view) of the user's latest earlier click or view, NULL when there
     * is none — q128's last-touch derivation, one user-keyed window pass.
     */
-  def lastTouch(s: SparkSession, dir: String, carry: Column*): DataFrame = {
+  private def lastTouch(s: SparkSession, dir: String,
+      carry: Column*): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val tkey = when(col("event_type") === "click", unix_millis(col("ts")) * 4 + 1)
       .when(col("event_type") === "view", unix_millis(col("ts")) * 4 + 2)
@@ -1326,7 +1330,7 @@ object EventQueries {
     * one row per user-day sees a lag-day < its own (the rest see their own
     * day), and its lag IS the previous active day.
     */
-  def activeUserDays(s: SparkSession, dir: String): DataFrame = {
+  private def activeUserDays(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("user_id")).orderBy(col("day"))
     Tables.events(s, dir)
@@ -1339,8 +1343,9 @@ object EventQueries {
     * end day (clipped at the last event day); `days` keeps its numeric
     * type in the plan.
     */
-  def trailingActives[N](s: SparkSession, dir: String, userDays: DataFrame,
-      days: N)(implicit num: Numeric[N]): RelationalGroupedDataset = {
+  private def trailingActives[N](s: SparkSession, dir: String,
+      userDays: DataFrame, days: N)(
+      implicit num: Numeric[N]): RelationalGroupedDataset = {
     val mx = Tables.events(s, dir)
       .agg(max(expr("unix_timestamp(ts) DIV 86400")).as("maxday"))
     userDays
@@ -3660,7 +3665,7 @@ object EventQueries {
     * with days as `unix_timestamp(ts) DIV 86400` — the user-grain rollup
     * the survival family (q259, q332, q357, q373, q393) starts from.
     */
-  def firstEventDays(s: SparkSession, dir: String,
+  private def firstEventDays(s: SparkSession, dir: String,
       firsts: (String, String)*): DataFrame = {
     val day = expr("unix_timestamp(ts) DIV 86400")
     Tables.events(s, dir).groupBy(col("user_id")).agg(
@@ -3674,7 +3679,7 @@ object EventQueries {
     * risk, events, censored, S e6): the collected |durations| rollup
     * folds S ← S·(n − d)/n in truncating BigInt on the driver.
     */
-  def kaplanMeier(s: SparkSession,
+  private def kaplanMeier(s: SparkSession,
       dir: String): Array[(Long, Long, Long, Long, Long)] = {
     val durs = firstEventDays(s, dir, "purchase" -> "dconv").select(
       when(col("dconv").isNotNull, col("dconv") - col("d0"))
@@ -4088,7 +4093,7 @@ object EventQueries {
     * non-converters) and the corpus's last day `maxday`, the censoring
     * horizon — the user rollup of q292 and q301.
     */
-  def firstPurchaseByUser(s: SparkSession, dir: String): DataFrame = {
+  private def firstPurchaseByUser(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.events(s, dir)
       .select(col("user_id"), col("event_type"),
         expr("unix_millis(ts) div 86400000").as("day"))
@@ -4513,7 +4518,7 @@ object EventQueries {
     * twice (day bounds, then the rows), and neither read replays the
     * corpus pass.
     */
-  def eventsPerDay(s: SparkSession, dir: String, n: String): DataFrame =
+  private def eventsPerDay(s: SparkSession, dir: String, n: String): DataFrame =
     Tables.events(s, dir)
       .select(expr("unix_millis(ts) div 86400000").as("day"))
       .groupBy(col("day")).agg(count(lit(1)).as(n))
@@ -4523,7 +4528,7 @@ object EventQueries {
     * gap days count zero, so a lag over the spine never compares across
     * a gap.
     */
-  def eventDaySpine(s: SparkSession, dir: String): DataFrame = {
+  private def eventDaySpine(s: SparkSession, dir: String): DataFrame = {
     val byDay = eventsPerDay(s, dir, "cnt")
     val bounds = byDay.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
     bounds
@@ -5204,7 +5209,7 @@ object EventQueries {
     * `next_type`, the type of the user's next event (NULL for the last),
     * from one lead window partitioned by user (q308, q334).
     */
-  def actionsBeforeNext(s: SparkSession, dir: String): DataFrame = {
+  private def actionsBeforeNext(s: SparkSession, dir: String): DataFrame = {
     val W = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("ms"), col("event_id"))
     Tables.events(s, dir)
@@ -7171,7 +7176,8 @@ object EventQueries {
   val q393MedianSurvival: Q = (s, dir) => {
     val band = greenwoodBand(s, dir)
     val nAll = band.headOption.fold(0L)(_._2)
-    def firstAtOrBelowHalf(v: ((Long, Long, Long, Long, Long, Long, Long)) => Long) =
+    def firstAtOrBelowHalf(
+        v: ((Long, Long, Long, Long, Long, Long, Long)) => Long) =
       band.find(b => v(b) <= 500000L).fold(-1L)(_._1)
     import s.implicits._
     Seq((nAll, firstAtOrBelowHalf(_._4), firstAtOrBelowHalf(_._6),
@@ -7436,7 +7442,7 @@ object EventQueries {
   /** Day-over-day change `r` of daily purchase revenue (DECIMAL cents)
     * per day after the first, pinned — the series q363 and q364 test.
     */
-  def dailyRevenueChanges(s: SparkSession, dir: String): DataFrame = {
+  private def dailyRevenueChanges(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.orderBy(col("day"))
     purchaseCentsByDay(s, dir).agg(sum(col("v")).cast(dec).as("x"))
@@ -7676,7 +7682,8 @@ object EventQueries {
     * d0 = the signed floor of x − x̄ at cents resolution), off one pinned
     * day rollup — the series q358, q380 and q387 take lags of.
     */
-  def dailyRevenueDeviations(s: SparkSession, dir: String): DataFrame = {
+  private def dailyRevenueDeviations(s: SparkSession,
+      dir: String): DataFrame = {
     val byDay = purchaseCentsByDay(s, dir).agg(sum(col("v")).cast(dec).as("x"))
       .localCheckpoint()
     val tot = byDay.agg(sum(col("x")).as("sx"),
@@ -8506,7 +8513,7 @@ object EventQueries {
     * floor of y − (a + b·x) at the series' own resolution, from exact
     * DECIMAL(38,0) sums — the residual series q344 and q361 test.
     */
-  def trendResiduals(byDay: DataFrame): DataFrame = {
+  private def trendResiduals(byDay: DataFrame): DataFrame = {
     val mn = byDay.agg(min(col("day")).as("d0"))
     val xd = byDay.crossJoin(broadcast(mn))
       .select((col("day") - col("d0")).cast(dec).as("x"), col("y"))
@@ -9047,7 +9054,7 @@ object EventQueries {
     * 30 minutes or more after the previous one opens a new session
     * (gaps-and-islands over windows partitioned by user).
     */
-  def sessionSpans(s: SparkSession, dir: String): DataFrame = {
+  private def sessionSpans(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val wU = Window.partitionBy(col("user_id"))
       .orderBy(col("ts"), col("event_id"))

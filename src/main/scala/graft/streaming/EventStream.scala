@@ -580,8 +580,8 @@ object EventStream {
     * duplicating rows, which upgrades the end-to-end guarantee to effective
     * exactly-once. The dynamic mode is a table property set when the first
     * batch creates the table, so every later `insertInto` (a replay's too)
-    * reads it without touching session conf. Per-batch work runs under a job label so the QueryJournal
-    * attributes it.
+    * reads it without touching session conf. Per-batch work runs under a
+    * job label so the QueryJournal attributes it.
     */
   def appendToTable(spark: SparkSession, df: DataFrame, table: String,
       checkpointDir: String, label: String = "stream-load"): Unit = {
